@@ -209,10 +209,9 @@ object BenchExtra {
       // at the sf1 decade and is gone from the default path
       Dedup.cosineNearDupPairs(microElems(s, dir), 0.9)),
     "bench_minhash_rowlocal_full" -> ((s, dir) =>
-      // zero-shuffle signature path, md5 family — delta vs
-      // bench_minhash_full is the cost of the two full-corpus
-      // shuffles (signature agg + verify-set rebuild) the row-local
-      // plan removes
+      // row-local md5 path (the native kernel, i.e. minHashLshPairs) —
+      // delta vs bench_minhash_full is what the shingle explode, the
+      // string min aggregate and the verify-set rebuild cost
       Dedup.minHashLshPairsRowLocal(
         Dedup.fixtureCorpusScaled(docs(s, dir)), 0.5)),
     "bench_minhash_rowlocal_xx_full" -> ((s, dir) =>

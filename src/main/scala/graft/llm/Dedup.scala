@@ -15,7 +15,13 @@ import graft.Tables
   *  - exact dedup is one hash-partitioned groupBy on the content hash;
   *  - MinHash/LSH candidate generation joins on (band, bucket), never
   *    all-pairs; the quadratic verify runs only inside candidate
-  *    groups (bounded by band collision rates);
+  *    groups (bounded by band collision rates). Batch MinHash-LSH is
+  *    row-local: the native [[graft.functions.MinHashLsh]] kernel
+  *    shingles, signs, bands and hash-sets each document on its row
+  *    ([[lshDocs]]), so no shingle row is exploded or aggregated —
+  *    measured faster than the grouped explode + `min` aggregate at
+  *    every corpus size tried, by more at larger ones (BASELINE.md);
+  *    the grouped forms stay as the DuckDB-mirrored reference;
   *  - SimHash near-pair search blocks on 8-bit sub-bands (pigeonhole:
   *    hamming ≤ 3 ⇒ some band of 4 equal), again join-on-key;
   *  - hash functions are md5-derived (deterministic, partitioning-
@@ -269,88 +275,39 @@ object Dedup {
     shingles.groupBy("id").agg(sig(0), (1 until numHashes).map(sig): _*)
   }
 
-  /** Row-local (map-only) MinHash signatures from shingle-set arrays:
-    * sig_i = fold-min over the set of the same per-shingle hash the
-    * grouped forms aggregate, so the VALUES are bit-identical to
-    * [[minHashSignaturesWide]] (md5 family) / [[minHashSignaturesWideXx]]
-    * (xx family) — same hash, same set, same min; the fold's least()
-    * and the min() aggregate share Spark's binary string ordering
-    * (`dedup_minhash_rowlocal` is gated by the SAME oracle as the
-    * grouped key to pin this). No shuffle: the signature exists before
-    * any exchange.
-    *
-    * MEASURED (full sf0.1 corpus, end-to-end pairs pipeline): the
-    * grouped explode+groupBy forms stay FASTER in batch — md5 10.0 s
-    * vs 10.5 s row-local, xx 3.5 s vs 4.9 s — for two reasons worth
-    * recording: (1) higher-order-function lambdas evaluate outside
-    * whole-stage codegen, while the exploded form keeps every hash
-    * inside a codegen'd aggregate; (2) the pipeline's self-join is a
-    * diamond, and the groupBy's (tiny, combined) shuffle doubles as
-    * the AQE reuse point each arm reads back — a pure map-side plan
-    * recomputes per arm instead (measured 2x before
-    * [[minHashLshPairsRowLocal]] added its explicit repartitions).
-    * KEEP the grouped forms for batch. This form is the STREAMING
-    * path: a signature computed on the row needs no aggregation
-    * state, so a stream can sign each document as it arrives
-    * (see [[graft.streaming.Streams]]). */
-  def minHashSignaturesRowLocal(sets: DataFrame,
-      numHashes: Int = 16): DataFrame = {
-    val nGroups = (numHashes + 3) / 4
-    // one md5 array per 4-seed group, then 4 slice-min FOLDS per group
-    // — hashing cost identical to the grouped md5 form, and the folds
-    // (functions.aggregate) never materialize the 16 per-seed slice
-    // arrays an array_min(transform(...)) form would allocate
-    val withDigests = sets.select(
-      col("id") +: (0 until nGroups).map(g =>
-        transform(col("shingles"),
-          s => md5(concat(lit(s"$g:"), s))).as(s"h_$g")): _*)
-    // "g" sorts after every hex digit, so it is a safe fold identity
-    def sig(i: Int) = aggregate(col(s"h_${i / 4}"), lit("g" * 8),
-      (acc, h) => least(acc, substring(h, lit(1 + 8 * (i % 4)), lit(8))))
-      .as(s"sig_$i")
-    withDigests.select(col("id") +: (0 until numHashes).map(sig): _*)
-  }
-
-  /** xxhash64 twin of [[minHashSignaturesRowLocal]] (production hash
-    * family, no md5 in the per-shingle loop; pure folds, no
-    * intermediate arrays at all). */
+  /** Row-local xx-family MinHash signatures from shingle-set arrays:
+    * sig_i = fold-min over the set of the hash
+    * [[minHashSignaturesWideXx]] aggregates, so the VALUES are
+    * bit-identical to it — same hash, same set, same min. */
   def minHashSignaturesRowLocalXx(sets: DataFrame,
       numHashes: Int = 16): DataFrame =
     sets.select(col("id") +:
       minHashSigColsXx(col("shingles"), numHashes): _*)
 
-  /** MinHash-LSH near-dup pairs on the row-local signature path:
-    * map-only shingle sets → row-local signatures → row-local banding
-    * → candidate equi-join on (band, bucket) → row-local exact-Jaccard
-    * verify over the prebuilt set arrays. Output is bit-identical to
-    * [[minHashLshPairs]] (md5 family; the oracle gate proves it) —
-    * only the PLAN differs. Batch verdict: measured SLOWER than the
-    * grouped pipeline (see [[minHashSignaturesRowLocal]]); kept as the
-    * oracle-gated identity proof for the streaming signature path and
-    * for callers whose signatures feed a single consumer. */
+  /** MinHash-LSH near-dup pairs on a row-local signature path. The md5
+    * family (`xx = false`) is [[minHashLshPairs]] itself — the native
+    * kernel is the md5 row-local signer. `xx = true` signs with
+    * higher-order-function folds over the shingle-set arrays
+    * ([[minHashSignaturesRowLocalXx]]) and verifies over
+    * [[hashedShingleSets]]; its pairs match the md5 form whenever both
+    * bandings recall the candidate. */
   def minHashLshPairsRowLocal(df: DataFrame, threshold: Double,
       numHashes: Int = 16, rowsPerBand: Int = 4, k: Int = 9,
       idCol: String = "doc_id", textCol: String = "text",
-      xx: Boolean = false): DataFrame = {
-    val sets = shingleSets(df, k, idCol, textCol)
-    val sigs = if (xx) minHashSignaturesRowLocalXx(sets, numHashes)
-      else minHashSignaturesRowLocal(sets, numHashes)
-    // The candidate self-join and the two verify joins are DIAMONDS:
-    // each arm would recompute the map-side signature/set work from
-    // the text (measured 2x the grouped pipeline, whose groupBy
-    // shuffle doubles as an AQE-reusable materialization point). One
-    // explicit tiny repartition per frame restores the reuse point —
-    // the exchange carries 16-column signature rows / one set row per
-    // doc, and every arm above it is a ReusedExchange/QueryStage.
-    val buckets = lshBucketsWide(sigs.repartition(col("id")),
-      numHashes, rowsPerBand)
-    val candidates = buckets.as("a").join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    verifyJaccardSets(candidates,
-      hashedShingleSets(sets).repartition(col("id")), threshold)
-  }
+      xx: Boolean = false): DataFrame =
+    if (!xx) minHashLshPairs(df, threshold, numHashes, rowsPerBand, k,
+      idCol, textCol)
+    else {
+      val sets = shingleSets(df, k, idCol, textCol)
+      // one explicit repartition per frame is the AQE reuse point the
+      // self-join and the two verify joins read back; without it each
+      // arm recomputes the map-side signature/set work from the text
+      val buckets = lshBucketsWide(
+        minHashSignaturesRowLocalXx(sets, numHashes).repartition(col("id")),
+        numHashes, rowsPerBand)
+      verifyJaccardSets(bandCandidates(buckets, buckets, selfJoin = true),
+        hashedShingleSets(sets).repartition(col("id")), threshold)
+    }
 
   /** [[minHashLshPairsFromShingles]] on the xxhash64 signature family —
     * the path a 100 TB corpus runs (no md5 in the per-shingle hot
@@ -360,11 +317,8 @@ object Dedup {
       numHashes: Int = 16, rowsPerBand: Int = 4): DataFrame = {
     val buckets = lshBucketsWide(
       minHashSignaturesWideXx(shingles, numHashes), numHashes, rowsPerBand)
-    val candidates = buckets.as("a").join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    verifyJaccard(candidates, hashShingles(shingles), threshold)
+    verifyJaccard(bandCandidates(buckets, buckets, selfJoin = true),
+      hashShingles(shingles), threshold)
   }
 
   /** Long-form (id, seed, sig) view of the wide signatures, for
@@ -389,30 +343,100 @@ object Dedup {
     wide.selectExpr("id", s"stack($nBands, $bands) AS (band, bucket)")
   }
 
-  /** Full MinHash-LSH near-dup pipeline: shingle → sign → band →
-    * candidate join on (band, bucket) → exact Jaccard verify. */
+  /** Distinct candidate pairs (id_a, id_b) sharing a (band, bucket):
+    * `selfJoin` keeps id_a < id_b within one bucket frame; otherwise
+    * every old×batch pair is kept. */
+  private def bandCandidates(old: DataFrame, batch: DataFrame,
+      selfJoin: Boolean): DataFrame = {
+    val on = col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket")
+    old.as("a").join(batch.as("b"), if (selfJoin) on && col("a.id") < col("b.id") else on)
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
+  }
+
+  /** One row per document, from the native
+    * [[graft.functions.MinHashLsh]] kernel: (id, buckets, sh,
+    * set_size). `buckets(b)` is band b's bucket, bit-identical to
+    * [[lshBucketsWide]] over [[minHashSignaturesWide]]; `sh`/`set_size`
+    * are bit-identical to [[shingleSetRows]] over [[hashShingles]].
+    * Null texts give no row, as in [[charShingles]]. Ids must be unique
+    * per row: the grouped forms merge two rows' shingle sets under a
+    * shared id, this form keeps them apart. */
+  def lshDocs(df: DataFrame, numHashes: Int = 16, rowsPerBand: Int = 4,
+      k: Int = 9, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    df.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), graft.functions.MinHashLsh.minHashLsh(
+        col(textCol), numHashes, rowsPerBand, k).as("m"))
+      .select(col("id"), col("m.buckets").as("buckets"), col("m.sh").as("sh"),
+        col("m.set_size").as("set_size"))
+
+  /** An [[lshDocs]] frame unrolled by ONE generator into
+    * (id, band, bucket, sh, set_size): per document, one row per band
+    * (sh and set_size null) and one set row (band -1, bucket null).
+    * [[lshBuckets]] and [[lshSets]] both read it, so below the
+    * generator both need every column: an exchange under it (the
+    * pipelines' `repartition(id)`) is planned once and reused by every
+    * consumer, and the kernel runs once per document. Projecting the
+    * doc frame per consumer instead lets the optimizer prune each
+    * consumer's columns below the exchange — two exchanges, and the
+    * corpus signed twice. `stack`, not `posexplode`: an explode over
+    * the buckets column makes the optimizer infer a `size(buckets) > 0`
+    * filter and push it below the projection, re-running the kernel
+    * inside the filter. */
+  def lshRows(docs: DataFrame, nBands: Int): DataFrame = {
+    val bands = (0 until nBands).map(b => s"$b, buckets[$b], null, null")
+    docs.selectExpr("id", s"stack(${nBands + 1}, -1, null, sh, set_size, " +
+      s"${bands.mkString(", ")}) AS (band, bucket, sh, set_size)")
+  }
+
+  /** [[lshRows]] of the text frame `df` behind one `repartition(id)`:
+    * the exchange every consumer of the rows reuses. */
+  private def lshRowsById(df: DataFrame, numHashes: Int, rowsPerBand: Int,
+      k: Int, idCol: String, textCol: String): DataFrame =
+    lshRows(lshDocs(df, numHashes, rowsPerBand, k, idCol, textCol)
+      .repartition(col("id")), numHashes / rowsPerBand)
+
+  /** The (id, band, bucket) rows of an [[lshRows]] frame — the
+    * [[lshBucketsWide]] shape and types. */
+  def lshBuckets(rows: DataFrame): DataFrame =
+    rows.filter(col("band") >= 0).select("id", "band", "bucket")
+
+  /** The (id, sh, set_size) rows of an [[lshRows]] frame — the
+    * [[shingleSetRows]] shape and types. */
+  def lshSets(rows: DataFrame): DataFrame =
+    rows.filter(col("band") < 0).select("id", "sh", "set_size")
+
+  /** Full MinHash-LSH near-dup pipeline: shingle, sign, band and
+    * hash-set each document on its row ([[lshDocs]]) → candidate
+    * self-join on (band, bucket) → exact Jaccard verify over the same
+    * rows' sets. Pairs are bit-identical to
+    * [[minHashLshPairsFromShingles]] over [[charShingles]]. The document
+    * frame is repartitioned on id once; that exchange is the AQE reuse
+    * point both arms of the self-join and both verify joins read back
+    * (see [[lshRows]]). */
   def minHashLshPairs(df: DataFrame, threshold: Double,
       numHashes: Int = 16, rowsPerBand: Int = 4, k: Int = 9,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    minHashLshPairsFromShingles(charShingles(df, k, idCol, textCol),
-      threshold, numHashes, rowsPerBand)
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val rows = lshRowsById(df, numHashes, rowsPerBand, k, idCol, textCol)
+    val buckets = lshBuckets(rows)
+    verifyJaccardSets(bandCandidates(buckets, buckets, selfJoin = true),
+      lshSets(rows), threshold)
+  }
 
-  /** [[minHashLshPairs]] over a prebuilt shingle frame. The pipeline
-    * consumes the shingles THREE times (signatures + both verify
-    * arms); a caller that persists the frame pays the shingle explode
-    * once instead of three scans — the right pattern at 100 TB, where
-    * caching is the caller's budget decision, not the library's. */
+  /** The grouped MinHash-LSH pipeline over a prebuilt shingle frame:
+    * explode-based signatures ([[minHashSignaturesWide]]) and verify
+    * sets ([[shingleSetRows]]). This is the reference form the DuckDB
+    * oracle SQL mirrors and the specs compare [[minHashLshPairs]]
+    * against; it consumes the shingles three times (signatures + both
+    * verify arms). For batch dedup from text, [[minHashLshPairs]] is
+    * the faster path (BASELINE.md). */
   def minHashLshPairsFromShingles(shingles: DataFrame, threshold: Double,
       numHashes: Int = 16, rowsPerBand: Int = 4): DataFrame = {
     val buckets = lshBucketsWide(
       minHashSignaturesWide(shingles, numHashes), numHashes, rowsPerBand)
-    val candidates = buckets.as("a").join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
     // verify over 64-bit shingle identities (see jaccardPairs) — the
     // string values were only needed for the md5 permutations above
-    verifyJaccard(candidates, hashShingles(shingles), threshold)
+    verifyJaccard(bandCandidates(buckets, buckets, selfJoin = true),
+      hashShingles(shingles), threshold)
   }
 
   /** Exact Jaccard on candidate pairs only (joins bounded by the
@@ -442,8 +466,8 @@ object Dedup {
         count(lit(1)).as("set_size"))
 
   /** The set-join verify kernel over prebuilt per-doc arrays
-    * `(id, sh, set_size)` — consumed directly by the row-local path
-    * ([[hashedShingleSets]] builds the frame map-only) and by
+    * `(id, sh, set_size)` — consumed directly by the row-local paths
+    * ([[lshSets]] and [[hashedShingleSets]] build the frame map-only) and by
     * [[verifyJaccard]] after its aggregation. `sh` arrays must be
     * SORTED (both builders array_sort once per document): the
     * intersection is then a codegen'd two-cursor merge walk
@@ -866,17 +890,12 @@ object Dedup {
       threshold: Double, numHashes: Int = 16, rowsPerBand: Int = 4,
       k: Int = 9, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val oldSh = charShingles(oldDf, k, idCol, textCol)
-    val newSh = charShingles(newDf, k, idCol, textCol)
-    val oldBuckets = lshBucketsWide(
-      minHashSignaturesWide(oldSh, numHashes), numHashes, rowsPerBand)
-    val newBuckets = lshBucketsWide(
-      minHashSignaturesWide(newSh, numHashes), numHashes, rowsPerBand)
-    val candidates = oldBuckets.as("a").join(newBuckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    verifyJaccard(candidates, hashShingles(oldSh.unionByName(newSh)),
-      threshold)
+    val oldRows = lshRowsById(oldDf, numHashes, rowsPerBand, k, idCol, textCol)
+    val newRows = lshRowsById(newDf, numHashes, rowsPerBand, k, idCol, textCol)
+    val candidates = bandCandidates(lshBuckets(oldRows), lshBuckets(newRows),
+      selfJoin = false)
+    verifyJaccardSets(candidates,
+      lshSets(oldRows).unionByName(lshSets(newRows)), threshold)
   }
 
   /** Persist the STANDING dedup index of a live corpus — sign once,
@@ -894,18 +913,16 @@ object Dedup {
       numHashes: Int = 16, rowsPerBand: Int = 4, k: Int = 9,
       numBuckets: Int = 32, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
-    val sh = charShingles(corpus, k, idCol, textCol)
-    graft.sources.Ingest.writeBucketedTable(
-      lshBucketsWide(minHashSignaturesWide(sh, numHashes),
-        numHashes, rowsPerBand),
+    val rows = lshRows(lshDocs(corpus, numHashes, rowsPerBand, k, idCol,
+      textCol), numHashes / rowsPerBand)
+    graft.sources.Ingest.writeBucketedTable(lshBuckets(rows),
       s"${prefix}_buckets", Seq("band", "bucket"), numBuckets)
-    graft.sources.Ingest.writeBucketedTable(
-      shingleSetRows(hashShingles(sh)),
+    graft.sources.Ingest.writeBucketedTable(lshSets(rows),
       s"${prefix}_sets", Seq("id"), numBuckets)
   }
 
-  /** Probe the standing index with a new ingest batch: batch shingles
-    * → signatures → banded buckets equi-joined against the STORED
+  /** Probe the standing index with a new ingest batch: the batch's
+    * [[lshDocs]] rows → banded buckets equi-joined against the STORED
     * bucket table; exact-Jaccard verify against the STORED set rows ∪
     * the batch's fresh sets. Output is identical to
     * [[incrementalLshPairs]] over (indexed corpus, batch) — LlmSpec
@@ -918,14 +935,11 @@ object Dedup {
     val spark = newDf.sparkSession
     val oldBuckets = spark.table(s"${prefix}_buckets")
     val oldSets = spark.table(s"${prefix}_sets")
-    val newSh = charShingles(newDf, k, idCol, textCol)
-    val newBuckets = lshBucketsWide(
-      minHashSignaturesWide(newSh, numHashes), numHashes, rowsPerBand)
-    val candidates = oldBuckets.as("a").join(newBuckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    verifyJaccardSets(candidates,
-      oldSets.unionByName(shingleSetRows(hashShingles(newSh))), threshold)
+    val newRows = lshRowsById(newDf, numHashes, rowsPerBand, k, idCol, textCol)
+    val candidates = bandCandidates(oldBuckets, lshBuckets(newRows),
+      selfJoin = false)
+    verifyJaccardSets(candidates, oldSets.unionByName(lshSets(newRows)),
+      threshold)
   }
 
   /** Incremental sign-LSH near-dup detection over embeddings — the

@@ -335,20 +335,23 @@ class LlmSpec extends SparkSpec {
       graft.Tables.load(spark, sfSmoke, "documents").filter(col("doc_id") < 60))
     val sets = Dedup.shingleSets(corpus)
     val shingles = Dedup.charShingles(corpus)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("id").collect().map(_.toSeq).toSeq
-    // same hash, same set, same min — the PLAN is the only difference
-    assert(rows(Dedup.minHashSignaturesRowLocal(sets)) ===
-      rows(Dedup.minHashSignaturesWide(shingles)))
+    def rows(df: org.apache.spark.sql.DataFrame, by: String*) =
+      df.orderBy("id", by: _*).collect().map(_.toSeq).toSeq
+    // same hash, same set, same min — the PLAN is the only difference:
+    // md5 through the native kernel's bands, xx through the folds
+    assert(rows(Dedup.lshBuckets(Dedup.lshRows(Dedup.lshDocs(corpus), 4)), "band") ===
+      rows(Dedup.lshBucketsWide(Dedup.minHashSignaturesWide(shingles)), "band"))
     assert(rows(Dedup.minHashSignaturesRowLocalXx(sets)) ===
       rows(Dedup.minHashSignaturesWideXx(shingles)))
-    // and the end-to-end pipeline's first exchange is the candidate
-    // join: no aggregate below it on the signature side
-    val plan = Dedup.minHashLshPairsRowLocal(corpus, 0.5)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("collect_list"),
-      "row-local verify must not rebuild sets with collect_list:\n" +
-        plan.take(800))
+    // and neither row-local pipeline rebuilds the verify sets with an
+    // aggregate
+    for (xx <- Seq(false, true)) {
+      val plan = Dedup.minHashLshPairsRowLocal(corpus, 0.5, xx = xx)
+        .queryExecution.executedPlan.toString
+      assert(!plan.contains("collect_list"),
+        "row-local verify must not rebuild sets with collect_list:\n" +
+          plan.take(800))
+    }
   }
 
   test("xxhash64 MinHash family finds the same pairs as the md5 oracle twin") {
