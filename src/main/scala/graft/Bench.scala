@@ -54,97 +54,10 @@ object Bench {
     Seq.fill(3)(calibrateOnce(spark, parallelism)).sorted.apply(1)
   }
 
-  /** Recursive on-disk size of a fixture dir (parquet "files" may be
-    * directories in FixtureGen output). */
-  private def dirBytes(f: java.io.File): Long =
-    if (f.isFile) f.length
-    else Option(f.listFiles).map(_.map(dirBytes).sum).getOrElse(0L)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_SHUFFLE: scale-aware shuffle parallelism (the r8
-    // verdict's suite-wide weak: shuffle.partitions pinned to 32 at
-    // EVERY sf leaves the heaviest sf10 rows running 32 tasks over
-    // ~30-60 M-row shuffle/sort inputs — no cluster deployment leaves
-    // the task count at 32 across a 100× data range). "auto" sizes
-    // AQE's pre-coalesce partition count from the input dir: one task
-    // per ~16 MB of source parquet (≈50-64 MB in-flight per task at
-    // parquet's typical 3-4× compression), cpus as the floor, 4096 as
-    // a sanity cap; an integer pins it explicitly (experiment legs).
-    // AQE then coalesces small post-shuffle stages back down, so the
-    // gate-scale plans are unchanged — only genuinely large shuffles
-    // fan wider. Unset = the historical fixed-32 behavior (anchor
-    // comparability; BASELINE.md r9 records the measured delta).
-    // auto ROUNDS UP to a multiple of the core count: the r9 sf10
-    // sweep measured a raw 114 (3.56 waves on 32 cores) WORSE than
-    // both 32 and 256 on most keys — a ragged final wave idles 28% of
-    // the machine for the tail of every shuffle stage; task counts
-    // must quantize to whole waves.
-    val shuffleInit: Option[Int] = sys.env.get("SPARK_GRAFT_SHUFFLE").map {
-      case "auto" =>
-        val bytes = dirBytes(new java.io.File(sfDir))
-        val raw = math.max(cpus.toLong, bytes / (16L << 20))
-        val c = cpus.toLong
-        // round UP to a whole core-wave first, THEN cap at the largest
-        // core-multiple <= 4096: capping before rounding exceeded the
-        // documented 4096 on hosts whose core count does not divide it
-        // (48/96-core: 4096 -> 4128; r9 ADVICE)
-        math.min(4096L / c * c, ((raw + c - 1) / c) * c).toInt
-      case n => n.toInt
-    }
-    shuffleInit.foreach(n => Console.err.println(
-      s"[bench] scale-aware shuffle: AQE initialPartitionNum=$n " +
-        s"(floor ${cpus})"))
-    // SPARK_GRAFT_BROADCAST: scale-aware autoBroadcastJoinThreshold
-    // (the r9 verdict's one weak: at sf100 the p_type-filtered part
-    // dim outgrows the fixed 10 MB default and tpcds_q3_star_probe
-    // flips broadcast -> SortMergeJoin, shuffling the whole 611M-row
-    // fact on l_partkey — 26.9x/decade, THE canonical star-join
-    // scale-killer; it hits every canon star probe as dims outgrow
-    // the threshold). "auto" sizes the threshold from the input dir:
-    // dirBytes/64 with a 10 MB floor (gate-scale plans unchanged —
-    // sf0.1 is ~30 MB source) and a 512 MB cap (a hashed relation
-    // must fit beside execution memory in each task; ~100 MB hashed
-    // dims are routine on real executors). An integer pins the
-    // threshold in MB explicitly (experiment legs). Unset = Spark's
-    // fixed 10 MB default (anchor comparability). The alternative for
-    // dims beyond any sane threshold is the pre-bucketed co-located
-    // layout (Ingest.writeBucketedTable) — BASELINE.md r10 records
-    // the decision rule.
-    val broadcastMb: Option[Long] = sys.env.get("SPARK_GRAFT_BROADCAST").map {
-      case "auto" =>
-        val bytes = dirBytes(new java.io.File(sfDir))
-        math.min(512L << 20, math.max(10L << 20, bytes / 64)) >> 20
-      // integer MB count, "MB" suffix tolerated (same parse as
-      // graft.Explain — r10 ADVICE)
-      case n => try n.trim.stripSuffix("MB").stripSuffix("mb").trim.toLong
-        catch { case _: NumberFormatException => sys.error(
-          s"SPARK_GRAFT_BROADCAST must be 'auto' or an integer MB " +
-            s"count (optionally 'MB'-suffixed), got '$n'") }
-    }
-    broadcastMb.foreach(m => Console.err.println(
-      s"[bench] scale-aware broadcast: autoBroadcastJoinThreshold=${m}MB"))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val withShuffle = shuffleInit.fold(builder)(n => builder.config(
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      n.toString))
-    val spark = broadcastMb.fold(withShuffle)(m => withShuffle.config(
-        "spark.sql.autoBroadcastJoinThreshold", s"${m}MB"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_AQE_LOG: surface AQE's coalesce/replan decisions on
-    // stderr for diagnosis legs (the r9 128-partition minhash anomaly:
-    // a reproducible 155 s at initialPartitionNum=128 vs ~92 s at both
-    // 32 and 256 needed the coalesce boundary made visible)
-    if (sys.env.contains("SPARK_GRAFT_AQE_LOG"))
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.adaptive",
-        org.apache.logging.log4j.Level.DEBUG)
+    val spark = Session.start()
+    val parallelism = spark.sparkContext.defaultParallelism
     // optional name filter (args) for targeted perf iteration; the
     // driver passes no args and gets the full suite
     val all: Seq[(String, (SparkSession, String) => DataFrame)] =
@@ -181,7 +94,7 @@ object Bench {
     }.toMap
     // Calibration probe BEFORE the suite so the reported ratio
     // reflects the host state the queries ran under.
-    val calibrationS = calibrate(spark, cpus.toInt)
+    val calibrationS = calibrate(spark, parallelism)
     val hostLoadFactor = calibrationS / CalibrationIdleS
     Console.err.println(
       f"[bench] calibration ${calibrationS}%.3f s (host_load_factor ${hostLoadFactor}%.2f)")
@@ -192,7 +105,7 @@ object Bench {
     // the whole suite is what host_load_factor must report.
     val inlineProbes = Vector.newBuilder[Double]
     val results = suite.zipWithIndex.map { case ((name, fn), i) =>
-      if (i % 20 == 0 && i > 0) inlineProbes += calibrateOnce(spark, cpus.toInt)
+      if (i % 20 == 0 && i > 0) inlineProbes += calibrateOnce(spark, parallelism)
       val t0 = System.nanoTime()
       val ok =
         try { run(fn, spark, sfDir); true }
@@ -227,7 +140,7 @@ object Bench {
       } else name -> first
     }
     // Second bracket AFTER the suite.
-    val calibrationEndS = calibrate(spark, cpus.toInt)
+    val calibrationEndS = calibrate(spark, parallelism)
     val probes = calibrationS +: calibrationEndS +: inlineProbes.result()
     val calibrationMaxS = probes.max
     val hostLoadFactor2 = calibrationMaxS / CalibrationIdleS
@@ -289,15 +202,11 @@ object Bench {
     // nonce rides the short final stdout line so it survives the
     // driver's tail truncation
     val runId = System.currentTimeMillis()
-    // shuffle_init: the AQE pre-coalesce partition count this run used
-    // (0 = unset, the historical fixed-cpus behavior) — legs at
-    // different parallelism must be distinguishable in the artifact
-    // broadcast_mb: the autoBroadcastJoinThreshold this run used in MB
-    // (0 = unset, Spark's 10 MB default) — same leg-distinguishability
-    // contract as shuffle_init
-    val shuffleJson = s""","shuffle_init":${shuffleInit.getOrElse(0)},"broadcast_mb":${broadcastMb.getOrElse(0L)}"""
+    // conf: every spark.* key Session or a -D property set — legs
+    // under different conf must be distinguishable in the artifact
+    val confField = s""","conf":${Session.confJson}"""
     val slowest = corrected.sortBy(-_._2).take(20).sortBy(_._1)
-    val summary = s"""{"metric":"total","value":${r3(total)},"unit":"sec","oracle_total":${r3(oracleTotal)},"core_total":${r3(coreTotal)},"tpcds_total":${r3(tpcdsTotal)},"curate_total":${r3(curateTotal)},"llm_total":${r3(llmTotal)},"extra_total":${r3(total - oracleTotal)},"n_queries":${corrected.size},"n_failed":${corrected.count(_._2 < 0)},"n_retimed":${outliers.size},"calibration_s":${r3(calibrationS)},"calibration_end_s":${r3(calibrationEndS)},"calibration_max_s":${r3(calibrationMaxS)},"n_probes":${probes.size},"host_load_factor":${r3(hostLoadFactor2)}$shuffleJson,"run_id":$runId,"queries":${dict(slowest)},"sf":"$sfDir"}"""
+    val summary = s"""{"metric":"total","value":${r3(total)},"unit":"sec","oracle_total":${r3(oracleTotal)},"core_total":${r3(coreTotal)},"tpcds_total":${r3(tpcdsTotal)},"curate_total":${r3(curateTotal)},"llm_total":${r3(llmTotal)},"extra_total":${r3(total - oracleTotal)},"n_queries":${corrected.size},"n_failed":${corrected.count(_._2 < 0)},"n_retimed":${outliers.size},"calibration_s":${r3(calibrationS)},"calibration_end_s":${r3(calibrationEndS)},"calibration_max_s":${r3(calibrationMaxS)},"n_probes":${probes.size},"host_load_factor":${r3(hostLoadFactor2)}$confField,"run_id":$runId,"queries":${dict(slowest)},"sf":"$sfDir"}"""
     println(summary)
     // Machine-diffable artifact: the FULL summary (totals, every probe,
     // the complete per-query map — not just the 20 slowest) at a stable
@@ -313,7 +222,7 @@ object Bench {
       .filter { case (k, _) => corrected.exists(_._1 == k) }
       .map { case (k, v) => s"\"" + k + s"\":$v" }
       .mkString("{", ",", "}")
-    val fileJson = s"""{"metric":"total","value":${r3(total)},"unit":"sec","oracle_total":${r3(oracleTotal)},"core_total":${r3(coreTotal)},"tpcds_total":${r3(tpcdsTotal)},"curate_total":${r3(curateTotal)},"llm_total":${r3(llmTotal)},"extra_total":${r3(total - oracleTotal)},"n_queries":${corrected.size},"n_failed":${corrected.count(_._2 < 0)},"n_retimed":${outliers.size},"outliers":$outlierJson,"calibration_s":${r3(calibrationS)},"calibration_end_s":${r3(calibrationEndS)},"calibration_max_s":${r3(calibrationMaxS)},"n_probes":${probes.size},"probes":[${probes.map(r3).mkString(",")}],"host_load_factor":${r3(hostLoadFactor2)}$shuffleJson,"workload_rev":$revJson,"run_id":$runId,"queries":${dict(corrected)},"sf":"$sfDir"}"""
+    val fileJson = s"""{"metric":"total","value":${r3(total)},"unit":"sec","oracle_total":${r3(oracleTotal)},"core_total":${r3(coreTotal)},"tpcds_total":${r3(tpcdsTotal)},"curate_total":${r3(curateTotal)},"llm_total":${r3(llmTotal)},"extra_total":${r3(total - oracleTotal)},"n_queries":${corrected.size},"n_failed":${corrected.count(_._2 < 0)},"n_retimed":${outliers.size},"outliers":$outlierJson,"calibration_s":${r3(calibrationS)},"calibration_end_s":${r3(calibrationEndS)},"calibration_max_s":${r3(calibrationMaxS)},"n_probes":${probes.size},"probes":[${probes.map(r3).mkString(",")}],"host_load_factor":${r3(hostLoadFactor2)}$confField,"workload_rev":$revJson,"run_id":$runId,"queries":${dict(corrected)},"sf":"$sfDir"}"""
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json"))
     Option(outPath.getParent).foreach(java.nio.file.Files.createDirectories(_))

@@ -47,6 +47,10 @@ object BenchExtra {
     //    corpus-linear docs scan per probe).
     "bench_bm25_index_build_full" -> 3,
     "bench_bm25_index_probe_full" -> 3,
+    // sched_greedy_defer: r11 bounded its CI collect to the greedy
+    // fold's access bound and added an ev.count() horizon action per
+    // run — a timed-region change the r11 legs straddle unmarked
+    "sched_greedy_defer" -> 2,
     "bench_bm25_full" -> 2,
     "bench_ann_lsh_full" -> 2,
     "bench_ann_pq_full" -> 2,
@@ -114,26 +118,6 @@ object BenchExtra {
     * serve a probe. */
   private val bm25IdxBuiltFor =
     new java.util.concurrent.atomic.AtomicReference[String]("")
-
-  /** Separate standing index FOR THE BLOCK-MAX PROBE KEYS ONLY, built
-    * with the opt-in block summary (blockCount = 256 — the r10 layout
-    * those keys measure). Since r11 the default build skips the
-    * summary (the block-max probe lost the serving bakeoff, so the
-    * recommended path stopped paying its build cost — VERDICT r10
-    * item 2); the negative-result keys keep measuring the real thing
-    * against their own prefix instead of forcing the cost onto
-    * bench_bm25_index_build_full. */
-  private val bm25BmxIdxBuiltFor =
-    new java.util.concurrent.atomic.AtomicReference[String]("")
-
-  private def withBmxIdx(s: SparkSession, dir: String): Unit = {
-    val d = docs(s, dir).select(col("doc_id"), col("text"))
-    if (bm25BmxIdxBuiltFor.get != dir) {
-      Retrieval.writePostingsIndex(d, "bench_bm25_bmx_idx",
-        blockCount = 256)
-      bm25BmxIdxBuiltFor.set(dir)
-    }
-  }
 
   /** The constant 50-query probe batch for [[bench_bm25_index_probe_full]],
     * collected ONCE per fixture dir (50 tiny rows — a bounded,
@@ -468,28 +452,6 @@ object BenchExtra {
         bm25IdxBuiltFor.set(dir)
       }
       Retrieval.bm25TopKFromIndexTwoPhase("bench_bm25_idx",
-        bm25ProbeQueries(s, dir)
-          .select(col("query_id"),
-            substring_index(col("text"), " ", 6).as("text")), 10)
-    }),
-    "bench_bm25_index_probe_bmx_full" -> ((s, dir) => {
-      // EXACT block-max probe (doc_id-range blocks, seed-then-prune —
-      // Ding & Suel recast relationally): always exact, no per-query
-      // fallback cliff. Measured r10: loses to the two-phase probe at
-      // every scale — the keep-list prunes after the scoring join, so
-      // it cuts agg volume but not the posting stream (BASELINE r10
-      // block-max section); kept as the documented negative result.
-      // Probes its OWN block-summary-bearing index (withBmxIdx) since
-      // the r11 opt-in split — the probe-side layout and cost are
-      // unchanged (same postings/df tables, same plan).
-      withBmxIdx(s, dir)
-      Retrieval.bm25TopKFromIndexBlockMax("bench_bm25_bmx_idx",
-        bm25ProbeQueries(s, dir), 10)
-    }),
-    "bench_bm25_index_probe_bmx_shortq_full" -> ((s, dir) => {
-      // short-query serving pair, block-max exact
-      withBmxIdx(s, dir)
-      Retrieval.bm25TopKFromIndexBlockMax("bench_bm25_bmx_idx",
         bm25ProbeQueries(s, dir)
           .select(col("query_id"),
             substring_index(col("text"), " ", 6).as("text")), 10)

@@ -13,15 +13,15 @@ import org.apache.spark.sql.SparkSession
   * standing-index tables as a side effect of plan construction), then
   * the r10 plan-diff [[scenarios]] below.
   *
-  * Env knobs (r10, for before/after plan capture):
+  * Session conf comes from [[Session]] (`SPARK_GRAFT_CPUS`, `-Dspark.*`
+  * JVM properties) and prints first as a `[explain] conf` header. For
+  * before/after plan capture:
   *  - SPARK_GRAFT_EXPLAIN_OUT=dir — write each plan to dir/name.txt
   *    instead of stdout;
-  *  - SPARK_GRAFT_BROADCAST=int — pin autoBroadcastJoinThreshold in MB
-  *    (-1 disables broadcast joins: reproduces at gate scale the
-  *    SortMergeJoin shape a dim table crosses into at sf100 under the
-  *    10 MB default — the r9 star-probe cliff);
-  *  - SPARK_GRAFT_EXPLAIN_CPUS=n — local[n] + shuffle partitions
-  *    (default 4).
+  *  - -Dspark.sql.autoBroadcastJoinThreshold=-1 disables broadcast
+  *    joins: reproduces at gate scale the SortMergeJoin shape a dim
+  *    table crosses into at sf100 under the 10 MB default (the r9
+  *    star-probe cliff).
   */
 object Explain {
 
@@ -60,26 +60,8 @@ object Explain {
     val all = SparkEntry.queries ++ BenchExtra.queries ++ scenarios
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // parse as an integer MB count (an optional "MB" suffix tolerated:
-    // "10MB" used to become the invalid conf "10MBMB" — r10 ADVICE);
-    // non-numeric values fail fast with a clear message
-    val spark = sys.env.get("SPARK_GRAFT_BROADCAST")
-      .fold(builder) { m =>
-        val mb = try m.trim.stripSuffix("MB").stripSuffix("mb").trim.toInt
-          catch { case _: NumberFormatException => sys.error(
-            s"SPARK_GRAFT_BROADCAST must be an integer MB count " +
-              s"(optionally 'MB'-suffixed) or -1, got '$m'") }
-        builder.config("spark.sql.autoBroadcastJoinThreshold",
-          if (mb == -1) "-1" else s"${mb}MB")
-      }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.start(logLevel = "ERROR")
+    println(s"[explain] conf ${Session.confJson}")
     val outDir = sys.env.get("SPARK_GRAFT_EXPLAIN_OUT")
     outDir.foreach(d =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))

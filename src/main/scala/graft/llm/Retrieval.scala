@@ -165,42 +165,17 @@ object Retrieval {
     *    (billions of terms on a web corpus), never broadcast whole:
     *    the probe semi-joins it down to the query vocabulary first
     *    (the [[bm25PartialsF]] pruning discipline, stored form);
-    *  - `<prefix>_blockmax` (term, block, bound) bucketed on term —
-    *    OPT-IN (blockCount > 0; default 0 skips it): the block-max
-    *    summary (Ding & Suel VLDB 2011's block-max skip data in
-    *    relational form): blocks are doc_id RANGES
-    *    (block = doc_id / block_span, ≤ `blockCount` blocks total),
-    *    so a doc's every term lives in ONE block, and bound is the
-    *    largest exact per-posting BM25 contribution
-    *    idf·tf(k1+1)/(tf+k1(1−b+b·dl/avgdl)) of that term inside the
-    *    block. Hence Σ over a query's terms of bound(t, block) upper-
-    *    bounds ANY doc in the block for that query — whole blocks
-    *    whose bound sum cannot reach a known kth score are skipped
-    *    EXACTLY ([[bm25TopKFromIndexBlockMax]]). Size ≤
-    *    Σ_t min(df_t, blockCount) rows — tail terms contribute ~1,
-    *    only the Zipf head pays the full blockCount. Opt-in because
-    *    the block-max probe lost the r10 serving bakeoff at every
-    *    scale (BASELINE r10) — nothing on the recommended path reads
-    *    the table, yet building it cost an extra tf⋈dl⋈df join, a
-    *    (term, block) groupBy and a third bucketed write on EVERY
-    *    index build (bench_bm25_index_build_full 3.6 → 7.6 s, the one
-    *    structural regression in the r10 driver tail — r11 fix);
-    *  - `<prefix>_meta` one row (k1, b, n_docs, avgdl, total_len,
-    *    block_span): scoring parameters AND corpus statistics pinned
-    *    AT INDEX TIME and read back by the probe, so writer and
-    *    prober cannot silently disagree (the
-    *    [[Dedup.writeCosineIndex]] `_meta` contract — a probe scoring
-    *    under a different k1/b or a stale N/avgdl is a silent ranking
-    *    drift). block_span appended r10 — position-based readers of
-    *    columns 0–4 are unaffected.
+    *  - `<prefix>_meta` one row (k1, b, n_docs, avgdl, total_len):
+    *    scoring parameters AND corpus statistics pinned AT INDEX TIME
+    *    and read back by the probe, so writer and prober cannot
+    *    silently disagree (the [[Dedup.writeCosineIndex]] `_meta`
+    *    contract — a probe scoring under a different k1/b or a stale
+    *    N/avgdl is a silent ranking drift).
     * Build cost: the same single postings shuffle [[bm25TopK]] pays
-    * once per run, plus one doc-key join to denormalize dl (and, only
-    * when blockCount > 0, one term-key join + (term, block) groupBy
-    * for the block summary) — linear, paid once per corpus snapshot
-    * instead of per query batch. */
+    * once per run, plus one doc-key join to denormalize dl — linear,
+    * paid once per corpus snapshot instead of per query batch. */
   def writePostingsIndex(corpus: DataFrame, prefix: String,
-      k1: Double = 1.2, b: Double = 0.75, numBuckets: Int = 32,
-      blockCount: Int = 0): Unit = {
+      k1: Double = 1.2, b: Double = 0.75, numBuckets: Int = 32): Unit = {
     val toks = corpus
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "")
@@ -219,42 +194,18 @@ object Retrieval {
     graft.sources.Ingest.writeBucketedTable(dl,
       s"${prefix}_doclen", Seq("doc_id"), numBuckets,
       sortCols = Seq("doc_id"))
-    val dfFrame = tf.groupBy("term").agg(count(lit(1)).as("df"))
     graft.sources.Ingest.writeBucketedTable(
-      dfFrame, s"${prefix}_df", Seq("term"), numBuckets,
+      tf.groupBy("term").agg(count(lit(1)).as("df")),
+      s"${prefix}_df", Seq("term"), numBuckets,
       sortCols = Seq("term"))
-    // corpus stats collected once (3 scalars) — meta AND the block
-    // summary both need avgdl/span as literals
+    // corpus stats collected once (2 scalars)
     val stats = dl.agg(count(lit(1)).as("n_docs"),
-      sum("dl").cast("double").as("total_len"),
-      max("doc_id").as("max_id")).head()
-    val (nDocs, totalLen, maxId) =
-      (stats.getLong(0), stats.getDouble(1), stats.getLong(2))
-    val avgdl = totalLen / nDocs
-    // block_span = 0 is the no-block-summary sentinel the block-max
-    // probe checks; position-based readers of meta columns 0-4 are
-    // unaffected either way
-    val span =
-      if (blockCount <= 0) 0L else math.max(1L, maxId / blockCount + 1)
-    if (blockCount > 0) {
-      val blockmax = tf.join(dl, "doc_id")
-        .withColumn("block", (col("doc_id") / lit(span)).cast("long"))
-        .join(dfFrame, "term")
-        .withColumn("contrib",
-          log(lit(1.0) + (lit(nDocs) - col("df") + lit(0.5)) /
-            (col("df") + lit(0.5))) *
-            (col("tf") * lit(k1 + 1.0)) /
-            (col("tf") + lit(k1) * (lit(1.0 - b) +
-              lit(b) * col("dl") / lit(avgdl))))
-        .groupBy("term", "block").agg(max("contrib").as("bound"))
-      graft.sources.Ingest.writeBucketedTable(blockmax,
-        s"${prefix}_blockmax", Seq("term"), numBuckets,
-        sortCols = Seq("term"))
-    }
+      sum("dl").cast("double").as("total_len")).head()
+    val (nDocs, totalLen) = (stats.getLong(0), stats.getDouble(1))
     import corpus.sparkSession.implicits._
     graft.sources.Ingest.writeManagedTable(
-      Seq((k1, b, nDocs, avgdl, totalLen, span))
-        .toDF("k1", "b", "n_docs", "avgdl", "total_len", "block_span"),
+      Seq((k1, b, nDocs, totalLen / nDocs, totalLen))
+        .toDF("k1", "b", "n_docs", "avgdl", "total_len"),
       s"${prefix}_meta")
   }
 
@@ -524,125 +475,6 @@ object Retrieval {
           k, pushdownTermCap)
         .withColumn("certified", lit(false))
         .select("query_id", "rank", "doc_id", "bm25", "certified"))
-  }
-
-  /** Exact block-max probe — Ding & Suel's block-max index (VLDB
-    * 2011) recast as two pruned relational passes, with NO
-    * certificate machinery: because blocks are doc_id ranges, a doc's
-    * entire score lives in one block, so U(q, block) =
-    * Σ_{t ∈ q} bound(t, block) (from `<prefix>_blockmax`) upper-
-    * bounds EVERY doc in the block and whole-block skipping is
-    * unconditionally exact:
-    *
-    *  1. SEED: score only the `seedBlocks` highest-U blocks per query
-    *    (a (query, block) keep-list semi-join ahead of the partial-
-    *    score shuffle), take the true kth score L(q) — a valid lower
-    *    bound, since seed scores are exact scores of real docs;
-    *  2. PRUNE + FINAL: keep blocks with U(q, block) ≥ L(q) — a block
-    *    below L(q) cannot even tie the kth doc — and score ONLY
-    *    those, exactly; seed blocks always requalify (their own docs
-    *    witness U ≥ L), so one final pass over the kept blocks yields
-    *    the exact top k with no union bookkeeping. Queries with fewer
-    *    than k seed docs keep every block (fail-open to the one-phase
-    *    volume, never to a wrong answer).
-    *
-    * Driver-side state is bounded by construction: U is
-    * |queries| · ≤ blockCount rows, L is |queries| scalars. Postings
-    * are scanned with the same term IN-set pushdown as
-    * [[bm25TopKFromIndex]]; the two passes touch only keep-listed
-    * (query, block) partial-score mass, so the expensive exchanges
-    * (partial-score groupBy, top-k window) see pruned volume. Versus
-    * [[bm25TopKFromIndexTwoPhase]]: no fallback cliff on long
-    * queries — pruning degrades gracefully per block instead of per
-    * query. MEASURED VERDICT (r10 bm25z4 legs, BASELINE): the
-    * relational form loses to the two-phase probe at every scale and
-    * both query shapes, because the keep-list semi-join prunes AFTER
-    * the scoring join — it cuts aggregation volume but the join still
-    * streams every term-matched posting, twice; term-level pruning
-    * (two-phase/maxDfFrac) is what cuts the stream a batch plan pays
-    * for. Kept as the exact, spec-pinned negative result; block
-    * skipping could reach the scan only on a doc-sorted, per-query
-    * layout this library does not emulate. Ranks agree with
-    * [[bm25TopKFromIndex]] rank-for-rank
-    * (spec-pinned; same per-posting expression chain). Requires an
-    * index written with the r10 `<prefix>_blockmax`/block_span layout
-    * — older indexes need a rebuild. */
-  def bm25TopKFromIndexBlockMax(prefix: String, queries: DataFrame,
-      k: Int, seedBlocks: Int = 4,
-      pushdownTermCap: Int = 100000): DataFrame = {
-    val spark = queries.sparkSession
-    val meta = spark.table(s"${prefix}_meta").head()
-    require(meta.length >= 6 && meta.getLong(5) > 0,
-      s"$prefix lacks a block summary — rebuild with " +
-        "writePostingsIndex(..., blockCount > 0) (opt-in since r11)")
-    val (k1, b, nDocs, avgdl, span) = (meta.getDouble(0),
-      meta.getDouble(1), meta.getLong(2), meta.getDouble(3),
-      meta.getLong(5))
-    val qterms = queries
-      .select(col("query_id"), explode(split(col("text"), " ")).as("term"))
-      .filter(col("term") =!= "").distinct()
-    val vocab = queries
-      .select(explode(split(col("text"), " ")).as("term"))
-      .filter(col("term") =!= "")
-      .agg(collect_set(col("term"))).head().getSeq[String](0)
-    require(vocab.length <= pushdownTermCap,
-      s"block-max probe needs a bounded batch vocabulary (${vocab.length})")
-    // U(q, block): query-vocab-pruned block summary — bounded
-    // (|queries| · ≤ blockCount rows), collected once
-    val ub = broadcast(qterms)
-      .join(spark.table(s"${prefix}_blockmax")
-        .filter(col("term").isInCollection(vocab)), "term")
-      .groupBy("query_id", "block").agg(sum("bound").as("ub"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val byQ = ub.groupBy(_._1)
-    import spark.implicits._
-    val scoreExpr =
-      log(lit(1.0) + (lit(nDocs) - col("df") + lit(0.5)) /
-        (col("df") + lit(0.5))) *
-        (col("tf") * lit(k1 + 1.0)) /
-        (col("tf") + lit(k1) * (lit(1.0 - b) +
-          lit(b) * col("dl") / lit(avgdl)))
-    def scoreBlocks(keep: Seq[(Long, Long)]): DataFrame = {
-      val keepDf = keep.toDF("query_id", "block")
-      val postings = spark.table(s"${prefix}_postings")
-        .filter(col("term").isInCollection(vocab))
-        .withColumn("block", (col("doc_id") / lit(span)).cast("long"))
-      val dfreq = spark.table(s"${prefix}_df")
-        .filter(col("term").isInCollection(vocab))
-      broadcast(qterms)
-        .join(postings, "term")
-        .filter(col("doc_id") =!= col("query_id"))
-        .join(broadcast(keepDf), Seq("query_id", "block"), "left_semi")
-        .join(broadcast(dfreq), "term")
-        .withColumn("bm25_term", scoreExpr)
-        .groupBy("query_id", "doc_id").agg(sum("bm25_term").as("bm25"))
-    }
-    // ---- pass 1: seed the kth-score lower bound from the
-    // highest-upper-bound blocks
-    val seed = byQ.toSeq.flatMap { case (q, rows) =>
-      rows.sortBy(t => (-t._3, t._2)).take(seedBlocks)
-        .map(t => (q, t._2))
-    }
-    val kth: Map[Long, Double] = scoreBlocks(seed)
-      .withColumn("r", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("bm25").desc, col("doc_id"))))
-      .filter(col("r") === k)
-      .select("query_id", "bm25").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    // ---- pass 2: exact scoring over the blocks that can still matter
-    val keep = byQ.toSeq.flatMap { case (q, rows) =>
-      kth.get(q) match {
-        case Some(l) => rows.filter(_._3 >= l).map(t => (q, t._2))
-        case None    => rows.map(t => (q, t._2)) // < k seed docs: keep all
-      }
-    }
-    scoreBlocks(keep)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("bm25").desc, col("doc_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "doc_id", "bm25")
   }
 
   // ------------------------------------------- micro-int gated twins

@@ -180,7 +180,8 @@ object SchedulingQueries {
     // truncation) is unchanged and results stay bit-identical. At the
     // fixture scales the bound (~33M slots) exceeds the corpus and
     // the collected rows are exactly the old ones.
-    val searchRangeSlots = 43200 // ceil(12 h / 1 s slots), as below
+    val searchHours = 12.0
+    val searchRangeSlots = math.ceil(searchHours * 3600).toInt // 1 s slots
     val maxD = if (wl.isEmpty) 0 else wl.map(_.predSlots).max
     val accessBound = (wl.length.toLong + 1) * (searchRangeSlots.toLong + maxD)
     // one count over the events scan (parquet row-group metadata —
@@ -198,7 +199,7 @@ object SchedulingQueries {
     val profile = Schedulers.CarbonProfileMicro(prefix, slotSec = 1.0,
       horizonSlots = math.min(nSlots, Int.MaxValue.toLong).toInt)
     val schedule = Schedulers.greedyLowCarbonDefer(wl, profile,
-      searchHours = 12.0, candidateStepSlots = 3600)
+      searchHours = searchHours, candidateStepSlots = 3600)
     val placements = Schedulers.replaySequential(wl, schedule, blockByPred = true)
     placements.toDF()
       .select(col("id").as("query_id"), col("startSlot").as("start_slot"),

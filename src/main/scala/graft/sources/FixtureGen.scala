@@ -467,14 +467,7 @@ object FixtureGen {
         System.err.println(s"FixtureGen: mult must be a positive int, got '$multStr'")
         sys.exit(2)
       }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.start()
     if (args.length > 3 && args(3) == "zipf") {
       writeZipf(spark, srcDir, outDir, mult)
       println(s"[fixturegen] wrote ${mult}x zipf documents of $srcDir to $outDir")

@@ -46,6 +46,11 @@ class PlanQualitySpec extends SparkSpec {
     * must fit its harness budget). */
   test("plan sweep: no unintended cartesian/nested-loop, no unpartitioned window, no stray cache") {
     import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    // the sweep only visits live keys, so an allowlist entry naming a
+    // removed or renamed query would be silently ignored
+    val unknown = (intendedUnkeyed ++ intendedGlobalWindow)
+      .diff(SparkEntry.queries.keySet)
+    assert(unknown.isEmpty, s"allowlist entries name no query: $unknown")
     val unkeyedOffenders = Seq.newBuilder[String]
     val windowOffenders = Seq.newBuilder[String]
     val windowStale = Seq.newBuilder[String]

@@ -12,25 +12,11 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  /** Test parallelism: local[8]/8 shuffle partitions by default (the
-    * r10 driver could not finish the local[4] suite inside its harness
-    * budget — VERDICT r10 item 4; the Spark-heavy suites are the bulk
-    * of the 40 min and scale with cores on the 32-core hosts), capped
-    * at the machine's core count, overridable for constrained runners
-    * via SPARK_GRAFT_TEST_CPUS. Every suite's assertions are
-    * partitioning-invariant by repo discipline (decimal-exact sums,
-    * rank-unique orderings), so the core count is a pure speed knob. */
-  lazy val session: SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_TEST_CPUS",
-      math.min(8, Runtime.getRuntime.availableProcessors()).toString)
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The suites' session is [[Session]]'s: local[SPARK_GRAFT_CPUS],
+    * or every core when unset, with as many shuffle partitions; extra
+    * conf arrives as `-Dspark.*` JVM properties. Every suite's
+    * assertions are partitioning-invariant by repo discipline
+    * (decimal-exact sums, rank-unique orderings), so the core count is
+    * a pure speed knob. */
+  lazy val session: SparkSession = Session.start()
 }

@@ -294,68 +294,6 @@ class RetrievalSpec extends SparkSpec {
     assert(top100 === 3L, s"expected doc 3 on top, got $top100")
   }
 
-  test("block-max probe: exact agreement, range blocks, per-term bounds") {
-    import spark.implicits._
-    // 20 docs, blockCount 4 → span = 19/4+1 = 5, blocks 0..3. "common"
-    // is Zipf-head (every doc, a bound row in all 4 blocks); "u<i>" is
-    // unique (exactly one bound row, in block i/5); "grp<j>" spans
-    // blocks (df 5)
-    val d = (0 until 20).map(i =>
-      (i.toLong, s"common grp${i % 4} u$i")).toDF("doc_id", "text")
-    Retrieval.writePostingsIndex(d, "bm25_idx_bm", numBuckets = 8,
-      blockCount = 4)
-    val meta = spark.table("bm25_idx_bm_meta").head()
-    assert(meta.getLong(5) === 5L, s"block_span: ${meta.getLong(5)}")
-    val bm = spark.table("bm25_idx_bm_blockmax")
-    val commonBlocks = bm.filter(col("term") === "common").count()
-    val u3Rows = bm.filter(col("term") === "u3")
-      .select("block").collect().map(_.getLong(0))
-    assert(commonBlocks === 4L, s"head term in all blocks: $commonBlocks")
-    assert(u3Rows.toSeq === Seq(0L), s"u3 lives in block 0: ${u3Rows.toSeq}")
-    assert(bm.filter(col("bound") <= 0.0).count() === 0L,
-      "bounds are positive")
-    // rank-for-rank agreement with the one-phase exact probe — both
-    // under the default seed width and under seedBlocks = 1, which
-    // forces the prune path to drop blocks against a single-block L(q)
-    val q = Seq((100L, "common u3 grp1"), (101L, "common"))
-      .toDF("query_id", "text")
-    val op = Retrieval.bm25TopKFromIndex("bm25_idx_bm", q, 3)
-      .select("query_id", "rank", "doc_id")
-    for (sb <- Seq(1, 4)) {
-      val bmx = Retrieval.bm25TopKFromIndexBlockMax("bm25_idx_bm", q, 3,
-        seedBlocks = sb).select("query_id", "rank", "doc_id")
-      assert(bmx.exceptAll(op).count() == 0 && op.exceptAll(bmx).count() == 0,
-        s"block-max(seedBlocks=$sb) must equal the one-phase exact probe")
-    }
-  }
-
-  test("postings index default build skips the block summary (opt-in since r11)") {
-    import spark.implicits._
-    // r10 measured the block-max probe OUT of the serving bakeoff, yet
-    // every build still paid the summary's extra tf⋈dl⋈df join +
-    // (term, block) groupBy + third bucketed write
-    // (bench_bm25_index_build_full 3.6→7.6 s). Default is now
-    // blockCount = 0: no blockmax table, block_span = 0 sentinel in
-    // meta, the block-max probe fails fast with a rebuild hint, and
-    // the exact probes are unaffected.
-    val d = (0 until 6).map(i =>
-      (i.toLong, s"alpha beta u$i")).toDF("doc_id", "text")
-    Retrieval.writePostingsIndex(d, "bm25_idx_nobm", numBuckets = 4)
-    val meta = spark.table("bm25_idx_nobm_meta").head()
-    assert(meta.getLong(5) === 0L,
-      s"default build must write the 0 sentinel, got ${meta.getLong(5)}")
-    assert(!spark.catalog.tableExists("bm25_idx_nobm_blockmax"),
-      "default build must not write a blockmax table")
-    val q = Seq((100L, "alpha u3")).toDF("query_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      Retrieval.bm25TopKFromIndexBlockMax("bm25_idx_nobm", q, 2)
-    }
-    assert(e.getMessage.contains("block summary"),
-      s"unexpected failure message: ${e.getMessage}")
-    assert(Retrieval.bm25TopKFromIndex("bm25_idx_nobm", q, 2).count() > 0,
-      "exact probe must work against a summary-less index")
-  }
-
   test("standing postings index: stored side unshuffled under a term-key join") {
     import spark.implicits._
     val d = Seq(
