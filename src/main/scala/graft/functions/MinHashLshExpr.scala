@@ -78,7 +78,22 @@ object MinHashLsh {
     ThreadLocal.withInitial[java.security.MessageDigest](() =>
       java.security.MessageDigest.getInstance("MD5"))
 
-  def compute(s: UTF8String, numHashes: Int, rowsPerBand: Int, k: Int): InternalRow = {
+  /** The distinct windows of k code points of one text (Spark's
+    * `length`/`substring` rule; a text shorter than k is one
+    * whole-text window, `""` included), in first-occurrence order.
+    * Window `u` spans `bytes(start(u) until end(u))` and has the
+    * xxhash64 (seed 42) `hash(u)`. The walk both kernels share:
+    * [[MinHashLsh]] signs these windows, [[ShingleOverlap]] looks them
+    * up in the eval set. */
+  final class Windows private[functions] (val bytes: Array[Byte],
+      offs: Array[Int], width: Int, hs: Array[Long], uniq: Array[Int],
+      val size: Int) {
+    def start(u: Int): Int = offs(uniq(u))
+    def end(u: Int): Int = offs(uniq(u) + width)
+    def hash(u: Int): Long = hs(uniq(u))
+  }
+
+  def windows(s: UTF8String, k: Int): Windows = {
     val bytes = s.getBytes
     val n = bytes.length
     // byte offset of every code point, counted as UTF8String.numChars does
@@ -121,6 +136,13 @@ object MinHashLsh {
       if (!dup) { table(slot) = w; uniq(nUniq) = w; nUniq += 1 }
       w += 1
     }
+    new Windows(bytes, offs, width, hs, uniq, nUniq)
+  }
+
+  def compute(s: UTF8String, numHashes: Int, rowsPerBand: Int, k: Int): InternalRow = {
+    val win = windows(s, k)
+    val bytes = win.bytes
+    val nUniq = win.size
 
     // seeds: 4 per md5 digest, each an unsigned big-endian 32-bit slice
     // (the 8-hex slice of the digest's hex form, in the same order)
@@ -133,10 +155,9 @@ object MinHashLsh {
     val sh = new Array[Long](nUniq)
     var u = 0
     while (u < nUniq) {
-      val win = uniq(u)
-      sh(u) = hs(win)
-      val off = offs(win)
-      val len = offs(win + width) - off
+      sh(u) = win.hash(u)
+      val off = win.start(u)
+      val len = win.end(u) - off
       var g = 0
       while (g < nGroups) {
         md.update(prefixes(g))

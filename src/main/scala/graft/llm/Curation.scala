@@ -20,8 +20,8 @@ import graft.Tables
   * Scale shapes: sampling/splitting are map-only; mixing adds one tiny
   * per-source aggregate broadcast back; packing is a per-shard window
   * (shard = source x hash-salt, so low-cardinality sources cannot skew
-  * a partition); decontamination is one equi-join against a broadcast
-  * eval shingle set. No all-pairs work, no driver loops.
+  * a partition); decontamination is one row-local kernel against a
+  * broadcast eval shingle set. No all-pairs work, no driver loops.
   */
 object Curation {
 
@@ -292,15 +292,13 @@ object Curation {
     // r10 ADVICE), and the collect is capped at 1e6+2 rows so a frame
     // violating the [0, 1e6] contract fails the require below instead
     // of collecting corpus-cardinality rows onto the driver.
-    val vc = scored.filter(col("score_micro").isNotNull)
-      .groupBy(col("score_micro").cast("long").as("score_micro"))
-      .agg(count(lit(1)).as("c"))
-      .orderBy("score_micro")
-      .limit(1000002)
-      .collect()
-    require(vc.length <= 1000001,
-      "perplexityThresholds: score_micro violates the [0, 1e6] integer " +
-        s"contract (> 1000001 distinct values collected)")
+    val vc = graft.Collect.collectBounded(
+      scored.filter(col("score_micro").isNotNull)
+        .groupBy(col("score_micro").cast("long").as("score_micro"))
+        .agg(count(lit(1)).as("c"))
+        .orderBy("score_micro"),
+      1000001, "perplexityThresholds: score_micro violates the [0, 1e6] " +
+        "integer contract (scale scores into it)")
     if (vc.isEmpty)
       spark.sql(
         "SELECT CAST(NULL AS BIGINT) AS t1, CAST(NULL AS BIGINT) AS t2")
@@ -569,58 +567,115 @@ object Curation {
     * least `minShared` distinct char-9-gram shingles with ANY eval
     * document. The eval side of a decontamination run is benchmark-
     * sized (thousands of docs, not billions), so its distinct shingle
-    * set is broadcast and the big side does one map-side hash-join
-    * probe — the only scalable shape for 100 TB x eval-set checks.
-    * Returns (doc_id, n_shared, n_shingles, overlap_frac, contaminated)
-    * for every training doc with at least one shared shingle. The
-    * absolute `minShared` count catches short verbatim quotes; the
-    * `minFrac` share-of-own-shingles ratio is the near-copy contract
-    * that stays meaningful when organic shingle overlap is high (both
-    * must hold; pass minShared=1 for a pure-ratio gate or minFrac=0.0
-    * for a pure-count gate). The count gate is clamped to the doc's
-    * own distinct-shingle count — a sub-shingle-size doc collapses to
-    * ONE whole-text shingle, and an uncapped minShared=10 could never
-    * flag even a verbatim copy of such a short eval doc.
+    * set is built on the driver (one bounded collect of the eval
+    * texts) and broadcast once; each training row then counts its
+    * shared and distinct shingles in the native row-local [[graft.functions.ShingleOverlap]] kernel — no
+    * explode, no join, no shuffle: the only scalable shape for 100 TB
+    * x eval-set checks. Returns (doc_id, n_shared, n_shingles,
+    * overlap_frac, contaminated) for every training row with at least
+    * one shared shingle. The absolute `minShared` count catches short
+    * verbatim quotes; the `minFrac` share-of-own-shingles ratio is the
+    * near-copy contract that stays meaningful when organic shingle
+    * overlap is high (both must hold; pass minShared=1 for a pure-ratio
+    * gate or minFrac=0.0 for a pure-count gate). The count gate is
+    * clamped to the doc's own distinct-shingle count — a sub-shingle-
+    * size doc collapses to ONE whole-text shingle, and an uncapped
+    * minShared=10 could never flag even a verbatim copy of such a short
+    * eval doc. Training `doc_id`s are unique (one row per document).
     *
-    * `broadcastEval=false` is the fallback for eval sets too large to
-    * broadcast (a many-benchmark union, or decontaminating against
-    * another corpus slice): the probe becomes a SHUFFLE_HASH equi-join
-    * on the shingle key — both sides shuffle once, the (distinct,
-    * smaller) eval side builds the hash table, and no executor ever
-    * materializes the whole eval shingle set. Same result, plan-
-    * asserted in CurationSpec. */
+    * An eval set too large to hold on the driver (a many-benchmark
+    * union, or decontaminating against another corpus slice: more than
+    * [[EvalMaxDocs]] texts or [[EvalMaxShingles]] distinct shingles)
+    * takes the join path instead, chosen here from the collected size:
+    * the shingles are exploded on both sides and probed with a
+    * SHUFFLE_HASH equi-join on the shingle key — both sides shuffle
+    * once, the (distinct, smaller) eval side builds the hash table, and
+    * no executor ever materializes the whole eval shingle set. Same
+    * rows, cross-checked in CurationSpec and ShingleOverlapPropSpec. */
   def decontaminate(train: DataFrame, evalSet: DataFrame,
       minShared: Int = 10, minFrac: Double = 0.0, idCol: String = "doc_id",
-      textCol: String = "text", broadcastEval: Boolean = true): DataFrame = {
-    // ONE explode + ONE groupBy: left-join the (distinct) shingle rows
-    // against the broadcast eval set with a hit marker, then count all
-    // rows (= the doc's distinct-shingle count, since shingleSetCol is
-    // array_distinct) and non-null hits in the same aggregate. A
-    // size(shingleSetCol) companion column would be re-collapsed by
-    // Catalyst into the post-explode projection and rebuild the whole
-    // array PER SHINGLE ROW — O(shingles²) per doc (measured 70 s on
-    // 500 fixture docs before this shape).
+      textCol: String = "text"): DataFrame =
+    gated(overlapCounts(train, evalSet, idCol, textCol, EvalMaxDocs,
+      EvalMaxShingles), idCol, minShared, minFrac)
+
+  /** [[decontaminate]] through the join path whatever the eval set's
+    * size — the reference the kernel path is checked against. */
+  private[graft] def decontaminateByJoin(train: DataFrame, evalSet: DataFrame,
+      minShared: Int = 10, minFrac: Double = 0.0, idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame =
+    gated(joinCounts(train, evalSet, idCol, textCol), idCol, minShared, minFrac)
+
+  /** The most eval texts [[decontaminate]] collects to the driver
+    * (about 400 bytes of heap per 300-character text), and the most
+    * distinct eval shingles it holds there and broadcasts (about 60
+    * bytes of heap each in the set plus 37 in the serialized
+    * broadcast: ~190 MB at the bound). Measured: BASELINE.md,
+    * "Decontamination's driver bound". A larger eval set takes the
+    * join path. */
+  val EvalMaxDocs: Int = 100000
+  val EvalMaxShingles: Int = 2000000
+
+  /** (id, n_shared, n_shingles) per training row: the
+    * [[graft.functions.ShingleOverlap]] kernel against the broadcast
+    * eval shingles while the eval set is inside both bounds (every
+    * row, null counts for a null text), else [[joinCounts]]. */
+  private[graft] def overlapCounts(train: DataFrame, evalSet: DataFrame,
+      idCol: String, textCol: String, maxDocs: Int,
+      maxShingles: Int): DataFrame = {
+    val evalShingles = graft.Collect.collectAtMost(evalSet.select(col(textCol)), maxDocs)
+      .flatMap(texts => graft.functions.ShingleSet.of(
+        texts.iterator.map(_.getString(0)), 9, maxShingles))
+    evalShingles match {
+      case Some(set) =>
+        val bc = evalSet.sparkSession.sparkContext.broadcast(set)
+        train.select(col(idCol),
+            graft.functions.ShingleOverlap.shingleOverlap(col(textCol), bc, 9).as("ov"))
+          .select(col(idCol), col("ov.n_shared").as("n_shared"),
+            col("ov.n_shingles").as("n_shingles"))
+      case None => joinCounts(train, evalSet, idCol, textCol)
+    }
+  }
+
+  /** (id, n_shared, n_shingles) per training row with a non-null text,
+    * by ONE explode + ONE groupBy: left-join the (distinct) shingle
+    * rows against the eval set with a hit marker, then count all rows
+    * (= the doc's distinct-shingle count, since shingleSetCol is
+    * array_distinct) and non-null hits in the same aggregate. A
+    * size(shingleSetCol) companion column would be re-collapsed by
+    * Catalyst into the post-explode projection and rebuild the whole
+    * array PER SHINGLE ROW — O(shingles²) per doc (measured 70 s on
+    * 500 fixture docs before this shape). */
+  private def joinCounts(train: DataFrame, evalSet: DataFrame,
+      idCol: String, textCol: String): DataFrame = {
     val trainSh = train.select(col(idCol),
       explode(Dedup.shingleSetCol(col(textCol))).as("shingle"))
     val evalSh = evalSet
       .select(explode(Dedup.shingleSetCol(col(textCol))).as("shingle"))
       .distinct()
       .withColumn("hit", lit(1))
-    val evalKeyed =
-      if (broadcastEval) broadcast(evalSh) else evalSh.hint("shuffle_hash")
-    trainSh.join(evalKeyed, Seq("shingle"), "left")
+    trainSh.join(evalSh.hint("shuffle_hash"), Seq("shingle"), "left")
       .groupBy(idCol)
       .agg(count(col("hit")).as("n_shared"),
         count(lit(1)).as("n_shingles"))
-      .filter(col("n_shared") > 0)
+  }
+
+  /** [[decontaminate]]'s output from overlap counts. */
+  private def gated(counts: DataFrame, idCol: String, minShared: Int,
+      minFrac: Double): DataFrame =
+    counts.filter(col("n_shared") > 0)
       .withColumn("overlap_frac",
         col("n_shared").cast("double") / col("n_shingles"))
       .withColumn("contaminated",
-        col("n_shared") >= least(lit(minShared), col("n_shingles")) &&
-          col("overlap_frac") >= minFrac)
+        contaminated(col("n_shared"), col("n_shingles"), minShared, minFrac))
       .select(col(idCol), col("n_shared"), col("n_shingles"),
         col("overlap_frac"), col("contaminated"))
-  }
+
+  /** The contamination gate on a row's shared and distinct shingle
+    * counts (see [[decontaminate]]). */
+  private def contaminated(nShared: Column, nShingles: Column,
+      minShared: Int, minFrac: Double): Column =
+    nShared >= least(lit(minShared), nShingles) &&
+      nShared.cast("double") / nShingles >= minFrac
 
   /** Corpus-wide paragraph-level deduplication — the CCNet/C4-lineage
     * boilerplate killer: split every document on `sep`, keep only the
@@ -657,27 +712,35 @@ object Curation {
     * production pretraining pipeline runs end-to-end (quality filter →
     * exact dedup keep-min-id → eval-holdout removal → decontamination
     * drop → split assignment → training-order shuffle), every stage
-    * the library operator it composes. One corpus pass per stage, all
-    * joins equi-keyed (content hash, shingle, id), so the composition
-    * inherits each stage's 100 TB shape. Returns the surviving
-    * training corpus with (split, shard, pos). */
+    * the library operator it composes. The plan is linear: the quality
+    * filter and the dedup window (min doc_id per content hash, one
+    * exchange on the hash) run once, and the contamination drop is a
+    * row-local filter on the [[decontaminate]] kernel's counts against
+    * the broadcast eval shingles — no explode, no self-join, no
+    * anti-join (an eval set past decontaminate's driver bounds filters
+    * on its join path's counts instead). `doc_id` is unique. Returns the surviving training
+    * corpus with (split, shard, pos). */
   def pipelineE2e(df: DataFrame, evalModulus: Int = 41,
       minQuality: Double = 0.5, minShared: Int = 10,
       minFrac: Double = 0.8): DataFrame = {
     val base = df.select(col("doc_id"), col("text"))
     val score = TextAnalysis.qualityColumns(col("text"))
       .toMap.apply("quality_score")
-    val filtered = base.filter(score >= minQuality)
     // exact dedup: keep the smallest doc_id per content hash
-    val keep = filtered.groupBy(md5(col("text")).as("h"))
-      .agg(min(col("doc_id")).as("doc_id")).drop("h")
-    val deduped = filtered.join(keep, "doc_id")
-    // eval holdout leaves the training side entirely
-    val train = deduped.filter(col("doc_id") % evalModulus =!= 0)
+    val train = base.filter(score >= minQuality)
+      .withColumn("keep_id",
+        min(col("doc_id")).over(Window.partitionBy(md5(col("text")))))
+      .filter(col("doc_id") === col("keep_id"))
+      // eval holdout leaves the training side entirely
+      .filter(col("doc_id") % evalModulus =!= 0)
     val evalSet = base.filter(col("doc_id") % evalModulus === 0)
-    val dirty = decontaminate(train, evalSet, minShared, minFrac)
-      .filter(col("contaminated")).select("doc_id")
-    val clean = train.join(dirty, Seq("doc_id"), "left_anti")
+    // the quality filter already dropped null texts, so both count
+    // paths give one row per training document
+    val clean = overlapCounts(train, evalSet, "doc_id", "text", EvalMaxDocs,
+        EvalMaxShingles)
+      .filter(!coalesce(col("n_shared") > 0 && contaminated(
+        col("n_shared"), col("n_shingles"), minShared, minFrac), lit(false)))
+      .select("doc_id")
     shuffleShard(splitAssign(clean).drop("bucket"), nShards = 8)
       .select(col("doc_id"), col("split"), col("shard"), col("pos"))
   }

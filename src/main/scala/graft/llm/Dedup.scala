@@ -321,15 +321,6 @@ object Dedup {
       hashShingles(shingles), threshold)
   }
 
-  /** Long-form (id, seed, sig) view of the wide signatures, for
-    * consumers that want one row per hash. */
-  def minHashSignatures(shingles: DataFrame, numHashes: Int = 16): DataFrame = {
-    val wide = minHashSignaturesWide(shingles, numHashes)
-    val stacked = (0 until numHashes)
-      .map(s => s"$s, sig_$s").mkString(", ")
-    wide.selectExpr("id", s"stack($numHashes, $stacked) AS (seed, sig)")
-  }
-
   /** LSH banding over wide signatures: bucket = md5 of the band's
     * signature slice (seed order) — row-local, no extra shuffle. */
   def lshBucketsWide(wide: DataFrame, numHashes: Int = 16,

@@ -68,14 +68,7 @@ object Retrieval {
     val qterms = queries
       .select(col("query_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "").distinct()
-    val scored = bm25PartialsF(corpus, qterms, k1, b, maxDfFrac)
-      .groupBy("query_id", "doc_id")
-      .agg(sum("bm25_term").as("bm25"))
-    scored.withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("bm25").desc, col("doc_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "doc_id", "bm25")
+    topKPerQuery(bm25PartialsF(corpus, qterms, k1, b, maxDfFrac), k)
   }
 
   /** Shared BM25 partial-score pipeline (float): one row per
@@ -171,11 +164,16 @@ object Retrieval {
     *    silently disagree (the [[Dedup.writeCosineIndex]] `_meta`
     *    contract — a probe scoring under a different k1/b or a stale
     *    N/avgdl is a silent ranking drift).
-    * Build cost: the same single postings shuffle [[bm25TopK]] pays
-    * once per run, plus one doc-key join to denormalize dl — linear,
-    * paid once per corpus snapshot instead of per query batch. */
+    * Build cost: the corpus is tokenized ONCE — the same single
+    * postings shuffle [[bm25TopK]] pays once per run, plus one doc-key
+    * join to denormalize dl — and written as the postings table; the
+    * other three tables are derived from what was written: `_doclen`
+    * as max(dl) per doc, `_df` as a count per term on the term-bucketed
+    * postings scan (no exchange), `_meta` from `_doclen`. Linear, paid
+    * once per corpus snapshot instead of per query batch. */
   def writePostingsIndex(corpus: DataFrame, prefix: String,
       k1: Double = 1.2, b: Double = 0.75, numBuckets: Int = 32): Unit = {
+    val spark = corpus.sparkSession
     val toks = corpus
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "")
@@ -191,18 +189,20 @@ object Retrieval {
     graft.sources.Ingest.writeBucketedTable(
       tf.join(dl, "doc_id").select("term", "doc_id", "tf", "dl"),
       s"${prefix}_postings", Seq("term"), numBuckets, sortCols = Seq("term"))
-    graft.sources.Ingest.writeBucketedTable(dl,
+    val postings = spark.table(s"${prefix}_postings")
+    graft.sources.Ingest.writeBucketedTable(
+      postings.groupBy("doc_id").agg(max("dl").as("dl")),
       s"${prefix}_doclen", Seq("doc_id"), numBuckets,
       sortCols = Seq("doc_id"))
     graft.sources.Ingest.writeBucketedTable(
-      tf.groupBy("term").agg(count(lit(1)).as("df")),
+      postings.groupBy("term").agg(count(lit(1)).as("df")),
       s"${prefix}_df", Seq("term"), numBuckets,
       sortCols = Seq("term"))
     // corpus stats collected once (2 scalars)
-    val stats = dl.agg(count(lit(1)).as("n_docs"),
+    val stats = spark.table(s"${prefix}_doclen").agg(count(lit(1)).as("n_docs"),
       sum("dl").cast("double").as("total_len")).head()
     val (nDocs, totalLen) = (stats.getLong(0), stats.getDouble(1))
-    import corpus.sparkSession.implicits._
+    import spark.implicits._
     graft.sources.Ingest.writeManagedTable(
       Seq((k1, b, nDocs, totalLen / nDocs, totalLen))
         .toDF("k1", "b", "n_docs", "avgdl", "total_len"),
@@ -295,7 +295,7 @@ object Retrieval {
     val qdfreq = if (pushdown) dfreq
       else dfreq.join(
         broadcast(qterms.select("term").distinct()), Seq("term"), "left_semi")
-    val scored = broadcast(qterms)
+    topKPerQuery(broadcast(qterms)
       .join(postings, "term")
       .filter(col("doc_id") =!= col("query_id"))
       .join(broadcast(qdfreq), "term")
@@ -305,15 +305,21 @@ object Retrieval {
       .withColumn("bm25_term",
         col("idf") * (col("tf") * lit(k1 + 1.0)) /
           (col("tf") + lit(k1) * (lit(1.0 - b) +
-            lit(b) * col("dl") / lit(avgdl))))
-      .groupBy("query_id", "doc_id")
+            lit(b) * col("dl") / lit(avgdl)))), k)
+  }
+
+  /** The ranking rule of [[bm25TopK]] and both index probes: per-term
+    * BM25 contributions (`bm25_term` per query_id, doc_id, term) summed
+    * per (query, doc), the top k per query by (bm25 desc, doc_id) —
+    * (query_id, rank, doc_id, bm25). */
+  private def topKPerQuery(contrib: DataFrame, k: Int): DataFrame =
+    contrib.groupBy("query_id", "doc_id")
       .agg(sum("bm25_term").as("bm25"))
-    scored.withColumn("rank", row_number().over(
+      .withColumn("rank", row_number().over(
         Window.partitionBy("query_id")
           .orderBy(col("bm25").desc, col("doc_id"))))
       .filter(col("rank") <= k)
       .select("query_id", "rank", "doc_id", "bm25")
-  }
 
   /** Exact two-phase probe — the relational MaxScore/WAND move (Turtle
     * & Flood, Inf. Proc. & Mgmt 1995; Broder et al. CIKM 2003), for
@@ -340,8 +346,20 @@ object Retrieval {
     *    rescored score strictly exceeds that bound, no outside doc
     *    can displace the top k — provably exact for that query.
     *    Queries that fail (all-head queries, sparse tail matches)
-    *    fall back to the one-phase exact probe, merged in — full-join
-    *    volume is paid only for them.
+    *    fall back to one-phase exact scoring over all their terms —
+    *    the [[bm25TopKFromIndex]] arithmetic, under the meta this
+    *    probe already read — merged in; full-join volume is paid only
+    *    for them.
+    *
+    * The batch is bounded by contract (a serving batch of at most
+    * `pushdownTermCap` queries and as many distinct terms), so it is
+    * collected ONCE: the (query, term) pairs, the vocabulary and the
+    * query ids are built on the driver, and every broadcast of query
+    * terms is a local relation. The batch collect is bounded
+    * ([[graft.Collect.collectBounded]]); the df, candidate and head
+    * collects are bounded by their plans (one row per vocabulary term,
+    * the p1rank filter, the semi-join to the candidates) and only
+    * assert it ([[graft.Collect.collectChecked]]).
     *
     * Returns (query_id, rank, doc_id, bm25, certified). Ranks agree
     * with [[bm25TopKFromIndex]] (spec-pinned on distinct-score
@@ -361,27 +379,36 @@ object Retrieval {
     // Long multi-term queries remain the certificate's hard case —
     // short (2-10 term) serving queries are its natural regime.
     val spark = queries.sparkSession
+    import spark.implicits._
+    import graft.Collect.{collectBounded, collectChecked}
     val meta = spark.table(s"${prefix}_meta").head()
     val (k1, b, nDocs, avgdl) = (meta.getDouble(0), meta.getDouble(1),
       meta.getLong(2), meta.getDouble(3))
     val dfCap = (headDfFrac * nDocs).toLong
-    val qterms = queries
-      .select(col("query_id"), explode(split(col("text"), " ")).as("term"))
-      .filter(col("term") =!= "").distinct()
-    val vocab = queries
-      .select(explode(split(col("text"), " ")).as("term"))
-      .filter(col("term") =!= "")
-      .agg(collect_set(col("term"))).head().getSeq[String](0)
+    // the distinct (query, term) pairs — `split(text, " ")` minus empty
+    // terms, as the one-phase probe explodes them
+    val qtermRows: IndexedSeq[(Long, String)] =
+      collectBounded(queries.select("query_id", "text"), pushdownTermCap,
+          s"two-phase probe: the query batch (split it into batches of at " +
+            s"most $pushdownTermCap queries)")
+        .toIndexedSeq.flatMap { r =>
+          if (r.isNullAt(1)) Nil
+          else r.getString(1).split(" ", -1).toSeq.filter(_.nonEmpty)
+            .map(t => (r.getLong(0), t))
+        }.distinct
+    val vocab = qtermRows.map(_._2).distinct
     require(vocab.length <= pushdownTermCap,
       s"two-phase probe needs a bounded batch vocabulary (${vocab.length})")
+    val allQ = qtermRows.map(_._1).distinct
     // one pass over the vocab-pruned stored df table classifies the
-    // query vocabulary into tail/head (bounded driver-side collect)
-    val qdf = spark.table(s"${prefix}_df")
-      .filter(col("term").isInCollection(vocab))
-      .select(col("term"), col("df")).collect()
+    // query vocabulary into tail/head (at most one row per term)
+    val qdf = collectChecked(spark.table(s"${prefix}_df")
+        .filter(col("term").isInCollection(vocab))
+        .select(col("term"), col("df")), vocab.length,
+        s"two-phase probe: the stored df of the batch vocabulary " +
+          s"(rebuild ${prefix} with writePostingsIndex)")
       .map(r => (r.getString(0), r.getLong(1)))
-    val tailVocab = qdf.filter(_._2 <= dfCap).map(_._1).toIndexedSeq
-    val headVocab = qdf.filter(_._2 > dfCap).map(_._1).toIndexedSeq
+    val headDf = qdf.filter(_._2 > dfCap).toMap
     def idfOf(df: Long): Double =
       math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
     val scoreExpr =
@@ -390,13 +417,15 @@ object Retrieval {
         (col("tf") * lit(k1 + 1.0)) /
         (col("tf") + lit(k1) * (lit(1.0 - b) +
           lit(b) * col("dl") / lit(avgdl)))
-    def scored(voc: IndexedSeq[String],
+    // per-(query, doc, term) BM25 contributions of the given pairs
+    def scored(pairs: Seq[(Long, String)],
         extraFilter: DataFrame => DataFrame = identity): DataFrame = {
+      val voc = pairs.map(_._2).distinct
       val postings = extraFilter(spark.table(s"${prefix}_postings")
         .filter(col("term").isInCollection(voc)))
       val dfreq = spark.table(s"${prefix}_df")
         .filter(col("term").isInCollection(voc))
-      broadcast(qterms.filter(col("term").isInCollection(voc)))
+      broadcast(pairs.toDF("query_id", "term"))
         .join(postings, "term")
         .filter(col("doc_id") =!= col("query_id"))
         .join(broadcast(dfreq), "term")
@@ -408,44 +437,42 @@ object Retrieval {
     // re-rank AND the certificate, so leaving it lazy re-runs the
     // whole tail-scoring DAG per downstream action (the first cut
     // measured 5× the one-phase probe on exactly that — 4 recomputes)
-    val candRows = scored(tailVocab)
-      .groupBy("query_id", "doc_id").agg(sum("bm25_term").as("tail_bm25"))
-      .withColumn("p1rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("tail_bm25").desc, col("doc_id"))))
-      .filter(col("p1rank") <= k * overfetch)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-        r.getInt(3)))
+    val maxCand = math.min(allQ.length.toLong * k * overfetch,
+      Int.MaxValue - 1L).toInt
+    val candRows = collectChecked(
+        scored(qtermRows.filterNot(t => headDf.contains(t._2)))
+          .groupBy("query_id", "doc_id").agg(sum("bm25_term").as("tail_bm25"))
+          .withColumn("p1rank", row_number().over(
+            Window.partitionBy("query_id")
+              .orderBy(col("tail_bm25").desc, col("doc_id"))))
+          .filter(col("p1rank") <= k * overfetch),
+        maxCand, "two-phase probe: the phase-1 candidates")
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     // driver-side per-query tail cut / window-exhaustion flags
     val byQ = candRows.groupBy(_._1)
     val tailCut = byQ.view.mapValues(_.map(_._3).min).toMap
     val windowFull = byQ.view.mapValues(_.map(_._4).max == k * overfetch).toMap
     val candDocIds = candRows.map(_._2).distinct.toIndexedSeq
-    import spark.implicits._
     val candIds = candRows.map(t => (t._1, t._2)).toIndexedSeq
       .toDF("query_id", "doc_id")
     // ---- phase 2: head contributions for candidate docs only; the
     // candidate DOC ids prune the head-postings scan row-level, so
-    // the output is candidate-sized — collected (bounded) and merged
-    // driver-side
+    // the output is candidate-sized — collected (at most one row per
+    // candidate) and merged driver-side
+    val headPairs = qtermRows.filter(t => headDf.contains(t._2))
     val headContrib: Map[(Long, Long), Double] =
-      if (headVocab.isEmpty || candDocIds.isEmpty) Map.empty
-      else scored(headVocab,
-          _.filter(col("doc_id").isInCollection(candDocIds)))
-        .join(broadcast(candIds), Seq("query_id", "doc_id"), "left_semi")
-        .groupBy("query_id", "doc_id").agg(sum("bm25_term").as("head_bm25"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-        .toMap
+      if (headPairs.isEmpty || candDocIds.isEmpty) Map.empty
+      else collectChecked(scored(headPairs,
+            _.filter(col("doc_id").isInCollection(candDocIds)))
+          .join(broadcast(candIds), Seq("query_id", "doc_id"), "left_semi")
+          .groupBy("query_id", "doc_id").agg(sum("bm25_term").as("head_bm25")),
+          candRows.length, "two-phase probe: the phase-2 head contributions")
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     // ---- exact re-rank + per-query certificate, all driver-side on
     // the bounded candidate set
-    val headBoundMap = qdf.filter(_._2 > dfCap)
-      .map { case (t, d) => (t, idfOf(d) * (k1 + 1.0)) }.toMap
-    val qHeadTerms: Map[Long, Seq[String]] = qterms
-      .filter(col("term").isInCollection(headVocab))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    val allQ = qterms.select("query_id").distinct().collect()
-      .map(_.getLong(0))
+    val headBoundMap = headDf.map { case (t, d) => (t, idfOf(d) * (k1 + 1.0)) }
+    val qHeadTerms: Map[Long, Seq[String]] =
+      headPairs.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val topk: Map[Long, Seq[(Long, Double)]] = byQ.view.mapValues { rows =>
       rows.map(t => (t._2,
           t._3 + headContrib.getOrElse((t._1, t._2), 0.0)))
@@ -466,15 +493,12 @@ object Retrieval {
       topk(q).zipWithIndex.map { case ((doc, s), i) =>
         (q, i + 1, doc, s, true)
       }
-    }.toIndexedSeq.toDF("query_id", "rank", "doc_id", "bm25", "certified")
-    val badQ = allQ.filterNot(certified).toIndexedSeq
+    }.toDF("query_id", "rank", "doc_id", "bm25", "certified")
+    val badQ = allQ.filterNot(certified).toSet
     if (badQ.isEmpty) certifiedPart
     else certifiedPart.unionByName(
-      bm25TopKFromIndex(prefix,
-          queries.filter(col("query_id").isInCollection(badQ)),
-          k, pushdownTermCap)
-        .withColumn("certified", lit(false))
-        .select("query_id", "rank", "doc_id", "bm25", "certified"))
+      topKPerQuery(scored(qtermRows.filter(t => badQ(t._1))), k)
+        .withColumn("certified", lit(false)))
   }
 
   // ------------------------------------------- micro-int gated twins

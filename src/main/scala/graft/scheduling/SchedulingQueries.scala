@@ -187,8 +187,15 @@ object SchedulingQueries {
     // one count over the events scan (parquet row-group metadata —
     // no data pass) gives the true horizon
     val nSlots = ev(s, dir).count()
-    val ciRows = ciSlots(s, dir)
-      .filter(col("slot") < accessBound).orderBy("slot").collect()
+    // slots are distinct and 0-based, so the filter leaves at most
+    // accessBound rows; sorted on the driver, which saves the range
+    // sort's sampling job
+    val ciRows = graft.Collect.collectChecked(
+        ciSlots(s, dir).filter(col("slot") < accessBound),
+        math.min(accessBound, Int.MaxValue - 1L).toInt,
+        "sched_greedy_defer: the carbon-intensity slots the greedy fold " +
+          "can read (schedule a smaller workload)")
+      .sortBy(_.getLong(0))
     val prefix = new Array[Long](ciRows.length + 1)
     var i = 0
     while (i < ciRows.length) {

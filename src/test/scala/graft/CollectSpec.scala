@@ -1,0 +1,61 @@
+package graft
+
+import org.apache.spark.sql.functions._
+
+/** [[Collect.collectBounded]], and the source check that keeps every
+  * other driver-side collect in `src/main` from growing. */
+class CollectSpec extends SparkSpec {
+
+  test("collectBounded returns the rows inside the bound and names the frame past it") {
+    val df = spark.range(10).toDF("id")
+    assert(Collect.collectBounded(df, 10, "ten ids").map(_.getLong(0)).sorted.toSeq ===
+      (0L until 10L))
+    assert(Collect.collectBounded(df.filter(col("id") < 0), 0, "no ids").isEmpty)
+    val e = intercept[IllegalArgumentException](
+      Collect.collectBounded(df, 9, "the id frame (filter it first)"))
+    assert(e.getMessage.contains(
+      "the id frame (filter it first): more than 9 rows would be collected"), e.getMessage)
+  }
+
+  test("collectAtMost is None past the bound; collectChecked asserts a planned bound") {
+    val df = spark.range(10).toDF("id")
+    assert(Collect.collectAtMost(df, 10).map(_.length) === Some(10))
+    assert(Collect.collectAtMost(df, 9).isEmpty)
+    assert(Collect.collectChecked(df, 10, "ten ids").length === 10)
+    val e = intercept[IllegalArgumentException](
+      Collect.collectChecked(df, 9, "the id frame (filter it first)"))
+    assert(e.getMessage.contains(
+      "the id frame (filter it first): more than 9 rows would be collected"), e.getMessage)
+  }
+
+  /** Bare `.collect()` calls per file of `src/main`; a count may only go
+    * down. A new driver-side collect goes through
+    * [[Collect.collectBounded]] with a stated bound. */
+  private val bareCollects: Map[String, Int] = Map(
+    "Collect.scala" -> 2,
+    "BenchExtra.scala" -> 1,
+    "TextAnalysis.scala" -> 3,
+    "CorpusPlanStudy.scala" -> 1,
+    "Scale.scala" -> 2,
+    "Carbon.scala" -> 1,
+    "SchedulingQueries.scala" -> 2,
+    "Workload.scala" -> 1,
+    "FixtureGen.scala" -> 14,
+    "WorkloadRunner.scala" -> 1)
+
+  test("src/main adds no bare .collect() outside the allowlist") {
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles).toSeq.flatten.flatMap(f =>
+        if (f.isDirectory) files(f) else Seq(f))
+    val counts = files(new java.io.File("src/main/scala"))
+      .filter(_.getName.endsWith(".scala"))
+      .map(f => f.getName -> java.util.regex.Pattern.quote(".collect()").r
+        .findAllIn(java.nio.file.Files.readString(f.toPath)).length)
+      .filter(_._2 > 0).groupMapReduce(_._1)(_._2)(_ + _)
+    val over = counts.filter { case (f, n) => n > bareCollects.getOrElse(f, 0) }
+    assert(over.isEmpty, s"new bare .collect() calls (use Collect.collectBounded): $over")
+    val slack = bareCollects.filter { case (f, n) => counts.getOrElse(f, 0) < n }
+    assert(slack.isEmpty, s"collects were removed; lower these allowances to match: " +
+      slack.map { case (f, n) => s"$f $n -> ${counts.getOrElse(f, 0)}" }.mkString(", "))
+  }
+}

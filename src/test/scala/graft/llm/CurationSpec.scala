@@ -248,17 +248,20 @@ class CurationSpec extends SparkSpec {
   }
 
   test("decontamination shuffle-hash fallback: same result, no broadcast of the eval side") {
-    // eval sets too large to broadcast take the broadcastEval=false
-    // path: a SHUFFLE_HASH equi-join on the shingle key instead of a
-    // broadcast probe. Result must be identical to the default path.
+    // eval sets too large to hold on the driver take the join path: a
+    // SHUFFLE_HASH equi-join on the shingle key instead of the
+    // row-local kernel over the broadcast eval shingles. The two paths
+    // are independent implementations; their rows must be identical.
     val base = docs.select(col("doc_id"), col("text"))
     val evalSet = base.filter(col("doc_id") % 41 === 0)
     val train = base.filter(col("doc_id") % 41 =!= 0)
       .unionByName(evalSet.select((col("doc_id") + lit(30000L)).as("doc_id"),
         col("text")))
     val viaBroadcast = Curation.decontaminate(train, evalSet)
-    val viaShuffle = Curation.decontaminate(train, evalSet,
-      broadcastEval = false)
+    val viaShuffle = Curation.decontaminateByJoin(train, evalSet)
+    val kernelPlan = viaBroadcast.queryExecution.executedPlan.toString
+    assert(kernelPlan.contains("shingle_overlap") && !kernelPlan.contains("Join"),
+      s"default path must be the row-local kernel:\n$kernelPlan")
     val plan = viaShuffle.queryExecution.executedPlan.toString
     assert(plan.contains("ShuffledHashJoin"),
       s"fallback must plan a shuffled hash join:\n$plan")
@@ -267,6 +270,37 @@ class CurationSpec extends SparkSpec {
     assert(viaBroadcast.exceptAll(viaShuffle).isEmpty &&
       viaShuffle.exceptAll(viaBroadcast).isEmpty,
       "fallback path must return the broadcast path's exact rows")
+  }
+
+  test("decontamination past the driver bounds takes the join path with the same rows") {
+    import spark.implicits._
+    def joinPlanned(df: org.apache.spark.sql.DataFrame): Boolean = {
+      val plan = df.queryExecution.executedPlan.toString
+      plan.contains("ShuffledHashJoin") && !plan.contains("shingle_overlap")
+    }
+    // more eval texts than EvalMaxDocs: each "eval <id>" text is one or
+    // two 9-gram shingles
+    val evalSet = spark.range(Curation.EvalMaxDocs + 1L)
+      .select(col("id").as("doc_id"), concat(lit("eval "), col("id")).as("text"))
+    val train = Seq((1L, "eval 12345"), (2L, "eval 99999 and more"),
+      (3L, "unrelated text"), (4L, "eval 1")).toDF("doc_id", "text")
+    val out = Curation.decontaminate(train, evalSet, minShared = 1)
+    assert(joinPlanned(out), out.queryExecution.executedPlan.toString)
+    val rows = out.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(rows === Curation.decontaminateByJoin(train, evalSet, minShared = 1)
+      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq)
+    assert(rows.map(_.head) === Seq(1L, 2L, 4L), rows)
+    // more distinct eval shingles than the shingle bound: the counts
+    // match the kernel's row for row
+    val base = docs.select(col("doc_id"), col("text"))
+    val small = base.filter(col("doc_id") % 41 === 0)
+    val corpus = base.filter(col("doc_id") % 41 =!= 0)
+    val overBound = Curation.overlapCounts(corpus, small, "doc_id", "text",
+      Curation.EvalMaxDocs, maxShingles = 5)
+    val kernel = Curation.overlapCounts(corpus, small, "doc_id", "text",
+      Curation.EvalMaxDocs, Curation.EvalMaxShingles)
+    assert(joinPlanned(overBound) && !joinPlanned(kernel))
+    assert(overBound.exceptAll(kernel).isEmpty && kernel.exceptAll(overBound).isEmpty)
   }
 
   test("decontamination catches sub-shingle-size verbatim leaks (clamped count gate)") {

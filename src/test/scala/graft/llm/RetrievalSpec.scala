@@ -294,6 +294,72 @@ class RetrievalSpec extends SparkSpec {
     assert(top100 === 3L, s"expected doc 3 on top, got $top100")
   }
 
+  test("postings index: the derived doclen, df and meta equal a from-corpus derivation") {
+    val d = graft.Tables.load(spark, sfCorrect, "documents")
+      .select(col("doc_id"), col("text"))
+    Retrieval.writePostingsIndex(d, "bm25_idx_dv", numBuckets = 8)
+    // the derivation every table once had, each from the corpus
+    val tf = d.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+      .filter(col("term") =!= "")
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
+    val nDocs = dl.count()
+    val totalLen = dl.agg(sum("dl")).head().getLong(0).toDouble
+    val expected = Seq(
+      "postings" -> tf.join(dl, "doc_id").select("term", "doc_id", "tf", "dl"),
+      "doclen" -> dl,
+      "df" -> tf.groupBy("term").agg(count(lit(1)).as("df")),
+      "meta" -> Seq((1.2, 0.75, nDocs, totalLen / nDocs, totalLen))
+        .toDF("k1", "b", "n_docs", "avgdl", "total_len"))
+    // row count and an order-insensitive hash of the rows
+    def fingerprint(df: org.apache.spark.sql.DataFrame) =
+      df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).cast("decimal(38,0)").as("h"))
+        .agg(count(lit(1)), sum("h")).head().toSeq
+    expected.foreach { case (table, want) =>
+      val got = spark.table(s"bm25_idx_dv_$table")
+      assert(got.columns.toSeq === want.columns.toSeq, table)
+      assert(fingerprint(got) === fingerprint(want), table)
+    }
+  }
+
+  test("two-phase probe equals the one-phase probe on a Zipf corpus, fallback included") {
+    val d = graft.sources.FixtureGen.documentsZipf(spark, sfSmoke, 600, seed = 5)
+      .select("doc_id", "text").cache()
+    try {
+      Retrieval.writePostingsIndex(d, "bm25_idx_2pz", numBuckets = 8)
+      val rng = new scala.util.Random(11)
+      val texts = d.orderBy("doc_id").limit(40).collect().map(_.getString(1).split(" "))
+      val head = spark.table("bm25_idx_2pz_df").orderBy(col("df").desc, col("term"))
+        .limit(2).collect().map(_.getString(0))
+      // six-term queries drawn from documents, plus an all-head query,
+      // which no certificate can cover
+      val q = (texts.zipWithIndex.map { case (ws, i) =>
+        (10000L + i, Seq.fill(6)(ws(rng.nextInt(ws.length))).mkString(" "))
+      } :+ (20000L -> head.mkString(" "))).toSeq.toDF("query_id", "text")
+      val two = Retrieval.bm25TopKFromIndexTwoPhase("bm25_idx_2pz", q, 5).collect()
+      val one = Retrieval.bm25TopKFromIndex("bm25_idx_2pz", q, 5).collect()
+      val cert = two.groupBy(_.getLong(0)).map { case (k, rs) => k -> rs.head.getBoolean(4) }
+      assert(cert.values.exists(identity) && cert.values.exists(!_),
+        s"need certified and fallback queries: $cert")
+      assert(!cert(20000L), "the all-head query must fall back")
+      // per query: the same scores (to 1e-9 relative) and the same docs,
+      // except among docs tied with the k-th score, where either may cut
+      def byQuery(rs: Array[org.apache.spark.sql.Row]) = rs.groupBy(_.getLong(0))
+        .map { case (k, xs) => k -> xs.map(r => (r.getLong(2), r.getDouble(3))).sortBy(-_._2).toSeq }
+      def close(x: Double, y: Double) = math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(y))
+      val (a, b) = (byQuery(two), byQuery(one))
+      assert(a.keySet === b.keySet)
+      a.foreach { case (k, xs) =>
+        val ys = b(k)
+        assert(xs.size === ys.size && xs.zip(ys).forall { case (x, y) => close(x._2, y._2) },
+          s"query $k: $xs vs $ys")
+        val kth = ys.last._2
+        assert(xs.filterNot(x => close(x._2, kth)).map(_._1).toSet ===
+          ys.filterNot(y => close(y._2, kth)).map(_._1).toSet, s"query $k")
+      }
+    } finally d.unpersist()
+  }
+
   test("standing postings index: stored side unshuffled under a term-key join") {
     import spark.implicits._
     val d = Seq(
