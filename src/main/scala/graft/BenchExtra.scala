@@ -58,17 +58,17 @@ object BenchExtra {
     "retrieval_pipeline_e2e" -> 2,
     "bench_incremental_full" -> 2,
     "bench_index_probe_full" -> 2,
-    "bench_minhash_full" -> 2,
-    "bench_minhash_xx_full" -> 2,
     "bench_minhash_rowlocal_full" -> 2,
-    "bench_minhash_rowlocal_xx_full" -> 2,
-    "bench_simhash_full" -> 2,
-    "bench_simhash_xx_full" -> 2,
     "bench_simhash64_xx_full" -> 2,
     "bench_fingerprint_xx_full" -> 2,
     "bench_jaccard_full" -> 2,
     "bench_containment_full" -> 2,
-    "bench_clusters_full" -> 2,
+    // bench_clusters_full: the pair graph comes from minHashLshPairs
+    // (native kernel, md5 family) instead of the grouped xx family;
+    // dedup_minhash_lsh: the gated key runs the grouped reference form
+    // (its twin dedup_minhash_rowlocal runs the kernel)
+    "bench_clusters_full" -> 3,
+    "dedup_minhash_lsh" -> 2,
     "bench_substring_spans_full" -> 2,
     "bench_substring_clean_full" -> 2,
     "bench_cdc_full" -> 2,
@@ -120,8 +120,8 @@ object BenchExtra {
     new java.util.concurrent.atomic.AtomicReference[String]("")
 
   /** The constant 50-query probe batch for [[bench_bm25_index_probe_full]],
-    * collected ONCE per fixture dir (50 tiny rows — a bounded,
-    * documented driver-side collect) and replayed as a LocalTableScan:
+    * collected ONCE per fixture dir (at most 50 tiny rows, enforced by
+    * `Collect.collectBounded`) and replayed as a LocalTableScan:
     * deriving it by filtering the full docs table every run made the
     * timed "steady-state serving" pass pay a corpus-linear parquet
     * scan at each sf, diluting the probe-vs-full delta the key exists
@@ -131,8 +131,10 @@ object BenchExtra {
 
   private def bm25ProbeQueries(s: SparkSession, dir: String): DataFrame = {
     val batch = bm25ProbeBatch.computeIfAbsent(dir, d =>
-      docs(s, d).filter(col("doc_id") % 100 === 0 && col("doc_id") < 5000)
-        .select(col("doc_id"), col("text")).collect()
+      Collect.collectBounded(
+        docs(s, d).filter(col("doc_id") % 100 === 0 && col("doc_id") < 5000)
+          .select(col("doc_id"), col("text")), 50,
+        "bm25 probe batch (doc_id % 100 = 0 AND doc_id < 5000)")
         .map(r => (r.getLong(0), r.getString(1))))
     import s.implicits._
     s.createDataset(batch.toIndexedSeq).toDF("query_id", "text")
@@ -151,20 +153,6 @@ object BenchExtra {
   // *FromShingles APIs still let a caller with a hot cache reuse one.
 
   val queries: Map[String, Q] = Map(
-    "bench_minhash_full" -> ((s, dir) =>
-      Dedup.minHashLshPairsFromShingles(
-        Dedup.charShingles(Dedup.fixtureCorpusScaled(docs(s, dir))), 0.5)),
-    "bench_minhash_xx_full" -> ((s, dir) =>
-      // the production hash family (xxhash64 seeds, no md5 in the
-      // per-shingle loop) — same banding + exact verify; the delta vs
-      // bench_minhash_full is the md5 portability cost the oracle
-      // -verified twin pays
-      Dedup.minHashLshPairsXxFromShingles(
-        Dedup.charShingles(Dedup.fixtureCorpusScaled(docs(s, dir))), 0.5)),
-    "bench_simhash_full" -> ((s, dir) =>
-      Dedup.simHashNearPairs(Dedup.simHash(Dedup.fixtureCorpusScaled(docs(s, dir))))),
-    "bench_simhash_xx_full" -> ((s, dir) =>
-      Dedup.simHashNearPairs(Dedup.simHashXx(Dedup.fixtureCorpusScaled(docs(s, dir))))),
     "bench_fingerprint_xx_full" -> ((s, dir) =>
       // production twin of the core-suite doc_fingerprint (md5 min-
       // shingle + md5Long token hashing stay the oracle-gated forms)
@@ -181,7 +169,7 @@ object BenchExtra {
       // → 12k at sf10 — BASELINE.md r8 analysis); the decade step is
       // the linear shingle-mass stages, exactly linear by design. On
       // such a corpus the df cap IS the recall/cost knob and
-      // MinHash-LSH (bench_minhash_xx_full) is the production path.
+      // MinHash-LSH (bench_minhash_rowlocal_full) is the production path.
       Dedup.jaccardPairs(
         Dedup.charShingles(Dedup.fixtureCorpusScaled(docs(s, dir))), 0.5,
         Dedup.fixtureShingleDfCap)),
@@ -193,20 +181,15 @@ object BenchExtra {
       // at the sf1 decade and is gone from the default path
       Dedup.cosineNearDupPairs(microElems(s, dir), 0.9)),
     "bench_minhash_rowlocal_full" -> ((s, dir) =>
-      // row-local md5 path (the native kernel, i.e. minHashLshPairs) —
-      // delta vs bench_minhash_full is what the shingle explode, the
-      // string min aggregate and the verify-set rebuild cost
-      Dedup.minHashLshPairsRowLocal(
-        Dedup.fixtureCorpusScaled(docs(s, dir)), 0.5)),
-    "bench_minhash_rowlocal_xx_full" -> ((s, dir) =>
-      Dedup.minHashLshPairsRowLocal(
-        Dedup.fixtureCorpusScaled(docs(s, dir)), 0.5, xx = true)),
+      // the MinHash-LSH path (the native kernel, minHashLshPairs); the
+      // grouped and xx variants it beat are recorded in BASELINE.md
+      Dedup.minHashLshPairs(Dedup.fixtureCorpusScaled(docs(s, dir)), 0.5)),
     "bench_clusters_full" -> ((s, dir) =>
-      // connected components over the FULL-corpus xx pair graph — the
-      // iterative label-propagation loop measured at bench volume
+      // connected components over the FULL-corpus MinHash pair graph —
+      // the iterative label-propagation loop measured at bench volume
       // (the oracle key runs it on the clamped fixture only)
-      Dedup.nearDupClusters(Dedup.minHashLshPairsXxFromShingles(
-        Dedup.charShingles(Dedup.fixtureCorpusScaled(docs(s, dir))), 0.5))),
+      Dedup.nearDupClusters(Dedup.minHashLshPairs(
+        Dedup.fixtureCorpusScaled(docs(s, dir)), 0.5))),
     "bench_ann_lsh_full" -> ((s, dir) => {
       // constant query load above sf0.1 (the query-set sizing rule:
       // a query set growing with the corpus measures query·doc

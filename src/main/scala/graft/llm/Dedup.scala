@@ -21,9 +21,13 @@ import graft.Tables
   *    ([[lshDocs]]), so no shingle row is exploded or aggregated —
   *    measured faster than the grouped explode + `min` aggregate at
   *    every corpus size tried, by more at larger ones (BASELINE.md);
-  *    the grouped forms stay as the DuckDB-mirrored reference;
-  *  - SimHash near-pair search blocks on 8-bit sub-bands (pigeonhole:
-  *    hamming ≤ 3 ⇒ some band of 4 equal), again join-on-key;
+  *    the grouped forms stay as the DuckDB-mirrored reference, and the
+  *    streaming signer (`Streams.nearDupCandidatesStream`) runs the
+  *    same kernel;
+  *  - SimHash near-pair search blocks on four sub-bands (pigeonhole:
+  *    hamming ≤ 3 ⇒ some band of 4 equal) — 16-bit bands of the 64-bit
+  *    production fingerprint, 8-bit bands of the 32-bit oracle form —
+  *    again join-on-key;
   *  - hash functions are md5-derived (deterministic, partitioning-
   *    independent), so signatures are reproducible across engines and
   *    cluster sizes — no RNG state to ship.
@@ -56,66 +60,23 @@ object Dedup {
 
   // ------------------------------------------------------- shingling
 
-  /** Distinct char-k-gram shingles per document: (id, shingle). The
-    * shingle set is computed row-locally (transform over a position
-    * sequence) then exploded — one narrow pass, shuffle only on the
-    * consumer's key. */
+  /** Distinct char-k-gram shingles per document: (id, shingle) — the
+    * [[shingleSetCol]] set exploded. One narrow pass, shuffle only on
+    * the consumer's key; a null text gives no row. */
   def charShingles(df: DataFrame, k: Int = 9, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val text = col(textCol)
-    val shingles = when(length(text) < k, array(text)).otherwise(
-      array_distinct(transform(
-        sequence(lit(1), length(text) - (k - 1)),
-        i => substring(text, i, lit(k)))))
-    df.select(col(idCol).as("id"), explode(shingles).as("shingle"))
-  }
-
-  /** Row-local shingle sets: the per-doc distinct k-gram set as an
-    * array column — the SAME set [[charShingles]] explodes, kept on
-    * the row. The basis of the row-local MinHash path below: a
-    * signature is a min over THIS set, so nothing about it requires
-    * the set to leave the row, and the exploded frame only exists to
-    * serve aggregation-based consumers. */
-  def shingleSets(df: DataFrame, k: Int = 9, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
-    df.select(col(idCol).as("id"), shingleSetCol(col(textCol), k).as("shingles"))
+    df.select(col(idCol).as("id"),
+      explode(shingleSetCol(col(textCol), k)).as("shingle"))
 
-  /** The distinct k-gram set as a COLUMN — the single definition both
-    * batch frames ([[shingleSets]], [[charShingles]] explodes the same
-    * expression) and the streaming per-row path build on. */
+  /** The distinct k-gram set of a text as a COLUMN (transform over a
+    * position sequence; a text shorter than k is one whole-text
+    * shingle) — the single definition [[charShingles]], the
+    * decontamination paths and the native kernels' shingling follow. */
   def shingleSetCol(text: Column, k: Int = 9): Column =
     when(length(text) < k, array(text)).otherwise(
       array_distinct(transform(
         sequence(lit(1), length(text) - (k - 1)),
         i => substring(text, i, lit(k)))))
-
-  /** xx-family fold-min signature COLUMNS over a shingle-set column
-    * (aliased sig_0..sig_{n-1}) — shared by
-    * [[minHashSignaturesRowLocalXx]] and the streaming signer. */
-  def minHashSigColsXx(shingles: Column, numHashes: Int = 16): Seq[Column] =
-    (0 until numHashes).map(i =>
-      aggregate(shingles, lit(Long.MaxValue),
-        (acc, s) => least(acc, xxhash64(lit(i), s))).as(s"sig_$i"))
-
-  /** LSH band/bucket pairs as an array-of-struct COLUMN over sig_*
-    * columns — the same md5(concat_ws) bucket derivation as
-    * [[lshBucketsWide]], for consumers that explode on the row
-    * (streaming) instead of stacking a frame. */
-  def lshBandStructs(numHashes: Int = 16, rowsPerBand: Int = 4): Column =
-    array((0 until numHashes / rowsPerBand).map { b =>
-      val slice = (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(i => col(s"sig_$i").cast("string"))
-      struct(lit(b).as("band"),
-        md5(concat_ws(",", slice: _*)).as("bucket"))
-    }: _*)
-
-  /** Row-local 64-bit identities + set size of a shingle-set frame —
-    * the map-only twin of `hashShingles(...).groupBy(id).collect_list`
-    * (what [[verifyJaccard]] otherwise rebuilds with a shuffle). */
-  def hashedShingleSets(sets: DataFrame): DataFrame =
-    sets.select(col("id"),
-      array_sort(transform(col("shingles"), s => xxhash64(s))).as("sh"),
-      size(col("shingles")).cast("long").as("set_size"))
 
   /** Pairwise Jaccard via candidate-then-verify: candidates come from a
     * self-join on RARE shingles only (document frequency ≤
@@ -161,19 +122,26 @@ object Dedup {
     // r11_opt_{before2,after}_sf01.json carry the curve). The family
     // stays LAZY by measurement, not by omission.
     val hashed = hashShingles(shingles)
-    // Heavy hitters are few by definition (Zipf), so the cap is an
-    // anti-join against a small aggregated frame — a hash aggregate +
-    // co-partitioned anti-join on the same key, not a sort-based
-    // window over every shingle row.
+    verifyJaccard(rareShingleCandidates(hashed, maxShingleDf), hashed, threshold)
+  }
+
+  /** Distinct pairs (id_a < id_b) of a hashed shingle frame that share
+    * a shingle held by at most `maxShingleDf` documents — the candidate
+    * step of [[jaccardPairs]] and [[containmentPairs]]. Heavy hitters
+    * are few by definition (Zipf), so the cap is an anti-join against a
+    * small aggregated frame — a hash aggregate + co-partitioned
+    * anti-join on the same key, not a sort-based window over every
+    * shingle row. */
+  private def rareShingleCandidates(hashed: DataFrame,
+      maxShingleDf: Int): DataFrame = {
     val frequent = hashed.groupBy("shingle")
       .agg(count(lit(1)).as("df")).filter(col("df") > maxShingleDf)
       .select("shingle")
     val rare = hashed.join(frequent, Seq("shingle"), "left_anti")
       .select("id", "shingle")
-    val candidates = rare.as("a").join(rare.as("b"),
+    rare.as("a").join(rare.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    verifyJaccard(candidates, hashed, threshold)
   }
 
   /** Containment-similarity near-dup pairs — the ASYMMETRIC member of
@@ -199,16 +167,8 @@ object Dedup {
     // same four-consumer shape as [[jaccardPairs]]: LAZY by
     // measurement — see the checkpoint experiment verdict there
     val hashed = hashShingles(shingles)
-    val frequent = hashed.groupBy("shingle")
-      .agg(count(lit(1)).as("df")).filter(col("df") > maxShingleDf)
-      .select("shingle")
-    val rare = hashed.join(frequent, Seq("shingle"), "left_anti")
-      .select("id", "shingle")
-    val candidates = rare.as("a").join(rare.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
     val sets = shingleSetRows(hashed)
-    candidates
+    rareShingleCandidates(hashed, maxShingleDf)
       .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a"),
         col("set_size").as("size_a")), "id_a")
       .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b"),
@@ -255,70 +215,6 @@ object Dedup {
     def sig(i: Int) =
       min(substring(col(s"h_${i / 4}"), 1 + 8 * (i % 4), 8)).as(s"sig_$i")
     hashed.groupBy("id").agg(sig(0), (1 until numHashes).map(sig): _*)
-  }
-
-  /** Production-path MinHash signatures: seed i is the minimum
-    * xxhash64(i, shingle) over the document's shingle set — one
-    * codegen'd 64-bit hash per (seed, shingle) instead of a slice of
-    * an md5 hex digest. Same single wide map-side-combining groupBy
-    * shape as [[minHashSignaturesWide]]; that md5 form stays the
-    * DuckDB-oracle-verified twin (DuckDB has md5 but no xxhash64 —
-    * the same fixture-vs-production split as the micro-int vs float
-    * ANN paths). Signature VALUES differ from the md5 form, but the
-    * collision behavior (min over a uniform permutation) is the same
-    * family, so candidate recall is equivalent — pinned by the
-    * fixture-corpus equality test in LlmSpec. */
-  def minHashSignaturesWideXx(shingles: DataFrame,
-      numHashes: Int = 16): DataFrame = {
-    def sig(i: Int) =
-      min(xxhash64(lit(i), col("shingle"))).as(s"sig_$i")
-    shingles.groupBy("id").agg(sig(0), (1 until numHashes).map(sig): _*)
-  }
-
-  /** Row-local xx-family MinHash signatures from shingle-set arrays:
-    * sig_i = fold-min over the set of the hash
-    * [[minHashSignaturesWideXx]] aggregates, so the VALUES are
-    * bit-identical to it — same hash, same set, same min. */
-  def minHashSignaturesRowLocalXx(sets: DataFrame,
-      numHashes: Int = 16): DataFrame =
-    sets.select(col("id") +:
-      minHashSigColsXx(col("shingles"), numHashes): _*)
-
-  /** MinHash-LSH near-dup pairs on a row-local signature path. The md5
-    * family (`xx = false`) is [[minHashLshPairs]] itself — the native
-    * kernel is the md5 row-local signer. `xx = true` signs with
-    * higher-order-function folds over the shingle-set arrays
-    * ([[minHashSignaturesRowLocalXx]]) and verifies over
-    * [[hashedShingleSets]]; its pairs match the md5 form whenever both
-    * bandings recall the candidate. */
-  def minHashLshPairsRowLocal(df: DataFrame, threshold: Double,
-      numHashes: Int = 16, rowsPerBand: Int = 4, k: Int = 9,
-      idCol: String = "doc_id", textCol: String = "text",
-      xx: Boolean = false): DataFrame =
-    if (!xx) minHashLshPairs(df, threshold, numHashes, rowsPerBand, k,
-      idCol, textCol)
-    else {
-      val sets = shingleSets(df, k, idCol, textCol)
-      // one explicit repartition per frame is the AQE reuse point the
-      // self-join and the two verify joins read back; without it each
-      // arm recomputes the map-side signature/set work from the text
-      val buckets = lshBucketsWide(
-        minHashSignaturesRowLocalXx(sets, numHashes).repartition(col("id")),
-        numHashes, rowsPerBand)
-      verifyJaccardSets(bandCandidates(buckets, buckets, selfJoin = true),
-        hashedShingleSets(sets).repartition(col("id")), threshold)
-    }
-
-  /** [[minHashLshPairsFromShingles]] on the xxhash64 signature family —
-    * the path a 100 TB corpus runs (no md5 in the per-shingle hot
-    * loop); verify is the same exact-Jaccard kernel, so output pairs
-    * match the md5 form whenever both bandings recall the candidate. */
-  def minHashLshPairsXxFromShingles(shingles: DataFrame, threshold: Double,
-      numHashes: Int = 16, rowsPerBand: Int = 4): DataFrame = {
-    val buckets = lshBucketsWide(
-      minHashSignaturesWideXx(shingles, numHashes), numHashes, rowsPerBand)
-    verifyJaccard(bandCandidates(buckets, buckets, selfJoin = true),
-      hashShingles(shingles), threshold)
   }
 
   /** LSH banding over wide signatures: bucket = md5 of the band's
@@ -458,8 +354,8 @@ object Dedup {
 
   /** The set-join verify kernel over prebuilt per-doc arrays
     * `(id, sh, set_size)` — consumed directly by the row-local paths
-    * ([[lshSets]] and [[hashedShingleSets]] build the frame map-only) and by
-    * [[verifyJaccard]] after its aggregation. `sh` arrays must be
+    * ([[lshSets]] builds the frame map-only) and by [[verifyJaccard]]
+    * after its aggregation. `sh` arrays must be
     * SORTED (both builders array_sort once per document): the
     * intersection is then a codegen'd two-cursor merge walk
     * ([[graft.functions.SortedIntersectSize]]) instead of
@@ -589,14 +485,6 @@ object Dedup {
       textCol: String = "text"): DataFrame =
     simHashWith(df, idCol, textCol, md5Long)
 
-  /** Production twin of [[simHash]] on the xxhash64 token-hash family
-    * (a different but equally valid 32-bit SimHash instantiation —
-    * DuckDB has no xxhash64, so the md5 form stays the oracle-gated
-    * twin). Same single wide bit-vote aggregation. */
-  def simHashXx(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    simHashWith(df, idCol, textCol, xxhash64(_))
-
   private def simHashWith(df: DataFrame, idCol: String, textCol: String,
       tokenHash: Column => Column, bits: Int = 32): DataFrame = {
     val votes = (0 until bits).map(j =>
@@ -633,19 +521,8 @@ object Dedup {
     * equi-join blocking as [[simHashNearPairs]] with 65,536 buckets
     * per band instead of 256. The arithmetic shiftright's sign-fill on
     * the top band is masked off by `& 65535`. */
-  def simHashNearPairs64(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val bands = hashes.withColumn("bi", explode(sequence(lit(0), lit(3))))
-      .withColumn("bv", expr("shiftright(simhash, bi * 16) & 65535"))
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.bi") === col("b.bi") && col("a.bv") === col("b.bv") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("a.simhash").as("sh_a"),
-        col("b.id").as("id_b"), col("b.simhash").as("sh_b")).distinct()
-    cand.withColumn("hamming",
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
+  def simHashNearPairs64(hashes: DataFrame, maxHamming: Int = 3): DataFrame =
+    simHashBandPairs(hashes, 16, maxHamming)
 
   /** THE production SimHash near-dup pair search: 64-bit xxhash64
     * fingerprints ([[simHash64Xx]]) blocked on 4×16-bit bands
@@ -669,9 +546,17 @@ object Dedup {
     * buckets and saturate once n ≫ 2^8 (measured 12.7× at one decade).
     * Production pair search is [[simHashNearDups]] (64-bit, 16-bit
     * bands); this form stays for the md5/32-bit DuckDB gate. */
-  def simHashNearPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
+  def simHashNearPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame =
+    simHashBandPairs(hashes, 8, maxHamming)
+
+  /** The pigeonhole band join both SimHash pair searches run: four
+    * `bandBits`-wide bands of each fingerprint, candidates from the
+    * (band index, band value) equi-join, exact hamming on candidates. */
+  private def simHashBandPairs(hashes: DataFrame, bandBits: Int,
+      maxHamming: Int): DataFrame = {
     val bands = hashes.withColumn("bi", explode(sequence(lit(0), lit(3))))
-      .withColumn("bv", expr("shiftright(simhash, bi * 8) & 255"))
+      .withColumn("bv",
+        expr(s"shiftright(simhash, bi * $bandBits) & ${(1 << bandBits) - 1}"))
     val cand = bands.as("a").join(bands.as("b"),
         col("a.bi") === col("b.bi") && col("a.bv") === col("b.bv") &&
           col("a.id") < col("b.id"))
@@ -1384,14 +1269,15 @@ object Dedup {
         fixtureShingleDfCap)
       .orderBy("id_a", "id_b")
 
+  /** The grouped reference form the oracle SQL mirrors step by step. */
   private val dedupMinHashLsh: Q = (s, dir) =>
-    minHashLshPairs(fixtureCorpus(docsSmall(s, dir)), 0.5)
+    minHashLshPairsFromShingles(charShingles(fixtureCorpus(docsSmall(s, dir))), 0.5)
       .orderBy("id_a", "id_b")
 
-  /** Zero-shuffle signature path, gated by the SAME oracle as
+  /** The native row-local kernel path, gated by the SAME oracle as
     * `dedup_minhash_lsh` — the hash gate is the bit-identity proof. */
   private val dedupMinHashRowLocal: Q = (s, dir) =>
-    minHashLshPairsRowLocal(fixtureCorpus(docsSmall(s, dir)), 0.5)
+    minHashLshPairs(fixtureCorpus(docsSmall(s, dir)), 0.5)
       .orderBy("id_a", "id_b")
 
   /** Clusters over the oracle-verified MinHash pair graph; the DuckDB
@@ -1657,8 +1543,8 @@ object Dedup {
     orderBy = "id_a, id_b")
 
   /** Bound to BOTH `dedup_minhash_lsh` (grouped signatures) and
-    * `dedup_minhash_rowlocal` (zero-shuffle signatures): the two plans
-    * must hash-match the same answer. */
+    * `dedup_minhash_rowlocal` (the native row-local kernel): the two
+    * plans must hash-match the same answer. */
   private val minHashPairParts: OracleParts =
     minHashPairPartsFor(corpusSmallSql, "a.id < b.id")
 

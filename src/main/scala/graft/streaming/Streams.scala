@@ -128,14 +128,18 @@ object Streams {
 
   /** Streaming near-duplicate candidate detection — the streaming home
     * of the row-local MinHash path: each arriving document is signed
-    * and banded ON ITS ROW ([[graft.llm.Dedup.minHashSigColsXx]] — a
-    * per-row fold needs no aggregation state, which is exactly why the
-    * row-local family exists), then keyed by (band, bucket). Per-bucket
-    * state remembers the ids seen inside the TTL horizon; each
-    * newcomer emits one candidate pair per stored id. The candidate
-    * criterion (bucket equality in ≥1 band) is the SAME as the batch
-    * `minHashLshPairs*` family — exact-verify/act is the caller's next
-    * stage, as in batch.
+    * and banded ON ITS ROW by the native [[graft.functions.MinHashLsh]]
+    * kernel (a per-row kernel needs no aggregation state), then keyed
+    * by (band, bucket). Per-bucket state remembers the ids seen inside
+    * the TTL horizon; each newcomer emits one candidate pair per stored
+    * id. The buckets are those of the batch `Dedup.minHashLshPairs`
+    * and null texts are dropped as there ([[graft.llm.Dedup.lshDocs]]),
+    * so the candidate criterion (bucket equality in ≥1 band) is the
+    * batch one — exact-verify/act is the caller's next stage, as in
+    * batch. The bands are unrolled by a `stack` generator, as in
+    * [[graft.llm.Dedup.lshRows]]: an `explode` over the kernel output
+    * would re-run the kernel inside the optimizer's inferred
+    * `size(buckets) > 0` filter.
     *
     * State is bounded two ways: per-bucket ids cap at
     * `maxIdsPerBucket` (a hot boilerplate bucket degrades gracefully,
@@ -151,17 +155,13 @@ object Streams {
       maxIdsPerBucket: Int = 32)
       (implicit spark: SparkSession): Dataset[NearDupCandidate] = {
     import spark.implicits._
-    import graft.llm.Dedup
-    val signed = docs.withWatermark("ts", watermark)
-      .select(col("doc_id"), col("ts"),
-        Dedup.shingleSetCol(col("text"), k).as("shingles"))
-      .select(col("doc_id") +: col("ts") +:
-        Dedup.minHashSigColsXx(col("shingles"), numHashes): _*)
-    val banded = signed
-      .select(col("doc_id"), col("ts"),
-        explode(Dedup.lshBandStructs(numHashes, rowsPerBand)).as("bb"))
-      .select(col("doc_id"), col("ts"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+    val bands = (0 until numHashes / rowsPerBand).map(b => s"$b, buckets[$b]")
+    val banded = docs.withWatermark("ts", watermark)
+      .filter(col("text").isNotNull)
+      .select(col("doc_id"), col("ts"), graft.functions.MinHashLsh.minHashLsh(
+        col("text"), numHashes, rowsPerBand, k).getField("buckets").as("buckets"))
+      .selectExpr("doc_id", "ts",
+        s"stack(${bands.size}, ${bands.mkString(", ")}) AS (band, bucket)")
       .as[BandedDoc]
     banded.groupByKey(d => (d.band, d.bucket))
       .flatMapGroupsWithState[BucketState, NearDupCandidate](

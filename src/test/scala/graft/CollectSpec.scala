@@ -33,7 +33,6 @@ class CollectSpec extends SparkSpec {
     * [[Collect.collectBounded]] with a stated bound. */
   private val bareCollects: Map[String, Int] = Map(
     "Collect.scala" -> 2,
-    "BenchExtra.scala" -> 1,
     "TextAnalysis.scala" -> 3,
     "CorpusPlanStudy.scala" -> 1,
     "Scale.scala" -> 2,

@@ -51,6 +51,11 @@ class PlanQualitySpec extends SparkSpec {
     val unknown = (intendedUnkeyed ++ intendedGlobalWindow)
       .diff(SparkEntry.queries.keySet)
     assert(unknown.isEmpty, s"allowlist entries name no query: $unknown")
+    // a revision entry that outlives its key would be stamped into every
+    // bench artifact for a workload that no longer exists
+    val staleRevs = BenchExtra.workloadRev.keySet
+      .diff(SparkEntry.queries.keySet ++ BenchExtra.queries.keySet)
+    assert(staleRevs.isEmpty, s"workloadRev entries name no key: $staleRevs")
     val unkeyedOffenders = Seq.newBuilder[String]
     val windowOffenders = Seq.newBuilder[String]
     val windowStale = Seq.newBuilder[String]

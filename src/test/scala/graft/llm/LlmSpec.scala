@@ -333,58 +333,17 @@ class LlmSpec extends SparkSpec {
   test("row-local MinHash signatures are bit-identical to the grouped forms") {
     val corpus = Dedup.fixtureCorpus(
       graft.Tables.load(spark, sfSmoke, "documents").filter(col("doc_id") < 60))
-    val sets = Dedup.shingleSets(corpus)
-    val shingles = Dedup.charShingles(corpus)
     def rows(df: org.apache.spark.sql.DataFrame, by: String*) =
       df.orderBy("id", by: _*).collect().map(_.toSeq).toSeq
-    // same hash, same set, same min — the PLAN is the only difference:
-    // md5 through the native kernel's bands, xx through the folds
+    // same hash, same set, same min — the PLAN is the only difference
     assert(rows(Dedup.lshBuckets(Dedup.lshRows(Dedup.lshDocs(corpus), 4)), "band") ===
-      rows(Dedup.lshBucketsWide(Dedup.minHashSignaturesWide(shingles)), "band"))
-    assert(rows(Dedup.minHashSignaturesRowLocalXx(sets)) ===
-      rows(Dedup.minHashSignaturesWideXx(shingles)))
-    // and neither row-local pipeline rebuilds the verify sets with an
+      rows(Dedup.lshBucketsWide(Dedup.minHashSignaturesWide(Dedup.charShingles(corpus))),
+        "band"))
+    // and the kernel pipeline does not rebuild the verify sets with an
     // aggregate
-    for (xx <- Seq(false, true)) {
-      val plan = Dedup.minHashLshPairsRowLocal(corpus, 0.5, xx = xx)
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains("collect_list"),
-        "row-local verify must not rebuild sets with collect_list:\n" +
-          plan.take(800))
-    }
-  }
-
-  test("xxhash64 MinHash family finds the same pairs as the md5 oracle twin") {
-    val corpus = Dedup.fixtureCorpus(
-      graft.Tables.load(spark, sfSmoke, "documents").filter(col("doc_id") < 60))
-    val shingles = Dedup.charShingles(corpus)
-    val md5Pairs = Dedup.minHashLshPairsFromShingles(shingles, 0.5)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val xxPairs = Dedup.minHashLshPairsXxFromShingles(shingles, 0.5)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // signature VALUES differ; verified pairs must not (same exact
-    // verify kernel, equivalent banding recall on this corpus)
-    assert(xxPairs === md5Pairs)
-    assert(xxPairs.nonEmpty)
-  }
-
-  test("xxhash64 SimHash family: copies collide, near-dups stay close") {
-    val corpus = Dedup.fixtureCorpus(
-      graft.Tables.load(spark, sfSmoke, "documents").filter(col("doc_id") < 60))
-    val hashes = Dedup.simHashXx(corpus).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    // exact copies (id+20000) share the base doc's simhash exactly
-    hashes.keys.filter(id => id < 10000 && id % 7 == 0).foreach { id =>
-      assert(hashes(id + 20000) === hashes(id), s"copy of $id diverged")
-    }
-    // near-dup variants (id+10000, small tail appended) stay far below
-    // the ~16 bits unrelated docs differ by; the exact bound is
-    // hash-family-dependent (the md5 family keeps the fixture at ≤3,
-    // this xx instantiation puts one pair at 4)
-    hashes.keys.filter(id => id < 10000 && id % 5 == 0).foreach { id =>
-      val d = java.lang.Long.bitCount(hashes(id) ^ hashes(id + 10000))
-      assert(d <= 8, s"near-dup of $id at hamming $d")
-    }
+    val plan = Dedup.minHashLshPairs(corpus, 0.5).queryExecution.executedPlan.toString
+    assert(!plan.contains("collect_list"),
+      "row-local verify must not rebuild sets with collect_list:\n" + plan.take(800))
   }
 
   test("xxhash64 min-shingle fingerprint: deterministic, short-text fallback") {

@@ -472,10 +472,9 @@ class StreamsSpec extends SparkSpec {
     // the batch fixture corpus (originals + near-dup tails + copies)
     val corpus = Dedup.fixtureCorpus(
       graft.Tables.load(spark, sfSmoke, "documents").filter(col("doc_id") < 40))
-    // batch candidate criterion: bucket equality in >= 1 band on the
-    // SAME xx signature family
-    val buckets = Dedup.lshBucketsWide(
-      Dedup.minHashSignaturesWideXx(Dedup.charShingles(corpus)))
+    // batch candidate criterion: bucket equality in >= 1 band of the
+    // SAME kernel's buckets
+    val buckets = Dedup.lshBuckets(Dedup.lshRows(Dedup.lshDocs(corpus), 4))
     val batchPairs = buckets.as("a").join(buckets.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.id") < col("b.id"))
@@ -509,6 +508,38 @@ class StreamsSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(after === batchPairs, "replay must not re-emit pairs")
     } finally query.stop()
+  }
+
+  test("nearDupCandidatesStream drops null texts: two null-text events give no pair") {
+    implicit val sq = spark.sqlContext
+    implicit val sp = spark
+    import spark.implicits._
+    // no watermark-only batch after the data: lastExecution below is
+    // the batch that ran the kernel
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val input = MemoryStream[Streams.DocEvent]
+    val query = Streams.nearDupCandidatesStream(input.toDF())
+      .writeStream.format("memory").queryName("neardup_null")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      val text = "the same text on both events, long enough to shingle"
+      input.addData(Streams.DocEvent(1, ts(1), null), Streams.DocEvent(2, ts(1), null),
+        Streams.DocEvent(3, ts(1), text), Streams.DocEvent(4, ts(1), text))
+      query.processAllAvailable()
+      val pairs = spark.table("neardup_null").select("id_a", "id_b")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      // the copies pair (the stream is live); the null texts pair with nothing
+      assert(pairs === Set((3L, 4L)))
+      // one kernel call per row: the stack generator reads the kernel's
+      // projection, with no inferred filter re-running it
+      val plan = query.asInstanceOf[
+          org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan.toString
+      assert("minhash_lsh\\(".r.findAllIn(plan).length === 1, plan)
+    } finally {
+      query.stop()
+      spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+    }
   }
 
   test("topKPerKeyStream maintains the batch top-k incrementally with bounded state") {
