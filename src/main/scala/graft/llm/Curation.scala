@@ -269,16 +269,8 @@ object Curation {
       when(col("n_bigrams") > 0,
         org.apache.spark.sql.functions.expr("sum_p_micro DIV n_bigrams")))
 
-  /** Per-doc integer LM scores of `df` against a trained `lm` frame —
-    * the scored input [[perplexityThresholds]] expects. */
-  def perplexityScores(df: DataFrame, lm: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    withScoreMicro(TextAnalysis.scoreBigrams(df, lm, idCol, textCol))
-
-  /** One-row (t1, t2) tertile-threshold frame over a scored corpus
-    * (train-once half of the bucketing pipeline — compute on the
-    * reference corpus, reuse across scoring runs and streams). See
-    * [[perplexityBuckets]] for the corpus-independent shape. */
+  /** One-row (t1, t2) tertile-threshold frame over a scored corpus.
+    * See [[perplexityBuckets]] for the corpus-independent shape. */
   def perplexityThresholds(scored: DataFrame): DataFrame = {
     val spark = scored.sparkSession
     // ONE action over the scoring DAG: the value-count frame is bounded
@@ -330,18 +322,6 @@ object Curation {
           .when(col("score_micro") <= col("t1"), lit("tail"))
           .when(col("score_micro") <= col("t2"), lit("middle"))
           .otherwise(lit("head")).as("bucket"))
-
-  /** Score-and-bucket any frame against a STATIC trained LM and
-    * threshold frame — stateless per document, so it runs unchanged
-    * inside a streaming foreachBatch (the CCNet filter at ingest
-    * time: train lm + thresholds once on the reference corpus, bucket
-    * the stream per micro-batch; StreamsSpec pins batch
-    * equivalence). */
-  def bucketAgainst(df: DataFrame, lm: DataFrame, th: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    assignPerplexityBuckets(
-      withScoreMicro(TextAnalysis.scoreBigrams(df, lm, idCol, textCol)),
-      th, idCol)
 
   // --------------------------- hashed-ngram importance resampling
 

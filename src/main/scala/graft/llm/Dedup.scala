@@ -50,14 +50,6 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Exact dedup: one row per distinct content, the minimum-id copy. */
-  def dropExactDuplicates(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val w = Window.partitionBy(md5(col(textCol))).orderBy(col(idCol))
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-  }
-
   // ------------------------------------------------------- shingling
 
   /** Distinct char-k-gram shingles per document: (id, shingle) — the

@@ -26,11 +26,7 @@ import graft.Tables
   * edge frame's `dst` column ([[degreeStats]] gives the per-node
   * in/out view of the same signal). A top key whose `skew_x`
   * approaches the shuffle width means one reducer carries that hub's
-  * whole inflow; AQE skew splitting does not help a single-key
-  * aggregation, so swap the inflow sum to the two-phase
-  * [[graft.operators.Scale.saltedSum]] over the dst key — identical
-  * (integer-exact) inflows, hot key spread over `saltBuckets`
-  * reducers. LinkGraphSpec pins the equality on a deliberately
+  * whole inflow; LinkGraphSpec pins the report on a deliberately
   * hub-skewed graph.
   *
   * Determinism: ranks live in integer micro-units; every per-edge

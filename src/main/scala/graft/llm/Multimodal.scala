@@ -6,8 +6,7 @@ import graft.Tables
 
 /** Multimodal (image/audio/video) column plumbing (north-star
   * extension): media as opaque `binary` columns with typed metadata,
-  * decode / feature-extract / resize / frame-sample as batched
-  * per-partition transforms.
+  * decode and feature extraction as batched per-partition transforms.
   *
   * The actual codecs are STUBBED — this container has no image/audio
   * libraries — behind [[MediaCodec.decodeStub]], a deterministic fake
@@ -26,7 +25,6 @@ object Multimodal {
       meta: MediaMeta)
   case class MediaFeatures(doc_id: Long, kind: String, n_bytes: Int,
       checksum: Long, mean_byte: Double, width: Int, height: Int)
-  case class FrameSample(doc_id: Long, frame_index: Int, frame_checksum: Long)
 
   /** Deterministic fake codec: "decodes" dimensions and frame counts
     * from byte-level properties. Replace with a real decoder in
@@ -41,11 +39,6 @@ object Multimodal {
         case _       => MediaMeta(16 + n % 32, 8 + n % 16, 0, 1 + n % 10)
       }
     }
-
-    /** Stubbed resize: real implementations re-encode; the stub keeps
-      * bytes and rewrites metadata with the same aspect contract. */
-    def resizeStub(row: MediaRow, w: Int, h: Int): MediaRow =
-      row.copy(meta = row.meta.copy(width = w, height = h))
   }
 
   /** Synthesize a deterministic media table from `documents`: bytes =
@@ -81,28 +74,6 @@ object Multimodal {
             if (r.bytes.length == 0) 0.0 else sum.toDouble / r.bytes.length,
             r.meta.width, r.meta.height)
         }
-      }
-    }
-  }
-
-  /** Frame sampling for video rows: split the byte stream into
-    * `meta.nFrames` equal chunks ("frames"), keep every `stride`-th,
-    * emit per-frame checksums. Real pipelines swap the chunking for a
-    * container demuxer; the explode shape (one row in, nFrames out)
-    * is the production contract. */
-  def sampleFrames(media: Dataset[MediaRow], stride: Int = 2)
-      (implicit spark: SparkSession): Dataset[FrameSample] = {
-    import spark.implicits._
-    media.filter(_.kind == "video").flatMap { r =>
-      val n = math.max(1, r.meta.nFrames)
-      val frameLen = math.max(1, r.bytes.length / n)
-      (0 until n by stride).map { fi =>
-        val from = fi * frameLen
-        val until = math.min(r.bytes.length, from + frameLen)
-        var sum = 0L
-        var i = from
-        while (i < until) { sum += r.bytes(i) & 0xff; i += 1 }
-        FrameSample(r.doc_id, fi, sum)
       }
     }
   }

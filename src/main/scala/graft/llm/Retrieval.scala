@@ -118,25 +118,6 @@ object Retrieval {
             lit(b) * col("dl") / col("avgdl"))))
   }
 
-  /** Generic reciprocal-rank fusion over ranked lists, each shaped
-    * (query_id, doc_id, rank): `Σ 1/(kRrf + rank)`, descending, ties
-    * by doc id; returns (query_id, rank, doc_id, rrf, n_lists). Lists
-    * may cover different candidate spaces (lexical vs dense) — a doc
-    * absent from a list simply contributes nothing for it. */
-  def rrfFuse(lists: Seq[DataFrame], k: Int, kRrf: Int = 60): DataFrame = {
-    val contrib = lists
-      .map(_.select(col("query_id"), col("doc_id"),
-        (lit(1.0) / (lit(kRrf.toDouble) + col("rank"))).as("c")))
-      .reduce(_ unionByName _)
-    val fused = contrib.groupBy("query_id", "doc_id")
-      .agg(sum("c").as("rrf"), count(lit(1)).as("n_lists"))
-    fused.withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("rrf").desc, col("doc_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "doc_id", "rrf", "n_lists")
-  }
-
   // ------------------------------------------ standing lexical index
 
   /** Persist the STANDING BM25 postings index of a live corpus — the

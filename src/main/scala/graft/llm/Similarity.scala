@@ -58,35 +58,6 @@ object Similarity {
       .select("query_id", "neighbor_id", "rank", "cosine")
   }
 
-  /** Signed-random-projection dimensionality reduction (Achlioptas
-    * 2001's database-friendly Johnson–Lindenstrauss matrix: entries ±1
-    * each with probability 1/2): y_j = Σ_i s_{j,i}·x_i over
-    * md5-derived signs — deterministic, no RNG state, any worker
-    * reproduces the same projection. The sign matrix depends only on
-    * (out dim, in dim), so it is computed ONCE driver-side and ships
-    * as a literal (the [[hyperplaneWeightsLong]] discipline — an
-    * expression-form sign would re-hash dIn·dOut times per row); the
-    * projection itself is one row-local transform/zip_with chain:
-    * ZERO shuffle at any scale, O(dIn·dOut) multiply-adds per row (the
-    * necessary work). The scale use: compress wide embeddings to dOut
-    * dims before ANN indexing — IVF/PQ train on the projection while
-    * JL keeps pairwise distances within 1±ε. Float path; the gated
-    * fixture (`embed_random_projection`) runs the same signs in exact
-    * micro-ints via a broadcast sign-frame join, and the spec pins the
-    * two paths equal on integer-valued vectors. */
-  def randomProject(df: DataFrame, dIn: Int, dOut: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val signMat = array((1 to dOut).map { j =>
-      array((1 to dIn).map { i =>
-        lit(if (md5Long60(s"$j:$i") % 2 == 0) 1.0d else -1.0d) }: _*)
-    }: _*)
-    df.select(col(idCol),
-      transform(sequence(lit(1), lit(dOut)), j =>
-        aggregate(zip_with(col(embCol), element_at(signMat, j),
-          (a, b) => a.cast("double") * b), lit(0.0d), (acc, x) => acc + x))
-        .as("projected"))
-  }
-
   /** Driver-side twin of [[Dedup.md5Long]] (first 60 bits of the md5
     * hex digest): the hyperplane weights depend only on (plane, dim),
     * so they are computed ONCE here and shipped as literals instead of
@@ -164,7 +135,7 @@ object Similarity {
     * codebook on every run — the reproducibility contract the rest of
     * this library's content-addressed selection keeps). Returns a
     * (centroid_id, embedding) frame in exactly the shape [[ivfAssign]]
-    * / [[ivfTopK]] consume; centroid_id is the KMeans cluster index.
+    * consumes; centroid_id is the KMeans cluster index.
     * Scale shape: training fits k · dims doubles on the driver (the
     * model) from one corpus aggregation per iteration — the standard
     * index-build step, run once per index, off the query path. */
@@ -203,37 +174,6 @@ object Similarity {
         Window.partitionBy(idCol).orderBy(col("sim").desc, col("centroid_id"))))
       .filter(col("rank") === 1)
       .select(col(idCol), col(embCol), col("centroid_id"))
-  }
-
-  /** IVF probe: search only the members of the query's `nprobe`
-    * nearest centroid lists. */
-  def ivfTopK(assigned: DataFrame, centroids: DataFrame, queries: DataFrame,
-      k: Int, nprobe: Int = 2, idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    val c = centroids.select(col(idCol).as("centroid_id"),
-      col(embCol).as("cent_emb"),
-      sqrt(dotN(col(embCol), col(embCol))).as("cent_norm"))
-    val probes = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"),
-        sqrt(dotN(col(embCol), col(embCol))).as("q_norm"))
-      .crossJoin(broadcast(c))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy((dotN(col("q_emb"), col("cent_emb")) /
-            (col("q_norm") * col("cent_norm"))).desc, col("centroid_id"))))
-      .filter(col("crank") <= nprobe)
-      .select("query_id", "q_emb", "q_norm", "centroid_id")
-    val cand = assigned
-      .withColumn("n_norm", sqrt(dotN(col(embCol), col(embCol))))
-      .join(probes, Seq("centroid_id"))
-      .filter(col("query_id") =!= col(idCol))
-      .withColumn("cosine", dotN(col("q_emb"), col(embCol)) /
-        (col("q_norm") * col("n_norm")))
-    cand.withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col(idCol))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        col("rank"), col("cosine"))
   }
 
   // ------------------------------------- product quantization (PQ/ADC)
@@ -448,7 +388,7 @@ object Similarity {
   }
 
   /** IVF in exact micro-int arithmetic (the oracle-gated twin of
-    * [[ivfAssign]]/[[ivfTopK]]'s float path): centroids are the
+    * [[ivfAssign]]'s float path): centroids are the
     * vec_id % 50 = 1 vectors; every corpus vector joins its
     * nearest-by-cosine centroid (broadcast-size centroid set); queries
     * (vec_id % 50 = 0) probe their nprobe=2 nearest centroid lists
@@ -662,13 +602,17 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  /** Gated micro-int twin of [[randomProject]]: the same md5 signs in
-    * exact integer arithmetic, expressed as the explode → broadcast
-    * sign-frame join → (id, j) groupBy (unskewed keys, map-side
-    * combine) — the grouped form whose sums are partition-order-free,
-    * so the BIGINT projections hash-match DuckDB. The sign frame is
-    * derived with explode (never a cross join — the plan-quality gate
-    * forbids cartesians in gated queries). */
+  /** Signed-random-projection dimensionality reduction (Achlioptas
+    * 2001's database-friendly Johnson–Lindenstrauss matrix: entries ±1
+    * each with probability 1/2): y_j = Σ_i s_{j,i}·x_i over md5-derived
+    * signs — deterministic, no RNG state, any worker reproduces the
+    * same projection. Exact integer arithmetic, expressed as the
+    * explode → broadcast sign-frame join → (id, j) groupBy (unskewed
+    * keys, map-side combine) — the grouped form whose sums are
+    * partition-order-free, so the BIGINT projections hash-match
+    * DuckDB. The sign frame is derived with explode (never a cross
+    * join — the plan-quality gate forbids cartesians in gated
+    * queries). */
   private val embedRandomProjection: Q = (s, dir) => {
     val elems = microElems(s, dir)
     val signs = elems.select(col("i")).distinct()

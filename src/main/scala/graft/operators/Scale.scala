@@ -7,48 +7,12 @@ import org.apache.spark.sql.types.DecimalType
 
 /** Skew- and scale-management helpers: the patterns a 1000-executor
   * job needs when keys are hot or orderings are global. Everything is
-  * deterministic in RESULT; salts only re-route rows, and all sums run
-  * decimal-exact so re-association cannot change a bit (see
+  * deterministic in RESULT; buckets only re-route rows, and all sums
+  * run decimal-exact so re-association cannot change a bit (see
   * [[graft.functions.Exact]]).
   */
 object Scale {
   private val D = DecimalType(18, 6)
-
-  /** Two-phase salted aggregation: a hot grouping key is spread over
-    * `saltBuckets` sub-keys for the first (heavy) shuffle, then the
-    * tiny per-(key, salt) partials combine in a second, skew-free
-    * shuffle. Use when one key owns a large share of the rows and AQE
-    * skew handling isn't enough (pre-aggregated pipelines, custom
-    * partitioners). */
-  def saltedSum(df: DataFrame, keyCols: Seq[String], valueCol: String,
-      resultCol: String, saltBuckets: Int = 32,
-      saltSource: Option[Column] = None): DataFrame = {
-    val salt = pmod(
-      saltSource.map(hash(_)).getOrElse(spark_partition_id()),
-      lit(saltBuckets))
-    df.withColumn("__salt", salt)
-      .groupBy((keyCols.map(col) :+ col("__salt")): _*)
-      .agg(sum(col(valueCol).cast(D)).as("__partial"))
-      .groupBy(keyCols.map(col): _*)
-      .agg(sum(col("__partial")).cast("double").as(resultCol))
-  }
-
-  /** Skew-join by salting: every big-side row picks one of
-    * `saltBuckets` sub-keys; the small side replicates once per
-    * bucket, so a hot key's rows spread over `saltBuckets` reducers
-    * instead of one. Use for skewed keys too large to broadcast and
-    * too hot for a plain shuffle join; otherwise prefer broadcast()
-    * or AQE's skew-join splitting. */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-      saltBuckets: Int = 16, saltSource: Option[Column] = None): DataFrame = {
-    val salt = pmod(
-      saltSource.map(hash(_)).getOrElse(spark_partition_id()),
-      lit(saltBuckets))
-    val b = big.withColumn("__salt", salt)
-    val s = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(saltBuckets - 1))))
-    b.join(s, Seq(key, "__salt")).drop("__salt")
-  }
 
   /** Distributed exclusive prefix sums — the 100 TB path for
     * [[graft.scheduling.Carbon.prefixSums]]'s single-partition global
@@ -61,12 +25,19 @@ object Scale {
   def prefixSumsDistributed(slots: DataFrame, slotCol: String = "slot",
       ciCol: String = "ci", numBuckets: Int = 32): DataFrame = {
     val spark = slots.sparkSession
-    val maxSlot = slots.agg(max(col(slotCol))).head().getLong(0)
-    val width = math.max(1L, maxSlot / numBuckets + 1)
-    val bucketed = slots.withColumn("__bucket", (col(slotCol) / width).cast("long"))
-    val partials = bucketed.groupBy("__bucket")
-      .agg(sum(col(ciCol).cast(D)).as("__bucket_sum"))
-      .orderBy("__bucket").collect()
+    val bounds = slots.agg(min(col(slotCol)).cast("long"),
+      max(col(slotCol)).cast("long")).head()
+    if (bounds.isNullAt(0))  // empty input: no prefix to carry
+      return slots.withColumn("prefix", lit(0.0))
+    val lo = bounds.getLong(0)
+    val width = (bounds.getLong(1) - lo) / numBuckets + 1
+    val bucketed = slots.withColumn("__bucket",
+      least(((col(slotCol) - lit(lo)) / lit(width)).cast("long"),
+        lit(numBuckets - 1L)))
+    val partials = graft.Collect.collectChecked(
+      bucketed.groupBy("__bucket").agg(sum(col(ciCol).cast(D)).as("__bucket_sum")),
+      numBuckets, s"prefixSumsDistributed: the $numBuckets slot-range bucket sums")
+      .sortBy(_.getLong(0))
     var running = java.math.BigDecimal.ZERO
     val offsetRows = partials.map { r =>
       val off = running
@@ -114,8 +85,10 @@ object Scale {
       least(floor((c.cast("double") - lit(lo)) / lit(width)).cast("int"),
         lit(numBuckets - 1))
     val bucketed = df.withColumn("__bucket", bucketOf(bucketKey))
-    val counts = bucketed.groupBy("__bucket").agg(count(lit(1)).as("__cnt"))
-      .orderBy("__bucket").collect()
+    val counts = graft.Collect.collectChecked(
+      bucketed.groupBy("__bucket").agg(count(lit(1)).as("__cnt")),
+      numBuckets, s"rowNumberDistributed: the $numBuckets bucket counts")
+      .sortBy(_.getInt(0))
     var running = 0L
     val offsetRows = counts.map { r =>
       val off = running
@@ -136,10 +109,10 @@ object Scale {
       .drop("__bucket", "__offset")
   }
 
-  /** Shuffle-key skew report — the diagnostic that decides WHEN the
-    * salting utilities above are needed: the k heaviest values of a
-    * prospective join/group key, each with its row count, share of
-    * all rows, and skew factor (count ÷ mean-per-key; ~1 is uniform,
+  /** Shuffle-key skew report — the diagnostic that decides WHEN a hot
+    * key needs handling (a broadcast, AQE skew-join splitting): the k
+    * heaviest values of a prospective join/group key, each with its row
+    * count, share of all rows, and skew factor (count ÷ mean-per-key; ~1 is uniform,
     * ≫1 is a hot key that will pin a reducer). One key-groupBy (the
     * count frame is key-cardinality-sized; map-side combine absorbs
     * the very skew being measured) + the TopKPerKey bounded heap —
@@ -156,34 +129,6 @@ object Scale {
         (col("n").cast("double") / col("total")).as("share"),
         (col("n").cast("double") * col("n_keys") / col("total"))
           .as("skew_x"))
-  }
-
-  /** Physical partition-balance report — the runtime twin of
-    * [[keySkewReport]] (that one predicts skew from a key's value
-    * distribution; this one measures what the current partitioning
-    * actually produced): rows per `spark_partition_id`, folded to
-    * (n_partitions, min/max/mean rows, balance = max ÷ mean). A
-    * balance ≫ 1 after a repartition or bucketed write means one task
-    * will straggle the stage. Engine-specific by construction
-    * (partition ids are Spark runtime state, not data), so this is a
-    * diagnostic utility outside the oracle set — unit-pinned
-    * instead. One map-side-combined groupBy on the partition id plus
-    * a one-row fold. */
-  def partitionBalanceReport(df: DataFrame): DataFrame = {
-    // the groupBy sees only NON-EMPTY partitions; the denominator must
-    // be the physical partition count (empty partitions are exactly
-    // what imbalance produces), read from the plan — no job triggered
-    val nParts = df.rdd.getNumPartitions.toLong
-    df.groupBy(spark_partition_id().as("pid"))
-      .agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_nonempty"),
-        min("n").as("min_rows"), max("n").as("max_rows"),
-        sum("n").as("total_rows"))
-      .withColumn("n_partitions", lit(nParts))
-      .withColumn("mean_rows",
-        col("total_rows").cast("double") / col("n_partitions"))
-      .withColumn("balance",
-        col("max_rows").cast("double") / col("mean_rows"))
   }
 
   type Q = (org.apache.spark.sql.SparkSession, String) => DataFrame

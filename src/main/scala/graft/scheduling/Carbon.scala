@@ -1,13 +1,13 @@
 package graft.scheduling
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Carbon-intensity time-series math (SURVEY.md §2.D group 4,
   * behavior of `low-carbon-scheduling/src/carbon.py`):
-  * Electricity-Maps CSV load, window filter, slot-length inference,
-  * upsample-by-repetition, prefix sums, and O(1) window-carbon
-  * evaluation on top of the prefix sums.
+  * upsample-by-repetition and prefix sums; O(1) window-carbon
+  * evaluation on top of the prefix sums is
+  * [[Schedulers.CarbonProfileMicro]]'s.
   *
   * Scale note: every operation on the slot axis runs through the
   * range-bucketed distributed forms in [[graft.operators.Scale]]
@@ -22,29 +22,6 @@ object Carbon {
   val SlotSec       = 1
   val SearchHours   = 12
   val CandidateStep = 3600
-
-  /** Load an Electricity-Maps CSV (`Datetime (UTC)`, direct and
-    * lifecycle CI columns — carbon.py:4-46): parse timestamps, filter
-    * [start,end), sort, pick the CI flavor, and infer the source slot
-    * length from the first two rows via lag. */
-  def loadCarbonTimeseries(spark: SparkSession, path: String,
-      start: String, end: String, lifecycle: Boolean = true): DataFrame = {
-    val ciCol =
-      if (lifecycle) "Carbon intensity gCO₂eq/kWh (Life cycle)"
-      else "Carbon intensity gCO₂eq/kWh (direct)"
-    val raw = spark.read.option("header", "true").csv(path)
-      .withColumn("ts", to_timestamp(col("Datetime (UTC)")))
-      .withColumn("ci", col(ciCol).cast("double"))
-      .filter(col("ts") >= to_timestamp(lit(start)) &&
-        col("ts") < to_timestamp(lit(end)))
-      .select("ts", "ci")
-    // slot length = gap between the two earliest timestamps; a
-    // TakeOrdered(2) + one-row aggregate, so no global lag window.
-    val slotLen = raw.orderBy("ts").limit(2)
-      .agg((max(unix_timestamp(col("ts"))) - min(unix_timestamp(col("ts"))))
-        .as("slot_len_s"))
-    raw.crossJoin(broadcast(slotLen))
-  }
 
   /** Repeat each source slot `factor` times to reach the target slot
     * resolution (carbon.py:49-68; integer ratio enforced there, here by
@@ -71,38 +48,4 @@ object Carbon {
   def prefixSums(slots: DataFrame, slotCol: String = "slot",
       ciCol: String = "ci"): DataFrame =
     graft.operators.Scale.prefixSumsDistributed(slots, slotCol, ciCol)
-
-  /** Carbon of running at `powerKw` over slot window [s, e) given the
-    * prefix-sum table (carbon.py:78-99): (prefix[e]−prefix[s]) ·
-    * power · dt_hours, with both endpoints clipped to the horizon. */
-  def windowCarbonExpr(prefixAtEnd: org.apache.spark.sql.Column,
-      prefixAtStart: org.apache.spark.sql.Column,
-      powerKw: Double = PowerKw, slotSec: Int = SlotSec)
-      : org.apache.spark.sql.Column =
-    (prefixAtEnd - prefixAtStart) * lit(powerKw) * lit(slotSec / 3600.0)
-
-  /** Driver-side prefix array for the sequential schedulers: the heavy
-    * summation ran in Spark; the collect is one double per slot. */
-  def collectPrefix(prefix: DataFrame): Array[Double] = {
-    val rows = prefix.select("slot", "prefix", "ci")
-      .orderBy("slot").collect()
-    val n = rows.length
-    val out = new Array[Double](n + 1)
-    var i = 0
-    while (i < n) {
-      out(i) = rows(i).getDouble(1)
-      i += 1
-    }
-    out(n) = if (n == 0) 0.0 else rows(n - 1).getDouble(1) + rows(n - 1).getDouble(2)
-    out
-  }
-
-  /** Window carbon on a collected prefix array (clipped). */
-  def windowCarbon(prefix: Array[Double], s: Int, e: Int,
-      powerKw: Double = PowerKw, slotSec: Int = SlotSec): Double = {
-    val n = prefix.length - 1
-    val cs = math.min(math.max(s, 0), n)
-    val ce = math.min(math.max(e, 0), n)
-    (prefix(ce) - prefix(cs)) * powerKw * (slotSec / 3600.0)
-  }
 }

@@ -4,9 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Experiment-result statistics (behavior of
-  * `low-carbon-scheduling/src/stats.py`): tag result rows, then for
-  * each (location, scenario, scheduler) group compute each model's
-  * carbon overhead relative to that group's Oracle row.
+  * `low-carbon-scheduling/src/stats.py`): for each (location,
+  * scenario, scheduler) group, compute each model's carbon overhead
+  * relative to that group's Oracle row.
   *
   * Expressed as a broadcast-friendly self-join instead of pandas
   * groupby-apply: the oracle side is one row per group, so at any
@@ -14,12 +14,6 @@ import org.apache.spark.sql.functions._
   * big side.
   */
 object Stats {
-
-  /** Tag a results frame with location/scenario/scheduler context
-    * (stats.py `results_to_df`). */
-  def tagResults(df: DataFrame, location: String, scenario: String): DataFrame =
-    df.withColumn("location", lit(location))
-      .withColumn("scenario", lit(scenario))
 
   /** overhead_vs_oracle = (C_model − C_oracle) / C_oracle per
     * (location, scenario, scheduler) group; null when the group has no

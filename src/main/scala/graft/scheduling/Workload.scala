@@ -25,11 +25,6 @@ object Workload {
       addVariance: Double = 1.0): Int =
     math.max(1, (math.ceil(runtimeSeconds / slotSec) * addVariance).toInt)
 
-  /** Same as a column expression (Spark-side twin). */
-  def runtimeToSlotsCol(runtime: org.apache.spark.sql.Column,
-      slotSec: Double, addVariance: Double = 1.0): org.apache.spark.sql.Column =
-    greatest(lit(1), (ceil(runtime / lit(slotSec)) * lit(addVariance)).cast("int"))
-
   /** Build the workload from a (prediction, label) frame — the shape of
     * the RF/GNN `values.csv` (workload.py `from_values_csv`). Row order
     * of the input defines arrival order and the q<i> ids. */

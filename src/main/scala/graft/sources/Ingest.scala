@@ -180,11 +180,6 @@ object Ingest {
     df.write.format("parquet").mode("overwrite").saveAsTable(table)
   }
 
-  /** Per-run NDJSON workload-log sink (run_workload.py:66-80): one JSON
-    * object per query execution. */
-  def writeNdjsonLog(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").json(path)
-
   /** Name-sorted q*.sql loader (run_workload.py:26-30). */
   def loadQueryFiles(dir: String): Seq[(String, String)] = {
     val d = new java.io.File(dir)

@@ -35,19 +35,13 @@ class CollectSpec extends SparkSpec {
     "Collect.scala" -> 2,
     "TextAnalysis.scala" -> 3,
     "CorpusPlanStudy.scala" -> 1,
-    "Scale.scala" -> 2,
-    "Carbon.scala" -> 1,
     "SchedulingQueries.scala" -> 2,
     "Workload.scala" -> 1,
     "FixtureGen.scala" -> 14,
     "WorkloadRunner.scala" -> 1)
 
   test("src/main adds no bare .collect() outside the allowlist") {
-    def files(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles).toSeq.flatten.flatMap(f =>
-        if (f.isDirectory) files(f) else Seq(f))
-    val counts = files(new java.io.File("src/main/scala"))
-      .filter(_.getName.endsWith(".scala"))
+    val counts = ReachSpec.scalaFiles(new java.io.File("src/main/scala"))
       .map(f => f.getName -> java.util.regex.Pattern.quote(".collect()").r
         .findAllIn(java.nio.file.Files.readString(f.toPath)).length)
       .filter(_._2 > 0).groupMapReduce(_._1)(_._2)(_ + _)

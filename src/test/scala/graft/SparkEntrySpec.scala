@@ -15,6 +15,10 @@ class SparkEntrySpec extends SparkSpec {
   test("every oracle key has a matching query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
+    // the gated key set only grows: a deletion must not drop a key
+    assert(SparkEntry.queries.size >= 262 && SparkEntry.oracleSql.size >= 261,
+      s"${SparkEntry.queries.size} keys, ${SparkEntry.oracleSql.size} oracles " +
+        "(at least 262 and 261 expected)")
   }
 
   test("every query is oracle-gated unless declared rows-only") {

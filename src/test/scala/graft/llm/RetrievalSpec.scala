@@ -50,20 +50,6 @@ class RetrievalSpec extends SparkSpec {
       "rarer-term match must outrank commoner-term match")
   }
 
-  test("rrfFuse: doc in both lists outranks same-rank docs in one list") {
-    val la = Seq((1L, 100L, 1), (1L, 101L, 2), (1L, 102L, 3))
-      .toDF("query_id", "doc_id", "rank")
-    val lb = Seq((1L, 101L, 1), (1L, 103L, 2), (1L, 104L, 3))
-      .toDF("query_id", "doc_id", "rank")
-    val r = Retrieval.rrfFuse(Seq(la, lb), 10).collect()
-      .map(x => x.getLong(x.fieldIndex("doc_id")) ->
-        (x.getInt(x.fieldIndex("rank")), x.getLong(x.fieldIndex("n_lists"))))
-      .toMap
-    assert(r(101L)._1 == 1, "rank-2 + rank-1 beats any single-list doc")
-    assert(r(101L)._2 == 2)
-    assert(r(100L)._2 == 1)
-  }
-
   test("fixture keys: contiguous ranks per query, fused key exercises 2-list merge") {
     val bm = Retrieval.queries("retrieval_bm25_topk")(spark, sfCorrect)
     val perQ = bm.groupBy("query_id")

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.Exact
 import org.apache.spark.sql.functions._
 
 class ScaleAsOfSpec extends SparkSpec {
@@ -40,55 +39,27 @@ class ScaleAsOfSpec extends SparkSpec {
 
   // --------------------------------------------------------- Scale
 
-  test("saltedSum equals direct exact groupBy sum regardless of salt source") {
-    val e = graft.Tables.load(spark, sfSmoke, "events")
-    val direct = e.groupBy("event_type")
-      .agg(Exact.dsum(col("value")).as("total"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    for (saltSrc <- Seq(None, Some(col("event_id")))) {
-      val salted = Scale.saltedSum(e, Seq("event_type"), "value", "total",
-          saltBuckets = 8, saltSource = saltSrc)
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      assert(salted === direct)
-    }
-  }
-
-  test("saltedJoin equals plain join") {
-    val e = graft.Tables.load(spark, sfSmoke, "events")
-      .select(col("event_id"), (col("user_id") % 10).as("k"), col("value"))
-    val dim = graft.Tables.load(spark, sfSmoke, "events")
-      .filter(col("event_id") < 10)
-      .select((col("event_id") % 10).as("k"), col("value").as("dim_v"))
-      .groupBy("k").agg(max("dim_v").as("dim_v"))
-    def key(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => (r.getLong(0), r.getDouble(3))).sortBy(_._1).toSeq
-    val plain = e.join(dim, "k").select(col("event_id"), col("k"),
-      col("value"), col("dim_v")).collect()
-    val salted = Scale.saltedJoin(e, dim, "k", saltBuckets = 4,
-        saltSource = Some(col("event_id")))
-      .select(col("event_id"), col("k"), col("value"), col("dim_v")).collect()
-    assert(key(salted) === key(plain))
-  }
-
-  test("prefixSumsDistributed is bit-identical to the single-window form") {
+  /** Reference semantics: ONE global ordered window (the form the
+    * production path deliberately avoids) — spelled out inline so the
+    * distributed implementation is checked against first principles,
+    * not against itself. */
+  private def singleWindowPrefix(slots: org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
-    val e = graft.Tables.load(spark, sfSmoke, "events")
-      .select((row_number().over(Window.orderBy("event_id")) - 1)
-        .cast("long").as("slot"), col("value").as("ci"))
-    // reference semantics: ONE global ordered window (the form the
-    // production path deliberately avoids) — spelled out inline so the
-    // distributed implementation is checked against first principles,
-    // not against itself
-    val single = e.withColumn("prefix",
+    slots.withColumn("prefix",
         coalesce(sum(col("ci").cast(DecimalType(18, 6))).over(
           Window.orderBy("slot")
             .rowsBetween(Window.unboundedPreceding, -1)),
           lit(0).cast(DecimalType(18, 6))).cast("double"))
       .select("slot", "prefix").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    for (buckets <- Seq(1, 7)) {
-      val dist = Scale.prefixSumsDistributed(e, numBuckets = buckets)
+  }
+
+  private def assertPrefixMatches(slots: org.apache.spark.sql.DataFrame,
+      bucketCounts: Seq[Int]): Unit = {
+    val single = singleWindowPrefix(slots)
+    for (buckets <- bucketCounts) {
+      val dist = Scale.prefixSumsDistributed(slots, numBuckets = buckets)
         .select("slot", "prefix").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(dist.size === single.size)
@@ -96,6 +67,26 @@ class ScaleAsOfSpec extends SparkSpec {
         assert(p === single(slot), s"slot $slot (buckets=$buckets)")
       }
     }
+  }
+
+  test("prefixSumsDistributed is bit-identical to the single-window form") {
+    import org.apache.spark.sql.expressions.Window
+    val e = graft.Tables.load(spark, sfSmoke, "events")
+      .select((row_number().over(Window.orderBy("event_id")) - 1)
+        .cast("long").as("slot"), col("value").as("ci"))
+    assertPrefixMatches(e, Seq(1, 7))
+  }
+
+  test("prefixSumsDistributed: empty and negative-slot frames match the single-window form") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Double)].toDF("slot", "ci")
+    assertPrefixMatches(empty, Seq(7))
+    assert(Scale.prefixSumsDistributed(empty).columns.contains("prefix"))
+    // slots spread over a ~1e9 range: buckets split (max − min), so at
+    // most numBuckets partials reach the driver (collectChecked asserts)
+    val negative = Seq((-1000000000L, 1.5), (-7L, 2.25), (-1L, 0.5), (0L, 4.0),
+      (3L, 1.0), (10L, 8.0)).toDF("slot", "ci")
+    assertPrefixMatches(negative, Seq(1, 4, 32))
   }
 
   test("rowNumberDistributed matches the global row_number") {
@@ -120,29 +111,13 @@ class ScaleAsOfSpec extends SparkSpec {
     }
   }
 
-  test("partitionBalanceReport: uniform after repartition, skewed before") {
-    import org.apache.spark.sql.functions._
-    val skewed = spark.range(0, 10000).select(lit(0L).as("k"), col("id"))
-      .repartition(8, col("k"))  // all rows land in one partition
-    val r1 = graft.operators.Scale.partitionBalanceReport(skewed).head()
-    assert(r1.getLong(r1.fieldIndex("total_rows")) == 10000)
-    assert(r1.getDouble(r1.fieldIndex("balance")) >= 7.9,
-      "hash-partitioning a constant key must report max ~= total")
-    val even = spark.range(0, 10000).toDF("id").repartition(8, col("id"))
-    val r2 = graft.operators.Scale.partitionBalanceReport(even).head()
-    assert(r2.getLong(r2.fieldIndex("n_partitions")) == 8)
-    assert(r2.getDouble(r2.fieldIndex("balance")) < 1.5,
-      "hash-partitioning a unique key must balance")
-  }
-
   test("join_asof fixture query returns rows on sf0.001") {
     assert(AsOf.queries("join_asof")(spark, sfSmoke).count() > 0)
   }
 
   test("AQE splits a skewed shuffle-join partition at runtime (skew=true)") {
-    // the runtime complement to saltedJoin: one hot key dominating the
-    // left side must be detected and split by AQE's skew-join rule,
-    // without any manual salting
+    // one hot key dominating the left side must be detected and split
+    // by AQE's skew-join rule, without any manual salting
     val prev = Seq(
       "spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor",

@@ -62,7 +62,7 @@ class IngestSpec extends SparkSpec {
     intercept[Exception](Ingest.writeTable(df, s"$dir/tbl", "create"))
     Ingest.writeTable(df, s"$dir/tbl", "append")
     assert(spark.read.parquet(s"$dir/tbl").count() === 4)
-    Ingest.writeNdjsonLog(df, s"$dir/log")
+    Ingest.writeTable(df, s"$dir/log", format = "json")
     val back = spark.read.json(s"$dir/log")
     assert(back.count() === 2)
     assert(back.columns.sorted.toSeq === Seq("elapsed_s", "query_id"))

@@ -10,65 +10,6 @@ class StreamsSpec extends SparkSpec {
   private def ts(minute: Int, second: Int = 0): Timestamp =
     Timestamp.valueOf(f"2026-01-01 10:$minute%02d:$second%02d")
 
-  test("windowedAgg: tumbling windows aggregate by type, watermark drops late data") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Streams.Event]
-    val query = Streams.windowedAgg(input.toDF(), watermark = "2 minutes",
-        window = "5 minutes")
-      .writeStream.format("memory").queryName("winagg")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      input.addData(
-        Streams.Event(1, ts(1), 10, "view", 1.0),
-        Streams.Event(2, ts(2), 10, "view", 2.0),
-        Streams.Event(3, ts(6), 11, "click", 5.0))
-      query.processAllAvailable()
-      // advance the watermark past the first window's end (10:05):
-      // max ts 10:08 − 2 min watermark = 10:06 ≥ 10:05 → window closed
-      input.addData(Streams.Event(4, ts(8), 11, "click", 6.0))
-      query.processAllAvailable()
-      // now an event for the closed window is genuinely late → dropped
-      input.addData(Streams.Event(5, ts(0), 12, "view", 100.0))
-      query.processAllAvailable()
-      // updates per window are monotone; the final state is the max
-      val rows = spark.table("winagg")
-        .groupBy("window_start", "event_type")
-        .max("n_events", "total_value").collect()
-      val view = rows.find(_.getString(1) == "view").get
-      assert(view.getTimestamp(0) === ts(0))
-      assert(view.getLong(2) === 2) // the late event never landed
-      val click = rows.find(r => r.getString(1) == "click" &&
-        r.getTimestamp(0) == ts(5)).get
-      assert(click.getLong(2) === 2)
-    } finally query.stop()
-  }
-
-  test("windowedAgg over a parquet file source (production wiring)") {
-    // file streams read directories; stage a normalized copy (the raw
-    // fixture file carries TIMESTAMP(NANOS), which Tables.load rewrites)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_src")
-    val batch = graft.Tables.load(spark, sfSmoke, "events")
-    batch.write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream.schema(batch.schema).parquet(dir.toString)
-    assert(stream.isStreaming)
-    val query = Streams.windowedAgg(stream, watermark = "1 hour",
-        window = "10 minutes", slide = Some("5 minutes"))
-      .writeStream.format("memory").queryName("filewin")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      query.processAllAvailable()
-      val rows = spark.table("filewin")
-      assert(rows.count() > 0)
-      // sliding: each event lands in exactly 2 windows → total n_events
-      // across windows is 2× the event count
-      val total = rows.agg(org.apache.spark.sql.functions.sum("n_events"))
-        .head().getLong(0)
-      val events = graft.Tables.load(spark, sfSmoke, "events").count()
-      assert(total === 2 * events)
-    } finally query.stop()
-  }
-
   test("curation ops are stream-transparent: streaming split/sample equals batch") {
     // splitAssign / stratifiedSample / qualityWeightedSample are pure
     // map-only column dataflows, so the SAME library functions run
@@ -246,221 +187,23 @@ class StreamsSpec extends SparkSpec {
     } finally { query.stop(); lm.unpersist() }
   }
 
-  test("per-batch streaming perplexity bucketing against static lm+thresholds equals batch") {
-    // the CCNet ingest-time shape: LM and tertile thresholds are
-    // trained ONCE on the reference corpus; each micro-batch is then
-    // bucketed map-only against the static broadcast frames — a doc's
-    // bucket depends only on its own bigrams and the fixed cuts, so
-    // per-batch equals batch exactly.
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    import graft.llm.{Curation, TextAnalysis}
-    val base = graft.Tables.load(spark, sfSmoke, "documents")
-      .select("doc_id", "text")
-    val lm = TextAnalysis.trainBigramLm(base).cache()
-    lm.count()
-    val th = Curation.perplexityThresholds(
-      Curation.perplexityScores(base, lm)).cache()
-    th.count()
-    val docs = base.as[(Long, String)].collect().toSeq
-    val buckets = scala.collection.mutable.Map[Long, String]()
-    val input = MemoryStream[(Long, String)]
-    val query = input.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        Curation.bucketAgainst(batch, lm, th).collect().foreach { r =>
-          buckets.synchronized {
-            buckets(r.getLong(0)) = r.getString(r.fieldIndex("bucket"))
-          }
-        }
-      }.start()
-    try {
-      val (a, b) = docs.splitAt(docs.size / 2)
-      input.addData(a: _*); query.processAllAvailable()
-      input.addData(b: _*); query.processAllAvailable()
-      val batchBuckets = Curation.perplexityBuckets(base).collect()
-        .map(r => r.getLong(0) -> r.getString(r.fieldIndex("bucket"))).toMap
-      assert(buckets.toMap == batchBuckets,
-        "per-batch buckets must equal the batch result exactly")
-      assert(batchBuckets.values.toSet == Set("head", "middle", "tail"))
-    } finally { query.stop(); lm.unpersist(); th.unpersist() }
-  }
-
-  test("dedupStream drops replayed ids") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Streams.Event]
-    val query = Streams.dedupStream(input.toDF(), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("dedupst")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      val e = Streams.Event(7, ts(1), 10, "view", 1.0)
-      input.addData(e, e.copy(event_id = 8))
-      query.processAllAvailable()
-      input.addData(e) // exact replay — must be deduped
-      query.processAllAvailable()
-      assert(spark.table("dedupst").count() === 2)
-    } finally query.stop()
-  }
-
-  test("sessionizeOnClose emits each session exactly once, on close") {
-    implicit val sp = spark
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Streams.Event]
-    val query = Streams.sessionizeOnClose(input.toDS(), gapMs = 60000,
-        watermark = "1 minute")
-      .writeStream.format("memory").queryName("closed_sessions")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(
-        Streams.Event(1, ts(1), 10, "view", 1.0),
-        Streams.Event(2, ts(2), 10, "view", 2.0),
-        Streams.Event(3, ts(2), 11, "click", 5.0))
-      query.processAllAvailable()
-      // nothing emitted while sessions are open
-      assert(spark.table("closed_sessions").count() === 0)
-      // watermark sweep closes both
-      input.addData(Streams.Event(4, ts(30), 12, "view", 9.0))
-      query.processAllAvailable()
-      val rows = spark.table("closed_sessions").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
-      assert(rows.toSet === Set((10L, 2L, 3.0, true), (11L, 1L, 5.0, true)))
-    } finally query.stop()
-  }
-
-  test("dedupStreamWithinWatermark drops re-stamped replays of the same id") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Streams.Event]
-    val query = Streams.dedupStreamWithinWatermark(input.toDF(),
-        watermark = "5 minutes")
-      .writeStream.format("memory").queryName("dedupww")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(Streams.Event(1, ts(0), 10, "view", 1.0))
-      query.processAllAvailable()
-      // same event_id replayed with a DIFFERENT timestamp → still dup
-      input.addData(Streams.Event(1, ts(1), 10, "view", 1.0))
-      input.addData(Streams.Event(2, ts(2), 11, "click", 2.0))
-      query.processAllAvailable()
-      val ids = spark.table("dedupww").select("event_id")
-        .collect().map(_.getLong(0)).sorted
-      assert(ids.toSeq === Seq(1L, 2L))
-    } finally query.stop()
-  }
-
-  test("intervalJoin matches right events inside the left event-time window") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val views = MemoryStream[Streams.Event]
-    val buys = MemoryStream[Streams.Event]
-    val query = Streams.intervalJoin(views.toDF(), buys.toDF(),
-        joinWindow = "5 minutes", watermark = "2 minutes")
-      .writeStream.format("memory").queryName("ssjoin")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      views.addData(
-        Streams.Event(1, ts(0), 10, "view", 1.0),
-        Streams.Event(2, ts(0), 11, "view", 2.0))
-      buys.addData(
-        Streams.Event(3, ts(3), 10, "buy", 30.0),  // inside 5-min window
-        Streams.Event(4, ts(9), 11, "buy", 40.0))  // outside → no match
-      query.processAllAvailable()
-      // advance both watermarks so matched rows emit
-      views.addData(Streams.Event(5, ts(20), 12, "view", 0.0))
-      buys.addData(Streams.Event(6, ts(20), 12, "buy", 0.0))
-      query.processAllAvailable()
-      val rows = spark.table("ssjoin")
-        .select("user_id", "l_type", "r_type", "r_value").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getDouble(3)))
-      assert(rows.contains((10L, "view", "buy", 30.0)))
-      // user 11's buy landed outside the interval → never joined
-      assert(!rows.exists(_._1 == 11L))
-    } finally query.stop()
-  }
-
-  test("enrichWithDim joins each micro-batch against a broadcast static dim") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val dim = Seq((10L, "gold"), (11L, "basic")).toDF("user_id", "tier")
-    val input = MemoryStream[Streams.Event]
-    val query = Streams.enrichWithDim(input.toDF(), dim, "user_id")
-      .writeStream.format("memory").queryName("enriched")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(
-        Streams.Event(1, ts(1), 10, "view", 1.0),
-        Streams.Event(2, ts(2), 11, "click", 2.0),
-        Streams.Event(3, ts(3), 99, "view", 3.0)) // no dim row → dropped
-      query.processAllAvailable()
-      val rows = spark.table("enriched").select("event_id", "tier")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(rows === Set((1L, "gold"), (2L, "basic")))
-    } finally query.stop()
-  }
-
   test("idempotent parquet sink: a replayed batch lands exactly once") {
-    implicit val sq = spark.sqlContext
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_idem_sink")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_idem_ckpt")
-    val input = MemoryStream[Streams.Event]
-    val query = Streams.startIdempotentParquetSink(input.toDF(),
-      out.toString, ckpt.toString)
-    try {
-      input.addData(
-        Streams.Event(1, ts(1), 10, "view", 1.0),
-        Streams.Event(2, ts(2), 11, "click", 2.0))
-      query.processAllAvailable()
-      val afterFirst = spark.read.parquet(out.toString)
-      assert(afterFirst.count() === 2)
-      // partition-dir columns read back integer-inferred — cast up
-      val batchId = afterFirst.selectExpr("CAST(batch_id AS BIGINT)")
-        .head().getLong(0)
-      // simulate the crash-replay: the SAME batch body runs again with
-      // the SAME batch id — dynamic overwrite must not duplicate rows
-      Streams.writeBatchIdempotent(
-        Seq(Streams.Event(1, ts(1), 10, "view", 1.0),
-          Streams.Event(2, ts(2), 11, "click", 2.0)).toDF(),
-        batchId, out.toString)
-      assert(spark.read.parquet(out.toString).count() === 2)
-      // a NEW batch id appends alongside, untouched by the overwrite
-      input.addData(Streams.Event(3, ts(3), 12, "view", 3.0))
-      query.processAllAvailable()
-      assert(spark.read.parquet(out.toString).count() === 3)
-    } finally query.stop()
-  }
-
-  test("sessionize accumulates per-user state across batches") {
-    implicit val sp = spark
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Streams.Event]
-    val query = Streams.sessionize(input.toDS(), gapMs = 60000,
-        watermark = "1 minute")
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      input.addData(
-        Streams.Event(1, ts(1), 10, "view", 1.0),
-        Streams.Event(2, ts(1, 30), 10, "view", 2.0),
-        Streams.Event(3, ts(2), 11, "click", 5.0))
-      query.processAllAvailable()
-      input.addData(Streams.Event(4, ts(3), 10, "view", 4.0))
-      query.processAllAvailable()
-      // watermark far past every session gap → both sessions close
-      input.addData(Streams.Event(5, ts(30), 12, "view", 9.0))
-      query.processAllAvailable()
-      val byUser = spark.table("sessions").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
-      // user 10's running session saw 2 then 3 events
-      assert(byUser.contains((10L, 2L, 3.0, false)))
-      assert(byUser.contains((10L, 3L, 7.0, false)))
-      assert(byUser.contains((11L, 1L, 5.0, false)))
-      // closed sessions emitted once the watermark passed the gap
-      assert(byUser.contains((10L, 3L, 7.0, true)))
-      assert(byUser.contains((11L, 1L, 5.0, true)))
-    } finally query.stop()
+    val out = java.nio.file.Files.createTempDirectory("graft_idem_sink").toString
+    val batch = Seq((1L, "view"), (2L, "click")).toDF("event_id", "event_type")
+    Streams.writeBatchIdempotent(batch, 0L, out)
+    assert(spark.read.parquet(out).count() === 2)
+    // simulate the crash-replay: the SAME batch body runs again with
+    // the SAME batch id — dynamic overwrite must not duplicate rows
+    Streams.writeBatchIdempotent(batch, 0L, out)
+    assert(spark.read.parquet(out).count() === 2)
+    // a NEW batch id appends alongside, untouched by the overwrite
+    Streams.writeBatchIdempotent(Seq((3L, "view")).toDF("event_id", "event_type"),
+      1L, out)
+    val rows = spark.read.parquet(out)
+    assert(rows.count() === 3)
+    // partition-dir columns read back integer-inferred — cast up
+    assert(rows.selectExpr("CAST(batch_id AS BIGINT)").distinct().count() === 2)
   }
 
   test("nearDupCandidatesStream finds the batch LSH candidate pairs incrementally") {
@@ -540,77 +283,6 @@ class StreamsSpec extends SparkSpec {
       query.stop()
       spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
     }
-  }
-
-  test("topKPerKeyStream maintains the batch top-k incrementally with bounded state") {
-    implicit val sq = spark.sqlContext
-    implicit val sp = spark
-    import spark.implicits._
-    val input = MemoryStream[Streams.Event]
-    val query = Streams.topKPerKeyStream(input.toDS(), k = 3)
-      .writeStream.format("memory").queryName("topkst")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      input.addData(
-        Streams.Event(1, ts(1), 10, "view", 5.0),
-        Streams.Event(2, ts(1), 10, "view", 9.0),
-        Streams.Event(3, ts(1), 10, "click", 7.0))
-      query.processAllAvailable()
-      // a new high arrives later; a low one that cannot enter top-3 too
-      input.addData(
-        Streams.Event(4, ts(2), 11, "view", 8.0),
-        Streams.Event(5, ts(2), 11, "view", 1.0),
-        Streams.Event(6, ts(2), 11, "view", 6.0))
-      query.processAllAvailable()
-      // the value at a given (key, rank) only improves as events
-      // arrive, so the final top-k is the per-rank maximum across all
-      // update emissions (max_by is order-independent, unlike last())
-      val fin = spark.sql(
-        """SELECT event_type, rank,
-          |  max_by(event_id, struct(value, -event_id)) AS event_id,
-          |  max(value) AS value
-          |FROM topkst GROUP BY event_type, rank""".stripMargin)
-      val view = fin.filter($"event_type" === "view")
-        .orderBy("rank").collect().map(r => (r.getLong(2), r.getDouble(3)))
-      assert(view.toSeq === Seq((2L, 9.0), (4L, 8.0), (6L, 6.0)),
-        s"got ${view.toSeq}")
-      val click = fin.filter($"event_type" === "click").collect()
-      assert(click.length === 1 && click.head.getLong(2) === 3L)
-      // an event below the current top-3 changes nothing -> no emission
-      val before = spark.table("topkst").count()
-      input.addData(Streams.Event(7, ts(3), 12, "view", 0.5))
-      query.processAllAvailable()
-      assert(spark.table("topkst").count() === before,
-        "sub-top event must not re-emit the key")
-    } finally query.stop()
-  }
-
-  test("topKPerKeyStream dedupes a re-arriving event_id (keeps max value)") {
-    implicit val sq = spark.sqlContext
-    implicit val sp = spark
-    import spark.implicits._
-    val input = MemoryStream[Streams.Event]
-    val query = Streams.topKPerKeyStream(input.toDS(), k = 2)
-      .writeStream.format("memory").queryName("topkdedup")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      input.addData(
-        Streams.Event(1, ts(1), 10, "view", 5.0),
-        Streams.Event(2, ts(1), 10, "view", 4.0))
-      query.processAllAvailable()
-      // id 1 re-arrives with a higher value: it must MOVE, not occupy
-      // two ranks — rank 2 stays id 2 (the old code kept (5.0, 1) there)
-      input.addData(Streams.Event(1, ts(2), 10, "view", 9.0))
-      query.processAllAvailable()
-      val fin = spark.sql(
-        """SELECT rank,
-          |  max_by(event_id, struct(value, -event_id)) AS event_id,
-          |  max(value) AS value
-          |FROM topkdedup WHERE event_type = 'view' GROUP BY rank""".stripMargin)
-        .orderBy("rank").collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-      assert(fin.toSeq === Seq((1, 1L, 9.0), (2, 2L, 4.0)), s"got ${fin.toSeq}")
-    } finally query.stop()
   }
 
   test("streaming ingest pipeline (normalize -> gopher -> DSIR -> decontaminate) equals batch") {
