@@ -72,7 +72,7 @@ object MinHashLsh {
     StructField("set_size", LongType, nullable = false)))
 
   /** Spark's `xxhash64` seed. */
-  private val XxSeed = 42L
+  private[functions] val XxSeed = 42L
 
   private val md5Local =
     ThreadLocal.withInitial[java.security.MessageDigest](() =>

@@ -962,8 +962,8 @@ object TextAnalysis {
     var round = 0
     var exhausted = false
     while (round < nMerges && !exhausted) {
-      val top = bpeSymbolPairs(wc)
-        .orderBy(col("n").desc, col("pair")).limit(1).collect()
+      val top = graft.Collect.collectChecked(bpeSymbolPairs(wc)
+        .orderBy(col("n").desc, col("pair")).limit(1), 1, "the top BPE pair")
       if (top.isEmpty) exhausted = true
       else {
         val Array(a, b) = top.head.getString(0).split(" ", 2)
@@ -1116,8 +1116,8 @@ object TextAnalysis {
       .select(explode(tokensWs(lower(col("text")))).as("token"))
     val (cms, totalN) = countMinSketchOf(tok, "token")
     val bound = math.ceil(0.001 * totalN).toLong
-    val top = tok.groupBy("token").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("token")).limit(20).collect()
+    val top = graft.Collect.collectChecked(tok.groupBy("token").agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col("token")).limit(20), 20, "the top-20 heavy hitters")
     val rows = top.toSeq.map { r =>
       val (t, n) = (r.getString(0), r.getLong(1))
       val e = cms.estimateCount(t)

@@ -1,9 +1,8 @@
 package graft.ml
 
-import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.{PCA, VectorAssembler}
-import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.regression.RandomForestRegressor
 import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -35,21 +34,13 @@ object RuntimePrediction {
     * rules ([[graft.llm.TextAnalysis.qwen2Pretokenize]] — the shipped
     * tokenizer_config.json declares Qwen2Tokenizer, case-sensitive)
     * and mean-pool per-token hash embeddings into a `dim`-wide array
-    * column — the `sql_encoder.py` mean-pool shape, with
-    * xxhash64-seeded pseudo-embeddings instead of LLM weights. Pure
-    * column expressions (codegen'd, no UDF): at 100 TB this runs as a
-    * map-only stage. */
-  def meanPoolEmbedding(df: DataFrame, textCol: String, dim: Int): DataFrame = {
-    val tokens = graft.llm.TextAnalysis.qwen2Pretokenize(col(textCol))
-    val dims = (0 until dim).map { i =>
-      // mean over tokens of a per-token deterministic value in [-1, 1]
-      val tok = aggregate(
-        transform(tokens, t => xxhash64(t, lit(i)).cast("double")),
-        lit(0.0), (acc, x) => acc + x / lit(9.223372036854776e18))
-      (tok / greatest(size(tokens), lit(1)).cast("double")).as(s"e$i")
-    }
-    df.withColumn("emb", array(dims: _*))
-  }
+    * column `emb` — the `sql_encoder.py` mean-pool shape, with
+    * xxhash64-seeded pseudo-embeddings instead of LLM weights. One
+    * native expression ([[graft.functions.MeanPoolEmbed]], codegen'd,
+    * no UDF) tokenizes each text once and pools every dimension in
+    * the same walk: at 100 TB this runs as a map-only stage. */
+  def meanPoolEmbedding(df: DataFrame, textCol: String, dim: Int): DataFrame =
+    df.withColumn("emb", graft.functions.MeanPoolEmbed.meanPoolEmbed(col(textCol), dim))
 
   /** Assemble [sql ∥ schema ∥ system] feature columns
     * (Dataloader.py:83-102), PCA-compressing the text block to 4 dims
@@ -73,8 +64,7 @@ object RuntimePrediction {
 
   /** Explode the pooled array into scalar columns for the assembler. */
   def flattenEmbedding(df: DataFrame, dim: Int): DataFrame =
-    (0 until dim).foldLeft(df)((d, i) =>
-      d.withColumn(s"emb_$i", col("emb").getItem(i)))
+    df.select(col("*") +: (0 until dim).map(i => col("emb").getItem(i).as(s"emb_$i")): _*)
 
   /** RF + 5-fold CV over the reference's grid axes (n_estimators,
     * max_depth, min_samples_leaf — train.ipynb cell 0), scored by MAE. */

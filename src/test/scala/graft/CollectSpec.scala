@@ -33,9 +33,8 @@ class CollectSpec extends SparkSpec {
     * [[Collect.collectBounded]] with a stated bound. */
   private val bareCollects: Map[String, Int] = Map(
     "Collect.scala" -> 2,
-    "TextAnalysis.scala" -> 3,
+    "TextAnalysis.scala" -> 1,
     "CorpusPlanStudy.scala" -> 1,
-    "SchedulingQueries.scala" -> 2,
     "Workload.scala" -> 1,
     "FixtureGen.scala" -> 14,
     "WorkloadRunner.scala" -> 1)

@@ -17,9 +17,9 @@ class ReachSpec extends AnyFunSuite {
     "CorpusPlanStudy.scala#inferSchemas" ->
       "reference port, spec-pinned: corpus plan study planning schema (SURVEY §2.D); CorpusPlanStudySpec",
     "CorpusPlanStudy.scala#featurizeCorpus" ->
-      "reference port, spec-pinned: corpus plan study over the measured NDJSON corpus (SURVEY §2.D); ReferenceCorpusStudySpec",
+      "reference port, spec-pinned: corpus plan study over the measured NDJSON corpus (SURVEY §2.D); SchemaJsonCorpusSpec",
     "CorpusPlanStudy.scala#registerSchemaJsonTables" ->
-      "reference port, spec-pinned: JOB/SSB_Trino_Schema.json tables (SURVEY §1.2); ReferenceCorpusStudySpec",
+      "reference port, spec-pinned: JOB/SSB_Trino_Schema.json tables (SURVEY §1.2); SchemaJsonCorpusSpec",
     "Experiment.scala#resultsFrame" ->
       "reference port, spec-pinned: experiment.py:104-239 result frame (SURVEY §3.3); ExperimentSpec",
     "Ingest.scala#readCsv" ->
