@@ -1,9 +1,9 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{Durations, JsonScrub}
+import graft.functions.JsonScrub
 import graft.functions.Exact._
 
 /** Workload-trace processing + variance statistics (SURVEY.md §2.D

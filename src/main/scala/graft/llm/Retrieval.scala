@@ -74,7 +74,7 @@ object Retrieval {
   /** Shared BM25 partial-score pipeline (float): one row per
     * (query_id, doc_id, term) with the BM25 term contribution. */
   private def bm25PartialsF(corpus: DataFrame, qterms: DataFrame,
-      k1: Double, b: Double, maxDfFrac: Double = 1.0): DataFrame = {
+      k1: Double, b: Double, maxDfFrac: Double): DataFrame = {
     val toks = corpus
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "")

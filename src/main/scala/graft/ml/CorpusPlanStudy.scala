@@ -1,7 +1,6 @@
 package graft.ml
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.analytics.PlanFeaturizer

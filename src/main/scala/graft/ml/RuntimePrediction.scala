@@ -1,12 +1,14 @@
 package graft.ml
 
-import org.apache.spark.ml.Pipeline
+import org.apache.spark.ml.{Estimator, Model, Pipeline}
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.{PCA, VectorAssembler}
+import org.apache.spark.ml.linalg.SQLDataTypes.VectorType
 import org.apache.spark.ml.regression.RandomForestRegressor
 import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.NumericType
 
 /** Runtime-prediction pipeline (SURVEY.md §2.D group 3): the
   * reference's RF-over-SQL-text-embedding regressor
@@ -19,7 +21,10 @@ import org.apache.spark.sql.functions._
   * feature-hashing token embedding with identical dataflow shape
   * (tokenize → per-token vector → mean pool → fixed-width column).
   * Everything downstream (PCA(4) when wide, assembler, RF, CV, MAE,
-  * Q-error) matches the reference's computation graph.
+  * Q-error) matches the reference's computation graph. CV runs only
+  * when the grid has two or more points: with one candidate there is
+  * nothing to select, and the CV's final refit is exactly one direct
+  * fit, so [[trainRf]] returns that fit alone.
   */
 object RuntimePrediction {
 
@@ -45,11 +50,19 @@ object RuntimePrediction {
   /** Assemble [sql ∥ schema ∥ system] feature columns
     * (Dataloader.py:83-102), PCA-compressing the text block to 4 dims
     * when it is wide (Dataloader.py:48-58's dim>5000 rule, threshold
-    * parameterized). */
+    * parameterized). `df` is checked, by schema only (no job), for
+    * `emb_0 … emb_{embDim-1}` and every `extraCols` column. */
   def buildFeatures(df: DataFrame, embDim: Int, pcaThreshold: Int = 5000,
       extraCols: Seq[String] = Nil): Pipeline = {
+    val have = df.columns.toSet
+    val embCols = (0 until embDim).map(i => s"emb_$i")
+    val noEmb = embCols.filterNot(have)
+    require(noEmb.isEmpty, s"buildFeatures: df lacks ${noEmb.mkString(", ")}; " +
+      s"make the emb_i columns with flattenEmbedding(meanPoolEmbedding(df, textCol, $embDim), $embDim)")
+    val noExtra = extraCols.filterNot(have)
+    require(noExtra.isEmpty, s"buildFeatures: extraCols not in df: ${noExtra.mkString(", ")}")
     val toVec = new VectorAssembler()
-      .setInputCols((0 until embDim).map(i => s"emb_$i").toArray)
+      .setInputCols(embCols.toArray)
       .setOutputCol("emb_vec")
     val stages = scala.collection.mutable.ArrayBuffer[org.apache.spark.ml.PipelineStage](toVec)
     val textOut = if (embDim > pcaThreshold) {
@@ -66,19 +79,36 @@ object RuntimePrediction {
   def flattenEmbedding(df: DataFrame, dim: Int): DataFrame =
     df.select(col("*") +: (0 until dim).map(i => col("emb").getItem(i).as(s"emb_$i")): _*)
 
-  /** RF + 5-fold CV over the reference's grid axes (n_estimators,
-    * max_depth, min_samples_leaf — train.ipynb cell 0), scored by MAE. */
+  /** RF over the reference's grid axes (n_estimators, max_depth —
+    * train.ipynb cell 0), tuned by `numFolds`-fold CV scored by MAE.
+    * CV runs only when the grid has two or more points. A one-point
+    * grid returns the seeded regressor with that point applied: CV
+    * would fit one model per fold for scores no caller reads, then
+    * refit the same candidate on all of `train` (Spark's
+    * `CrossValidator.fit` ends with `est.fit(dataset, bestParamMap)`),
+    * so both forms give the same model and this one fits once.
+    * `train` is checked, by schema only (no job), for a vector
+    * `features` column and a numeric `labelCol`. */
   def trainRf(train: DataFrame, labelCol: String = "runtime_s",
       numFolds: Int = 5,
       trees: Seq[Int] = Seq(200, 400),
-      depths: Seq[Int] = Seq(5, 10)): CrossValidator = {
+      depths: Seq[Int] = Seq(5, 10)): Estimator[_ <: Model[_]] = {
+    require(trees.nonEmpty, "trainRf: trees is empty; pass at least one numTrees value")
+    require(depths.nonEmpty, "trainRf: depths is empty; pass at least one maxDepth value")
+    require(numFolds >= 2, s"trainRf: numFolds must be >= 2, got $numFolds")
+    def typeOf(c: String) = train.schema.find(_.name == c).map(_.dataType)
+    require(typeOf("features").contains(VectorType),
+      "trainRf: train needs a vector column `features`; make it with buildFeatures(df, embDim).fit(df).transform(df)")
+    require(typeOf(labelCol).exists(_.isInstanceOf[NumericType]),
+      s"trainRf: train needs a numeric label column `$labelCol`")
     val rf = new RandomForestRegressor()
       .setFeaturesCol("features").setLabelCol(labelCol).setSeed(42L)
     val grid = new ParamGridBuilder()
       .addGrid(rf.numTrees, trees)
       .addGrid(rf.maxDepth, depths)
       .build()
-    new CrossValidator()
+    if (grid.length == 1) rf.copy(grid.head)
+    else new CrossValidator()
       .setEstimator(rf)
       .setEvaluator(new RegressionEvaluator()
         .setLabelCol(labelCol).setPredictionCol("prediction")

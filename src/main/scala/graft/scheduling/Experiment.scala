@@ -1,7 +1,6 @@
 package graft.scheduling
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** End-to-end scheduling experiment (behavior of
   * `low-carbon-scheduling/src/experiment.py` `SchedulerExperiment`):
