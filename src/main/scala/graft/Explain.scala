@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection harness: print the formatted physical plan of named
   * queries (all of them with no args) — the iterate-on-the-plan loop
   * that keeps scans pruned, filters pushed, and small sides broadcast.
@@ -10,8 +8,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Looks up names in [[SparkEntry.queries]] first, then
   * [[BenchExtra.queries]] (bench-only keys — note some of those write
-  * standing-index tables as a side effect of plan construction), then
-  * the r10 plan-diff [[scenarios]] below.
+  * standing-index tables as a side effect of plan construction).
   *
   * Session conf comes from [[Session]] (`SPARK_GRAFT_CPUS`, `-Dspark.*`
   * JVM properties) and prints first as a `[explain] conf` header. For
@@ -25,39 +22,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
 
-  /** Plan-diff scenarios that are not reachable through a named query:
-    * the r10 BM25 probe-pushdown before-shape (pushdownTermCap = 0
-    * forces the pre-r10 broadcast-semi-join fallback; the stored scans
-    * then carry NO term IN-set in PushedFilters). The standing index is
-    * (re)built on first use — same contract as the bench keys. */
-  private def probeBatch(s: SparkSession, dir: String) = {
-    import org.apache.spark.sql.functions.col
-    Tables.load(s, dir, "documents")
-      .filter(col("doc_id") % 100 === 0 && col("doc_id") < 5000)
-      .select(col("doc_id").as("query_id"), col("text"))
-  }
-  private def withIdx(s: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    graft.llm.Retrieval.writePostingsIndex(
-      Tables.load(s, dir, "documents").select(col("doc_id"), col("text")),
-      "explain_bm25_idx")
-  }
-  val scenarios: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-    "bm25_index_probe_nopushdown" -> ((s, dir) => {
-      withIdx(s, dir)
-      graft.llm.Retrieval.bm25TopKFromIndex("explain_bm25_idx",
-        probeBatch(s, dir), 10, pushdownTermCap = 0)
-    }),
-    "bm25_index_probe_pushdown" -> ((s, dir) => {
-      withIdx(s, dir)
-      graft.llm.Retrieval.bm25TopKFromIndex("explain_bm25_idx",
-        probeBatch(s, dir), 10)
-    }),
-  )
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val all = SparkEntry.queries ++ BenchExtra.queries ++ scenarios
+    val all = SparkEntry.queries ++ BenchExtra.queries
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val spark = Session.start(logLevel = "ERROR")

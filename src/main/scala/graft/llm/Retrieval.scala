@@ -43,7 +43,13 @@ import graft.Tables
   *  - corpus-level stats (N, total length) are a one-row frame,
   *    broadcast via crossJoin;
   *  - the per-query top-k window partitions on query_id (bounded by
-  *    k·|queries| rows after aggregation — no unpartitioned window).
+  *    k·|queries| rows after aggregation — no unpartitioned window);
+  *  - the two standing-index probes ([[bm25TopKFromIndex]],
+  *    [[bm25TopKFromIndexTwoPhase]]) read one core, [[ProbeBatch]]: a
+  *    serving batch of at most [[MaxBatch]] queries collected once
+  *    (a larger one fails fast), its vocabulary's df looked up in one
+  *    bounded collect and pushed into the stored scans as an IN-set —
+  *    one plan shape, no unbounded driver-side collect.
   *
   * Fixture queries run the scoring in micro-scaled exact integers
   * (every `ln`/division rounded to a BIGINT of micro-units at each
@@ -109,13 +115,7 @@ object Retrieval {
       .join(broadcast(qdfreq), "term")
       .join(dl, "doc_id")
       .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) /
-          (col("df") + lit(0.5))))
-      .withColumn("bm25_term",
-        col("idf") * (col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) +
-            lit(b) * col("dl") / col("avgdl"))))
+      .withColumn("bm25_term", bm25Term(col("n_docs"), col("avgdl"), k1, b))
   }
 
   // ------------------------------------------ standing lexical index
@@ -137,8 +137,9 @@ object Retrieval {
     *    corpus snapshot;
     *  - `<prefix>_df` (term, df) bucketed on term — VOCABULARY-sized
     *    (billions of terms on a web corpus), never broadcast whole:
-    *    the probe semi-joins it down to the query vocabulary first
-    *    (the [[bm25PartialsF]] pruning discipline, stored form);
+    *    the probe reads only the query vocabulary's rows (an IN-set
+    *    pushed into the scan — the [[bm25PartialsF]] pruning
+    *    discipline, stored form);
     *  - `<prefix>_meta` one row (k1, b, n_docs, avgdl, total_len):
     *    scoring parameters AND corpus statistics pinned AT INDEX TIME
     *    and read back by the probe, so writer and prober cannot
@@ -190,103 +191,43 @@ object Retrieval {
       s"${prefix}_meta")
   }
 
-  /** Probe the standing postings index with a query batch: query
-    * terms broadcast onto the STORED postings — no corpus
-    * tokenization, no corpus-side shuffle at probe time. The df frame
-    * is semi-joined to the query vocabulary before broadcast exactly
-    * as in [[bm25PartialsF]]; k1/b/N/avgdl come from `<prefix>_meta`
-    * (pinned at index time), and the per-posting arithmetic is the
-    * SAME expression chain as [[bm25TopK]], so the two agree rank-
-    * for-rank on the indexed corpus (RetrievalSpec pins equality).
-    * The only exchanges in the plan are survivor-sized: the partial-
-    * score groupBy and the per-query top-k window — both bounded by
-    * the postings MATCHING the query vocabulary, never the corpus.
-    * Were the batch too large to broadcast, the term-key shuffle join
-    * exchanges only the batch side — the stored scan's bucketing
-    * satisfies its half of the join distribution (spec-pinned, the
-    * [[Dedup.incrementalLshPairsFromIndex]] single-exchange
-    * contract). Self-match suppression as in [[bm25TopK]].
+  /** Probe the standing postings index with a query batch: the
+    * batch's (query, term) pairs broadcast onto the STORED postings —
+    * no corpus tokenization, no corpus-side shuffle at probe time.
+    * k1/b/N/avgdl come from `<prefix>_meta` (pinned at index time) and
+    * the per-posting arithmetic is [[bm25Term]], the expression
+    * [[bm25TopK]] scores with, so the two agree rank-for-rank on the
+    * indexed corpus (RetrievalSpec pins equality). Self-match
+    * suppression as in [[bm25TopK]].
     *
-    * TERM PUSHDOWN (r10): the probe batch's distinct vocabulary is
-    * bounded by contract (|queries|·|terms per query| — a serving
-    * batch, not a corpus), so it is collected once (a documented
-    * bounded driver-side collect) and pushed into BOTH stored scans as
-    * an IN-set filter. On the term-bucketed, term-SORTED layout that
-    * filter prunes at three levels — bucket files, parquet row groups
-    * via min/max on the sort key, then rows — which is the entire
-    * point of an inverted index at 100 TB: a probe touches
-    * O(|query vocab| · avg postings/term) bytes, not the corpus. The
-    * join on term subsumes the filter semantically (probe == direct
-    * equality is unchanged; RetrievalSpec pins it). Batches whose
-    * vocabulary exceeds `pushdownTermCap` skip the pushdown (the
-    * IN-set literal itself must stay task-binary-sized) and fall back
-    * to the streamed broadcast join. */
-  def bm25TopKFromIndex(prefix: String, queries: DataFrame,
-      k: Int, pushdownTermCap: Int = 100000,
+    * The batch goes through the [[ProbeBatch]] core both index probes
+    * share: at most [[MaxBatch]] queries and as many distinct terms
+    * (a larger batch fails fast, naming the fix: split it), collected
+    * once; the df of its vocabulary looked up in one bounded collect;
+    * the vocabulary pushed into BOTH stored scans as an IN-set. On the
+    * term-bucketed, term-SORTED layout that filter prunes bucket
+    * files, parquet row groups (min/max on the sort key), then rows —
+    * a probe touches O(|query vocab| · avg postings/term) bytes, not
+    * the corpus. The only exchanges in the plan are survivor-sized:
+    * the partial-score groupBy and the per-query top-k window.
+    *
+    * Optional high-df (stopword) pruning, the classic lexical-serving
+    * knob (Lucene stopword filtering / MaxScore's skip-the-flat-lists
+    * intuition): a Zipf head term sits in ~every document, so its
+    * postings dominate the scoring-join volume while its idf
+    * ln(1+(N−df+0.5)/(df+0.5)) → ~0 contributes almost nothing to any
+    * rank. maxDfFrac < 1 drops the query terms with df > maxDfFrac·N
+    * before the postings scan. APPROXIMATE by construction — ranks can
+    * shift where near-ties hinge on a stopword's residual idf — so the
+    * default 1.0 keeps the exact contract (probe == direct,
+    * spec-pinned); [[bm25TopK]] takes the same knob so the two paths
+    * agree under the same setting. */
+  def bm25TopKFromIndex(prefix: String, queries: DataFrame, k: Int,
       maxDfFrac: Double = 1.0): DataFrame = {
-    val spark = queries.sparkSession
-    val meta = spark.table(s"${prefix}_meta").head()
-    val (k1, b, nDocs, avgdl) = (meta.getDouble(0), meta.getDouble(1),
-      meta.getLong(2), meta.getDouble(3))
-    val qterms = queries
-      .select(col("query_id"), explode(split(col("text"), " ")).as("term"))
-      .filter(col("term") =!= "").distinct()
-    // ONE map-side job for the vocabulary (collect_set partial-aggs per
-    // partition, no shuffle): the first cut used take(cap+1), whose
-    // incremental-limit scale-up (1 → 4 → 16 → all partitions) ran up
-    // to 4 sequential mini-jobs per probe — measurable floor at serving
-    // batch sizes. Cap enforcement moves after the collect; the batch
-    // is bounded by contract, the cap only guards a contract violation.
-    val vocab = queries
-      .select(explode(split(col("text"), " ")).as("term"))
-      .filter(col("term") =!= "")
-      .agg(collect_set(col("term"))).head().getSeq[String](0)
-    val pushdown = vocab.length <= pushdownTermCap
-    // Optional high-df (stopword) pruning, the classic lexical-serving
-    // knob (Lucene stopword filtering / MaxScore's skip-the-flat-lists
-    // intuition): a Zipf head term sits in ~every document, so its
-    // postings dominate the scoring-join volume while its idf
-    // ln(1+(N−df+0.5)/(df+0.5)) → ~0 contributes almost nothing to any
-    // rank. maxDfFrac < 1 drops query terms with df > maxDfFrac·N
-    // BEFORE the postings scan (the df lookup against the vocab-pruned
-    // stored df table is query-vocabulary-sized). APPROXIMATE by
-    // construction — ranks can shift where near-ties hinge on a
-    // stopword's residual idf — so the default 1.0 keeps the exact
-    // contract (probe == direct, spec-pinned); [[bm25TopK]] takes the
-    // same knob so the two paths agree under the same setting.
-    val dfCap = (maxDfFrac * nDocs).toLong
-    val prunedVocab: Seq[String] =
-      if (pushdown && maxDfFrac < 1.0)
-        spark.table(s"${prefix}_df")
-          .filter(col("term").isInCollection(vocab) && col("df") <= dfCap)
-          .agg(collect_set(col("term"))).head().getSeq[String](0)
-      else vocab
-    val termFilter: DataFrame => DataFrame =
-      if (pushdown) _.filter(col("term").isInCollection(prunedVocab))
-      else identity
-    val postings = termFilter(spark.table(s"${prefix}_postings"))
-    val dfreq = {
-      val base = termFilter(spark.table(s"${prefix}_df"))
-      if (maxDfFrac < 1.0) base.filter(col("df") <= dfCap) else base
-    }
-    // the pushed IN-set already restricts the stored df scan to the
-    // query vocabulary — the broadcast semi-join of the pre-pushdown
-    // form is redundant there and skipped (one fewer broadcast build
-    // per probe; the fallback path still needs it)
-    val qdfreq = if (pushdown) dfreq
-      else dfreq.join(
-        broadcast(qterms.select("term").distinct()), Seq("term"), "left_semi")
-    topKPerQuery(broadcast(qterms)
-      .join(postings, "term")
-      .filter(col("doc_id") =!= col("query_id"))
-      .join(broadcast(qdfreq), "term")
-      .withColumn("idf",
-        log(lit(1.0) + (lit(nDocs) - col("df") + lit(0.5)) /
-          (col("df") + lit(0.5))))
-      .withColumn("bm25_term",
-        col("idf") * (col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) +
-            lit(b) * col("dl") / lit(avgdl)))), k)
+    val batch = new ProbeBatch(prefix, queries)
+    val dfCap = (maxDfFrac * batch.nDocs).toLong
+    topKPerQuery(batch.scored(
+      batch.pairs.filter(t => batch.df.get(t._2).exists(_ <= dfCap))), k)
   }
 
   /** The ranking rule of [[bm25TopK]] and both index probes: per-term
@@ -302,103 +243,64 @@ object Retrieval {
       .filter(col("rank") <= k)
       .select("query_id", "rank", "doc_id", "bm25")
 
-  /** Exact two-phase probe — the relational MaxScore/WAND move (Turtle
-    * & Flood, Inf. Proc. & Mgmt 1995; Broder et al. CIKM 2003), for
-    * serving batches where the Zipf head dominates scoring-join volume
-    * (zf100: the one-phase exact probe steps 16.2×/decade on head
-    * postings mass alone — BASELINE r10):
-    *
-    *  - PHASE 1 scores only TAIL terms (stored df ≤ headDfFrac·N) —
-    *    the same selective join as the maxDfFrac-pruned probe — and
-    *    keeps the top k·overfetch candidates per query;
-    *  - PHASE 2 rescores ONLY those candidates with the HEAD terms:
-    *    the head-postings scan is pruned by BOTH IN-sets (head terms
-    *    AND the collected candidate doc ids — each bounded, the doc
-    *    set by |queries|·k·overfetch), so its output is
-    *    candidate-sized, never corpus-sized; total = tail + head
-    *    contribution, exact BM25 arithmetic per term;
-    *  - CERTIFICATE: a doc outside the candidate set scores at most
-    *    tailCut(q) + headBound(q) — tailCut is the lowest admitted
-    *    phase-1 tail score (only when the overfetch window filled;
-    *    otherwise every tail-matching doc IS a candidate and outside
-    *    docs carry no tail term at all), headBound =
-    *    Σ_{head terms of q} idf·(k1+1), the tf→∞ saturation limit of
-    *    the BM25 term contribution. If the query's exact k-th
-    *    rescored score strictly exceeds that bound, no outside doc
-    *    can displace the top k — provably exact for that query.
-    *    Queries that fail (all-head queries, sparse tail matches)
-    *    fall back to one-phase exact scoring over all their terms —
-    *    the [[bm25TopKFromIndex]] arithmetic, under the meta this
-    *    probe already read — merged in; full-join volume is paid only
-    *    for them.
-    *
-    * The batch is bounded by contract (a serving batch of at most
-    * `pushdownTermCap` queries and as many distinct terms), so it is
-    * collected ONCE: the (query, term) pairs, the vocabulary and the
-    * query ids are built on the driver, and every broadcast of query
-    * terms is a local relation. The batch collect is bounded
-    * ([[graft.Collect.collectBounded]]); the df, candidate and head
-    * collects are bounded by their plans (one row per vocabulary term,
-    * the p1rank filter, the semi-join to the candidates) and only
-    * assert it ([[graft.Collect.collectChecked]]).
-    *
-    * Returns (query_id, rank, doc_id, bm25, certified). Ranks agree
-    * with [[bm25TopKFromIndex]] (spec-pinned on distinct-score
-    * fixtures; the split tail+head summation can differ from the
-    * one-phase sum by final-digit ULPs, so exact-tie rank order
-    * between equal-scored docs is the one caveat). */
-  def bm25TopKFromIndexTwoPhase(prefix: String, queries: DataFrame,
-      k: Int, headDfFrac: Double = 0.5, overfetch: Int = 4,
-      pushdownTermCap: Int = 100000): DataFrame = {
-    // default headDfFrac = 0.5, NOT the seldf row's 0.2: a term with
-    // df = 0.5N still carries idf = ln 3 ≈ 1.1, and summing k1+1-
-    // saturated bounds over every df ∈ (0.2N, 0.5N) term of a long
-    // query swamps the kth score — measured: at 0.2 most fixture
-    // queries (50-term doc-as-query texts) failed certification and
-    // paid the fallback. At 0.5 only true stopword-band terms
-    // (idf ≤ 1.1) are deferred to phase 2 and the bound stays small.
-    // Long multi-term queries remain the certificate's hard case —
-    // short (2-10 term) serving queries are its natural regime.
-    val spark = queries.sparkSession
+  /** The BM25 contribution of one posting (columns `df`, `tf`, `dl`):
+    * Lucene idf `ln(1 + (N−df+0.5)/(df+0.5))` times the k1/b-saturated
+    * tf. Written once for [[bm25TopK]] (N and avgdl as columns of its
+    * stats row) and the index probes (as the literals `_meta` pins), so
+    * the paths cannot drift apart in a final digit. */
+  private def bm25Term(nDocs: Column, avgdl: Column, k1: Double,
+      b: Double): Column =
+    log(lit(1.0) + (nDocs - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
+      (col("tf") * lit(k1 + 1.0)) /
+      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / avgdl))
+
+  /** The most queries, and the most distinct terms, one index-probe
+    * batch may carry: the batch is collected to the driver and its
+    * vocabulary is an IN-set literal shipped with every task. */
+  private val MaxBatch = 100000
+
+  /** Candidates per query phase 1 of the two-phase probe keeps, as a
+    * multiple of k. */
+  private val Overfetch = 4
+
+  /** One query batch against the standing index `prefix` — the core
+    * both index probes read. Construction reads `_meta` once, collects
+    * the batch once (bounded: [[MaxBatch]] queries, failing fast with
+    * the fix in the message), builds the distinct (query, term) pairs
+    * and the vocabulary on the driver — `split(text, " ")` minus empty
+    * terms, as [[bm25TopK]] explodes them — and looks up the stored df
+    * of the vocabulary in one collect (one row per term at most). */
+  private final class ProbeBatch(prefix: String, queries: DataFrame) {
+    private val spark = queries.sparkSession
     import spark.implicits._
     import graft.Collect.{collectBounded, collectChecked}
-    val meta = spark.table(s"${prefix}_meta").head()
+    private val meta = spark.table(s"${prefix}_meta").head()
     val (k1, b, nDocs, avgdl) = (meta.getDouble(0), meta.getDouble(1),
       meta.getLong(2), meta.getDouble(3))
-    val dfCap = (headDfFrac * nDocs).toLong
-    // the distinct (query, term) pairs — `split(text, " ")` minus empty
-    // terms, as the one-phase probe explodes them
-    val qtermRows: IndexedSeq[(Long, String)] =
-      collectBounded(queries.select("query_id", "text"), pushdownTermCap,
-          s"two-phase probe: the query batch (split it into batches of at " +
-            s"most $pushdownTermCap queries)")
+    val pairs: IndexedSeq[(Long, String)] =
+      collectBounded(queries.select("query_id", "text"), MaxBatch,
+          s"index probe: the query batch (split it into batches of at " +
+            s"most $MaxBatch queries)")
         .toIndexedSeq.flatMap { r =>
           if (r.isNullAt(1)) Nil
           else r.getString(1).split(" ", -1).toSeq.filter(_.nonEmpty)
             .map(t => (r.getLong(0), t))
         }.distinct
-    val vocab = qtermRows.map(_._2).distinct
-    require(vocab.length <= pushdownTermCap,
-      s"two-phase probe needs a bounded batch vocabulary (${vocab.length})")
-    val allQ = qtermRows.map(_._1).distinct
-    // one pass over the vocab-pruned stored df table classifies the
-    // query vocabulary into tail/head (at most one row per term)
-    val qdf = collectChecked(spark.table(s"${prefix}_df")
-        .filter(col("term").isInCollection(vocab))
-        .select(col("term"), col("df")), vocab.length,
-        s"two-phase probe: the stored df of the batch vocabulary " +
-          s"(rebuild ${prefix} with writePostingsIndex)")
-      .map(r => (r.getString(0), r.getLong(1)))
-    val headDf = qdf.filter(_._2 > dfCap).toMap
-    def idfOf(df: Long): Double =
-      math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
-    val scoreExpr =
-      log(lit(1.0) + (lit(nDocs) - col("df") + lit(0.5)) /
-        (col("df") + lit(0.5))) *
-        (col("tf") * lit(k1 + 1.0)) /
-        (col("tf") + lit(k1) * (lit(1.0 - b) +
-          lit(b) * col("dl") / lit(avgdl)))
-    // per-(query, doc, term) BM25 contributions of the given pairs
+    private val vocab = pairs.map(_._2).distinct
+    require(vocab.length <= MaxBatch,
+      s"index probe: the batch vocabulary has ${vocab.length} distinct " +
+        s"terms, more than $MaxBatch (split the batch)")
+    val df: Map[String, Long] =
+      collectChecked(spark.table(s"${prefix}_df")
+          .filter(col("term").isInCollection(vocab))
+          .select(col("term"), col("df")), vocab.length,
+          s"index probe: the stored df of the batch vocabulary " +
+            s"(rebuild ${prefix} with writePostingsIndex)")
+        .map(r => (r.getString(0), r.getLong(1))).toMap
+
+    /** Per-(query, doc, term) BM25 contributions of the given pairs:
+      * their vocabulary pushed into both stored scans, `extraFilter`
+      * applied to the postings scan. */
     def scored(pairs: Seq[(Long, String)],
         extraFilter: DataFrame => DataFrame = identity): DataFrame = {
       val voc = pairs.map(_._2).distinct
@@ -410,29 +312,92 @@ object Retrieval {
         .join(postings, "term")
         .filter(col("doc_id") =!= col("query_id"))
         .join(broadcast(dfreq), "term")
-        .withColumn("bm25_term", scoreExpr)
+        .withColumn("bm25_term", bm25Term(lit(nDocs), lit(avgdl), k1, b))
     }
-    // ---- phase 1: tail-only scores, top k·overfetch per query —
+  }
+
+  /** Exact two-phase probe — the relational MaxScore/WAND move (Turtle
+    * & Flood, Inf. Proc. & Mgmt 1995; Broder et al. CIKM 2003), for
+    * serving batches where the Zipf head dominates scoring-join volume
+    * (zf100: the one-phase exact probe steps 16.2×/decade on head
+    * postings mass alone — BASELINE r10):
+    *
+    *  - PHASE 1 scores only TAIL terms (stored df ≤ headDfFrac·N) —
+    *    the same selective join as the maxDfFrac-pruned probe — and
+    *    keeps the top k·[[Overfetch]] candidates per query;
+    *  - PHASE 2 rescores ONLY those candidates with the HEAD terms:
+    *    the head-postings scan is pruned by BOTH IN-sets (head terms
+    *    AND the collected candidate doc ids — each bounded, the doc
+    *    set by |queries|·k·Overfetch), so its output is
+    *    candidate-sized, never corpus-sized; total = tail + head
+    *    contribution, exact BM25 arithmetic per term;
+    *  - CERTIFICATE: a doc outside the candidate set scores at most
+    *    tailCut(q) + headBound(q) — tailCut is the lowest admitted
+    *    phase-1 tail score (only when the overfetch window filled;
+    *    otherwise every tail-matching doc IS a candidate and outside
+    *    docs carry no tail term at all), headBound =
+    *    Σ_{head terms of q} idf·(k1+1), the tf→∞ saturation limit of
+    *    the BM25 term contribution. If the query's exact k-th
+    *    rescored score strictly exceeds that bound, no outside doc
+    *    can displace the top k — provably exact for that query.
+    *    Queries that fail (all-head queries, sparse tail matches) are
+    *    scored over all their terms — the [[bm25TopKFromIndex]]
+    *    arithmetic — and merged in; full-join volume is paid only for
+    *    them.
+    *
+    * The batch, its df lookup and the scoring expression are the
+    * [[ProbeBatch]] core [[bm25TopKFromIndex]] reads too, under the
+    * same bound. The candidate and head collects are bounded by their
+    * plans (the p1rank filter, the semi-join to the candidates) and
+    * only assert it ([[graft.Collect.collectChecked]]).
+    *
+    * Returns (query_id, rank, doc_id, bm25, certified). Ranks agree
+    * with [[bm25TopKFromIndex]] (spec-pinned on distinct-score
+    * fixtures; the split tail+head summation can differ from the
+    * one-phase sum by final-digit ULPs, so exact-tie rank order
+    * between equal-scored docs is the one caveat). */
+  def bm25TopKFromIndexTwoPhase(prefix: String, queries: DataFrame,
+      k: Int, headDfFrac: Double = 0.5): DataFrame = {
+    // default headDfFrac = 0.5, NOT the seldf row's 0.2: a term with
+    // df = 0.5N still carries idf = ln 3 ≈ 1.1, and summing k1+1-
+    // saturated bounds over every df ∈ (0.2N, 0.5N) term of a long
+    // query swamps the kth score — measured: at 0.2 most fixture
+    // queries (50-term doc-as-query texts) failed certification and
+    // paid the fallback. At 0.5 only true stopword-band terms
+    // (idf ≤ 1.1) are deferred to phase 2 and the bound stays small.
+    // Long multi-term queries remain the certificate's hard case —
+    // short (2-10 term) serving queries are its natural regime.
+    val batch = new ProbeBatch(prefix, queries)
+    val spark = queries.sparkSession
+    import spark.implicits._
+    import graft.Collect.collectChecked
+    import batch.{k1, nDocs, pairs, scored}
+    val dfCap = (headDfFrac * nDocs).toLong
+    val allQ = pairs.map(_._1).distinct
+    val headDf = batch.df.filter(_._2 > dfCap)
+    def idfOf(df: Long): Double =
+      math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
+    // ---- phase 1: tail-only scores, top k·Overfetch per query —
     // executed ONCE and collected: the candidate frame is bounded
-    // (|queries|·k·overfetch rows) and feeds phase 2, the exact
+    // (|queries|·k·Overfetch rows) and feeds phase 2, the exact
     // re-rank AND the certificate, so leaving it lazy re-runs the
     // whole tail-scoring DAG per downstream action (the first cut
     // measured 5× the one-phase probe on exactly that — 4 recomputes)
-    val maxCand = math.min(allQ.length.toLong * k * overfetch,
+    val maxCand = math.min(allQ.length.toLong * k * Overfetch,
       Int.MaxValue - 1L).toInt
     val candRows = collectChecked(
-        scored(qtermRows.filterNot(t => headDf.contains(t._2)))
+        scored(pairs.filterNot(t => headDf.contains(t._2)))
           .groupBy("query_id", "doc_id").agg(sum("bm25_term").as("tail_bm25"))
           .withColumn("p1rank", row_number().over(
             Window.partitionBy("query_id")
               .orderBy(col("tail_bm25").desc, col("doc_id"))))
-          .filter(col("p1rank") <= k * overfetch),
+          .filter(col("p1rank") <= k * Overfetch),
         maxCand, "two-phase probe: the phase-1 candidates")
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     // driver-side per-query tail cut / window-exhaustion flags
     val byQ = candRows.groupBy(_._1)
     val tailCut = byQ.view.mapValues(_.map(_._3).min).toMap
-    val windowFull = byQ.view.mapValues(_.map(_._4).max == k * overfetch).toMap
+    val windowFull = byQ.view.mapValues(_.map(_._4).max == k * Overfetch).toMap
     val candDocIds = candRows.map(_._2).distinct.toIndexedSeq
     val candIds = candRows.map(t => (t._1, t._2)).toIndexedSeq
       .toDF("query_id", "doc_id")
@@ -440,7 +405,7 @@ object Retrieval {
     // candidate DOC ids prune the head-postings scan row-level, so
     // the output is candidate-sized — collected (at most one row per
     // candidate) and merged driver-side
-    val headPairs = qtermRows.filter(t => headDf.contains(t._2))
+    val headPairs = pairs.filter(t => headDf.contains(t._2))
     val headContrib: Map[(Long, Long), Double] =
       if (headPairs.isEmpty || candDocIds.isEmpty) Map.empty
       else collectChecked(scored(headPairs,
@@ -478,7 +443,7 @@ object Retrieval {
     val badQ = allQ.filterNot(certified).toSet
     if (badQ.isEmpty) certifiedPart
     else certifiedPart.unionByName(
-      topKPerQuery(scored(qtermRows.filter(t => badQ(t._1))), k)
+      topKPerQuery(scored(pairs.filter(t => badQ(t._1))), k)
         .withColumn("certified", lit(false)))
   }
 

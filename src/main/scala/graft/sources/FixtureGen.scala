@@ -61,6 +61,18 @@ object FixtureGen {
 
   private val Slots = 4096
 
+  /** The distinct values of `cols` in `df` (a table of `srcDir`) with
+    * their row counts — rows (cols..., count) in `cols` order — for an
+    * alias table or a value list. More than [[Slots]] distinct values
+    * fail fast: an alias table of Slots slots cannot hold them. The
+    * orderBy stays in the plan, so the bounded collect plans one
+    * TakeOrderedAndProject and keeps Spark's sort order. */
+  private def valueCounts(df: DataFrame, srcDir: String,
+      cols: String*): Array[org.apache.spark.sql.Row] =
+    graft.Collect.collectBounded(
+      df.groupBy(cols.map(col): _*).count().orderBy(cols.map(col): _*),
+      Slots, s"FixtureGen: the distinct ${cols.mkString(", ")} of $srcDir")
+
   /** One uniform slot index in [1, Slots] as a 1-based element_at
     * index, keyed by (seed, id, stream tag [, extra]). */
   private def slot(seed: Long, tag: String, id: org.apache.spark.sql.Column,
@@ -73,16 +85,16 @@ object FixtureGen {
       seed: Long = 61): DataFrame = {
     val src = spark.read.parquet(s"$srcDir/documents.parquet")
     // metadata-scale extractions (vocab ~31, langs 5, sources 20,
-    // length buckets ≤91) — documented driver-side collects
-    val vocabW = src.select(explode(split(col("text"), " ")).as("w"))
-      .groupBy("w").count().orderBy("w").collect()
+    // length buckets ≤91), each bounded by the alias table's slots
+    val vocabW = valueCounts(
+        src.select(explode(split(col("text"), " ")).as("w")), srcDir, "w")
       .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val langW = src.groupBy("lang").count().orderBy("lang").collect()
+    val langW = valueCounts(src, srcDir, "lang")
       .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val sourceW = src.groupBy("source").count().orderBy("source").collect()
+    val sourceW = valueCounts(src, srcDir, "source")
       .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val lenW = src.select(size(split(col("text"), " ")).as("n"))
-      .groupBy("n").count().orderBy("n").collect()
+    val lenW = valueCounts(
+        src.select(size(split(col("text"), " ")).as("n")), srcDir, "n")
       .map(r => (r.getInt(0), r.getLong(1))).toSeq
     val vocabLit = lit(aliasSlots(vocabW, Slots))
     val langLit = lit(aliasSlots(langW, Slots))
@@ -134,12 +146,12 @@ object FixtureGen {
       vocabSize: Int = 0, seed: Long = 61): DataFrame = {
     val v = if (vocabSize > 0) vocabSize else heapsVocabSize(nDocs)
     val src = spark.read.parquet(s"$srcDir/documents.parquet")
-    val langW = src.groupBy("lang").count().orderBy("lang").collect()
+    val langW = valueCounts(src, srcDir, "lang")
       .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val sourceW = src.groupBy("source").count().orderBy("source").collect()
+    val sourceW = valueCounts(src, srcDir, "source")
       .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val lenW = src.select(size(split(col("text"), " ")).as("n"))
-      .groupBy("n").count().orderBy("n").collect()
+    val lenW = valueCounts(
+        src.select(size(split(col("text"), " ")).as("n")), srcDir, "n")
       .map(r => (r.getInt(0), r.getLong(1))).toSeq
     val langLit = lit(aliasSlots(langW, Slots))
     val sourceLit = lit(aliasSlots(sourceW, Slots))
@@ -230,7 +242,7 @@ object FixtureGen {
       df.select(src(table).schema.map(f =>
         col(f.name).cast(f.dataType).as(f.name)): _*)
     def aliasOf(df: DataFrame, c: String): Array[String] =
-      aliasSlots(df.groupBy(c).count().orderBy(c).collect()
+      aliasSlots(valueCounts(df, srcDir, c)
         .map(r => (r.get(0).toString, r.getLong(1))).toSeq, Slots)
     def minMax(df: DataFrame, c: String): (Double, Double) = {
       val r = df.agg(min(col(c)), max(col(c))).head()
@@ -271,14 +283,12 @@ object FixtureGen {
       .write.mode("overwrite").parquet(s"$outDir/supplier.parquet")
 
     val pSrc = src("part")
-    val name1Lit = lit(aliasSlots(
-      pSrc.select(split(col("p_name"), " ").getItem(0).as("w"))
-        .groupBy("w").count().orderBy("w").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq, Slots))
-    val name2Lit = lit(aliasSlots(
-      pSrc.select(split(col("p_name"), " ").getItem(1).as("w"))
-        .groupBy("w").count().orderBy("w").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq, Slots))
+    val name1Lit = lit(aliasSlots(valueCounts(
+        pSrc.select(split(col("p_name"), " ").getItem(0).as("w")), srcDir, "w")
+      .map(r => (r.getString(0), r.getLong(1))).toSeq, Slots))
+    val name2Lit = lit(aliasSlots(valueCounts(
+        pSrc.select(split(col("p_name"), " ").getItem(1).as("w")), srcDir, "w")
+      .map(r => (r.getString(0), r.getLong(1))).toSeq, Slots))
     val brandLit = lit(aliasOf(pSrc, "p_brand"))
     val typeLit = lit(aliasOf(pSrc, "p_type"))
     val (szLo, szHi) = {
@@ -341,20 +351,16 @@ object FixtureGen {
     val lSrc = src("lineitem")
     // lines-per-order histogram of the source, alias-sampled per order
     val perOrderLit = lit(aliasSlots(
-      lSrc.groupBy("l_orderkey").count()
-        .groupBy("count").count().orderBy("count").collect()
+      valueCounts(lSrc.groupBy("l_orderkey").count(), srcDir, "count")
         .map(r => (r.getLong(0).toInt, r.getLong(1))).toSeq, Slots))
     // joint (returnflag, linestatus) mix — sampled as one packed value
     val rflsLit = lit(aliasSlots(
-      lSrc.groupBy("l_returnflag", "l_linestatus").count()
-        .orderBy("l_returnflag", "l_linestatus").collect()
+      valueCounts(lSrc, srcDir, "l_returnflag", "l_linestatus")
         .map(r => (r.getString(0) + r.getString(1), r.getLong(2))).toSeq,
       Slots))
     val (lMinMicros, lDays) = dateEnvelope(lSrc, "l_shipdate")
-    val discLit = lit(lSrc.select("l_discount").distinct()
-      .orderBy("l_discount").collect().map(_.getDouble(0)))
-    val taxLit = lit(lSrc.select("l_tax").distinct()
-      .orderBy("l_tax").collect().map(_.getDouble(0)))
+    val discLit = lit(valueCounts(lSrc, srcDir, "l_discount").map(_.getDouble(0)))
+    val taxLit = lit(valueCounts(lSrc, srcDir, "l_tax").map(_.getDouble(0)))
     val (qLo, qHi) = minMax(lSrc, "l_quantity")
     // extendedprice ≈ quantity × hash-uniform unit price: reproduces
     // the source envelope [qLo·unit_lo, qHi·unit_hi] exactly

@@ -167,7 +167,10 @@ object WorkloadRunner {
     }
   }
 
-  private def jsonQuote(s: String): String =
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character (< 0x20) escaped — a tab or CR in a query text or in the
+    * oracle SQL would otherwise make the reader's JSON parse fail. */
+  private[graft] def jsonQuote(s: String): String =
     "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"

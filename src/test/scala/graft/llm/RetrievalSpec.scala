@@ -205,11 +205,50 @@ class RetrievalSpec extends SparkSpec {
     // bucket + row-group + row pruning, the probe's selectivity path
     assert("PushedFilters: \\[.*In\\(term".r.findAllIn(plan).size >= 2,
       s"query vocabulary not pushed into the stored postings/df scans:\n$plan")
-    // and an over-cap batch must NOT try to push an unbounded IN-set
-    val big = Retrieval.bm25TopKFromIndex("bm25_idx_pd", q, 5,
-      pushdownTermCap = 1)
-    assert(big.count() == Retrieval.bm25TopKFromIndex("bm25_idx_pd", q, 5)
-      .count(), "fallback path must return identical results")
+  }
+
+  test("both index probes fail fast on a batch over 100,000 queries, naming the fix") {
+    val d = Seq((1L, "alpha bravo"), (2L, "alpha charlie")).toDF("doc_id", "text")
+    Retrieval.writePostingsIndex(d, "bm25_idx_big", numBuckets = 8)
+    val q = spark.range(100001L)
+      .select(col("id").as("query_id"), concat(lit("alpha q"), col("id")).as("text"))
+    Seq[() => Any](
+      () => Retrieval.bm25TopKFromIndex("bm25_idx_big", q, 5),
+      () => Retrieval.bm25TopKFromIndexTwoPhase("bm25_idx_big", q, 5)).foreach { probe =>
+      val e = intercept[IllegalArgumentException](probe())
+      assert(e.getMessage.contains(
+        "the query batch (split it into batches of at most 100000 queries)"), e.getMessage)
+    }
+  }
+
+  test("one-phase index probe: Spark jobs per call at maxDfFrac 1.0 and 0.5") {
+    import org.apache.spark.graft.ListenerBusAccess
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    def jobsOf(body: => Unit): Int = {
+      val sc = spark.sparkContext
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+      }
+      ListenerBusAccess.drain(sc)
+      sc.addSparkListener(l)
+      try { body; ListenerBusAccess.drain(sc) } finally sc.removeSparkListener(l)
+      n.get
+    }
+    val d = Seq(
+      (1L, "alpha bravo common filler"),
+      (2L, "alpha charlie common filler"),
+      (3L, "delta echo common filler"),
+      (4L, "delta foxtrot common filler"),
+    ).toDF("doc_id", "text")
+    Retrieval.writePostingsIndex(d, "bm25_idx_jobs", numBuckets = 8)
+    val q = Seq((9L, "alpha common"), (8L, "delta common")).toDF("query_id", "text")
+    // the meta read, the df lookup and the scoring plan; the probe with
+    // the batch vocabulary collected by an aggregate read 9 and 11
+    val exact = jobsOf(Retrieval.bm25TopKFromIndex("bm25_idx_jobs", q, 4).collect())
+    val pruned = jobsOf(Retrieval.bm25TopKFromIndex("bm25_idx_jobs", q, 4,
+      maxDfFrac = 0.5).collect())
+    assert((exact, pruned) === ((7, 7)))
   }
 
   test("maxDfFrac stopword pruning: index and direct paths agree, knob binds") {

@@ -167,6 +167,35 @@ class FixtureGenSpec extends SparkSpec {
       s"per-order line count $genMaxLines exceeds source max $srcMaxLines")
   }
 
+  test("documents, documentsZipf and the relational tables match their pinned digests") {
+    // row count and an order-insensitive hash of the rows: a changed
+    // alias-table order (or value list) changes every draw after it
+    def digest(df: org.apache.spark.sql.DataFrame): String = {
+      val r = df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*)
+          .cast("decimal(38,0)").as("h"))
+        .agg(count(lit(1)), sum("h")).head()
+      s"${r.getLong(0)}:${r.getDecimal(1)}"
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft_fixgen_digest").toString
+    FixtureGen.writeScaledRelational(spark, sfSmoke, out, mult = 2)
+    val got = Map(
+      "documents" -> digest(FixtureGen.documents(spark, sfSmoke, 1000L)),
+      "documentsZipf" -> digest(FixtureGen.documentsZipf(spark, sfSmoke, 1000L))) ++
+      Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events").map(t => t -> digest(spark.read.parquet(s"$out/$t.parquet")))
+    assert(got === Map(
+      "documents" -> "1000:-104138088565827072794",
+      "documentsZipf" -> "1000:83595683179527343002",
+      "region" -> "5:7370162031071439404",
+      "nation" -> "25:-19822004785370969197",
+      "customer" -> "300:-69870537555537086033",
+      "supplier" -> "20:-16969506056312243426",
+      "part" -> "400:-41573086556175216592",
+      "orders" -> "3000:-532548519976593924628",
+      "lineitem" -> "12244:645324265301429538792",
+      "events" -> "2000:-123881525502080183237"))
+  }
+
   test("embeddings: unit norms, shipped schema, labels 0-9") {
     val shipped = spark.read.parquet(s"$sfCorrect/embeddings.parquet")
     val gen = FixtureGen.embeddings(spark, 1000L)

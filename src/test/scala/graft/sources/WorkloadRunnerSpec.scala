@@ -96,4 +96,10 @@ class WorkloadRunnerSpec extends SparkSpec {
       timeout = 1.millisecond)
     assert(r.runtimeS === -1.0)
   }
+
+  test("jsonQuote escapes quote, backslash and every control character") {
+    assert(WorkloadRunner.jsonQuote("a\"b\\c\nd\re\tf\u0001g") ===
+      "\"a\\\"b\\\\c\\nd\\re\\tf\\u0001g\"")
+    assert(WorkloadRunner.jsonQuote("") === "\"\"")
+  }
 }
