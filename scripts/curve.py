@@ -14,6 +14,14 @@ import json
 import sys
 
 
+def noisy(leg):
+    """The leg's flagged-noisy key count; a leg written before keys
+    were flagged instead of re-timed carries n_retimed."""
+    if "n_noisy" in leg or "n_retimed" not in leg:
+        return leg.get("n_noisy")
+    return f"{leg['n_retimed']} re-timed"
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     flag = 3.0
@@ -26,7 +34,8 @@ def main() -> None:
     names = [p.split("/")[-1] for p in args]
     print("legs:", " -> ".join(
         f"{n} (sf={d.get('sf')}, n={d.get('n_queries')}, "
-        f"failed={d.get('n_failed')}, hlf={d.get('host_load_factor')})"
+        f"failed={d.get('n_failed')}, hlf={d.get('host_load_factor')}, "
+        f"n_noisy={noisy(d)})"
         for n, d in zip(names, legs)))
     for b in ("value", "core_total", "tpcds_total", "curate_total",
               "llm_total", "extra_total"):

@@ -3,7 +3,7 @@
 by graft.Bench) into a driver-recorded BENCH_r{N}.json whose stdout
 tail was truncated (the "parsed": null finding): the file artifact is
 authoritative — it carries every probe, the complete per-query map and
-the outlier re-time triples — while the driver's copy keeps whatever
+the noisy-key map — while the driver's copy keeps whatever
 its stdout window caught.
 
 Usage: python3 scripts/fold_bench.py [--force] <BENCH_rN.json> [target/bench.json]

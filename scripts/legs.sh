@@ -13,12 +13,12 @@
 #           -Dspark.sql.adaptive.coalescePartitions.initialPartitionNum=256
 #           -Dspark.sql.autoBroadcastJoinThreshold=-1
 #           -Dspark.sql.adaptive.logLevel=WARN   (AQE replans; with LEG_KEEP_LOG=1)
-#         SPARK_GRAFT_CPUS and SPARK_GRAFT_BENCH_EXCLUDE pass through the
-#         environment. LEG_KEEP_LOG=1 keeps the full JVM log as <out>.log.
+#         SPARK_GRAFT_CPUS passes through the environment.
+#         LEG_KEEP_LOG=1 keeps the full JVM log as <out>.log.
 # settle  sleeps 150 s: a big JVM's exit triggers minutes of kernel page
 #         reclaim that inflates the next leg's early keys up to ~2x. Put
 #         it between legs, and reject a leg whose probes[0] or probes[1]
-#         reads well above the host's idle probe (~0.15 s on 32 cores).
+#         reads well above the host's own idle probe.
 # fold    folds target/bench.json into the newest BENCH_r*.json (those
 #         records keep only a stdout tail; the file artifact is
 #         authoritative).

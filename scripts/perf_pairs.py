@@ -12,10 +12,12 @@ parent first on the first seed), so drift of the host over the session
 falls on both sides alike. It then prints, for every end-to-end metric
 the change's BENCHMARK.json declares: the pairs the change won (a
 strictly better value in the metric's declared direction), each side's
-median and quartiles, and whether the gap between the medians exceeds
-the distance between the parent's quartiles. A gain is claimed only
-when the change wins at least 9 of 10 pairs and the median gap exceeds
-the parent's IQR. The runs must not overlap any other benchmark JVM;
+median and quartiles, whether the gap between the medians exceeds
+the distance between the parent's quartiles, and the mean change minus
+parent difference over the parent-first and the change-first pairs
+apart (an order effect shows as the two disagreeing). A gain is
+claimed only when the change wins at least 9 of 10 pairs and the
+median gap exceeds the parent's IQR. The runs must not overlap any other benchmark JVM;
 run.py refuses to start beside one. A failed run ends the script.
 """
 import argparse
@@ -88,6 +90,13 @@ def main():
         print(f"    change median {cq[1]:.4g} (q1 {cq[0]:.4g}, q3 {cq[2]:.4g})")
         print(f"    median gain {gap:+.4g}: {'exceeds' if gap > iqr else 'does not exceed'} "
               f"the parent's IQR; {'gain holds' if won >= 0.9 * len(ps) and gap > iqr else 'no gain claimed'}")
+        # run order within a pair can carry its own effect, which
+        # alternation cancels only on average: show each order apart
+        for first in ("parent", "change"):
+            ds = [p["change"][name] - p["parent"][name] for p in ps if p["first"] == first]
+            if ds:
+                print(f"    {first} first: mean change - parent {sum(ds) / len(ds):+.4g} "
+                      f"over {len(ds)} pairs")
 
 
 if __name__ == "__main__":

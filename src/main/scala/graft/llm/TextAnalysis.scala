@@ -1031,6 +1031,9 @@ object TextAnalysis {
     pmiBigrams(docs(s, dir))
       .orderBy(col("pmi_micro").desc, col("w1"), col("w2")).limit(15)
 
+  /** Most sources [[sourceDivergence]] collects to seed its pairs. */
+  private val MaxSources = 1000
+
   /** Pairwise corpus-drift report: total-variation distance between
     * the unigram token distributions of every source pair —
     * TV(p,q) = ½·Σ_t |p(t) − q(t)|, the divergence that needs NO
@@ -1056,8 +1059,11 @@ object TextAnalysis {
     // a driver-side product over collected totals — like the
     // hyperplane/centroid tables, bounded metadata, not data. Seeding
     // guarantees a row for pairs with NO shared token (TV = 1), which
-    // the inner join alone would drop.
-    val srcN = n.collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
+    // the inner join alone would drop. The bound keeps a per-document
+    // column passed as `sourceCol` from squaring on the driver.
+    val srcN = graft.Collect.collectBounded(n, MaxSources,
+        s"sourceDivergence: per-source totals of '$sourceCol' (pass a low-cardinality source column)")
+      .map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
     val pairSeed = (for {
       (s1, n1) <- srcN; (s2, n2) <- srcN if s1 < s2
     } yield (s1, s2, n1, n2)).toSeq.toDF("s1", "s2", "n1", "n2")

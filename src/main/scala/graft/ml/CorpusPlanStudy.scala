@@ -186,13 +186,17 @@ object CorpusPlanStudy {
   def featurizeCorpus(spark: SparkSession, path: String): DataFrame =
     featurizeDataset(spark, RuntimePrediction.loadDataset(spark, path))
 
+  /** Most queries [[featurizeDataset]] collects to plan on the driver. */
+  private val MaxCorpus = 100000
+
   /** Same, over an already-loaded measured corpus with
     * (query_id, SQL, runtime_s) columns — e.g. a WorkloadRunner log
     * joined back to its query texts. With the corpus tables registered
     * over REAL data the feature rows carry live cardinality estimates
     * (sum/max_log_rows), which empty planning tables cannot provide. */
   def featurizeDataset(spark: SparkSession, dataset: DataFrame): DataFrame = {
-    val ds = dataset.select("query_id", "SQL", "runtime_s").collect()
+    val ds = graft.Collect.collectBounded(dataset.select("query_id", "SQL", "runtime_s"),
+      MaxCorpus, "featurizeDataset: query corpus (split the corpus into parts)")
     val rows = ds.iterator.flatMap { r =>
       planFeatureVector(spark, r.getAs[String]("SQL")).map { v =>
         Row.fromSeq(r.getAs[String]("query_id") +:

@@ -35,8 +35,6 @@ class CollectSpec extends SparkSpec {
     * [[Collect.collectBounded]] with a stated bound. */
   private val bareCollects: Map[String, Int] = Map(
     "Collect.scala" -> 2,
-    "TextAnalysis.scala" -> 1,
-    "CorpusPlanStudy.scala" -> 1,
     "Workload.scala" -> 1,
     "WorkloadRunner.scala" -> 1)
 

@@ -723,6 +723,13 @@ class LlmSpec extends SparkSpec {
     assert(got(("s2", "s3")) === 1.0)
   }
 
+  test("sourceDivergence: a source column past 1,000 values fails fast") {
+    import spark.implicits._
+    val df = (0 to 1000).map(i => (s"s$i", "w")).toDF("source", "text")
+    val e = intercept[IllegalArgumentException](TextAnalysis.sourceDivergence(df))
+    assert(e.getMessage.contains("low-cardinality"), e.getMessage)
+  }
+
   test("count-min heavy hitters: sketch over-counts by at most eps*N") {
     val df = textDf((0L, "x x x y y z"), (1L, "x y q r s t u v w"))
     val tok = df.select(explode(

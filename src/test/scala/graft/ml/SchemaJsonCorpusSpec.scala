@@ -65,4 +65,13 @@ class SchemaJsonCorpusSpec extends SparkSpec {
       Files.delete(dir)
     }
   }
+
+  test("a corpus over 100,000 queries fails before any planning") {
+    val corpus = spark.range(100001).select(
+      concat(lit("q"), col("id")).as("query_id"),
+      lit("SELECT 1").as("SQL"), lit(1.0).as("runtime_s"))
+    val e = intercept[IllegalArgumentException](
+      CorpusPlanStudy.featurizeDataset(spark, corpus))
+    assert(e.getMessage.contains("split the corpus"), e.getMessage)
+  }
 }
