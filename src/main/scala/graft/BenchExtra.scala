@@ -150,12 +150,6 @@ object BenchExtra {
     s.createDataset(batch.toIndexedSeq).toDF("query_id", "text")
   }
 
-  private def microElems(s: SparkSession, dir: String): DataFrame =
-    embs(s, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "e")))
-      .select(col("vec_id").as("id"), (col("pos") + 1).as("i"),
-        round(col("e").cast("double") * 1e6).cast("long").as("e_micro"))
-
   // Measured (sf0.1): persisting the shingle frame (MEMORY_AND_DISK)
   // across the 3-4 consuming plan arms REGRESSED jaccard 43.6→80.6 s —
   // serializing ~7M shingle rows to cache costs more than re-running
@@ -189,7 +183,7 @@ object BenchExtra {
       // this key and bench_cosine_scaled_full (explicit sizing) must
       // track each other; the r6-era fixed-4×8 default measured 19.3×
       // at the sf1 decade and is gone from the default path
-      Dedup.cosineNearDupPairs(microElems(s, dir), 0.9)),
+      Dedup.cosineNearDupPairs(Dedup.microElems(embs(s, dir)), 0.9)),
     "bench_minhash_rowlocal_full" -> ((s, dir) =>
       // the MinHash-LSH path (the native kernel, minHashLshPairs); the
       // grouped and xx variants it beat are recorded in BASELINE.md
@@ -485,7 +479,7 @@ object BenchExtra {
       // structure-free random vectors (the fixture's worst case)
       val n = embs(s, dir).count()
       val (bands, bits) = Dedup.scaledSignLshParams(n)
-      Dedup.cosineNearDupPairs(microElems(s, dir), 0.9, bands, bits)
+      Dedup.cosineNearDupPairs(Dedup.microElems(embs(s, dir)), 0.9, bands, bits)
     }),
     "bench_synth_runner" -> ((s, dir) => {
       // Sequential workload-runner throughput on 48 reference-shaped

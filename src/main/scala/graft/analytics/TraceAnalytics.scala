@@ -101,27 +101,24 @@ object TraceAnalytics {
 
   /** Query-id normalization + coerce/negative-null cleaning
     * (helpers.py:139-159) exercised over synthetic ids built from the
-    * events table. */
+    * events table: the [[normalizeQueryId]] and [[cleanNumeric]]
+    * transforms [[loadWorkloadLogs]] runs. */
   private val traceNormalize: Q = (s, dir) => {
-    ev(s, dir)
+    val ids = ev(s, dir)
       .withColumn("qid_str", concat(lit("q"), col("event_id") % 100))
-      .withColumn("query_id",
-        regexp_extract(col("qid_str"), "^q(\\d+)$", 1).cast("int"))
-      .withColumn("shifted", col("value") - 10.0)
-      .withColumn("cleaned",
-        when(col("shifted") < 0, lit(null)).otherwise(col("shifted")))
+      .withColumn("query_id", col("qid_str"))
+      .withColumn("cleaned", col("value") - 10.0)
+    cleanNumeric(normalizeQueryId(ids, "query_id"), Seq("cleaned"))
       .select("event_id", "qid_str", "query_id", "cleaned")
       .orderBy("event_id")
   }
 
   /** helpers.py:40-49 over events: run = event_id%5, per-run exact mean
-    * of value, then Avg/Std/P50/P99 across the run means. */
-  private val varianceSummary: Q = (s, dir) => {
-    val runs = ev(s, dir)
-      .groupBy((col("event_id") % 5).as("run"))
-      .agg(davg(col("value")).as("run_mean"))
-    summarize(runs)
-  }
+    * of value ([[perRunMean]]), then Avg/Std/P50/P99 across the run
+    * means. */
+  private val varianceSummary: Q = (s, dir) =>
+    summarize(perRunMean(ev(s, dir).withColumn("run", col("event_id") % 5),
+      "run", "value"))
 
   /** helpers.py:52-59 over events: query = event_id%97, runtime =
     * per-(query,run) exact sum of value (threshold filter makes some

@@ -566,25 +566,59 @@ object Dedup {
     * quantized once to round(e·1e6) longs, all dot products and norms
     * are exact integer sums (associative — partitioning-independent),
     * and the only float ops are the final sqrt/divide, a fixed IEEE
-    * sequence. Input: (id, i, e_micro) exploded embeddings.
+    * sequence. Every micro-int cosine in the library — the pair paths
+    * below and the gated ANN / SemDeDup twins in [[Similarity]] — is
+    * this one kernel: [[microElems]] explodes, [[dimJoinDots]] (every
+    * pair a predicate keeps) or [[candidateDots]] (listed pairs only)
+    * sums the dots, and [[microCosine]] divides by the norms.
     *
     * ALL-PAIRS (dim-index join): the exhaustive fallback for small
     * frames; use [[cosineNearDupPairs]] at scale. */
-  def cosinePairsMicro(elems: DataFrame, threshold: Double): DataFrame = {
-    val norms = elems.groupBy("id")
-      .agg(sum(col("e_micro") * col("e_micro")).as("norm2"))
-    val dots = elems.as("a").join(elems.as("b"),
-        col("a.i") === col("b.i") && col("a.id") < col("b.id"))
+  def cosinePairsMicro(elems: DataFrame, threshold: Double): DataFrame =
+    microCosine(dimJoinDots(elems, elems, col("a.id") < col("b.id")), elems)
+      .filter(col("cosine") >= threshold)
+
+  /** (id, i, e_micro) rows of a (vec_id, embedding) frame: 1-based dim
+    * index, each element rounded once to round(e·1e6) as a long. */
+  private[graft] def microElems(embeddings: DataFrame): DataFrame =
+    embeddings
+      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "e")))
+      .select(col("vec_id").as("id"), (col("pos") + 1).as("i"),
+        round(col("e").cast("double") * 1e6).cast("long").as("e_micro"))
+
+  /** (id_a, id_b, dot) of every pair of an `a` row and a `b` row that
+    * `pair` keeps (over the aliases `a` and `b`), summed over the dims
+    * the two share: the dim-index join. */
+  private[llm] def dimJoinDots(a: DataFrame, b: DataFrame,
+      pair: Column = lit(true)): DataFrame =
+    a.as("a").join(b.as("b"), col("a.i") === col("b.i") && pair)
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(sum(col("a.e_micro") * col("b.e_micro")).as("dot"))
+
+  /** (id_a, id_b, dot) of each (id_a, id_b) candidate pair: its two
+    * element rows joined on the dim index, so the join cost is bounded
+    * by |candidates|·dims, never all-pairs. */
+  private[llm] def candidateDots(candidates: DataFrame,
+      elems: DataFrame): DataFrame =
+    candidates
+      .join(elems.select(col("id").as("id_a"), col("i"),
+        col("e_micro").as("ea")), "id_a")
+      .join(elems.select(col("id").as("id_b"), col("i"),
+        col("e_micro").as("eb")), Seq("id_b", "i"))
+      .groupBy("id_a", "id_b")
+      .agg(sum(col("ea") * col("eb")).as("dot"))
+
+  /** (id_a, id_b, cosine) of (id_a, id_b, dot) rows: each side's Σe²
+    * norm over `elems`, then dot / (√na·√nb) in double. */
+  private[llm] def microCosine(dots: DataFrame, elems: DataFrame): DataFrame = {
+    val norms = elems.groupBy("id")
+      .agg(sum(col("e_micro") * col("e_micro")).as("norm2"))
     dots
       .join(norms.select(col("id").as("id_a"), col("norm2").as("na")), "id_a")
       .join(norms.select(col("id").as("id_b"), col("norm2").as("nb")), "id_b")
-      .withColumn("cosine",
-        col("dot").cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
+      .select(col("id_a"), col("id_b"), (col("dot").cast("double") /
+        (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+        .as("cosine"))
   }
 
   /** Sign-LSH band buckets over exploded micro-int embeddings: plane
@@ -630,25 +664,9 @@ object Dedup {
     * of [[cosineNearDupPairs]]; join cost is bounded by |candidates|·64,
     * never all-pairs. */
   def verifyCosine(candidates: DataFrame, elems: DataFrame,
-      threshold: Double): DataFrame = {
-    val norms = elems.groupBy("id")
-      .agg(sum(col("e_micro") * col("e_micro")).as("norm2"))
-    val dots = candidates
-      .join(elems.select(col("id").as("id_a"), col("i"),
-        col("e_micro").as("ea")), "id_a")
-      .join(elems.select(col("id").as("id_b"), col("i"),
-        col("e_micro").as("eb")), Seq("id_b", "i"))
-      .groupBy("id_a", "id_b")
-      .agg(sum(col("ea") * col("eb")).as("dot"))
-    dots
-      .join(norms.select(col("id").as("id_a"), col("norm2").as("na")), "id_a")
-      .join(norms.select(col("id").as("id_b"), col("norm2").as("nb")), "id_b")
-      .withColumn("cosine",
-        col("dot").cast("double") /
-          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+      threshold: Double): DataFrame =
+    microCosine(candidateDots(candidates, elems), elems)
       .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
-  }
 
   /** Embedding near-duplicates at scale: sign-LSH band buckets generate
     * candidates via an equi-join on (band, bucket) — the same
@@ -677,15 +695,10 @@ object Dedup {
     * pin an exact configuration (the DuckDB-gated fixture twins do). */
   def cosineNearDupPairs(elems: DataFrame, threshold: Double,
       nBands: Int = 0, bitsPerBand: Int = 0, dims: Int = 64): DataFrame = {
-    val (bands, bits) =
-      if (nBands > 0 && bitsPerBand > 0) (nBands, bitsPerBand)
-      else autoSignLshParams(elems)
+    val (bands, bits) = signLshParams(elems, nBands, bitsPerBand)
     val buckets = signBandBuckets(elems, bands, bits, dims)
-    val candidates = buckets.as("a").join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    verifyCosine(candidates, elems, threshold)
+    verifyCosine(bandCandidates(buckets, buckets, selfJoin = true), elems,
+      threshold)
   }
 
   /** Corpus-sized sign-LSH parameters for [[cosineNearDupPairs]] (and
@@ -738,6 +751,13 @@ object Dedup {
   def autoSignLshParams(elems: DataFrame): (Int, Int) =
     scaledSignLshParams(
       elems.agg(approx_count_distinct(col("id"))).head.getLong(0))
+
+  /** (nBands, bitsPerBand) as given when both are positive, else
+    * [[autoSignLshParams]] of `elems`. */
+  private def signLshParams(elems: DataFrame, nBands: Int,
+      bitsPerBand: Int): (Int, Int) =
+    if (nBands > 0 && bitsPerBand > 0) (nBands, bitsPerBand)
+    else autoSignLshParams(elems)
 
   // ------------------------------- incremental (batch-vs-corpus) dedup
 
@@ -826,14 +846,9 @@ object Dedup {
   def incrementalCosinePairs(oldElems: DataFrame, newElems: DataFrame,
       threshold: Double, nBands: Int = 0, bitsPerBand: Int = 0,
       dims: Int = 64): DataFrame = {
-    val (bands, bits) =
-      if (nBands > 0 && bitsPerBand > 0) (nBands, bitsPerBand)
-      else autoSignLshParams(oldElems)
-    val oldBuckets = signBandBuckets(oldElems, bands, bits, dims)
-    val newBuckets = signBandBuckets(newElems, bands, bits, dims)
-    val candidates = oldBuckets.as("a").join(newBuckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
+    val (bands, bits) = signLshParams(oldElems, nBands, bitsPerBand)
+    val candidates = bandCandidates(signBandBuckets(oldElems, bands, bits, dims),
+      signBandBuckets(newElems, bands, bits, dims), selfJoin = false)
     verifyCosine(candidates, oldElems.unionByName(newElems), threshold)
   }
 
@@ -856,9 +871,7 @@ object Dedup {
   def writeCosineIndex(elems: DataFrame, prefix: String,
       nBands: Int = 0, bitsPerBand: Int = 0, dims: Int = 64,
       numBuckets: Int = 32): Unit = {
-    val (bands, bits) =
-      if (nBands > 0 && bitsPerBand > 0) (nBands, bitsPerBand)
-      else autoSignLshParams(elems)
+    val (bands, bits) = signLshParams(elems, nBands, bitsPerBand)
     graft.sources.Ingest.writeBucketedTable(
       signBandBuckets(elems, bands, bits, dims),
       s"${prefix}_buckets", Seq("band", "bucket"), numBuckets)
@@ -892,14 +905,10 @@ object Dedup {
     val meta = spark.table(s"${prefix}_meta").head()
     val (bands, bits, dims) =
       (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val oldBuckets = spark.table(s"${prefix}_buckets")
-    val oldElems = spark.table(s"${prefix}_elems")
-    val newBuckets = signBandBuckets(newElems, bands, bits, dims)
-    val candidates = oldBuckets.as("a").join(newBuckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    verifyCosine(candidates,
-      oldElems.unionByName(newElems.select("id", "i", "e_micro")), threshold)
+    val candidates = bandCandidates(spark.table(s"${prefix}_buckets"),
+      signBandBuckets(newElems, bands, bits, dims), selfJoin = false)
+    verifyCosine(candidates, spark.table(s"${prefix}_elems")
+      .unionByName(newElems.select("id", "i", "e_micro")), threshold)
   }
 
   // ----------------------- exact duplicated-substring spans (Lee et al.)
@@ -1291,25 +1300,23 @@ object Dedup {
         col("hamming").cast("long").as("hamming"))
       .orderBy("id_a", "id_b")
 
-  /** Shared cosine fixture: (base corpus elems, planted near-dup
-    * variant elems with ids offset by 10000). */
-  private def cosineFixtureElems(s: SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    val base = Tables.load(s, dir, "embeddings").filter(col("vec_id") < 200)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "e")))
-      .select(col("vec_id").as("id"), (col("pos") + 1).as("i"),
-        round(col("e").cast("double") * 1e6).cast("long").as("e_micro"))
-    val variants = base.filter(col("id") % 5 === 0)
+  /** The cosine fixture's base corpus: micro-int elements of the
+    * vectors with vec_id < 200. */
+  private[llm] def fixtureElems(s: SparkSession, dir: String): DataFrame =
+    microElems(Tables.load(s, dir, "embeddings").filter(col("vec_id") < 200))
+
+  /** Planted near-dup variants of the id % 5 base vectors: ±0.01 per
+    * dim ((i % 3) − 1, micro-scaled), ids offset by 10000. */
+  private[llm] def fixtureVariants(base: DataFrame): DataFrame =
+    base.filter(col("id") % 5 === 0)
       .select((col("id") + 10000).as("id"), col("i"),
         (col("e_micro") + lit(10000) * ((col("i") % 3) - 1)).as("e_micro"))
-    (base, variants)
-  }
 
   private def cosineFixturePairs(s: SparkSession, dir: String): DataFrame = {
-    val (base, variants) = cosineFixtureElems(s, dir)
+    val base = fixtureElems(s, dir)
     // explicit (4, 8): the DuckDB-gated twin pins an exact LSH
     // configuration for bit-parity; the production default auto-sizes
-    cosineNearDupPairs(base.unionByName(variants), 0.9,
+    cosineNearDupPairs(base.unionByName(fixtureVariants(base)), 0.9,
       nBands = 4, bitsPerBand = 8)
   }
 
@@ -1318,8 +1325,9 @@ object Dedup {
     * old×new candidate join only; the DuckDB twin is the exact
     * cross-restricted all-pairs cosine over the same union. */
   private val dedupEmbeddingIncremental: Q = (s, dir) => {
-    val (base, variants) = cosineFixtureElems(s, dir)
-    incrementalCosinePairs(base, variants, 0.9, nBands = 4, bitsPerBand = 8)
+    val base = fixtureElems(s, dir)
+    incrementalCosinePairs(base, fixtureVariants(base), 0.9, nBands = 4,
+      bitsPerBand = 8)
       .orderBy("id_a", "id_b")
   }
 

@@ -22,7 +22,10 @@ import graft.Tables
   *
   * Float-path functions (fast, codegen) serve production; the fixture
   * queries run the same algorithms in micro-scaled exact integers so
-  * the DuckDB oracle matches bit-for-bit (see [[Dedup]] scale note).
+  * the DuckDB oracle matches bit-for-bit, every one of them through
+  * [[Dedup]]'s one micro-int cosine kernel ([[Dedup.microElems]],
+  * [[Dedup.dimJoinDots]] / [[Dedup.candidateDots]],
+  * [[Dedup.microCosine]]) and ranked by the one [[topK]].
   */
 object Similarity {
 
@@ -51,12 +54,16 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine",
         dotN(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-    scored.withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+    topK(scored, k).select("query_id", "neighbor_id", "rank", "cosine")
   }
+
+  /** The first `k` rows per `key` by (`score` desc, `tie`), numbered
+    * from 1 as `rank`. */
+  private def topK(scored: DataFrame, k: Int, key: String = "query_id",
+      tie: String = "neighbor_id", score: String = "cosine"): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(key).orderBy(col(score).desc, col(tie))))
+      .filter(col("rank") <= k)
 
   /** Driver-side twin of [[Dedup.md5Long]] (first 60 bits of the md5
     * hex digest): the hyperplane weights depend only on (plane, dim),
@@ -122,11 +129,7 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine",
         dotN(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-    scored.withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+    topK(scored, k).select("query_id", "neighbor_id", "rank", "cosine")
   }
 
   /** Deterministic IVF centroid training: spark.ml KMeans with a fixed
@@ -165,14 +168,12 @@ object Similarity {
     val c = centroids.select(col(idCol).as("centroid_id"),
       col(embCol).as("cent_emb"),
       sqrt(dotN(col(embCol), col(embCol))).as("cent_norm"))
-    corpus
+    val scored = corpus
       .withColumn("v_norm", sqrt(dotN(col(embCol), col(embCol))))
       .crossJoin(broadcast(c))
       .withColumn("sim", dotN(col(embCol), col("cent_emb")) /
         (col("v_norm") * col("cent_norm")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(idCol).orderBy(col("sim").desc, col("centroid_id"))))
-      .filter(col("rank") === 1)
+    topK(scored, 1, idCol, "centroid_id", "sim")
       .select(col(idCol), col(embCol), col("centroid_id"))
   }
 
@@ -314,38 +315,37 @@ object Similarity {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Exact micro-int exploded elements of the fixture corpus
-    * (vec_id < 200), 1-based dim index. */
-  private def microElems(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings").filter(col("vec_id") < 200)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "e")))
-      .select(col("vec_id").as("id"), (col("pos") + 1).as("i"),
-        round(col("e").cast("double") * 1e6).cast("long").as("e_micro"))
+  /** The gated ANN result of the kernel's (id_a, id_b, cosine) rows,
+    * id_a the query and id_b the neighbor: the top `k` per query as
+    * (query_id, neighbor_id, rank, cosine) in (query_id, rank) order. */
+  private def annTopK(pairs: DataFrame, k: Int): DataFrame =
+    topK(pairs.select(col("id_a").as("query_id"),
+        col("id_b").as("neighbor_id"), col("cosine")), k)
+      .select("query_id", "neighbor_id", "rank", "cosine")
+      .orderBy("query_id", "rank")
+
+  /** Exact micro-int cosine of every vector of `elems` to every centroid
+    * (the vec_id % 50 = 1 vectors): (id, centroid_id, csim) — computed
+    * once; the IVF assignment and the probe lists are pure filters and
+    * ranks of it (the oracle's single `vcs` CTE). */
+  private def centroidSims(elems: DataFrame): DataFrame =
+    Dedup.microCosine(
+        Dedup.dimJoinDots(elems, elems.filter(col("id") % 50 === 1)), elems)
+      .select(col("id_a").as("id"), col("id_b").as("centroid_id"),
+        col("cosine").as("csim"))
+
+  /** The `n` nearest centroids of each vector of a [[centroidSims]]
+    * frame: (id, centroid_id). */
+  private def nearestCentroids(vcs: DataFrame, n: Int): DataFrame =
+    topK(vcs, n, "id", "centroid_id", "csim").select("id", "centroid_id")
 
   /** Brute-force exact top-5 for query vectors vec_id % 50 = 0, micro-
     * int arithmetic so ranks and cosines hash-match the oracle. */
   private val annBruteForce: Q = (s, dir) => {
-    val elems = microElems(s, dir)
-    val norms = elems.groupBy("id")
-      .agg(sum(col("e_micro") * col("e_micro")).as("norm2"))
-    val dots = elems.filter(col("id") % 50 === 0).as("q")
-      .join(elems.as("c"), col("q.i") === col("c.i") &&
-        col("q.id") =!= col("c.id"))
-      .groupBy(col("q.id").as("query_id"), col("c.id").as("neighbor_id"))
-      .agg(sum(col("q.e_micro") * col("c.e_micro")).as("dot"))
-    val scored = dots
-      .join(norms.select(col("id").as("query_id"), col("norm2").as("nq")),
-        "query_id")
-      .join(norms.select(col("id").as("neighbor_id"), col("norm2").as("nc")),
-        "neighbor_id")
-      .withColumn("cosine", col("dot").cast("double") /
-        (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
-    scored.withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rank") <= 5)
-      .select("query_id", "neighbor_id", "rank", "cosine")
-      .orderBy("query_id", "rank")
+    val elems = Dedup.fixtureElems(s, dir)
+    annTopK(Dedup.microCosine(Dedup.dimJoinDots(
+      elems.filter(col("id") % 50 === 0), elems, col("a.id") =!= col("b.id")),
+      elems), 5)
   }
 
   /** Sign-LSH on the first 8 dims (axis-aligned hyperplanes): bucket =
@@ -353,38 +353,18 @@ object Similarity {
     * The deliberately coarse planes make pruning visible in the
     * result (fewer than 3 rows for sparse buckets is legitimate). */
   private val annLshBucketed: Q = (s, dir) => {
-    val elems = microElems(s, dir)
+    val elems = Dedup.fixtureElems(s, dir)
     val buckets = elems.filter(col("i") <= 8)
       .groupBy("id")
       .agg(sum(when(col("e_micro") > 0,
         expr("shiftleft(1L, i - 1)")).otherwise(0L)).as("bucket"))
-    val norms = elems.groupBy("id")
-      .agg(sum(col("e_micro") * col("e_micro")).as("norm2"))
     val qb = buckets.filter(col("id") % 50 === 0)
-      .select(col("id").as("query_id"), col("bucket"))
-    val cb = buckets.select(col("id").as("neighbor_id"), col("bucket"))
+      .select(col("id").as("id_a"), col("bucket"))
+    val cb = buckets.select(col("id").as("id_b"), col("bucket"))
     val cand = qb.join(cb, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-    val dots = cand
-      .join(elems.select(col("id").as("query_id"), col("i"),
-        col("e_micro").as("qe")), "query_id")
-      .join(elems.select(col("id").as("neighbor_id"), col("i"),
-        col("e_micro").as("ce")), Seq("neighbor_id", "i"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum(col("qe") * col("ce")).as("dot"))
-    val scored = dots
-      .join(norms.select(col("id").as("query_id"), col("norm2").as("nq")),
-        "query_id")
-      .join(norms.select(col("id").as("neighbor_id"), col("norm2").as("nc")),
-        "neighbor_id")
-      .withColumn("cosine", col("dot").cast("double") /
-        (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
-    scored.withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rank") <= 3)
-      .select("query_id", "neighbor_id", "rank", "cosine")
-      .orderBy("query_id", "rank")
+      .filter(col("id_a") =!= col("id_b"))
+      .select("id_a", "id_b")
+    annTopK(Dedup.microCosine(Dedup.candidateDots(cand, elems), elems), 3)
   }
 
   /** IVF in exact micro-int arithmetic (the oracle-gated twin of
@@ -394,56 +374,16 @@ object Similarity {
     * (vec_id % 50 = 0) probe their nprobe=2 nearest centroid lists
     * only; exact top-3 within the probed candidates. */
   private val annIvf: Q = (s, dir) => {
-    val elems = microElems(s, dir)
-    val norms = elems.groupBy("id")
-      .agg(sum(col("e_micro") * col("e_micro")).as("norm2"))
-    // exact cosine of EVERY vector to EVERY centroid — computed once;
-    // the probe frame is a pure filter of it (same shape as the
-    // oracle's single `vcs` CTE)
-    val cents = elems.filter(col("id") % 50 === 1)
-      .select(col("id").as("centroid_id"), col("i"), col("e_micro").as("ce"))
-    val vcs = elems.select(col("id"), col("i"), col("e_micro").as("ve"))
-      .join(cents, Seq("i"))
-      .groupBy("id", "centroid_id")
-      .agg(sum(col("ve") * col("ce")).as("dot"))
-      .join(norms.select(col("id"), col("norm2").as("nv")), "id")
-      .join(norms.select(col("id").as("centroid_id"),
-        col("norm2").as("nc")), "centroid_id")
-      .withColumn("csim", col("dot").cast("double") /
-        (sqrt(col("nv").cast("double")) * sqrt(col("nc").cast("double"))))
-    val assigned = vcs
-      .withColumn("arank", row_number().over(
-        Window.partitionBy("id").orderBy(col("csim").desc, col("centroid_id"))))
-      .filter(col("arank") === 1)
-      .select(col("id").as("neighbor_id"), col("centroid_id"))
-    val probes = vcs.filter(col("id") % 50 === 0)
-      .withColumn("crank", row_number().over(
-        Window.partitionBy("id").orderBy(col("csim").desc, col("centroid_id"))))
-      .filter(col("crank") <= 2)
-      .select(col("id").as("query_id"), col("centroid_id"))
+    val elems = Dedup.fixtureElems(s, dir)
+    val vcs = centroidSims(elems)
+    val assigned = nearestCentroids(vcs, 1)
+      .select(col("id").as("id_b"), col("centroid_id"))
+    val probes = nearestCentroids(vcs.filter(col("id") % 50 === 0), 2)
+      .select(col("id").as("id_a"), col("centroid_id"))
     val cand = probes.join(assigned, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id")
-    val dots = cand
-      .join(elems.select(col("id").as("query_id"), col("i"),
-        col("e_micro").as("qe")), "query_id")
-      .join(elems.select(col("id").as("neighbor_id"), col("i"),
-        col("e_micro").as("ce")), Seq("neighbor_id", "i"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum(col("qe") * col("ce")).as("dot"))
-    dots
-      .join(norms.select(col("id").as("query_id"), col("norm2").as("nq")),
-        "query_id")
-      .join(norms.select(col("id").as("neighbor_id"), col("norm2").as("nc")),
-        "neighbor_id")
-      .withColumn("cosine", col("dot").cast("double") /
-        (sqrt(col("nq").cast("double")) * sqrt(col("nc").cast("double"))))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rank") <= 3)
-      .select("query_id", "neighbor_id", "rank", "cosine")
-      .orderBy("query_id", "rank")
+      .filter(col("id_a") =!= col("id_b"))
+      .select("id_a", "id_b")
+    annTopK(Dedup.microCosine(Dedup.candidateDots(cand, elems), elems), 3)
   }
 
   /** Index-quality report: per-query recall@k of an approximate ANN
@@ -530,45 +470,14 @@ object Similarity {
     * cluster and clears cosine ≥ 0.9 against a lower-id member is
     * dropped; all 250 rows come back with their assignment and fate. */
   private val dedupSemantic: Q = (s, dir) => {
-    val base = microElems(s, dir)
-    val variants = base.filter(col("id") % 5 === 0)
-      .select((col("id") + 10000).as("id"), col("i"),
-        (col("e_micro") + lit(10000L) * ((col("i") % 3) - 1)).as("e_micro"))
-    val elems = base.unionByName(variants)
-    val norms = elems.groupBy("id")
-      .agg(sum(col("e_micro") * col("e_micro")).as("norm2"))
-    val cents = elems.filter(col("id") % 50 === 1)
-      .select(col("id").as("centroid_id"), col("i"), col("e_micro").as("ce"))
-    val vcs = elems.select(col("id"), col("i"), col("e_micro").as("ve"))
-      .join(cents, Seq("i"))
-      .groupBy("id", "centroid_id")
-      .agg(sum(col("ve") * col("ce")).as("dot"))
-      .join(norms.select(col("id"), col("norm2").as("nv")), "id")
-      .join(norms.select(col("id").as("centroid_id"),
-        col("norm2").as("nc")), "centroid_id")
-      .withColumn("csim", col("dot").cast("double") /
-        (sqrt(col("nv").cast("double")) * sqrt(col("nc").cast("double"))))
-    val assigned = vcs
-      .withColumn("arank", row_number().over(
-        Window.partitionBy("id").orderBy(col("csim").desc, col("centroid_id"))))
-      .filter(col("arank") === 1)
-      .select("id", "centroid_id")
+    val base = Dedup.fixtureElems(s, dir)
+    val elems = base.unionByName(Dedup.fixtureVariants(base))
+    val assigned = nearestCentroids(centroidSims(elems), 1)
     val cand = assigned.as("a").join(assigned.as("b"),
         col("a.centroid_id") === col("b.centroid_id") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    val dots = cand
-      .join(elems.select(col("id").as("id_a"), col("i"),
-        col("e_micro").as("ea")), "id_a")
-      .join(elems.select(col("id").as("id_b"), col("i"),
-        col("e_micro").as("eb")), Seq("id_b", "i"))
-      .groupBy("id_a", "id_b").agg(sum(col("ea") * col("eb")).as("dot"))
-    val dups = dots
-      .join(norms.select(col("id").as("id_a"), col("norm2").as("na")), "id_a")
-      .join(norms.select(col("id").as("id_b"), col("norm2").as("nb")), "id_b")
-      .withColumn("cosine", col("dot").cast("double") /
-        (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-      .filter(col("cosine") >= 0.9)
+    val dups = Dedup.verifyCosine(cand, elems, 0.9)
       .select(col("id_b").as("id")).distinct()
     assigned.join(dups.withColumn("dup", lit(true)), Seq("id"), "left")
       .select(col("id").as("vec_id"), col("centroid_id"),
@@ -614,7 +523,7 @@ object Similarity {
     * join — the plan-quality gate forbids cartesians in gated
     * queries). */
   private val embedRandomProjection: Q = (s, dir) => {
-    val elems = microElems(s, dir)
+    val elems = Dedup.fixtureElems(s, dir)
     val signs = elems.select(col("i")).distinct()
       .select(col("i"), explode(sequence(lit(1), lit(8))).as("j"))
       .select(col("i"), col("j"),

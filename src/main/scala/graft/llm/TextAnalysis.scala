@@ -196,10 +196,17 @@ object TextAnalysis {
     * shingles — one row-local expression (transform over a position
     * sequence), no explode. Short texts fall back to md5(text). */
   def minShingleFingerprint(text: Column, k: Int = 9): Column =
-    when(length(text) < k, md5(text)).otherwise(
+    minShingleWith(text, k, md5)
+
+  /** The minimum of `hash` over every k-char shingle of `text`, or
+    * `hash(text)` for a text shorter than k: the body of both
+    * min-shingle fingerprint families. */
+  private def minShingleWith(text: Column, k: Int,
+      hash: Column => Column): Column =
+    when(length(text) < k, hash(text)).otherwise(
       array_min(transform(
         sequence(lit(1), length(text) - (k - 1)),
-        i => md5(substring(text, i, lit(k))))))
+        i => hash(substring(text, i, lit(k))))))
 
   /** Winnowing fingerprints (Schleimer, Wilkerson & Aiken, "Winnowing:
     * Local Algorithms for Document Fingerprinting", SIGMOD 2003 — the
@@ -217,12 +224,18 @@ object TextAnalysis {
     * hashes so the DuckDB twin is bit-identical; docs shorter than k
     * fingerprint as their whole-text hash. */
   def winnowedFingerprints(df: DataFrame, k: Int = 9, w: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    winnowedWith(df, k, w, idCol, textCol, graft.llm.Dedup.md5Long)
+
+  /** Winnowing under the k-gram hash `hash`: the body of both
+    * fingerprint families. */
+  private def winnowedWith(df: DataFrame, k: Int, w: Int, idCol: String,
+      textCol: String, hash: Column => Column): DataFrame = {
     val text = col(textCol)
     val hashes = when(length(text) >= k,
         transform(sequence(lit(1), length(text) - (k - 1)),
-          i => graft.llm.Dedup.md5Long(substring(text, i, lit(k)))))
-      .otherwise(array(graft.llm.Dedup.md5Long(text)))
+          i => hash(substring(text, i, lit(k)))))
+      .otherwise(array(hash(text)))
     val hashed = df.select(col(idCol), hashes.as("hs"))
     val nWin = greatest(lit(1), size(col("hs")) - (w - 1))
     val mins = transform(sequence(lit(1), nWin),
@@ -238,19 +251,8 @@ object TextAnalysis {
     * replicate it so the md5 form stays the gated twin. Measured
     * beside the md5 form in BenchExtra. */
   def winnowedFingerprintsXx(df: DataFrame, k: Int = 9, w: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val text = col(textCol)
-    val hashes = when(length(text) >= k,
-        transform(sequence(lit(1), length(text) - (k - 1)),
-          i => xxhash64(substring(text, i, lit(k)))))
-      .otherwise(array(xxhash64(text)))
-    val hashed = df.select(col(idCol), hashes.as("hs"))
-    val nWin = greatest(lit(1), size(col("hs")) - (w - 1))
-    val mins = transform(sequence(lit(1), nWin),
-      j => array_min(slice(col("hs"), j, lit(w))))
-    hashed.select(col(idCol),
-      explode(array_distinct(mins)).as("fp"))
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    winnowedWith(df, k, w, idCol, textCol, xxhash64(_))
 
   /** Production twin of [[minShingleFingerprint]] on the xxhash64
     * family: one codegen'd 64-bit hash per shingle instead of an md5
@@ -259,10 +261,7 @@ object TextAnalysis {
     * replicate it (no xxhash64), so the md5 form stays the
     * oracle-gated twin. Same row-local no-explode shape. */
   def minShingleFingerprintXx(text: Column, k: Int = 9): Column =
-    when(length(text) < k, xxhash64(text)).otherwise(
-      array_min(transform(
-        sequence(lit(1), length(text) - (k - 1)),
-        i => xxhash64(substring(text, i, lit(k))))))
+    minShingleWith(text, k, xxhash64(_))
 
   // --------------------------------------------------- fixture queries
 

@@ -22,16 +22,8 @@ object Experiment {
 
   /** Makespan fold under max(pred, actual) blocking
     * (experiment.py `_compute_makespan_slots`). */
-  def makespanSlots(qs: Seq[SchedQuery], schedule: Seq[(String, Int)]): Int = {
-    val byId = qs.map(q => q.id -> q).toMap
-    var cursor = 0
-    schedule.sortBy(_._2).foreach { case (id, planned) =>
-      val q = byId(id)
-      if (planned > cursor) cursor = planned
-      cursor += math.max(q.predSlots, q.actualSlots)
-    }
-    cursor
-  }
+  def makespanSlots(qs: Seq[SchedQuery], schedule: Seq[(String, Int)]): Int =
+    Schedulers.sequentialEnd(qs, schedule, oracle = true)
 
   /** Run one scheduler over one workload view.
     * @param values    (prediction, label) seconds frame — values.csv shape

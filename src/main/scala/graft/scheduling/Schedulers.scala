@@ -162,7 +162,14 @@ object Schedulers {
     * oracle workload) the schedule must end within the CI horizon
     * (scheduler.py `assert_schedule_fits_sequential`). */
   def scheduleFitsSequential(qs: Seq[SchedQuery], schedule: Seq[(String, Int)],
-      ciLen: Int, oracle: Boolean = false): Boolean = {
+      ciLen: Int, oracle: Boolean = false): Boolean =
+    sequentialEnd(qs, schedule, oracle) <= ciLen
+
+  /** End slot of a schedule on one sequential machine: queries in
+    * planned-start order, each starting at max(planned, free) and
+    * blocking for pred_slots, or for max(pred, actual) when `oracle`. */
+  private[scheduling] def sequentialEnd(qs: Seq[SchedQuery],
+      schedule: Seq[(String, Int)], oracle: Boolean): Int = {
     val byId = qs.map(q => q.id -> q).toMap
     var cursor = 0
     schedule.sortBy(_._2).foreach { case (id, planned) =>
@@ -170,14 +177,8 @@ object Schedulers {
       if (planned > cursor) cursor = planned
       cursor += (if (oracle) math.max(q.predSlots, q.actualSlots) else q.predSlots)
     }
-    cursor <= ciLen
+    cursor
   }
-
-  /** Makespan in slots: end of the last replayed placement
-    * (experiment.py:163-182). */
-  def makespanSlots(placements: Seq[Placement]): Int =
-    if (placements.isEmpty) 0
-    else placements.map(p => p.startSlot + p.actualSlots).max
 
   /** Compact experiment summary (experiment.py `ExperimentResult
     * .summary`): totals, per-query / per-second rates, makespan. */

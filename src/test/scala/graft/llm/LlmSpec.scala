@@ -349,6 +349,36 @@ class LlmSpec extends SparkSpec {
     assert(rows(2) === rows(3)) // identical text → identical fingerprint
     // short text hits the whole-text fallback (still a long)
     assert(rows.contains(1L))
+    // both xx fingerprints are bit-identical to their own former bodies
+    // (kept inline here), from before the md5 and xx families shared one
+    val k = 9
+    val text = col("text")
+    val minShingleRef = when(length(text) < k, xxhash64(text)).otherwise(
+      array_min(transform(sequence(lit(1), length(text) - (k - 1)),
+        i => xxhash64(substring(text, i, lit(k))))))
+    val sample = df.union(textDf((4L, "exactly9c"), (5L, ""),
+      (6L, "übergrößen straße mit umlauten"), (7L, "日本語のテキストです")))
+    val fps = sample.select(col("doc_id"),
+        TextAnalysis.minShingleFingerprintXx(text).as("fp"),
+        minShingleRef.as("ref"))
+      .collect().map(r => (r.getLong(0), r.get(1), r.get(2)))
+    assert(fps.length === 7)
+    fps.foreach { case (id, fp, ref) => assert(fp === ref, s"doc $id") }
+    val w = 8
+    val hashes = when(length(text) >= k,
+        transform(sequence(lit(1), length(text) - (k - 1)),
+          i => xxhash64(substring(text, i, lit(k)))))
+      .otherwise(array(xxhash64(text)))
+    val nWin = greatest(lit(1), size(col("hs")) - (w - 1))
+    val winnowRef = sample.select(col("doc_id"), hashes.as("hs"))
+      .select(col("doc_id"), explode(array_distinct(transform(
+        sequence(lit(1), nWin), j => array_min(slice(col("hs"), j, lit(w))))))
+        .as("fp"))
+    def fpSet(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val winnowed = fpSet(TextAnalysis.winnowedFingerprintsXx(sample))
+    assert(winnowed.nonEmpty)
+    assert(winnowed === fpSet(winnowRef))
   }
 
   test("capped jaccardPairs equals the uncapped all-pairs answer") {
@@ -571,6 +601,32 @@ class LlmSpec extends SparkSpec {
       val df = graft.SparkEntry.queries(name)(spark, sfSmoke)
       assert(df.count() > 0, s"query $name returned no rows")
     }
+  }
+
+  test("micro-int cosine keys match their pinned sf0.001 digests") {
+    // row count and an order-insensitive hash of the rows, recorded
+    // before the cosine family shared one kernel: a moved cosine bit,
+    // rank or kept flag changes the sum
+    def digest(df: org.apache.spark.sql.DataFrame): String = {
+      val r = df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*)
+          .cast("decimal(38,0)").as("h"))
+        .agg(count(lit(1)), sum("h")).head()
+      s"${r.getLong(0)}:${r.getDecimal(1)}"
+    }
+    val pinned = Map(
+      "ann_brute_force" -> "20:-21606867472008952511",
+      "ann_lsh_bucketed" -> "2:13865437627907908659",
+      "ann_ivf" -> "12:11962610257442876279",
+      "ann_recall_ivf" -> "4:-21453020358194978866",
+      "ann_recall_pq" -> "4:8144665980526112641",
+      "dedup_semantic" -> "240:-5102240761606208400",
+      "embed_random_projection" -> "1600:152172682329844144564",
+      "dedup_embedding_cosine" -> "40:20723854025750686344",
+      "dedup_embedding_incremental" -> "40:20723854025750686344",
+      "dedup_cosine_clusters" -> "80:16711686399932174909")
+    val got = pinned.keys.map(k =>
+      k -> digest(graft.SparkEntry.queries(k)(spark, sfSmoke))).toMap
+    assert(got === pinned)
   }
 
   test("nearDupClusters equals a union-find over the same pairs; keepOne filters") {
@@ -891,21 +947,26 @@ class LlmSpec extends SparkSpec {
     assert(viaIndex.contains((1L, 10L)), "near-copy of doc 1 must be found")
     assert(!viaIndex.exists { case (a, b) => a >= 10 || b < 10 },
       "probe must emit strictly old×new pairs")
-    // the candidate join must read the stored buckets bucket-aligned:
-    // with broadcast off, the only join-key hash exchange is the
-    // batch side's (the writeDedupIndex single-exchange contract)
+    // the probe's candidate join must read the stored buckets
+    // bucket-aligned: with broadcast off, the only join-key hash
+    // exchange in its executed plan is the batch side's (the
+    // writeDedupIndex single-exchange contract)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val stored = spark.table("cos_idx_t_buckets")
-      val nb = Dedup.signBandBuckets(elems(batch), 4, 8, dims = 8)
-      val joined = stored.as("a").join(nb.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      val plan = joined.queryExecution.executedPlan.toString
+      val probe = Dedup.cosineNearDupPairsFromIndex("cos_idx_t",
+        elems(batch), 0.9)
+      assert(toSet(probe) === viaIndex)
+      val full = probe.queryExecution.executedPlan.toString
+      assert(full.contains("isFinalPlan=true"), full)
+      val plan = full.split("== Initial Plan ==").head
       val nJoinKeyExchanges = "Exchange hashpartitioning\\(band".r
         .findAllIn(plan).length
       assert(nJoinKeyExchanges === 1,
         s"expected only the batch-side join exchange, got $nJoinKeyExchanges:\n$plan")
-      assert(plan.contains("Bucketed: true"),
+      val storedScans = plan.linesIterator
+        .filter(l => l.contains("FileScan") && l.contains("cos_idx_t_buckets"))
+        .toSeq
+      assert(storedScans.nonEmpty && storedScans.forall(_.contains("Bucketed: true")),
         s"stored side must scan bucketed:\n$plan")
     } finally
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

@@ -154,6 +154,8 @@ class SchedulingSpec extends SparkSpec {
     // oracle blocking uses max(pred, actual): a blocks 5, ends at 9
     assert(!scheduleFitsSequential(qs, sched, ciLen = 8, oracle = true))
     assert(scheduleFitsSequential(qs, sched, ciLen = 9, oracle = true))
+    // a blocks 0..5 (max(3, 5)); b waits for it and blocks 5..9
+    assert(Experiment.makespanSlots(qs, sched) === 9)
   }
 
   test("summarize: per-query and per-second rates") {
