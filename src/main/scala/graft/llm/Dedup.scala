@@ -159,15 +159,8 @@ object Dedup {
     // same four-consumer shape as [[jaccardPairs]]: LAZY by
     // measurement — see the checkpoint experiment verdict there
     val hashed = hashShingles(shingles)
-    val sets = shingleSetRows(hashed)
-    rareShingleCandidates(hashed, maxShingleDf)
-      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a"),
-        col("set_size").as("size_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b"),
-        col("set_size").as("size_b")), "id_b")
-      .withColumn("n_common",
-        graft.functions.SortedIntersectSize.sortedIntersectSize(
-          col("sh_a"), col("sh_b")).cast("long"))
+    setJoin(rareShingleCandidates(hashed, maxShingleDf), shingleSetRows(hashed))
+      .withColumn("n_common", col("n_common").cast("long"))
       .withColumn("containment",
         col("n_common").cast("double") /
           least(col("size_a"), col("size_b")))
@@ -356,6 +349,18 @@ object Dedup {
     * many times so the one-time sort amortizes. */
   def verifyJaccardSets(candidates: DataFrame, sets: DataFrame,
       threshold: Double): DataFrame =
+    setJoin(candidates, sets)
+      .withColumn("jaccard",
+        col("n_common").cast("double") /
+          (col("size_a") + col("size_b") - col("n_common")))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+
+  /** `(id_a, id_b)` candidates joined to both docs' sorted set rows
+    * `(sh, set_size)` as `_a`/`_b` columns, with their sorted-merge
+    * intersection size as `n_common` (an int): the set join of
+    * [[verifyJaccardSets]] and [[containmentPairs]]. */
+  private def setJoin(candidates: DataFrame, sets: DataFrame): DataFrame =
     candidates
       .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a"),
         col("set_size").as("size_a")), "id_a")
@@ -364,11 +369,6 @@ object Dedup {
       .withColumn("n_common",
         graft.functions.SortedIntersectSize.sortedIntersectSize(
           col("sh_a"), col("sh_b")))
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("size_a") + col("size_b") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
 
   // ------------------------------------------------------- clustering
 
@@ -794,7 +794,11 @@ object Dedup {
     *    the batch side — the stored scan's bucketing satisfies the
     *    join's distribution (LlmSpec asserts the single exchange);
     *  - `<prefix>_sets` (id, sh, set_size), the sorted hashed-shingle
-    *    rows the exact-Jaccard verify consumes, bucketed on id.
+    *    rows the exact-Jaccard verify consumes, bucketed on id;
+    *  - `<prefix>_meta` one row (num_hashes, rows_per_band, k): the
+    *    MinHash parameters pinned AT INDEX TIME and read back by the
+    *    probe — a probe signing under other parameters would silently
+    *    find no candidates (the [[writeCosineIndex]] `_meta` contract).
     * Bucket count should match `spark.sql.shuffle.partitions` so the
     * probe-side exchange lands bucket-aligned. */
   def writeDedupIndex(corpus: DataFrame, prefix: String,
@@ -807,20 +811,41 @@ object Dedup {
       s"${prefix}_buckets", Seq("band", "bucket"), numBuckets)
     graft.sources.Ingest.writeBucketedTable(lshSets(rows),
       s"${prefix}_sets", Seq("id"), numBuckets)
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    graft.sources.Ingest.writeManagedTable(
+      Seq((numHashes, rowsPerBand, k)).toDF("num_hashes", "rows_per_band", "k"),
+      s"${prefix}_meta")
+  }
+
+  /** The MinHash parameters (numHashes, rowsPerBand, k) that
+    * [[writeDedupIndex]] pinned in `<prefix>_meta`. */
+  private[graft] def dedupIndexParams(spark: SparkSession,
+      prefix: String): (Int, Int, Int) = {
+    val meta = spark.table(s"${prefix}_meta").head()
+    (meta.getInt(0), meta.getInt(1), meta.getInt(2))
   }
 
   /** Probe the standing index with a new ingest batch: the batch's
-    * [[lshDocs]] rows → banded buckets equi-joined against the STORED
+    * [[lshDocs]] rows, under the parameters read back from
+    * `<prefix>_meta`, → banded buckets equi-joined against the STORED
     * bucket table; exact-Jaccard verify against the STORED set rows ∪
     * the batch's fresh sets. Output is identical to
-    * [[incrementalLshPairs]] over (indexed corpus, batch) — LlmSpec
-    * pins the equality — but the corpus pays no signature or shingle
-    * work at probe time. */
+    * [[incrementalLshPairs]] over (indexed corpus, batch) under the
+    * writer's parameters — LlmSpec pins the equality — but the corpus
+    * pays no signature or shingle work at probe time. */
   def incrementalLshPairsFromIndex(prefix: String, newDf: DataFrame,
-      threshold: Double, numHashes: Int = 16, rowsPerBand: Int = 4,
-      k: Int = 9, idCol: String = "doc_id",
+      threshold: Double, idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame =
+    probeDedupIndex(prefix, newDf, threshold,
+      dedupIndexParams(newDf.sparkSession, prefix), idCol, textCol)
+
+  /** [[incrementalLshPairsFromIndex]] under [[dedupIndexParams]]. */
+  private[graft] def probeDedupIndex(prefix: String, newDf: DataFrame,
+      threshold: Double, params: (Int, Int, Int), idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     val spark = newDf.sparkSession
+    val (numHashes, rowsPerBand, k) = params
     val oldBuckets = spark.table(s"${prefix}_buckets")
     val oldSets = spark.table(s"${prefix}_sets")
     val newRows = lshRowsById(newDf, numHashes, rowsPerBand, k, idCol, textCol)

@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -44,6 +43,8 @@ import graft.Tables
   *    broadcast via crossJoin;
   *  - the per-query top-k window partitions on query_id (bounded by
   *    k·|queries| rows after aggregation — no unpartitioned window);
+  *    every top-k cut here is the one per-key rank [[Similarity.topK]],
+  *    and every text is tokenized by the one BM25 term rule [[terms]];
   *  - the two standing-index probes ([[bm25TopKFromIndex]],
   *    [[bm25TopKFromIndexTwoPhase]]) read one core, [[ProbeBatch]]: a
   *    serving batch of at most [[MaxBatch]] queries collected once
@@ -71,20 +72,26 @@ object Retrieval {
   def bm25TopK(corpus: DataFrame, queries: DataFrame, k: Int,
       k1: Double = 1.2, b: Double = 0.75,
       maxDfFrac: Double = 1.0): DataFrame = {
-    val qterms = queries
-      .select(col("query_id"), explode(split(col("text"), " ")).as("term"))
-      .filter(col("term") =!= "").distinct()
+    val qterms = terms(queries, "query_id").distinct()
     topKPerQuery(bm25PartialsF(corpus, qterms, k1, b, maxDfFrac), k)
   }
+
+  /** The BM25 term rule: `text` split on single spaces, empty terms
+    * dropped — one row (`id`, term) per term occurrence. Explode, then
+    * filter: the plan shape every BM25 path and its oracle share. */
+  private def terms(df: DataFrame, id: String): DataFrame =
+    df.select(col(id), explode(split(col("text"), " ")).as("term"))
+      .filter(col("term") =!= "")
+
+  /** (doc_id, term, tf) of the docs `d` under the [[terms]] rule. */
+  private def termFreqs(d: DataFrame): DataFrame =
+    terms(d, "doc_id").groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
 
   /** Shared BM25 partial-score pipeline (float): one row per
     * (query_id, doc_id, term) with the BM25 term contribution. */
   private def bm25PartialsF(corpus: DataFrame, qterms: DataFrame,
       k1: Double, b: Double, maxDfFrac: Double): DataFrame = {
-    val toks = corpus
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .filter(col("term") =!= "")
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    val tf = termFreqs(corpus)
     // dl from tf (one doc-key groupBy over the distinct-term frame),
     // NOT a second shuffle of the full token stream
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
@@ -156,10 +163,7 @@ object Retrieval {
   def writePostingsIndex(corpus: DataFrame, prefix: String,
       k1: Double = 1.2, b: Double = 0.75, numBuckets: Int = 32): Unit = {
     val spark = corpus.sparkSession
-    val toks = corpus
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .filter(col("term") =!= "")
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    val tf = termFreqs(corpus)
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
     // postings and df are SORTED by term inside each bucket: on a
     // real (large-vocabulary) corpus a term-selective probe then
@@ -235,13 +239,15 @@ object Retrieval {
     * per (query, doc), the top k per query by (bm25 desc, doc_id) —
     * (query_id, rank, doc_id, bm25). */
   private def topKPerQuery(contrib: DataFrame, k: Int): DataFrame =
-    contrib.groupBy("query_id", "doc_id")
-      .agg(sum("bm25_term").as("bm25"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("bm25").desc, col("doc_id"))))
-      .filter(col("rank") <= k)
+    topByScore(contrib.groupBy("query_id", "doc_id")
+        .agg(sum("bm25_term").as("bm25")), "bm25", k)
       .select("query_id", "rank", "doc_id", "bm25")
+
+  /** [[Similarity.topK]] of `scored` per `keys` by (`score` desc,
+    * doc_id), the order every ranking here uses. */
+  private def topByScore(scored: DataFrame, score: String, k: Int,
+      keys: Seq[String] = Seq("query_id")): DataFrame =
+    Similarity.topK(scored, keys, k, col(score).desc, col("doc_id"))
 
   /** The BM25 contribution of one posting (columns `df`, `tf`, `dl`):
     * Lucene idf `ln(1 + (N−df+0.5)/(df+0.5))` times the k1/b-saturated
@@ -267,9 +273,10 @@ object Retrieval {
     * both index probes read. Construction reads `_meta` once, collects
     * the batch once (bounded: [[MaxBatch]] queries, failing fast with
     * the fix in the message), builds the distinct (query, term) pairs
-    * and the vocabulary on the driver — `split(text, " ")` minus empty
-    * terms, as [[bm25TopK]] explodes them — and looks up the stored df
-    * of the vocabulary in one collect (one row per term at most). */
+    * and the vocabulary on the driver — the [[terms]] rule: Java's
+    * `split(" ", -1)` is Spark's `split(text, " ")`, empty terms
+    * dropped — and looks up the stored df of the vocabulary in one
+    * collect (one row per term at most). */
   private final class ProbeBatch(prefix: String, queries: DataFrame) {
     private val spark = queries.sparkSession
     import spark.implicits._
@@ -348,7 +355,7 @@ object Retrieval {
     * The batch, its df lookup and the scoring expression are the
     * [[ProbeBatch]] core [[bm25TopKFromIndex]] reads too, under the
     * same bound. The candidate and head collects are bounded by their
-    * plans (the p1rank filter, the semi-join to the candidates) and
+    * plans (the phase-1 rank filter, the semi-join to the candidates) and
     * only assert it ([[graft.Collect.collectChecked]]).
     *
     * Returns (query_id, rank, doc_id, bm25, certified). Ranks agree
@@ -386,12 +393,9 @@ object Retrieval {
     val maxCand = math.min(allQ.length.toLong * k * Overfetch,
       Int.MaxValue - 1L).toInt
     val candRows = collectChecked(
-        scored(pairs.filterNot(t => headDf.contains(t._2)))
-          .groupBy("query_id", "doc_id").agg(sum("bm25_term").as("tail_bm25"))
-          .withColumn("p1rank", row_number().over(
-            Window.partitionBy("query_id")
-              .orderBy(col("tail_bm25").desc, col("doc_id"))))
-          .filter(col("p1rank") <= k * Overfetch),
+        topByScore(scored(pairs.filterNot(t => headDf.contains(t._2)))
+          .groupBy("query_id", "doc_id").agg(sum("bm25_term").as("tail_bm25")),
+          "tail_bm25", k * Overfetch),
         maxCand, "two-phase probe: the phase-1 candidates")
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     // driver-side per-query tail cut / window-exhaustion flags
@@ -452,11 +456,6 @@ object Retrieval {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
 
-  /** Corpus tokens (one row per token occurrence). */
-  private def toksOf(d: DataFrame): DataFrame =
-    d.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .filter(col("term") =!= "")
-
   /** Micro-int BM25 partials for query docs selected by `qPred`:
     * term_score_micro = round(idf_micro · tf_sat) where idf_micro is
     * ln·1e6 rounded once, and the k1=1.2/b=0.75 saturation is the
@@ -467,8 +466,7 @@ object Retrieval {
     * correctly-rounded IEEE divisions/multiplies, deterministic
     * across engines). */
   private def bm25MicroScores(d: DataFrame, qPred: Column): DataFrame = {
-    val toks = toksOf(d)
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    val tf = termFreqs(d)
     // dl from tf, not a second full-token shuffle (sum of tf = token
     // count exactly — both integer counts, oracle-identical)
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
@@ -499,15 +497,10 @@ object Retrieval {
       .agg(sum("term_score_micro").as("score_micro"))
   }
 
-  private def rankBy(scored: DataFrame, scoreCol: String): DataFrame =
-    scored.withColumn("rank", row_number().over(
-      Window.partitionBy("query_id")
-        .orderBy(col(scoreCol).desc, col("doc_id"))).cast("int"))
-
   /** Micro-int distinct-token Jaccard ranking for query docs under
     * `qPred`: jac_micro = round(1e6·|q∩d| / (|q|+|d|−|q∩d|)). */
   private def jaccardMicroScores(d: DataFrame, qPred: Column): DataFrame = {
-    val toks = toksOf(d).distinct()
+    val toks = terms(d, "doc_id").distinct()
     val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val qt = toks.filter(qPred)
       .select(col("doc_id").as("query_id"), col("term"))
@@ -541,43 +534,48 @@ object Retrieval {
 
   /** BM25 top-5 per query (queries = docs with doc_id % 100 = 0,
     * clamped — [[qPred]]). */
-  private val retrievalBm25: Q = (s, dir) => {
-    rankBy(bm25MicroScores(docs(s, dir), qPred),
-        "score_micro")
-      .filter(col("rank") <= 5)
+  private val retrievalBm25: Q = (s, dir) =>
+    topByScore(bm25MicroScores(docs(s, dir), qPred), "score_micro", 5)
       .select("query_id", "rank", "doc_id", "score_micro")
       .orderBy("query_id", "rank")
-  }
 
   /** Distinct-token Jaccard top-5 per query (same query set). */
-  private val retrievalJaccard: Q = (s, dir) => {
-    rankBy(jaccardMicroScores(docs(s, dir), qPred),
-        "jac_micro")
-      .filter(col("rank") <= 5)
+  private val retrievalJaccard: Q = (s, dir) =>
+    topByScore(jaccardMicroScores(docs(s, dir), qPred), "jac_micro", 5)
       .select("query_id", "rank", "doc_id", "jac_micro")
       .orderBy("query_id", "rank")
-  }
 
-  /** RRF(k=60) over the BM25 top-20 and Jaccard top-20 lists, fused
-    * in micro-units (round(1e9/(60+rank)) per list, integer sum —
-    * order-free), top-10 per query. */
-  private val retrievalRrf: Q = (s, dir) => {
-    val d = docs(s, dir)
-    val lex = rankBy(bm25MicroScores(d, qPred), "score_micro")
-      .filter(col("rank") <= 20)
-    val jac = rankBy(jaccardMicroScores(d, qPred), "jac_micro")
-      .filter(col("rank") <= 20)
-    val contrib = Seq(lex, jac)
+  /** RRF(k=60) over the BM25 top-20 and Jaccard top-20 lists of `d`,
+    * fused in micro-units (round(1e9/(60+rank)) per list, integer sum —
+    * order-free): (query_id, doc_id, rrf_micro, n_lists). */
+  private def rrfFused(d: DataFrame): DataFrame =
+    Seq(topByScore(bm25MicroScores(d, qPred), "score_micro", 20),
+        topByScore(jaccardMicroScores(d, qPred), "jac_micro", 20))
       .map(_.select(col("query_id"), col("doc_id"),
         round(lit(1e9) / (lit(60.0) + col("rank"))).cast("long").as("c")))
       .reduce(_ unionByName _)
-    val fused = contrib.groupBy("query_id", "doc_id")
+      .groupBy("query_id", "doc_id")
       .agg(sum("c").as("rrf_micro"), count(lit(1)).as("n_lists"))
-    rankBy(fused, "rrf_micro")
-      .filter(col("rank") <= 10)
+
+  /** Diversified top-5 (the "at most m per site" result-page rule, the
+    * cluster-capped cousin of MMR) of the `scored` docs of `d`: rank
+    * within (query, lang) first, cap at 2 per lang, then take the
+    * per-query top-5 of the survivors, both by (`score` desc, doc_id).
+    * Two windows, both query-partitioned (bounded frames); the lang
+    * attribute joins on the doc key — co-partitionable with the score
+    * frame at any scale. */
+  private def langCapped(scored: DataFrame, d: DataFrame,
+      score: String): DataFrame = {
+    val withLang = scored.join(d.select(col("doc_id"), col("lang")), "doc_id")
+    topByScore(topByScore(withLang, score, 2, Seq("query_id", "lang")),
+      score, 5)
+  }
+
+  /** The RRF top-10 per query of [[rrfFused]]. */
+  private val retrievalRrf: Q = (s, dir) =>
+    topByScore(rrfFused(docs(s, dir)), "rrf_micro", 10)
       .select("query_id", "rank", "doc_id", "rrf_micro", "n_lists")
       .orderBy("query_id", "rank")
-  }
 
   /** nDCG@10 of the Jaccard list against binary relevance = the BM25
     * top-5 (Järvelin & Kekäläinen TOIS 2002) — the rank-quality
@@ -590,10 +588,10 @@ object Retrieval {
     * not a dropped row. */
   private val retrievalNdcg: Q = (s, dir) => {
     val d = docs(s, dir)
-    val bm = rankBy(bm25MicroScores(d, qPred), "score_micro")
-    val rel = bm.filter(col("rank") <= 5).select("query_id", "doc_id")
-    val cand = rankBy(jaccardMicroScores(d, qPred), "jac_micro")
-      .filter(col("rank") <= 10).select("query_id", "doc_id", "rank")
+    val rel = topByScore(bm25MicroScores(d, qPred), "score_micro", 5)
+      .select("query_id", "doc_id")
+    val cand = topByScore(jaccardMicroScores(d, qPred), "jac_micro", 10)
+      .select("query_id", "doc_id", "rank")
     val disc = s.range(1, 11).toDF("rank")
       .withColumn("disc_micro",
         round((lit(1e6) * log(lit(2.0))) /
@@ -605,7 +603,7 @@ object Retrieval {
       .agg(count(lit(1)).as("n_rel_found"), sum("disc_micro").as("dcg_micro"))
     val idcg = disc.filter(col("rank") <= 5)
       .agg(sum("disc_micro").as("idcg_micro"))
-    bm.select("query_id").distinct()
+    rel.select("query_id").distinct()
       .join(dcg, Seq("query_id"), "left")
       .crossJoin(broadcast(idcg))
       .select(col("query_id"),
@@ -617,27 +615,14 @@ object Retrieval {
       .orderBy("query_id")
   }
 
-  /** Diversified top-k (the "at most m per site" result-page rule,
-    * the cluster-capped cousin of MMR): rank candidates within
-    * (query, group) first, cap at m per group, then take the global
-    * per-query top-5 of the survivors. Two windows, both
-    * query-partitioned (bounded frames); the group attribute joins on
-    * the doc key — co-partitionable with the score frame at any
-    * scale. The fixture groups by `lang` and caps at 2: English is
-    * 44% of the corpus, so the cap actually BINDS (a source-grouped
-    * fixture with 20 uniform sources never would) — a weaker
-    * other-lang doc outranks the third English one, and the spec pins
-    * that displacement. */
+  /** [[langCapped]] BM25. The fixture groups by `lang`: English is 44%
+    * of the corpus, so the cap actually BINDS (a source-grouped fixture
+    * with 20 uniform sources never would) — a weaker other-lang doc
+    * outranks the third English one, and the spec pins that
+    * displacement. */
   private val retrievalDiversified: Q = (s, dir) => {
     val d = docs(s, dir)
-    val scored = bm25MicroScores(d, qPred)
-      .join(d.select(col("doc_id"), col("lang")), "doc_id")
-    val capped = scored.withColumn("grp_rank", row_number().over(
-        Window.partitionBy("query_id", "lang")
-          .orderBy(col("score_micro").desc, col("doc_id"))).cast("int"))
-      .filter(col("grp_rank") <= 2)
-    rankBy(capped, "score_micro")
-      .filter(col("rank") <= 5)
+    langCapped(bm25MicroScores(d, qPred), d, "score_micro")
       .select("query_id", "rank", "doc_id", "lang", "score_micro")
       .orderBy("query_id", "rank")
   }
@@ -645,29 +630,13 @@ object Retrieval {
   /** End-to-end retrieval recipe, composed from the pieces above the
     * way a serving stack chains them (the retrieval twin of
     * [[Curation.pipelineE2e]]): BM25 top-20 ∪ Jaccard top-20 → RRF
-    * fuse → at most 2 per language → final top-5. Every stage reuses
-    * the SAME scoring pipelines the individual keys gate, and the
-    * oracle composes the same shared CTE texts — the composition
-    * cannot drift from its parts. */
+    * fuse ([[rrfFused]]) → at most 2 per language → final top-5
+    * ([[langCapped]]). Every stage is the one the individual keys
+    * gate, and the oracle composes the same shared CTE texts — the
+    * composition cannot drift from its parts. */
   private val retrievalPipeline: Q = (s, dir) => {
     val d = docs(s, dir)
-    val lex = rankBy(bm25MicroScores(d, qPred), "score_micro")
-      .filter(col("rank") <= 20)
-    val jac = rankBy(jaccardMicroScores(d, qPred), "jac_micro")
-      .filter(col("rank") <= 20)
-    val contrib = Seq(lex, jac)
-      .map(_.select(col("query_id"), col("doc_id"),
-        round(lit(1e9) / (lit(60.0) + col("rank"))).cast("long").as("c")))
-      .reduce(_ unionByName _)
-    val fused = contrib.groupBy("query_id", "doc_id")
-      .agg(sum("c").as("rrf_micro"), count(lit(1)).as("n_lists"))
-      .join(d.select(col("doc_id"), col("lang")), "doc_id")
-    val capped = fused.withColumn("grp_rank", row_number().over(
-        Window.partitionBy("query_id", "lang")
-          .orderBy(col("rrf_micro").desc, col("doc_id"))).cast("int"))
-      .filter(col("grp_rank") <= 2)
-    rankBy(capped, "rrf_micro")
-      .filter(col("rank") <= 5)
+    langCapped(rrfFused(d), d, "rrf_micro")
       .select("query_id", "rank", "doc_id", "lang", "rrf_micro", "n_lists")
       .orderBy("query_id", "rank")
   }
@@ -746,6 +715,37 @@ object Retrieval {
 
   private val qPredSql = "doc_id % 100 = 0 AND doc_id < 5000"
 
+  /** The [[rrfFused]] CTEs over `bm_ranked` and `jac_ranked`: `fused`
+    * (query_id, doc_id, rrf_micro, n_lists). */
+  private val rrfSql =
+    """contrib AS (
+      |  SELECT query_id, doc_id,
+      |    CAST(ROUND(1e9/(60 + rank)) AS BIGINT) AS c
+      |  FROM bm_ranked WHERE rank <= 20
+      |  UNION ALL
+      |  SELECT query_id, doc_id,
+      |    CAST(ROUND(1e9/(60 + rank)) AS BIGINT) AS c
+      |  FROM jac_ranked WHERE rank <= 20),
+      |fused AS (SELECT query_id, doc_id,
+      |    CAST(SUM(c) AS BIGINT) AS rrf_micro,
+      |    COUNT(*) AS n_lists
+      |  FROM contrib GROUP BY query_id, doc_id)""".stripMargin
+
+  /** The [[langCapped]] CTEs over the CTE `scored`: `capped`, its rows
+    * with their `lang`, at most 2 per (query, lang), ranked per query
+    * by (`score` desc, doc_id). */
+  private def langCappedSql(scored: String, score: String): String =
+    s"""grpd AS (
+       |  SELECT s.*, d.lang,
+       |    CAST(ROW_NUMBER() OVER (PARTITION BY s.query_id, d.lang
+       |      ORDER BY s.$score DESC, s.doc_id) AS INT) AS grp_rank
+       |  FROM $scored s JOIN documents d ON s.doc_id = d.doc_id),
+       |capped AS (
+       |  SELECT *,
+       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+       |      ORDER BY $score DESC, doc_id) AS INT) AS rank
+       |  FROM grpd WHERE grp_rank <= 2)""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "retrieval_bm25_topk" ->
       s"""WITH ${bm25PartsSql(qPredSql)}
@@ -760,45 +760,15 @@ object Retrieval {
     "retrieval_pipeline_e2e" ->
       s"""WITH ${bm25PartsSql(qPredSql)},
          |${jaccardPartsSql(qPredSql)},
-         |contrib AS (
-         |  SELECT query_id, doc_id,
-         |    CAST(ROUND(1e9/(60 + rank)) AS BIGINT) AS c
-         |  FROM bm_ranked WHERE rank <= 20
-         |  UNION ALL
-         |  SELECT query_id, doc_id,
-         |    CAST(ROUND(1e9/(60 + rank)) AS BIGINT) AS c
-         |  FROM jac_ranked WHERE rank <= 20),
-         |fused AS (SELECT c.query_id, c.doc_id,
-         |    CAST(SUM(c.c) AS BIGINT) AS rrf_micro,
-         |    COUNT(*) AS n_lists
-         |  FROM contrib c GROUP BY c.query_id, c.doc_id),
-         |langd AS (
-         |  SELECT f.*, d.lang,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY f.query_id, d.lang
-         |      ORDER BY f.rrf_micro DESC, f.doc_id) AS INT) AS grp_rank
-         |  FROM fused f JOIN documents d ON f.doc_id = d.doc_id),
-         |finald AS (
-         |  SELECT query_id, doc_id, lang, rrf_micro, n_lists,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY rrf_micro DESC, doc_id) AS INT) AS rank
-         |  FROM langd WHERE grp_rank <= 2)
+         |$rrfSql,
+         |${langCappedSql("fused", "rrf_micro")}
          |SELECT query_id, rank, doc_id, lang, rrf_micro, n_lists
-         |FROM finald WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+         |FROM capped WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
 
     "retrieval_diversified" ->
       s"""WITH ${bm25PartsSql(qPredSql)},
-         |grpd AS (
-         |  SELECT b.query_id, b.doc_id, d.lang, b.score_micro,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY b.query_id, d.lang
-         |      ORDER BY b.score_micro DESC, b.doc_id) AS INT) AS grp_rank
-         |  FROM bm_scored b JOIN documents d ON b.doc_id = d.doc_id),
-         |capped AS (SELECT * FROM grpd WHERE grp_rank <= 2),
-         |final AS (
-         |  SELECT query_id, doc_id, lang, score_micro,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY score_micro DESC, doc_id) AS INT) AS rank
-         |  FROM capped)
-         |SELECT query_id, rank, doc_id, lang, score_micro FROM final
+         |${langCappedSql("bm_scored", "score_micro")}
+         |SELECT query_id, rank, doc_id, lang, score_micro FROM capped
          |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
 
     "retrieval_ndcg" ->
@@ -832,18 +802,7 @@ object Retrieval {
     "retrieval_rrf_fusion" ->
       s"""WITH ${bm25PartsSql(qPredSql)},
          |${jaccardPartsSql(qPredSql)},
-         |contrib AS (
-         |  SELECT query_id, doc_id,
-         |    CAST(ROUND(1e9/(60 + rank)) AS BIGINT) AS c
-         |  FROM bm_ranked WHERE rank <= 20
-         |  UNION ALL
-         |  SELECT query_id, doc_id,
-         |    CAST(ROUND(1e9/(60 + rank)) AS BIGINT) AS c
-         |  FROM jac_ranked WHERE rank <= 20),
-         |fused AS (SELECT query_id, doc_id,
-         |    CAST(SUM(c) AS BIGINT) AS rrf_micro,
-         |    COUNT(*) AS n_lists
-         |  FROM contrib GROUP BY query_id, doc_id),
+         |$rrfSql,
          |rrf_ranked AS (SELECT query_id, doc_id, rrf_micro, n_lists,
          |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
          |    ORDER BY rrf_micro DESC, doc_id) AS INT) AS rank

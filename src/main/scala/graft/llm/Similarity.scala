@@ -20,49 +20,77 @@ import graft.Tables
   *  - hyperplanes/centroid assignment are md5-derived, so bucketing is
   *    deterministic and reproducible with no RNG state shipped.
   *
-  * Float-path functions (fast, codegen) serve production; the fixture
-  * queries run the same algorithms in micro-scaled exact integers so
-  * the DuckDB oracle matches bit-for-bit, every one of them through
-  * [[Dedup]]'s one micro-int cosine kernel ([[Dedup.microElems]],
-  * [[Dedup.dimJoinDots]] / [[Dedup.candidateDots]],
-  * [[Dedup.microCosine]]) and ranked by the one [[topK]].
+  * Float-path functions (fast, codegen) serve production through one
+  * float cosine kernel ([[normed]] rows, [[cosineOver]] pairs; [[sqL2]]
+  * is the one PQ distance); the fixture queries run the same algorithms
+  * in micro-scaled exact integers so the DuckDB oracle matches
+  * bit-for-bit, through [[Dedup]]'s one micro-int cosine kernel
+  * ([[Dedup.microElems]], [[Dedup.dimJoinDots]] /
+  * [[Dedup.candidateDots]], [[Dedup.microCosine]]). Every top-k cut
+  * here and in [[Retrieval]] is the one per-key rank [[topK]].
   */
 object Similarity {
 
   private def dotN(a: Column, b: Column): Column =
     graft.functions.DotProduct.dotNative(a, b)
 
+  /** The L2 norm of a float embedding. */
+  private def norm(e: Column): Column = sqrt(dotN(e, e))
+
+  /** Float cosine of two embeddings given their L2 norms: one codegen'd
+    * dot (bit-identical to the zip_with HOF form — see
+    * [[graft.functions.DotProduct]]) over the product of the norms. */
+  private def cosineOver(a: Column, b: Column, na: Column, nb: Column): Column =
+    dotN(a, b) / (na * nb)
+
+  /** `df`'s id and embedding as `id` and `emb`, its [[norm]] as
+    * `<emb>_norm`, then `extra`: one side of a [[cosineOver]] join, the
+    * norm taken once per ROW, not per pair (at |Q|·|C| pairs the hoist
+    * removes two thirds of the kernel work). */
+  private def normed(df: DataFrame, idCol: String, embCol: String,
+      id: String, emb: String, extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as(id), col(embCol).as(emb),
+      norm(col(embCol)).as(s"${emb}_norm")) ++ extra: _*)
+
+  /** [[cosineOver]] of two [[normed]] sides' embeddings `a` and `b`. */
+  private def normedCosine(a: String, b: String): Column =
+    cosineOver(col(a), col(b), col(s"${a}_norm"), col(s"${b}_norm"))
+
   /** Cosine similarity of two numeric-array columns in one row-local
-    * expression: native codegen dot products (bit-identical to the
-    * zip_with HOF form — see [[graft.functions.DotProduct]]) +
-    * per-side norms. */
+    * expression: [[cosineOver]] with each side's norm inline. */
   def cosine(a: Column, b: Column): Column =
-    dotN(a, b) / (sqrt(dotN(a, a)) * sqrt(dotN(b, b)))
+    cosineOver(a, b, norm(a), norm(b))
 
   /** Brute-force cosine top-k (float path): for each query vector, the
-    * k nearest corpus vectors by cosine, ties broken by corpus id.
-    * Each side's norm is computed once per ROW before the join (not
-    * once per pair — at |Q|·|C| pairs the hoist removes two thirds of
-    * the kernel work); the per-pair cost is one codegen'd dot. */
+    * k nearest corpus vectors by cosine, ties broken by corpus id. Both
+    * sides are [[normed]]; the per-pair cost is one codegen'd dot. */
   def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"),
-      sqrt(dotN(col(embCol), col(embCol))).as("q_norm"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(embCol).as("c_emb"),
-      sqrt(dotN(col(embCol), col(embCol))).as("c_norm"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        dotN(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-    topK(scored, k).select("query_id", "neighbor_id", "rank", "cosine")
+    val q = normed(queries, idCol, embCol, "query_id", "q_emb")
+    val c = normed(corpus, idCol, embCol, "neighbor_id", "c_emb")
+    annRows(c.crossJoin(broadcast(q)), k)
   }
 
-  /** The first `k` rows per `key` by (`score` desc, `tie`), numbered
-    * from 1 as `rank`. */
-  private def topK(scored: DataFrame, k: Int, key: String = "query_id",
-      tie: String = "neighbor_id", score: String = "cosine"): DataFrame =
+  /** The top `k` neighbors per query of a joined pair of [[normed]]
+    * sides (`q_emb`, `c_emb`), self-pairs excluded: (query_id,
+    * neighbor_id, rank, cosine). */
+  private def annRows(pairs: DataFrame, k: Int): DataFrame =
+    topNeighbors(pairs.filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cosine", normedCosine("q_emb", "c_emb")), k)
+
+  /** The top `k` per query of (query_id, neighbor_id, cosine) rows by
+    * (cosine desc, neighbor_id): (query_id, neighbor_id, rank, cosine). */
+  private def topNeighbors(scored: DataFrame, k: Int): DataFrame =
+    topK(scored, Seq("query_id"), k, col("cosine").desc, col("neighbor_id"))
+      .select("query_id", "neighbor_id", "rank", "cosine")
+
+  /** The per-key rank of every top-k cut in [[Similarity]] and
+    * [[Retrieval]]: the first `k` rows per `keys` by `order`, numbered
+    * from 1 as `rank` (an existing `rank` column is replaced). */
+  private[llm] def topK(scored: DataFrame, keys: Seq[String], k: Int,
+      order: Column*): DataFrame =
     scored.withColumn("rank", row_number().over(
-        Window.partitionBy(key).orderBy(col(score).desc, col(tie))))
+        Window.partitionBy(keys.map(col): _*).orderBy(order: _*)))
       .filter(col("rank") <= k)
 
   /** Driver-side twin of [[Dedup.md5Long]] (first 60 bits of the md5
@@ -119,17 +147,10 @@ object Similarity {
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       numPlanes: Int = 8, idCol: String = "vec_id",
       embCol: String = "embedding", dims: Int = 64): DataFrame = {
-    val cb = corpus.select(col(idCol).as("neighbor_id"), col(embCol).as("c_emb"),
-      hyperplaneBucket(col(embCol), numPlanes, dims).as("bucket"),
-      sqrt(dotN(col(embCol), col(embCol))).as("c_norm"))
-    val qb = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"),
-      hyperplaneBucket(col(embCol), numPlanes, dims).as("bucket"),
-      sqrt(dotN(col(embCol), col(embCol))).as("q_norm"))
-    val scored = cb.join(broadcast(qb), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        dotN(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-    topK(scored, k).select("query_id", "neighbor_id", "rank", "cosine")
+    val bucket = hyperplaneBucket(col(embCol), numPlanes, dims).as("bucket")
+    val cb = normed(corpus, idCol, embCol, "neighbor_id", "c_emb", bucket)
+    val qb = normed(queries, idCol, embCol, "query_id", "q_emb", bucket)
+    annRows(cb.join(broadcast(qb), Seq("bucket")), k)
   }
 
   /** Deterministic IVF centroid training: spark.ml KMeans with a fixed
@@ -159,22 +180,22 @@ object Similarity {
       .toDF(idCol, embCol)
   }
 
-  /** IVF: assign every vector to its nearest centroid (broadcast
-    * centroid join), producing a partition key for bucket-pruned
-    * search. Centroids are any small (id, embedding) frame — at scale,
-    * a [[trainCentroids]] k-means output or a deterministic sample. */
+  /** IVF: every corpus row with the `centroid_id` of its nearest
+    * centroid (broadcast centroid join) appended, a partition key for
+    * bucket-pruned search. Centroids are any small (id, embedding)
+    * frame — at scale, a [[trainCentroids]] k-means output or a
+    * deterministic sample. A corpus already [[normed]] in place (as in
+    * [[semanticDedup]]) keeps its norm column, computed once per row. */
   def ivfAssign(corpus: DataFrame, centroids: DataFrame,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val c = centroids.select(col(idCol).as("centroid_id"),
-      col(embCol).as("cent_emb"),
-      sqrt(dotN(col(embCol), col(embCol))).as("cent_norm"))
-    val scored = corpus
-      .withColumn("v_norm", sqrt(dotN(col(embCol), col(embCol))))
+    val c = normed(centroids, idCol, embCol, "centroid_id", "cent_emb")
+    val rest = corpus.columns
+      .filterNot(Set(idCol, embCol, s"${embCol}_norm")).map(col)
+    val scored = normed(corpus, idCol, embCol, idCol, embCol, rest.toSeq: _*)
       .crossJoin(broadcast(c))
-      .withColumn("sim", dotN(col(embCol), col("cent_emb")) /
-        (col("v_norm") * col("cent_norm")))
-    topK(scored, 1, idCol, "centroid_id", "sim")
-      .select(col(idCol), col(embCol), col("centroid_id"))
+      .withColumn("sim", normedCosine(embCol, "cent_emb"))
+    topK(scored, Seq(idCol), 1, col("sim").desc, col("centroid_id"))
+      .select(corpus.columns.map(col).toSeq :+ col("centroid_id"): _*)
   }
 
   // ------------------------------------- product quantization (PQ/ADC)
@@ -260,18 +281,20 @@ object Similarity {
     * (every partial stays below 2^53), so the oracle twin can compare
     * as BIGINT. Inputs: sv = (id, sub, sub_emb) from
     * [[pqSubVectors]]; codebooks = (sub, code, cb_emb). */
-  def pqEncode(sv: DataFrame, codebooks: DataFrame): DataFrame = {
-    val dist = aggregate(
-      zip_with(col("sub_emb"), col("cb_emb"), (a, b) =>
-        (a.cast("double") - b.cast("double")) *
-          (a.cast("double") - b.cast("double"))),
-      lit(0.0), (acc, x) => acc + x)
+  def pqEncode(sv: DataFrame, codebooks: DataFrame): DataFrame =
     sv.join(broadcast(codebooks), "sub")
-      .withColumn("dist", dist)
+      .withColumn("dist", sqL2)
       .groupBy("id", "sub")
       .agg(min(struct(col("dist"), col("code"))).as("best"))
       .select(col("id"), col("sub"), col("best.code").as("code"))
-  }
+
+  /** Squared L2 distance, in double, of a subvector `sub_emb` to a
+    * codeword `cb_emb`: the one distance of [[pqEncode]] and [[pqTopK]]. */
+  private def sqL2: Column = aggregate(
+    zip_with(col("sub_emb"), col("cb_emb"), (a, b) =>
+      (a.cast("double") - b.cast("double")) *
+        (a.cast("double") - b.cast("double"))),
+    lit(0.0), (acc, x) => acc + x)
 
   /** ADC (asymmetric distance) top-k: each query's exact distance to
     * every codeword is a tiny m·k-row table computed once; a corpus
@@ -281,21 +304,14 @@ object Similarity {
     * (query, vector). Ties break on (adist, id). */
   def pqTopK(encoded: DataFrame, codebooks: DataFrame, queriesSv: DataFrame,
       k: Int): DataFrame = {
-    val qdist = aggregate(
-      zip_with(col("sub_emb"), col("cb_emb"), (a, b) =>
-        (a.cast("double") - b.cast("double")) *
-          (a.cast("double") - b.cast("double"))),
-      lit(0.0), (acc, x) => acc + x)
     val tbl = queriesSv.join(broadcast(codebooks), "sub")
-      .withColumn("qdist", qdist)
+      .withColumn("qdist", sqL2)
       .select("query_id", "sub", "code", "qdist")
-    encoded.join(broadcast(tbl), Seq("sub", "code"))
+    val adc = encoded.join(broadcast(tbl), Seq("sub", "code"))
       .groupBy(col("query_id"), col("id"))
       .agg(sum("qdist").as("adist"))
       .filter(col("query_id") =!= col("id"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adist"), col("id"))))
-      .filter(col("rank") <= k)
+    topK(adc, Seq("query_id"), k, col("adist"), col("id"))
       .select(col("query_id"), col("id").as("neighbor_id"),
         col("rank"), col("adist"))
   }
@@ -319,9 +335,8 @@ object Similarity {
     * id_a the query and id_b the neighbor: the top `k` per query as
     * (query_id, neighbor_id, rank, cosine) in (query_id, rank) order. */
   private def annTopK(pairs: DataFrame, k: Int): DataFrame =
-    topK(pairs.select(col("id_a").as("query_id"),
+    topNeighbors(pairs.select(col("id_a").as("query_id"),
         col("id_b").as("neighbor_id"), col("cosine")), k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
       .orderBy("query_id", "rank")
 
   /** Exact micro-int cosine of every vector of `elems` to every centroid
@@ -337,7 +352,8 @@ object Similarity {
   /** The `n` nearest centroids of each vector of a [[centroidSims]]
     * frame: (id, centroid_id). */
   private def nearestCentroids(vcs: DataFrame, n: Int): DataFrame =
-    topK(vcs, n, "id", "centroid_id", "csim").select("id", "centroid_id")
+    topK(vcs, Seq("id"), n, col("csim").desc, col("centroid_id"))
+      .select("id", "centroid_id")
 
   /** Brute-force exact top-5 for query vectors vec_id % 50 = 0, micro-
     * int arithmetic so ranks and cosines hash-match the oracle. */
@@ -427,16 +443,14 @@ object Similarity {
   def semanticDedup(corpus: DataFrame, centroids: DataFrame,
       threshold: Double, idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val assigned = ivfAssign(corpus, centroids, idCol, embCol)
-      .withColumn("v_norm", sqrt(dotN(col(embCol), col(embCol))))
-    val a = assigned.select(col("centroid_id"), col(idCol).as("id_a"),
-      col(embCol).as("emb_a"), col("v_norm").as("norm_a"))
-    val b = assigned.select(col("centroid_id"), col(idCol).as("id_b"),
-      col(embCol).as("emb_b"), col("v_norm").as("norm_b"))
-    val dups = a.join(b, Seq("centroid_id"))
+    val assigned = ivfAssign(normed(corpus, idCol, embCol, idCol, embCol),
+      centroids, idCol, embCol)
+    def side(s: String) = assigned.select(col("centroid_id"),
+      col(idCol).as(s"id_$s"), col(embCol).as(s"emb_$s"),
+      col(s"${embCol}_norm").as(s"emb_${s}_norm"))
+    val dups = side("a").join(side("b"), Seq("centroid_id"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine",
-        dotN(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b")))
+      .withColumn("cosine", normedCosine("emb_a", "emb_b"))
       .filter(col("cosine") >= threshold)
       .select(col("id_b").as(idCol)).distinct()
     assigned.join(dups.withColumn("dup", lit(true)), Seq(idCol), "left")

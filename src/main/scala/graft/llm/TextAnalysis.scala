@@ -746,12 +746,7 @@ object TextAnalysis {
         count(lit(1)).as("n_distinct_words"),
         max("c").as("top_word_n"))
     val bigramStats = words
-      .select(col(idCol), explode(
-        when(size(col("ws")) >= 2,
-          transform(sequence(lit(1), size(col("ws")) - 1),
-            i => concat_ws(" ", element_at(col("ws"), i),
-              element_at(col("ws"), i + 1))))
-          .otherwise(array().cast("array<string>"))).as("b"))
+      .select(col(idCol), explode(bigramArrFromToks(col("ws"))).as("b"))
       .groupBy(idCol, "b").agg(count(lit(1)).as("c"))
       .groupBy(idCol)
       .agg(sum("c").as("n_bigrams"),
@@ -803,22 +798,6 @@ object TextAnalysis {
   private val textChunkOverlap: Q = (s, dir) =>
     chunkDocs(docs(s, dir), 32, 24).orderBy("doc_id", "chunk_id")
 
-  /** In-corpus bigram language-model scoring — the perplexity-filter
-    * quality facet (CCNet scores documents with a KenLM n-gram model;
-    * this operator trains the MLE bigram table from the corpus ITSELF
-    * and scores each document by its mean bigram probability, so "does
-    * this doc look like the corpus" needs no external model; to score
-    * against a reference corpus instead, train the `lm` frame there —
-    * the scoring join is identical). Probabilities stay in exact
-    * integer arithmetic (p_micro = ⌊10⁶·c(w1,w2)/c(w1·)⌋, summed as
-    * BIGINT) so the per-doc mean is partition-order-free and
-    * hash-matches the oracle; the final score divides two exact ints
-    * once. 100 TB shape: the bigram count groupBy has map-side combine
-    * (the skewed "of the" key collapses per-partition); the LM frame
-    * is distinct-bigrams-sized (sublinear in corpus volume) and
-    * BROADCAST back onto the occurrence stream, so — like [[idfScore]]
-    * — the corpus side never shuffles on a Zipf-skewed key; the final
-    * per-doc groupBy is on the unskewed doc id. */
   /** Row-local array of a document's word bigrams as "w1 w2" strings —
     * tokens contain no whitespace, so the joined string is an
     * injective bigram key. Empty for docs with fewer than two words.
@@ -828,7 +807,7 @@ object TextAnalysis {
     * every bigram — O(len²)/doc, measured 21.5 s vs 1.8 s for
     * text_lm_score on the sf0.1 corpus; the multi-reference keeps
     * CollapseProject from re-inlining the projection). */
-  private def bigramArrFromToks(toks: Column): Column =
+  private[llm] def bigramArrFromToks(toks: Column): Column =
     when(size(toks) >= 2,
       transform(sequence(lit(1), size(toks) - 1),
         i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1))))
@@ -873,6 +852,22 @@ object TextAnalysis {
           .as("lm_score"))
   }
 
+  /** In-corpus bigram language-model scoring — the perplexity-filter
+    * quality facet (CCNet scores documents with a KenLM n-gram model;
+    * this operator trains the MLE bigram table from the corpus ITSELF
+    * and scores each document by its mean bigram probability, so "does
+    * this doc look like the corpus" needs no external model; to score
+    * against a reference corpus instead, train the `lm` frame there —
+    * the scoring join is identical). Probabilities stay in exact
+    * integer arithmetic (p_micro = ⌊10⁶·c(w1,w2)/c(w1·)⌋, summed as
+    * BIGINT) so the per-doc mean is partition-order-free and
+    * hash-matches the oracle; the final score divides two exact ints
+    * once. 100 TB shape: the bigram count groupBy has map-side combine
+    * (the skewed "of the" key collapses per-partition); the LM frame
+    * is distinct-bigrams-sized (sublinear in corpus volume) and
+    * BROADCAST back onto the occurrence stream, so — like [[idfScore]]
+    * — the corpus side never shuffles on a Zipf-skewed key; the final
+    * per-doc groupBy is on the unskewed doc id. */
   def lmScore(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
     scoreBigrams(df, trainBigramLm(df, textCol), idCol, textCol)

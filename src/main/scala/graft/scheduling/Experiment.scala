@@ -12,12 +12,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Experiment {
 
+  /** One run's outcome; `slotSec` is the CI profile's slot length. */
   case class Result(name: String, label: String, scheduler: String,
       oracle: Boolean, carbonTotalGco2: Double, makespanSlots: Int,
-      makespanSeconds: Double, numQueries: Int, powerKw: Double) {
+      slotSec: Double, numQueries: Int, powerKw: Double) {
+    def makespanSeconds: Double = makespanSlots * slotSec
     def summary: Map[String, Any] = Schedulers.summarize(name, label,
       scheduler, oracle, carbonTotalGco2, makespanSlots, numQueries,
-      makespanSeconds / math.max(makespanSlots, 1), powerKw)
+      slotSec, powerKw)
   }
 
   /** Makespan fold under max(pred, actual) blocking
@@ -49,9 +51,8 @@ object Experiment {
     }
     val carbon = Schedulers.realisedCarbonSequential(wl, schedule, profile,
       powerKw)
-    val mk = makespanSlots(wl, schedule)
-    Result(name, label, scheduler, oracle, carbon, mk,
-      mk * profile.slotSec, wl.size, powerKw)
+    Result(name, label, scheduler, oracle, carbon,
+      makespanSlots(wl, schedule), profile.slotSec, wl.size, powerKw)
   }
 
   /** Results → tagged frame with overhead_vs_oracle

@@ -25,19 +25,25 @@ object Workload {
       addVariance: Double = 1.0): Int =
     math.max(1, (math.ceil(runtimeSeconds / slotSec) * addVariance).toInt)
 
+  /** The most queries one (driver-collected) workload may carry. */
+  private val MaxQueries = 100000
+
   /** Build the workload from a (prediction, label) frame — the shape of
     * the RF/GNN `values.csv` (workload.py `from_values_csv`). Row order
-    * of the input defines arrival order and the q<i> ids. */
+    * of the input defines arrival order and the q<i> ids. Collects the
+    * first `limit` rows; more than [[MaxQueries]] fails fast. */
   def fromValues(df: DataFrame, slotSec: Double,
       limit: Option[Int] = None, addVariance: Double = 1.0): Seq[SchedQuery] = {
-    val rows = df.select(col("prediction").cast("double"),
-        col("label").cast("double")).collect()
-    val qs = rows.zipWithIndex.map { case (r, i) =>
-      SchedQuery(s"q$i",
-        runtimeToSlots(r.getDouble(0), slotSec, addVariance),
-        runtimeToSlots(r.getDouble(1), slotSec))
-    }.toSeq
-    limit.fold(qs)(qs.take)
+    val values = df.select(col("prediction").cast("double"),
+      col("label").cast("double"))
+    graft.Collect.collectBounded(limit.fold(values)(values.limit),
+        MaxQueries, s"Workload.fromValues: the values frame (pass a " +
+          s"queryLimit of at most $MaxQueries)")
+      .toSeq.zipWithIndex.map { case (r, i) =>
+        SchedQuery(s"q$i",
+          runtimeToSlots(r.getDouble(0), slotSec, addVariance),
+          runtimeToSlots(r.getDouble(1), slotSec))
+      }
   }
 
   /** Perfect-predictor view: pred := actual (workload.py `oracle_view`). */

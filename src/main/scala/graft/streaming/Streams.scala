@@ -111,19 +111,20 @@ object Streams {
     * pair's shingle sets, so the union of per-batch outputs over ANY
     * micro-batch split of an ingest equals
     * [[graft.llm.Dedup.incrementalLshPairsFromIndex]] over the whole
-    * ingest at once. */
+    * ingest at once. The MinHash parameters are read from
+    * `<prefix>_meta` once, when the stream starts. */
   def startDedupIndexProbe(docs: DataFrame, prefix: String,
-      outPath: String, checkpoint: String, threshold: Double = 0.5,
-      numHashes: Int = 16, rowsPerBand: Int = 4, k: Int = 9) =
+      outPath: String, checkpoint: String, threshold: Double = 0.5) = {
+    val params = graft.llm.Dedup.dedupIndexParams(docs.sparkSession, prefix)
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         writeBatchIdempotent(
-          graft.llm.Dedup.incrementalLshPairsFromIndex(prefix, batch,
-            threshold, numHashes, rowsPerBand, k),
+          graft.llm.Dedup.probeDedupIndex(prefix, batch, threshold, params),
           batchId, outPath)
       }
       .start()
+  }
 
   /** Streaming probe of the STANDING sign-LSH embedding index
     * ([[graft.llm.Dedup.writeCosineIndex]]) — the dense-vector twin of

@@ -35,7 +35,6 @@ class CollectSpec extends SparkSpec {
     * [[Collect.collectBounded]] with a stated bound. */
   private val bareCollects: Map[String, Int] = Map(
     "Collect.scala" -> 2,
-    "Workload.scala" -> 1,
     "WorkloadRunner.scala" -> 1)
 
   test("the source check counts .collect() and head() of a collect_set/collect_list") {

@@ -603,16 +603,17 @@ class LlmSpec extends SparkSpec {
     }
   }
 
+  /** Row count and an order-insensitive hash of the rows: a moved
+    * score bit, rank or flag changes the sum. */
+  private def digest(df: org.apache.spark.sql.DataFrame): String = {
+    val r = df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*)
+        .cast("decimal(38,0)").as("h"))
+      .agg(count(lit(1)), sum("h")).head()
+    s"${r.getLong(0)}:${r.getDecimal(1)}"
+  }
+
   test("micro-int cosine keys match their pinned sf0.001 digests") {
-    // row count and an order-insensitive hash of the rows, recorded
-    // before the cosine family shared one kernel: a moved cosine bit,
-    // rank or kept flag changes the sum
-    def digest(df: org.apache.spark.sql.DataFrame): String = {
-      val r = df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*)
-          .cast("decimal(38,0)").as("h"))
-        .agg(count(lit(1)), sum("h")).head()
-      s"${r.getLong(0)}:${r.getDecimal(1)}"
-    }
+    // recorded before the cosine family shared one kernel
     val pinned = Map(
       "ann_brute_force" -> "20:-21606867472008952511",
       "ann_lsh_bucketed" -> "2:13865437627907908659",
@@ -624,6 +625,61 @@ class LlmSpec extends SparkSpec {
       "dedup_embedding_cosine" -> "40:20723854025750686344",
       "dedup_embedding_incremental" -> "40:20723854025750686344",
       "dedup_cosine_clusters" -> "80:16711686399932174909")
+    val got = pinned.keys.map(k =>
+      k -> digest(graft.SparkEntry.queries(k)(spark, sfSmoke))).toMap
+    assert(got === pinned)
+  }
+
+  test("float search paths match their pinned sf0.001 digests") {
+    // recorded before the float cosine, the per-key rank and the BM25
+    // term rule were each written once
+    val base = Tables.load(spark, sfSmoke, "embeddings")
+      .select("vec_id", "embedding")
+    val emb = base.unionByName(base.filter(col("vec_id") % 5 === 0)
+      .select((col("vec_id") + 10000).as("vec_id"),
+        transform(col("embedding"), e => e + 0.001).as("embedding")))
+    val qv = emb.filter(col("vec_id") % 50 === 0)
+    val cents = base.filter(col("vec_id") % 50 === 1)
+    val docs = Tables.load(spark, sfSmoke, "documents").select("doc_id", "text")
+    val qd = docs.filter(col("doc_id") % 25 === 0)
+      .select(col("doc_id").as("query_id"), col("text"))
+    Retrieval.writePostingsIndex(docs, "bm25_idx_pin", numBuckets = 8)
+    val pinned = Map(
+      "cosineTopK" -> "100:-32024390610634950962",
+      "lshTopK" -> "100:-47272920950363586173",
+      "ivfAssign" -> "600:-172110064278354062143",
+      "semanticDedup" -> "600:164031729370618368508",
+      "pqSearch" -> "100:-96740970593872666240",
+      "bm25TopK" -> "100:9472440500838992646",
+      "bm25TopKFromIndex" -> "100:-78079507808492789852",
+      "bm25TopKFromIndexTwoPhase" -> "100:51348794933952959054")
+    val got = Map(
+      "cosineTopK" -> Similarity.cosineTopK(emb, qv, 5),
+      "lshTopK" -> Similarity.lshTopK(emb, qv, 5, numPlanes = 4),
+      "ivfAssign" -> Similarity.ivfAssign(emb, cents),
+      "semanticDedup" -> Similarity.semanticDedup(emb, cents, 0.9),
+      "pqSearch" -> Similarity.pqSearch(emb, qv, 5),
+      // its float partials are summed across shuffle partitions, so the
+      // last bits of bm25 move with the partition count: pinned to 1e-9
+      "bm25TopK" -> Retrieval.bm25TopK(docs, qd, 5)
+        .withColumn("bm25", round(col("bm25"), 9)),
+      "bm25TopKFromIndex" -> Retrieval.bm25TopKFromIndex("bm25_idx_pin", qd, 5),
+      "bm25TopKFromIndexTwoPhase" ->
+        Retrieval.bm25TopKFromIndexTwoPhase("bm25_idx_pin", qd, 5))
+      .map { case (k, df) => k -> digest(df) }
+    assert(got === pinned)
+  }
+
+  test("retrieval keys match their pinned sf0.001 digests") {
+    // recorded before the per-key rank, the RRF fusion and the per-lang
+    // cap were each written once
+    val pinned = Map(
+      "retrieval_bm25_topk" -> "25:22285034862922955266",
+      "retrieval_jaccard_topk" -> "25:35639612075465136332",
+      "retrieval_rrf_fusion" -> "50:-2073028168001755196",
+      "retrieval_ndcg" -> "5:-144006493527022934",
+      "retrieval_diversified" -> "25:26690143238471149911",
+      "retrieval_pipeline_e2e" -> "25:-20159229502287826128")
     val got = pinned.keys.map(k =>
       k -> digest(graft.SparkEntry.queries(k)(spark, sfSmoke))).toMap
     assert(got === pinned)
@@ -825,6 +881,15 @@ class LlmSpec extends SparkSpec {
     val plan = Similarity.semanticDedup(corpus, centroids, 0.95)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), "no all-pairs plan")
+    // the assignment is read three times (both pair sides, the keep
+    // join), each norming the vectors and the centroids once: no second
+    // vector norm above the assignment window
+    val emb = Tables.load(spark, sfSmoke, "embeddings")
+      .select("vec_id", "embedding")
+    val optimized = Similarity.semanticDedup(emb,
+        emb.filter(col("vec_id") % 50 === 1), 0.95)
+      .queryExecution.optimizedPlan.toString
+    assert("SQRT\\(dot_native".r.findAllIn(optimized).length === 6, optimized)
   }
 
   test("pqSearch: trained codebooks are deterministic and find cluster-mates") {
@@ -970,6 +1035,25 @@ class LlmSpec extends SparkSpec {
         s"stored side must scan bucketed:\n$plan")
     } finally
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("standing dedup index: the probe signs under the writer's pinned MinHash parameters") {
+    val mk = (s: String) => s + " lorem ipsum dolor sit amet common pad"
+    val old = textDf(
+      (1L, mk("alpha bravo charlie delta echo foxtrot")),
+      (3L, mk("zulu yankee xray whiskey victor uniform")))
+    val batch = textDf(
+      (10L, mk("alpha bravo charlie delta echo foxtrot golf")),
+      (11L, mk("golf hotel india juliett kilo lima")))
+    Dedup.writeDedupIndex(old, "dedup_idx_p", numHashes = 8, rowsPerBand = 2,
+      k = 5, numBuckets = 8)
+    val meta = spark.table("dedup_idx_p_meta").head()
+    assert((meta.getInt(0), meta.getInt(1), meta.getInt(2)) === ((8, 2, 5)))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("id_a", "id_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val viaIndex = rows(Dedup.incrementalLshPairsFromIndex("dedup_idx_p", batch, 0.3))
+    assert(viaIndex === rows(Dedup.incrementalLshPairs(old, batch, 0.3, 8, 2, 5)))
+    assert(viaIndex.map(r => (r._1, r._2)) === Seq((1L, 10L)))
   }
 
   test("standing dedup index: probe equals direct incremental; stored side unshuffled") {

@@ -59,6 +59,25 @@ class ExperimentSpec extends SparkSpec {
       / oracle.carbonTotalGco2)
   }
 
+  test("an empty values frame reports the profile's slot length") {
+    val ci = Array.fill(100)(300.0)
+    val p = Schedulers.CarbonProfileMicro.fromCi(ci, slotSec = 60.0)
+    val r = Experiment.run(valuesFrame.limit(0), p, "fifo")
+    assert(r.numQueries === 0 && r.makespanSlots === 0)
+    assert(r.summary("slot_length_sec") === 60.0)
+    assert(r.summary("makespan_seconds") === 0.0)
+  }
+
+  test("fromValues fails fast on a frame over 100,000 queries, naming queryLimit") {
+    val over = spark.range(100001L).select(col("id").cast("double").as("prediction"),
+      col("id").cast("double").as("label"))
+    val e = intercept[IllegalArgumentException](Workload.fromValues(over, 1.0))
+    assert(e.getMessage.contains("Workload.fromValues: the values frame (pass a " +
+      "queryLimit of at most 100000): more than 100000 rows"), e.getMessage)
+    assert(Workload.fromValues(over, 1.0, limit = Some(3)).map(_.id) ===
+      Seq("q0", "q1", "q2"))
+  }
+
   test("summary map carries the reference's fields") {
     val r = Experiment.run(valuesFrame, profile, "fifo")
     val s = r.summary
