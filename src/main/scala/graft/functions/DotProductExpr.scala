@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -120,9 +120,4 @@ object DotProduct {
   def dotNative(a: Column, b: Column): Column =
     ColumnBridge.column(
       DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** SQL registration: `dot_native(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_native", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -20,8 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `java.text.Normalizer` call. DuckDB twin: `nfc_normalize(text)` —
   * both sides implement Unicode canonical composition, so planted
   * combining-mark fixtures hash-match. Codegen'd (a static call inside
-  * whole-stage codegen), usable from SQL via [[NfcNormalize.register]]
-  * or [[graft.plans.GraftExtensions]].
+  * whole-stage codegen), usable from SQL via [[graft.plans.GraftExtensions]].
   */
 case class NfcNormalize(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
@@ -65,9 +64,4 @@ object NfcNormalize {
   /** Column-API entry point. */
   def nfcNormalize(c: Column): Column =
     ColumnBridge.column(NfcNormalize(ColumnBridge.expression(c)))
-
-  /** SQL registration: `nfc_normalize_native(col)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize_native", exprs => NfcNormalize(exprs.head), "built-in")
 }

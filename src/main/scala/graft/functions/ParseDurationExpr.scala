@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -54,9 +54,4 @@ object ParseDuration {
   /** Column-API entry point. */
   def parseDuration(c: Column): Column =
     ColumnBridge.column(ParseDuration(ColumnBridge.expression(c)))
-
-  /** SQL registration: `parse_duration_native(col)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parse_duration_native", exprs => ParseDuration(exprs.head), "builtin")
 }

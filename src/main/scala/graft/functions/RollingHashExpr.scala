@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -78,9 +78,4 @@ object RollingHash {
   /** Column-API entry point. */
   def rollingHashNative(c: Column): Column =
     ColumnBridge.column(RollingHash(ColumnBridge.expression(c)))
-
-  /** SQL registration: `rolling_hash_native(col)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash_native", exprs => RollingHash(exprs.head), "built-in")
 }

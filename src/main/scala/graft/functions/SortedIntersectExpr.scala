@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -131,10 +131,4 @@ object SortedIntersectSize {
   def sortedIntersectSize(a: Column, b: Column): Column =
     ColumnBridge.column(
       SortedIntersectSize(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** SQL registration: `sorted_intersect_size(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_size",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)), "built-in")
 }

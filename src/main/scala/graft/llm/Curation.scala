@@ -40,12 +40,11 @@ object Curation {
     * previous sample (bucket ordering is stable), which is what makes
     * staged data ablations comparable. */
   def stratifiedSample(df: DataFrame, rates: Seq[(String, Int)],
-      defaultRate: Int, stratumCol: String = "lang",
-      idCol: String = "doc_id"): DataFrame = {
+      defaultRate: Int): DataFrame = {
     val rate = rates.foldRight(lit(defaultRate): Column) {
-      case ((stratum, r), acc) => when(col(stratumCol) === stratum, lit(r)).otherwise(acc)
+      case ((stratum, r), acc) => when(col("lang") === stratum, lit(r)).otherwise(acc)
     }
-    df.withColumn("bucket", hashBucket("samp:", col(idCol), 100))
+    df.withColumn("bucket", hashBucket("samp:", col("doc_id"), 100))
       .filter(col("bucket") < rate)
   }
 
@@ -54,26 +53,24 @@ object Curation {
     * id-hash basis-point bucket falls below round(score * 10000). High
     * quality survives at score-rate, junk at junk-rate; still fully
     * deterministic and map-only (score and hash are row-local). */
-  def qualityWeightedSample(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val score = TextAnalysis.qualityColumns(col(textCol))
+  def qualityWeightedSample(df: DataFrame): DataFrame = {
+    val score = TextAnalysis.qualityColumns(col("text"))
       .toMap.apply("quality_score")
     df.withColumn("keep_bp", round(score * 10000).cast("long"))
-      .filter(hashBucket("qsamp:", col(idCol), 10000) < col("keep_bp"))
+      .filter(hashBucket("qsamp:", col("doc_id"), 10000) < col("keep_bp"))
   }
 
   // ----------------------------------------------------- train split
 
   /** Reproducible train/val/test assignment by id-hash bucket
-    * (0-999): < `trainPermille` -> train, < `trainPermille +
-    * valPermille` -> val, else test. A document's split never changes
-    * as the corpus grows — the standard leak-proof split contract. */
-  def splitAssign(df: DataFrame, trainPermille: Int = 800,
-      valPermille: Int = 100, idCol: String = "doc_id"): DataFrame =
-    df.withColumn("bucket", hashBucket("split:", col(idCol), 1000))
+    * (0-999): < 800 -> train, < 900 -> val, else test. A document's
+    * split never changes as the corpus grows — the standard leak-proof
+    * split contract. */
+  def splitAssign(df: DataFrame): DataFrame =
+    df.withColumn("bucket", hashBucket("split:", col("doc_id"), 1000))
       .withColumn("split",
-        when(col("bucket") < trainPermille, "train")
-          .when(col("bucket") < trainPermille + valPermille, "val")
+        when(col("bucket") < 800, "train")
+          .when(col("bucket") < 900, "val")
           .otherwise("test"))
 
   // -------------------------------------------------- balanced mixing
@@ -83,11 +80,10 @@ object Curation {
     * |source_s|), selection again by id-hash fraction. One tiny
     * per-source count aggregate is broadcast back onto the scan —
     * at 100 TB the big side never shuffles. */
-  def uniformMix(df: DataFrame, targetPerSource: Double,
-      sourceCol: String = "source", idCol: String = "doc_id"): DataFrame = {
-    val counts = df.groupBy(sourceCol).agg(count(lit(1)).as("src_cnt"))
-    val frac = hashBucket("mix:", col(idCol), 10000) / lit(10000.0)
-    df.join(broadcast(counts), sourceCol)
+  def uniformMix(df: DataFrame, targetPerSource: Double): DataFrame = {
+    val counts = df.groupBy("source").agg(count(lit(1)).as("src_cnt"))
+    val frac = hashBucket("mix:", col("doc_id"), 10000) / lit(10000.0)
+    df.join(broadcast(counts), "source")
       .filter(frac < least(lit(1.0), lit(targetPerSource) / col("src_cnt")))
   }
 
@@ -102,13 +98,11 @@ object Curation {
     * selection. Use [[tokenBudgetPack]] when the budget is a hard
     * ceiling. Same 100 TB shape as [[uniformMix]]: one tiny
     * per-source size aggregate broadcast back onto the scan. */
-  def tokenBudgetMix(df: DataFrame, budgetChars: Double,
-      sourceCol: String = "source", idCol: String = "doc_id",
-      sizeCol: String = "n_chars"): DataFrame = {
-    val sizes = df.groupBy(sourceCol)
-      .agg(sum(col(sizeCol)).cast("long").as("src_chars"))
-    val frac = hashBucket("tbmix:", col(idCol), 10000) / lit(10000.0)
-    df.join(broadcast(sizes), sourceCol)
+  def tokenBudgetMix(df: DataFrame, budgetChars: Double): DataFrame = {
+    val sizes = df.groupBy("source")
+      .agg(sum(col("n_chars")).cast("long").as("src_chars"))
+    val frac = hashBucket("tbmix:", col("doc_id"), 10000) / lit(10000.0)
+    df.join(broadcast(sizes), "source")
       .filter(frac < least(lit(1.0), lit(budgetChars) / col("src_chars")))
   }
 
@@ -117,25 +111,24 @@ object Curation {
     * order documents by an independent id-hash (a deterministic
     * shuffle, so the surviving prefix is an unbiased sample) and keep
     * a document iff the running char offset BEFORE it is still under
-    * the stream's share (budget / shards) — the [[packSequences]]
+    * the stream's share (budget / 4 shards) — the [[packSequences]]
     * running-offset contract applied as a cutoff. Per-source
-    * surviving volume is < budget + shards × max_doc_size, i.e. the
+    * surviving volume is < budget + 4 × max_doc_size, i.e. the
     * overshoot is bounded by ONE document per stream rather than
     * [[tokenBudgetMix]]'s unbounded expectation variance. The window
     * is per (source, shard) — shard-parallel at 100 TB like every
     * packer window here; membership is stable under corpus growth
     * only for the already-selected prefix (appended docs can displace
     * later hash positions — a cap is inherently order-coupled). */
-  def tokenBudgetPack(df: DataFrame, budgetChars: Long, shards: Int = 4,
-      sourceCol: String = "source", idCol: String = "doc_id",
-      sizeCol: String = "n_chars"): DataFrame = {
+  def tokenBudgetPack(df: DataFrame, budgetChars: Long): DataFrame = {
+    val shards = 4
     val perShard = budgetChars / shards
-    val w = Window.partitionBy(col(sourceCol), col("shard"))
-      .orderBy(col("ord"), col(idCol))
+    val w = Window.partitionBy(col("source"), col("shard"))
+      .orderBy(col("ord"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    df.withColumn("shard", hashBucket("tbshard:", col(idCol), shards))
-      .withColumn("ord", hashBucket("tbord:", col(idCol), 1000000))
-      .withColumn("start_off", coalesce(sum(col(sizeCol)).over(w), lit(0L)))
+    df.withColumn("shard", hashBucket("tbshard:", col("doc_id"), shards))
+      .withColumn("ord", hashBucket("tbord:", col("doc_id"), 1000000))
+      .withColumn("start_off", coalesce(sum(col("n_chars")).over(w), lit(0L)))
       .filter(col("start_off") < perShard)
       .drop("ord", "start_off")
   }
@@ -155,17 +148,16 @@ object Curation {
     * threshold apart — never observed across the fixture gates; if a
     * flake ever appears, precompute keep_bp on the driver from exact
     * counts and inject it as a literal map on both engines. */
-  def temperatureMix(df: DataFrame, alpha: Double, totalTarget: Double,
-      domainCol: String = "lang", idCol: String = "doc_id"): DataFrame = {
-    val counts = df.groupBy(domainCol).agg(count(lit(1)).as("dom_cnt"))
+  def temperatureMix(df: DataFrame, alpha: Double, totalTarget: Double): DataFrame = {
+    val counts = df.groupBy("lang").agg(count(lit(1)).as("dom_cnt"))
     val z = counts.agg(sum(pow(col("dom_cnt"), alpha)).as("z"))
     val rates = counts.crossJoin(broadcast(z))
       .withColumn("keep_bp", least(lit(10000L), round(
         lit(totalTarget) * pow(col("dom_cnt"), alpha) / col("z")
           / col("dom_cnt") * 10000).cast("long")))
-      .select(col(domainCol), col("keep_bp"))
-    df.join(broadcast(rates), domainCol)
-      .filter(hashBucket("tmix:", col(idCol), 10000) < col("keep_bp"))
+      .select(col("lang"), col("keep_bp"))
+    df.join(broadcast(rates), "lang")
+      .filter(hashBucket("tmix:", col("doc_id"), 10000) < col("keep_bp"))
   }
 
   // ----------------------------------------- length histogram
@@ -178,12 +170,11 @@ object Curation {
     * could. One (source, bucket) groupBy; the frame is
     * sources × log(max-doc-length) rows — report-sized at any corpus
     * scale, map-side combine does the volume work. */
-  def lengthHistogram(df: DataFrame, sourceCol: String = "source",
-      sizeCol: String = "n_chars"): DataFrame =
-    df.groupBy(col(sourceCol),
-        (length(bin(col(sizeCol))) - 1).cast("long").as("log2_bucket"))
+  def lengthHistogram(df: DataFrame): DataFrame =
+    df.groupBy(col("source"),
+        (length(bin(col("n_chars"))) - 1).cast("long").as("log2_bucket"))
       .agg(count(lit(1)).as("n_docs"),
-        sum(col(sizeCol)).cast("long").as("total_chars"))
+        sum(col("n_chars")).cast("long").as("total_chars"))
       .withColumn("bucket_lo",
         expr("CAST(shiftleft(CAST(1 AS BIGINT), " +
           "CAST(log2_bucket AS INT)) AS BIGINT)"))
@@ -201,12 +192,11 @@ object Curation {
     * window must sort each source's full extent — is asserted inside a
     * ±4-rank value band ([[graft.operators.Advanced]]'s
     * agg_approx_quantile discipline). */
-  def qualityThreshold(df: DataFrame, keepFrac: Double = 0.2,
-      sourceCol: String = "source", textCol: String = "text"): DataFrame = {
+  def qualityThreshold(df: DataFrame, keepFrac: Double = 0.2): DataFrame = {
     val q = 1.0 - keepFrac
-    val score = TextAnalysis.qualityColumns(col(textCol))
+    val score = TextAnalysis.qualityColumns(col("text"))
       .toMap.apply("quality_score")
-    val ranked = df.select(col(sourceCol).as("src"), score.as("v"))
+    val ranked = df.select(col("source").as("src"), score.as("v"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("src").orderBy("v")))
       .withColumn("n", count(lit(1)).over(Window.partitionBy("src")))
@@ -219,7 +209,7 @@ object Curation {
         max(when(col("rn") === least(col("n"), target + 4), col("v")))
           .as("hi"),
         percentile_approx(col("v"), lit(q), lit(10000)).as("approx"))
-      .select(col("src").as(sourceCol), col("n_docs"), col("exact_cutoff"),
+      .select(col("src").as("source"), col("n_docs"), col("exact_cutoff"),
         (col("approx") >= col("lo") && col("approx") <= col("hi"))
           .as("cutoff_within_tol"))
   }
@@ -257,10 +247,9 @@ object Curation {
     * arithmetic, bit-identical thresholds.)
     * Documents with no bigrams (< 2 words) cannot be assessed and are
     * bucketed 'tail'. */
-  def perplexityBuckets(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val scored = withScoreMicro(TextAnalysis.lmScore(df, idCol, textCol))
-    assignPerplexityBuckets(scored, perplexityThresholds(scored), idCol)
+  def perplexityBuckets(df: DataFrame): DataFrame = {
+    val scored = withScoreMicro(TextAnalysis.lmScore(df))
+    assignPerplexityBuckets(scored, perplexityThresholds(scored))
   }
 
   /** Exact integer per-doc LM score key (null when unassessable). */
@@ -314,10 +303,9 @@ object Curation {
   }
 
   /** Map-only bucket assignment against a broadcast threshold frame. */
-  private def assignPerplexityBuckets(scored: DataFrame, th: DataFrame,
-      idCol: String): DataFrame =
+  private def assignPerplexityBuckets(scored: DataFrame, th: DataFrame): DataFrame =
     scored.crossJoin(broadcast(th))
-      .select(col(idCol), col("n_bigrams"), col("score_micro"),
+      .select(col("doc_id"), col("n_bigrams"), col("score_micro"),
         when(col("score_micro").isNull, lit("tail"))
           .when(col("score_micro") <= col("t1"), lit("tail"))
           .when(col("score_micro") <= col("t2"), lit("middle"))
@@ -338,7 +326,7 @@ object Curation {
     * Relational shape at 100 TB: one map-only bigram explode + md5
     * bucket ([[hashBucket]], engine-portable); ONE bucket-key groupBy
     * computes target and raw counts as conditional sums (the bucket
-    * frame has `buckets` rows — fixed and tiny); per-bucket Laplace
+    * frame has [[DsirBuckets]] rows — fixed and tiny); per-bucket Laplace
     * (+1)-smoothed log-ratios are rounded to integer 1e-4-nat units
     * and BROADCAST back onto the occurrence stream — the Zipf-skewed
     * gram key never drives a shuffled join (the [[TextAnalysis.idfScore]]
@@ -354,28 +342,28 @@ object Curation {
     * units, selected = logw_u > 0 (more target-like than raw-like).
     * Docs with < 2 words have no bigrams: n_grams 0, logw_u 0, not
     * selected. */
-  def importanceResample(df: DataFrame, isTarget: Column,
-      buckets: Int = 256, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    scoreImportance(df, importanceTable(df, isTarget, buckets, textCol),
-      buckets, idCol, textCol)
+  def importanceResample(df: DataFrame, isTarget: Column): DataFrame =
+    scoreImportance(df, importanceTable(df, isTarget))
 
-  /** Lowercased word-bigram occurrences of `df` hashed into `buckets`
-    * — the shared feature extraction of [[importanceTable]] (training)
-    * and [[scoreImportance]] (scoring). Map-only. */
-  private def dsirOccurrences(df: DataFrame, extra: Seq[Column],
-      buckets: Int, textCol: String): DataFrame = {
+  /** The hashed-bigram feature space of [[importanceResample]]. */
+  private val DsirBuckets = 256
+
+  /** Lowercased word-bigram occurrences of `df` hashed into
+    * [[DsirBuckets]] buckets — the shared feature extraction of
+    * [[importanceTable]] (training) and [[scoreImportance]] (scoring).
+    * Map-only. */
+  private def dsirOccurrences(df: DataFrame, extra: Seq[Column]): DataFrame = {
     // Materialize the token array BEFORE the bigram transform: with the
     // tokenizer inlined into the lambda, element_at(tokens, i) re-runs
     // the whole split per BIGRAM — O(len²) per doc, the exact
     // re-collapsed-projection class the r4 decontamination fix and the
     // r5 bigram-LM fix removed (measured here: 21 s → 1.3 s at sf0.1).
     val toked = df.select(extra :+
-      TextAnalysis.tokensWs(lower(col(textCol))).as("__toks"): _*)
+      TextAnalysis.tokensWs(lower(col("text"))).as("__toks"): _*)
     val carried = toked.columns.filter(_ != "__toks").map(col).toSeq
     toked.select(carried :+
       explode(TextAnalysis.bigramArrFromToks(col("__toks"))).as("gram"): _*)
-      .withColumn("bucket", hashBucket("dsir:", col("gram"), buckets))
+      .withColumn("bucket", hashBucket("dsir:", col("gram"), DsirBuckets))
   }
 
   /** The TRAINING half of [[importanceResample]]: the per-bucket
@@ -385,10 +373,9 @@ object Curation {
     * ingest STREAM per micro-batch (each doc's score depends only on
     * its own bigrams and the static table, so per-batch equals batch;
     * the [[TextAnalysis.scoreBigrams]] production shape). */
-  def importanceTable(df: DataFrame, isTarget: Column,
-      buckets: Int = 256, textCol: String = "text"): DataFrame = {
-    val occ = dsirOccurrences(df, Seq(isTarget.as("is_target")),
-      buckets, textCol)
+  def importanceTable(df: DataFrame, isTarget: Column): DataFrame = {
+    val buckets = DsirBuckets
+    val occ = dsirOccurrences(df, Seq(isTarget.as("is_target")))
     val counts = occ.groupBy("bucket").agg(
       sum(when(col("is_target"), 1L).otherwise(0L)).as("ct"),
       sum(when(col("is_target"), 0L).otherwise(1L)).as("cr"))
@@ -408,16 +395,15 @@ object Curation {
     * bigram explode, one broadcast bucket join, one per-doc BIGINT
     * sum; buckets absent from the table (possible when scoring a NEW
     * corpus against a previously trained table) contribute 0. */
-  def scoreImportance(df: DataFrame, lr: DataFrame, buckets: Int = 256,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val occ = dsirOccurrences(df, Seq(col(idCol)), buckets, textCol)
+  def scoreImportance(df: DataFrame, lr: DataFrame): DataFrame = {
+    val occ = dsirOccurrences(df, Seq(col("doc_id")))
     val scored = occ.join(broadcast(lr), Seq("bucket"), "left")
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("lr_u"), lit(0L))).as("logw_u"))
-    df.select(col(idCol))
-      .join(scored, Seq(idCol), "left")
-      .select(col(idCol),
+    df.select(col("doc_id"))
+      .join(scored, Seq("doc_id"), "left")
+      .select(col("doc_id"),
         coalesce(col("n_grams"), lit(0L)).as("n_grams"),
         coalesce(col("logw_u"), lit(0L)).as("logw_u"))
       .withColumn("selected", col("logw_u") > 0)
@@ -434,15 +420,14 @@ object Curation {
     * explode is row-local (map-only at 100 TB), and re-running with a
     * higher weight extends each doc's epoch range monotonically. */
   def epochUpsample(df: DataFrame, weightsPermille: Seq[(String, Int)],
-      defaultPermille: Int = 1000, sourceCol: String = "source",
-      idCol: String = "doc_id"): DataFrame = {
+      defaultPermille: Int = 1000): DataFrame = {
     val w = weightsPermille.foldRight(lit(defaultPermille): Column) {
-      case ((src, p), acc) => when(col(sourceCol) === src, lit(p)).otherwise(acc)
+      case ((src, p), acc) => when(col("source") === src, lit(p)).otherwise(acc)
     }
     df.withColumn("w_pm", w)
       .withColumn("n_copies",
         (col("w_pm") / 1000).cast("long") +
-          when(hashBucket("epoch:", col(idCol), 1000) < col("w_pm") % 1000, 1L)
+          when(hashBucket("epoch:", col("doc_id"), 1000) < col("w_pm") % 1000, 1L)
             .otherwise(0L))
       .filter(col("n_copies") > 0)
       .withColumn("epoch", explode(sequence(lit(0L), col("n_copies") - 1)))
@@ -455,16 +440,15 @@ object Curation {
     * stream, order documents by id, take the running size offset, and
     * assign each document to sequence floor(start_offset / budget) —
     * the contract a sequential context-window packer applies, computed
-    * as one partitioned window (no driver loop). `shards` salts the
-    * window partition key so a 100 TB corpus with a handful of sources
-    * still spreads across the cluster; packing order stays
+    * as one partitioned window (no driver loop). Four id-hash shards
+    * salt the window partition key so a 100 TB corpus with a handful
+    * of sources still spreads across the cluster; packing order stays
     * deterministic WITHIN a shard, which is the real-world contract
     * (each packer worker consumes one shard's stream). */
-  def packSequences(df: DataFrame, budgetChars: Long, shards: Int = 4,
-      sourceCol: String = "source", idCol: String = "doc_id",
+  def packSequences(df: DataFrame, budgetChars: Long,
       sizeCol: String = "n_chars"): DataFrame = {
-    val sharded = df.withColumn("shard", hashBucket("shard:", col(idCol), shards))
-    val w = Window.partitionBy(col(sourceCol), col("shard")).orderBy(col(idCol))
+    val sharded = df.withColumn("shard", hashBucket("shard:", col("doc_id"), 4))
+    val w = Window.partitionBy(col("source"), col("shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     sharded
       .withColumn("start_off", coalesce(sum(col(sizeCol)).over(w), lit(0L)))
@@ -482,12 +466,11 @@ object Curation {
     * data-loader contract is "reader w consumes shard w in pos
     * order"), and re-running on a grown corpus leaves the relative
     * order of surviving rows unchanged within a shard. */
-  def shuffleShard(df: DataFrame, nShards: Int,
-      idCol: String = "doc_id"): DataFrame = {
+  def shuffleShard(df: DataFrame, nShards: Int): DataFrame = {
     val w = Window.partitionBy(col("shard"))
-      .orderBy(col("sort_key"), col(idCol))
-    df.withColumn("shard", hashBucket("shuf:", col(idCol), nShards))
-      .withColumn("sort_key", hashBucket("ord:", col(idCol), 1000000))
+      .orderBy(col("sort_key"), col("doc_id"))
+    df.withColumn("shard", hashBucket("shuf:", col("doc_id"), nShards))
+      .withColumn("sort_key", hashBucket("ord:", col("doc_id"), 1000000))
       .withColumn("pos", row_number().over(w).cast("long"))
       .drop("sort_key")
   }
@@ -503,15 +486,14 @@ object Curation {
     * ordering is reproducible on any engine and cluster size. The
     * id-hash tiebreak keeps equal-quality runs shuffled rather than
     * id-ordered (curriculum between strata, randomness within). */
-  def curriculumOrder(df: DataFrame, nShards: Int,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val qualityBp = round(TextAnalysis.qualityColumns(col(textCol))
+  def curriculumOrder(df: DataFrame, nShards: Int): DataFrame = {
+    val qualityBp = round(TextAnalysis.qualityColumns(col("text"))
       .toMap.apply("quality_score") * 10000).cast("long")
     val w = Window.partitionBy(col("shard"))
-      .orderBy(col("ease").desc, col("tie"), col(idCol))
-    df.withColumn("shard", hashBucket("curr:", col(idCol), nShards))
+      .orderBy(col("ease").desc, col("tie"), col("doc_id"))
+    df.withColumn("shard", hashBucket("curr:", col("doc_id"), nShards))
       .withColumn("ease", qualityBp)
-      .withColumn("tie", hashBucket("ctie:", col(idCol), 1000000))
+      .withColumn("tie", hashBucket("ctie:", col("doc_id"), 1000000))
       .withColumn("pos", row_number().over(w).cast("long"))
       .drop("tie")
   }
@@ -528,11 +510,10 @@ object Curation {
     * at 100 TB you check the manifest's ~thousand rows before diffing
     * billions. One shard-key groupBy, unskewed by construction
     * (shards are id-hash buckets), map-side combining. */
-  def shardManifest(df: DataFrame, nShards: Int,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    df.select(hashBucket("shuf:", col(idCol), nShards).as("shard"),
-        length(col(textCol)).cast("long").as("len"),
-        Dedup.md5Long(col(textCol)).as("h"))
+  def shardManifest(df: DataFrame, nShards: Int): DataFrame =
+    df.select(hashBucket("shuf:", col("doc_id"), nShards).as("shard"),
+        length(col("text")).cast("long").as("len"),
+        Dedup.md5Long(col("text")).as("h"))
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("n_chars"),
         expr("bit_xor(h)").as("content_checksum"))
@@ -569,17 +550,15 @@ object Curation {
     * no executor ever materializes the whole eval shingle set. Same
     * rows, cross-checked in CurationSpec and ShingleOverlapPropSpec. */
   def decontaminate(train: DataFrame, evalSet: DataFrame,
-      minShared: Int = 10, minFrac: Double = 0.0, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    gated(overlapCounts(train, evalSet, idCol, textCol, EvalMaxDocs,
-      EvalMaxShingles), idCol, minShared, minFrac)
+      minShared: Int = 10, minFrac: Double = 0.0): DataFrame =
+    gated(overlapCounts(train, evalSet, EvalMaxDocs, EvalMaxShingles),
+      minShared, minFrac)
 
   /** [[decontaminate]] through the join path whatever the eval set's
     * size — the reference the kernel path is checked against. */
   private[graft] def decontaminateByJoin(train: DataFrame, evalSet: DataFrame,
-      minShared: Int = 10, minFrac: Double = 0.0, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    gated(joinCounts(train, evalSet, idCol, textCol), idCol, minShared, minFrac)
+      minShared: Int = 10, minFrac: Double = 0.0): DataFrame =
+    gated(joinCounts(train, evalSet), minShared, minFrac)
 
   /** The most eval texts [[decontaminate]] collects to the driver
     * (about 400 bytes of heap per 300-character text), and the most
@@ -596,19 +575,19 @@ object Curation {
     * eval shingles while the eval set is inside both bounds (every
     * row, null counts for a null text), else [[joinCounts]]. */
   private[graft] def overlapCounts(train: DataFrame, evalSet: DataFrame,
-      idCol: String, textCol: String, maxDocs: Int,
-      maxShingles: Int): DataFrame = {
-    val evalShingles = graft.Collect.collectAtMost(evalSet.select(col(textCol)), maxDocs)
+      maxDocs: Int, maxShingles: Int): DataFrame = {
+    val evalShingles =
+      graft.Collect.collectAtMost(evalSet.select(col("text")), maxDocs)
       .flatMap(texts => graft.functions.ShingleSet.of(
         texts.iterator.map(_.getString(0)), 9, maxShingles))
     evalShingles match {
       case Some(set) =>
         val bc = evalSet.sparkSession.sparkContext.broadcast(set)
-        train.select(col(idCol),
-            graft.functions.ShingleOverlap.shingleOverlap(col(textCol), bc, 9).as("ov"))
-          .select(col(idCol), col("ov.n_shared").as("n_shared"),
+        train.select(col("doc_id"),
+            graft.functions.ShingleOverlap.shingleOverlap(col("text"), bc, 9).as("ov"))
+          .select(col("doc_id"), col("ov.n_shared").as("n_shared"),
             col("ov.n_shingles").as("n_shingles"))
-      case None => joinCounts(train, evalSet, idCol, textCol)
+      case None => joinCounts(train, evalSet)
     }
   }
 
@@ -621,29 +600,28 @@ object Curation {
     * Catalyst into the post-explode projection and rebuild the whole
     * array PER SHINGLE ROW — O(shingles²) per doc (measured 70 s on
     * 500 fixture docs before this shape). */
-  private def joinCounts(train: DataFrame, evalSet: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
-    val trainSh = train.select(col(idCol),
-      explode(Dedup.shingleSetCol(col(textCol))).as("shingle"))
+  private def joinCounts(train: DataFrame, evalSet: DataFrame): DataFrame = {
+    val trainSh = train.select(col("doc_id"),
+      explode(Dedup.shingleSetCol(col("text"))).as("shingle"))
     val evalSh = evalSet
-      .select(explode(Dedup.shingleSetCol(col(textCol))).as("shingle"))
+      .select(explode(Dedup.shingleSetCol(col("text"))).as("shingle"))
       .distinct()
       .withColumn("hit", lit(1))
     trainSh.join(evalSh.hint("shuffle_hash"), Seq("shingle"), "left")
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(count(col("hit")).as("n_shared"),
         count(lit(1)).as("n_shingles"))
   }
 
   /** [[decontaminate]]'s output from overlap counts. */
-  private def gated(counts: DataFrame, idCol: String, minShared: Int,
+  private def gated(counts: DataFrame, minShared: Int,
       minFrac: Double): DataFrame =
     counts.filter(col("n_shared") > 0)
       .withColumn("overlap_frac",
         col("n_shared").cast("double") / col("n_shingles"))
       .withColumn("contaminated",
         contaminated(col("n_shared"), col("n_shingles"), minShared, minFrac))
-      .select(col(idCol), col("n_shared"), col("n_shingles"),
+      .select(col("doc_id"), col("n_shared"), col("n_shingles"),
         col("overlap_frac"), col("contaminated"))
 
   /** The contamination gate on a row's shared and distinct shingle
@@ -654,7 +632,7 @@ object Curation {
       nShared.cast("double") / nShingles >= minFrac
 
   /** Corpus-wide paragraph-level deduplication — the CCNet/C4-lineage
-    * boilerplate killer: split every document on `sep`, keep only the
+    * boilerplate killer: split every document on newlines, keep only the
     * FIRST corpus-wide occurrence of each distinct paragraph (ordered
     * by (doc_id, position)), and reassemble each document from its
     * surviving paragraphs in original order. Shared headers, footers,
@@ -667,10 +645,10 @@ object Curation {
     * shuffle equi-keyed, no all-pairs work, no windows over raw rows.
     * Docs whose every paragraph is a repeat vanish (their content
     * survives elsewhere). */
-  def paragraphDedup(df: DataFrame, sep: String = "\n",
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val paras = df.select(col(idCol).as("pd_id"),
-      posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep)))
+  def paragraphDedup(df: DataFrame): DataFrame = {
+    val sep = "\n"
+    val paras = df.select(col("doc_id").as("pd_id"),
+      posexplode(split(col("text"), java.util.regex.Pattern.quote(sep)))
         .as(Seq("pos", "para")))
     val keeper = paras
       .groupBy(md5(col("para")).as("h"))
@@ -680,8 +658,8 @@ object Curation {
       .groupBy(col("pd_id"))
       .agg(array_join(
         transform(array_sort(collect_list(struct(col("pos"), col("para")))),
-          x => x.getField("para")), sep).as(textCol))
-      .select(col("pd_id").as(idCol), col(textCol))
+          x => x.getField("para")), sep).as("text"))
+      .select(col("pd_id").as("doc_id"), col("text"))
   }
 
   /** The whole curation recipe as ONE composed dataflow — the shape a
@@ -694,11 +672,13 @@ object Curation {
     * row-local filter on the [[decontaminate]] kernel's counts against
     * the broadcast eval shingles — no explode, no self-join, no
     * anti-join (an eval set past decontaminate's driver bounds filters
-    * on its join path's counts instead). `doc_id` is unique. Returns the surviving training
-    * corpus with (split, shard, pos). */
-  def pipelineE2e(df: DataFrame, evalModulus: Int = 41,
-      minQuality: Double = 0.5, minShared: Int = 10,
-      minFrac: Double = 0.8): DataFrame = {
+    * on its join path's counts instead). The recipe: quality ≥ 0.5,
+    * every 41st doc_id held out as the eval set, and a doc contaminated
+    * at ≥ 10 shared shingles covering ≥ 80% of its own. `doc_id` is
+    * unique. Returns the surviving training corpus with
+    * (split, shard, pos). */
+  def pipelineE2e(df: DataFrame): DataFrame = {
+    val (evalModulus, minQuality, minShared, minFrac) = (41, 0.5, 10, 0.8)
     val base = df.select(col("doc_id"), col("text"))
     val score = TextAnalysis.qualityColumns(col("text"))
       .toMap.apply("quality_score")
@@ -712,8 +692,7 @@ object Curation {
     val evalSet = base.filter(col("doc_id") % evalModulus === 0)
     // the quality filter already dropped null texts, so both count
     // paths give one row per training document
-    val clean = overlapCounts(train, evalSet, "doc_id", "text", EvalMaxDocs,
-        EvalMaxShingles)
+    val clean = overlapCounts(train, evalSet, EvalMaxDocs, EvalMaxShingles)
       .filter(!coalesce(col("n_shared") > 0 && contaminated(
         col("n_shared"), col("n_shingles"), minShared, minFrac), lit(false)))
       .select("doc_id")
@@ -772,20 +751,19 @@ object Curation {
     * re-draw chains are order-coupled and engine-divergent. N is
     * config-scale driver metadata (like the rank pass's own bucket
     * bounds). */
-  def negativePairs(df: DataFrame, k: Int,
-      idCol: String = "doc_id"): DataFrame = {
+  def negativePairs(df: DataFrame, k: Int): DataFrame = {
     require(k > 0, s"negativePairs: k must be positive, got $k")
     val ranked = graft.operators.Scale.rowNumberDistributed(
-      df.select(col(idCol)), col(idCol), Seq(col(idCol)), "rk")
+      df.select(col("doc_id")), col("doc_id"), Seq(col("doc_id")), "rk")
     val n = ranked.count()
     val cand = ranked
-      .select(col(idCol).as("anchor_id"), col("rk"),
+      .select(col("doc_id").as("anchor_id"), col("rk"),
         explode(sequence(lit(1), lit(k))).as("t"))
       .withColumn("neg_rk",
         Dedup.md5Long(concat(col("anchor_id").cast("string"), lit(":"),
           col("t").cast("string"))) % n + 1)
       .filter(col("neg_rk") =!= col("rk"))
-    cand.join(ranked.select(col("rk").as("neg_rk"), col(idCol).as("neg_id")),
+    cand.join(ranked.select(col("rk").as("neg_rk"), col("doc_id").as("neg_id")),
         "neg_rk")
       .select(col("anchor_id"), col("t").cast("long").as("t"), col("neg_id"))
   }
@@ -901,18 +879,17 @@ object Curation {
     * so the following distinct shuffles almost nothing), then the eval
     * rows left-join that tiny hit set broadcast — the corpus is
     * scanned once and never shuffled. */
-  def evalCoverage(train: DataFrame, evalSet: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val evalSh = evalSet.select(col(idCol),
-      explode(Dedup.shingleSetCol(col(textCol))).as("shingle"))
+  def evalCoverage(train: DataFrame, evalSet: DataFrame): DataFrame = {
+    val evalSh = evalSet.select(col("doc_id"),
+      explode(Dedup.shingleSetCol(col("text"))).as("shingle"))
     val evalDistinct = evalSh.select("shingle").distinct()
     val hitShingles = train
-      .select(explode(Dedup.shingleSetCol(col(textCol))).as("shingle"))
+      .select(explode(Dedup.shingleSetCol(col("text"))).as("shingle"))
       .join(broadcast(evalDistinct), Seq("shingle"), "left_semi")
       .distinct()
       .withColumn("hit", lit(1))
     evalSh.join(broadcast(hitShingles), Seq("shingle"), "left")
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(count(col("hit")).as("n_covered"),
         count(lit(1)).as("n_shingles"))
       .withColumn("coverage_frac",
@@ -944,11 +921,10 @@ object Curation {
     * back onto the tiny report frame — the same "tiny aggregate
     * broadcast" pattern as the mixing operators; the share division is
     * two exact ints on both engines. */
-  def mixReport(df: DataFrame, sourceCol: String = "source",
-      langCol: String = "lang", textCol: String = "text"): DataFrame = {
-    val base = df.select(col(sourceCol).as("source"), col(langCol).as("lang"),
-      length(col(textCol)).as("nc"),
-      TextAnalysis.tokenCountWs(col(textCol)).cast("long").as("nt"))
+  def mixReport(df: DataFrame): DataFrame = {
+    val base = df.select(col("source"), col("lang"),
+      length(col("text")).as("nc"),
+      TextAnalysis.tokenCountWs(col("text")).cast("long").as("nt"))
     val rpt = base.rollup("source", "lang")
       .agg(count(lit(1)).as("n_docs"),
         sum("nc").as("n_chars"), sum("nt").as("n_tokens"),
@@ -987,12 +963,11 @@ object Curation {
     * text — at 100 TB the exchange is id+hash-sized. Feeds release
     * notes ("v2 added N docs, changed M") and incremental reprocessing
     * (only `added`/`changed` docs re-enter the pipeline). */
-  def corpusDiff(v1: DataFrame, v2: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    v1.select(col(idCol).as("id"), md5(col(textCol)).as("h1"))
-      .join(v2.select(col(idCol).as("id"), md5(col(textCol)).as("h2")),
+  def corpusDiff(v1: DataFrame, v2: DataFrame): DataFrame =
+    v1.select(col("doc_id").as("id"), md5(col("text")).as("h1"))
+      .join(v2.select(col("doc_id").as("id"), md5(col("text")).as("h2")),
         Seq("id"), "full_outer")
-      .select(col("id").as(idCol),
+      .select(col("id").as("doc_id"),
         when(col("h1").isNull, lit("added"))
           .when(col("h2").isNull, lit("removed"))
           .when(col("h1") === col("h2"), lit("unchanged"))
@@ -1022,12 +997,11 @@ object Curation {
     * [[graft.plans.TopKPerKey]] operator: one shuffle on the source
     * key, per-key heaps of size n, no per-group sort — at 100 TB the
     * window-ROW_NUMBER alternative sorts every group's full extent. */
-  def inspectionSample(df: DataFrame, n: Int, groupCol: String = "source",
-      idCol: String = "doc_id"): DataFrame = {
+  def inspectionSample(df: DataFrame, n: Int): DataFrame = {
     val ranked = df.withColumn("rk",
-      hashBucket("inspect:", col(idCol), 1000000))
-    graft.plans.TopKPerKey(ranked, Seq(groupCol),
-      Seq(col("rk").asc, col(idCol).asc), n)
+      hashBucket("inspect:", col("doc_id"), 1000000))
+    graft.plans.TopKPerKey(ranked, Seq("source"),
+      Seq(col("rk").asc, col("doc_id").asc), n)
   }
 
   private val curateImportance: Q = (s, dir) =>

@@ -45,20 +45,18 @@ object Dedup {
   // ------------------------------------------------------ exact dedup
 
   /** Group by content hash: keep the smallest id, count copies. */
-  def exactGroups(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    df.groupBy(md5(col(textCol)).as("content_hash"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
+  def exactGroups(df: DataFrame): DataFrame =
+    df.groupBy(md5(col("text")).as("content_hash"))
+      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
   // ------------------------------------------------------- shingling
 
   /** Distinct char-k-gram shingles per document: (id, shingle) — the
     * [[shingleSetCol]] set exploded. One narrow pass, shuffle only on
     * the consumer's key; a null text gives no row. */
-  def charShingles(df: DataFrame, k: Int = 9, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    df.select(col(idCol).as("id"),
-      explode(shingleSetCol(col(textCol), k)).as("shingle"))
+  def charShingles(df: DataFrame, k: Int = 9): DataFrame =
+    df.select(col("doc_id").as("id"),
+      explode(shingleSetCol(col("text"), k)).as("shingle"))
 
   /** The distinct k-gram set of a text as a COLUMN (transform over a
     * position sequence; a text shorter than k is one whole-text
@@ -234,10 +232,10 @@ object Dedup {
     * per row: the grouped forms merge two rows' shingle sets under a
     * shared id, this form keeps them apart. */
   def lshDocs(df: DataFrame, numHashes: Int = 16, rowsPerBand: Int = 4,
-      k: Int = 9, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    df.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), graft.functions.MinHashLsh.minHashLsh(
-        col(textCol), numHashes, rowsPerBand, k).as("m"))
+      k: Int = 9): DataFrame =
+    df.filter(col("text").isNotNull)
+      .select(col("doc_id").as("id"), graft.functions.MinHashLsh.minHashLsh(
+        col("text"), numHashes, rowsPerBand, k).as("m"))
       .select(col("id"), col("m.buckets").as("buckets"), col("m.sh").as("sh"),
         col("m.set_size").as("set_size"))
 
@@ -263,8 +261,8 @@ object Dedup {
   /** [[lshRows]] of the text frame `df` behind one `repartition(id)`:
     * the exchange every consumer of the rows reuses. */
   private def lshRowsById(df: DataFrame, numHashes: Int, rowsPerBand: Int,
-      k: Int, idCol: String, textCol: String): DataFrame =
-    lshRows(lshDocs(df, numHashes, rowsPerBand, k, idCol, textCol)
+      k: Int): DataFrame =
+    lshRows(lshDocs(df, numHashes, rowsPerBand, k)
       .repartition(col("id")), numHashes / rowsPerBand)
 
   /** The (id, band, bucket) rows of an [[lshRows]] frame — the
@@ -286,9 +284,8 @@ object Dedup {
     * point both arms of the self-join and both verify joins read back
     * (see [[lshRows]]). */
   def minHashLshPairs(df: DataFrame, threshold: Double,
-      numHashes: Int = 16, rowsPerBand: Int = 4, k: Int = 9,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val rows = lshRowsById(df, numHashes, rowsPerBand, k, idCol, textCol)
+      numHashes: Int = 16, rowsPerBand: Int = 4, k: Int = 9): DataFrame = {
+    val rows = lshRowsById(df, numHashes, rowsPerBand, k)
     val buckets = lshBuckets(rows)
     verifyJaccardSets(bandCandidates(buckets, buckets, selfJoin = true),
       lshSets(rows), threshold)
@@ -382,7 +379,7 @@ object Dedup {
     * driver only steers the loop and checks convergence (a 1-row
     * count), never holds vertices. Near-dup components are shallow
     * (stars around an original), so rounds stay in single digits even
-    * at corpus scale; `maxIter` guards pathological chains and
+    * at corpus scale; a 20-round cap guards pathological chains and
     * non-convergence throws rather than returning a wrong labelling.
     *
     * Lineage is cut with an EAGER localCheckpoint each round —
@@ -392,7 +389,8 @@ object Dedup {
     * Output: (id, cluster_id = min id of the component), one row per
     * vertex that appears in `pairs`; unpaired documents are trivially
     * their own cluster and never enter the graph. */
-  def nearDupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def nearDupClusters(pairs: DataFrame): DataFrame = {
+    val maxRounds = 20
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .localCheckpoint(true)
@@ -401,7 +399,7 @@ object Dedup {
       .localCheckpoint(true)
     var converged = false
     var i = 0
-    while (!converged && i < maxIter) {
+    while (!converged && i < maxRounds) {
       val neighborMin = edges
         .join(labels.select(col("id").as("dst"), col("label")), "dst")
         .groupBy(col("src").as("id"))
@@ -420,19 +418,19 @@ object Dedup {
       i += 1
     }
     require(converged,
-      s"nearDupClusters did not converge in $maxIter rounds — raise maxIter")
+      s"nearDupClusters did not converge in $maxRounds rounds: a near-dup " +
+        "chain is longer than that — raise the pair threshold")
     labels.select(col("id"), col("label").as("cluster_id"))
   }
 
   /** Keep exactly one document per near-dup cluster (the minimum id,
     * i.e. the cluster label): drops every vertex whose id differs from
     * its cluster_id; documents outside the pair graph pass through. */
-  def keepOnePerCluster(docs: DataFrame, clusters: DataFrame,
-      idCol: String = "doc_id"): DataFrame =
+  def keepOnePerCluster(docs: DataFrame, clusters: DataFrame): DataFrame =
     docs.join(
       clusters.filter(col("id") =!= col("cluster_id"))
-        .select(col("id").as(idCol)),
-      Seq(idCol), "left_anti")
+        .select(col("id").as("doc_id")),
+      Seq("doc_id"), "left_anti")
 
   /** Quality-ranked keeper election — [[keepOnePerCluster]] keeps the
     * minimum id (reproducible but arbitrary); production recipes keep
@@ -447,19 +445,18 @@ object Dedup {
     * hence quality — there the election degenerates to min-id, which
     * is why this operator exists for NEAR-dup clusters. Unclustered
     * docs pass through untouched, like keepOne. */
-  def keepBestPerCluster(docs: DataFrame, clusters: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val qbp = round(TextAnalysis.qualityColumns(col(textCol))
+  def keepBestPerCluster(docs: DataFrame, clusters: DataFrame): DataFrame = {
+    val qbp = round(TextAnalysis.qualityColumns(col("text"))
       .toMap.apply("quality_score") * 1e4).cast("long")
-    val members = clusters.select(col("id").as(idCol), col("cluster_id"))
-      .join(docs.select(col(idCol), qbp.as("q_bp")), idCol)
+    val members = clusters.select(col("id").as("doc_id"), col("cluster_id"))
+      .join(docs.select(col("doc_id"), qbp.as("q_bp")), "doc_id")
       .withColumn("packed",
-        (lit(10000L) - col("q_bp")) * lit(1000000000000L) + col(idCol))
+        (lit(10000L) - col("q_bp")) * lit(1000000000000L) + col("doc_id"))
     val keepers = members.groupBy("cluster_id")
       .agg(min(col("packed")).as("kp"))
     val dropIds = members.join(keepers, "cluster_id")
-      .filter(col("packed") =!= col("kp")).select(col(idCol))
-    docs.join(dropIds, Seq(idCol), "left_anti")
+      .filter(col("packed") =!= col("kp")).select(col("doc_id"))
+    docs.join(dropIds, Seq("doc_id"), "left_anti")
   }
 
   // --------------------------------------------------------- SimHash
@@ -473,19 +470,18 @@ object Dedup {
     * columns combine map-side) instead of a 32× bit-explode — the
     * shuffle carries one 32-int row per doc per partition, not
     * 32·|tokens| rows. */
-  def simHash(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    simHashWith(df, idCol, textCol, md5Long)
+  def simHash(df: DataFrame): DataFrame =
+    simHashWith(df, md5Long)
 
-  private def simHashWith(df: DataFrame, idCol: String, textCol: String,
-      tokenHash: Column => Column, bits: Int = 32): DataFrame = {
+  private def simHashWith(df: DataFrame, tokenHash: Column => Column,
+      bits: Int = 32): DataFrame = {
     val votes = (0 until bits).map(j =>
       sum(when(expr(s"(shiftright(h60, $j) & 1)") === 1, lit(1))
         .otherwise(lit(-1))).as(s"v_$j"))
     val assemble = (0 until bits).map(j =>
       when(col(s"v_$j") > 0, lit(1L << j)).otherwise(lit(0L))).reduce(_ + _)
-    df.select(col(idCol).as("id"),
-        explode(TextAnalysis.tokensWs(lower(col(textCol)))).as("token"))
+    df.select(col("doc_id").as("id"),
+        explode(TextAnalysis.tokensWs(lower(col("text")))).as("token"))
       .withColumn("h60", tokenHash(col("token")))
       .groupBy("id")
       .agg(votes.head, votes.tail: _*)
@@ -504,17 +500,16 @@ object Dedup {
     * the votes (the md5 32-bit twin stays the DuckDB-oracle form).
     * Note hamming ≤ 3 over 64 bits is a stricter relative similarity
     * than over 32 — the 64-bit contract is the production one. */
-  def simHash64Xx(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    simHashWith(df, idCol, textCol, xxhash64(_), bits = 64)
+  def simHash64Xx(df: DataFrame): DataFrame =
+    simHashWith(df, xxhash64(_), bits = 64)
 
   /** Near-pairs over [[simHash64Xx]] fingerprints: hamming ≤ 3 pairs
     * must agree on one of the 4 16-bit bands (pigeonhole) — the same
     * equi-join blocking as [[simHashNearPairs]] with 65,536 buckets
     * per band instead of 256. The arithmetic shiftright's sign-fill on
     * the top band is masked off by `& 65535`. */
-  def simHashNearPairs64(hashes: DataFrame, maxHamming: Int = 3): DataFrame =
-    simHashBandPairs(hashes, 16, maxHamming)
+  def simHashNearPairs64(hashes: DataFrame): DataFrame =
+    simHashBandPairs(hashes, 16, 3)
 
   /** THE production SimHash near-dup pair search: 64-bit xxhash64
     * fingerprints ([[simHash64Xx]]) blocked on 4×16-bit bands
@@ -525,9 +520,8 @@ object Dedup {
     * the r6 sf1 decade step, exactly the curve a 100× corpus must not
     * inherit (the 64-bit form ran 2.0×). LlmSpec pins the banded
     * 64-bit search == brute-force hamming on the fixture corpus. */
-  def simHashNearDups(df: DataFrame, maxHamming: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    simHashNearPairs64(simHash64Xx(df, idCol, textCol), maxHamming)
+  def simHashNearDups(df: DataFrame): DataFrame =
+    simHashNearPairs64(simHash64Xx(df))
 
   /** SimHash near-pairs with 8-bit band blocking: pairs at hamming ≤ 3
     * must agree on one of the 4 bytes (pigeonhole), so candidates come
@@ -661,12 +655,22 @@ object Dedup {
   }
 
   /** Exact micro-int cosine on candidate pairs only — the verify kernel
-    * of [[cosineNearDupPairs]]; join cost is bounded by |candidates|·64,
-    * never all-pairs. */
+    * of [[cosineNearDupPairs]]. `elems` is first semi-joined to the
+    * candidates' ids, so the norms and the dots read only the rows of
+    * vectors some candidate names: the cost is bounded by
+    * |candidates|·dims, never all-pairs, and never the whole of a
+    * stored element table. */
   def verifyCosine(candidates: DataFrame, elems: DataFrame,
-      threshold: Double): DataFrame =
-    microCosine(candidateDots(candidates, elems), elems)
+      threshold: Double): DataFrame = {
+    // the explicit null filter is the one the dot joins infer, so the
+    // ids arm and the dots arm read the same candidates subtree and
+    // the candidate join runs once
+    val cands = candidates.filter(col("id_a").isNotNull && col("id_b").isNotNull)
+    val ids = cands.select(explode(array(col("id_a"), col("id_b"))).as("id"))
+    val touched = elems.join(ids, Seq("id"), "left_semi")
+    microCosine(candidateDots(cands, touched), touched)
       .filter(col("cosine") >= threshold)
+  }
 
   /** Embedding near-duplicates at scale: sign-LSH band buckets generate
     * candidates via an equi-join on (band, bucket) — the same
@@ -776,10 +780,9 @@ object Dedup {
     * north-star §2.E. */
   def incrementalLshPairs(oldDf: DataFrame, newDf: DataFrame,
       threshold: Double, numHashes: Int = 16, rowsPerBand: Int = 4,
-      k: Int = 9, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val oldRows = lshRowsById(oldDf, numHashes, rowsPerBand, k, idCol, textCol)
-    val newRows = lshRowsById(newDf, numHashes, rowsPerBand, k, idCol, textCol)
+      k: Int = 9): DataFrame = {
+    val oldRows = lshRowsById(oldDf, numHashes, rowsPerBand, k)
+    val newRows = lshRowsById(newDf, numHashes, rowsPerBand, k)
     val candidates = bandCandidates(lshBuckets(oldRows), lshBuckets(newRows),
       selfJoin = false)
     verifyJaccardSets(candidates,
@@ -803,10 +806,9 @@ object Dedup {
     * probe-side exchange lands bucket-aligned. */
   def writeDedupIndex(corpus: DataFrame, prefix: String,
       numHashes: Int = 16, rowsPerBand: Int = 4, k: Int = 9,
-      numBuckets: Int = 32, idCol: String = "doc_id",
-      textCol: String = "text"): Unit = {
-    val rows = lshRows(lshDocs(corpus, numHashes, rowsPerBand, k, idCol,
-      textCol), numHashes / rowsPerBand)
+      numBuckets: Int = 32): Unit = {
+    val rows = lshRows(lshDocs(corpus, numHashes, rowsPerBand, k),
+      numHashes / rowsPerBand)
     graft.sources.Ingest.writeBucketedTable(lshBuckets(rows),
       s"${prefix}_buckets", Seq("band", "bucket"), numBuckets)
     graft.sources.Ingest.writeBucketedTable(lshSets(rows),
@@ -835,20 +837,18 @@ object Dedup {
     * writer's parameters — LlmSpec pins the equality — but the corpus
     * pays no signature or shingle work at probe time. */
   def incrementalLshPairsFromIndex(prefix: String, newDf: DataFrame,
-      threshold: Double, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
+      threshold: Double): DataFrame =
     probeDedupIndex(prefix, newDf, threshold,
-      dedupIndexParams(newDf.sparkSession, prefix), idCol, textCol)
+      dedupIndexParams(newDf.sparkSession, prefix))
 
   /** [[incrementalLshPairsFromIndex]] under [[dedupIndexParams]]. */
   private[graft] def probeDedupIndex(prefix: String, newDf: DataFrame,
-      threshold: Double, params: (Int, Int, Int), idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      threshold: Double, params: (Int, Int, Int)): DataFrame = {
     val spark = newDf.sparkSession
     val (numHashes, rowsPerBand, k) = params
     val oldBuckets = spark.table(s"${prefix}_buckets")
     val oldSets = spark.table(s"${prefix}_sets")
-    val newRows = lshRowsById(newDf, numHashes, rowsPerBand, k, idCol, textCol)
+    val newRows = lshRowsById(newDf, numHashes, rowsPerBand, k)
     val candidates = bandCandidates(oldBuckets, lshBuckets(newRows),
       selfJoin = false)
     verifyJaccardSets(candidates, oldSets.unionByName(lshSets(newRows)),
@@ -940,10 +940,9 @@ object Dedup {
 
   /** Case-sensitive whitespace token arrays: (id, toks). Substring
     * dedup must not merge spans that differ in case, so no lower(). */
-  private def tokenArrays(df: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    df.select(col(idCol).as("id"),
-      filter(split(col(textCol), "\\s+"), t => length(t) > 0).as("toks"))
+  private def tokenArrays(df: DataFrame): DataFrame =
+    df.select(col("doc_id").as("id"),
+      filter(split(col("text"), "\\s+"), t => length(t) > 0).as("toks"))
 
   /** One row per length-`n` token window: (id, start [1-based], gh =
     * md5 of the space-joined window). Row-local (map-only): the
@@ -952,13 +951,12 @@ object Dedup {
     * gram election — the shuffle carries (id, start, 32-char hash)
     * rows, never the window text. Docs shorter than `n` tokens emit
     * nothing. */
-  def tokenGramOccurrences(df: DataFrame, n: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def tokenGramOccurrences(df: DataFrame, n: Int = 8): DataFrame = {
     val grams = when(size(col("toks")) >= n,
         transform(sequence(lit(1), size(col("toks")) - (n - 1)),
           i => md5(concat_ws(" ", slice(col("toks"), i, lit(n))))))
       .otherwise(array().cast("array<string>"))
-    tokenArrays(df, idCol, textCol)
+    tokenArrays(df)
       .select(col("id"), posexplode(grams).as(Seq("p", "gh")))
       .select(col("id"), (col("p") + 1).as("start"), col("gh"))
   }
@@ -978,9 +976,8 @@ object Dedup {
     * key-partitioned shuffles: gram-hash election + per-doc merge.
     * Output: (id, s, e) merged token ranges, 1-based inclusive.
     * Packing bound: token starts must be < 1,000,000 (any real doc). */
-  def duplicatedSpans(df: DataFrame, n: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val occ = tokenGramOccurrences(df, n, idCol, textCol)
+  def duplicatedSpans(df: DataFrame, n: Int = 8): DataFrame = {
+    val occ = tokenGramOccurrences(df, n)
     val packed = occ.withColumn("packed",
       col("id") * lit(1000000L) + col("start"))
     val dups = packed
@@ -1004,11 +1001,10 @@ object Dedup {
     * covered, and the doc's token count. Docs with no duplicated span
     * are absent (the report is the curation FLAG list, not a corpus
     * rewrite — join it back for a fraction filter). */
-  def substringSpanStats(df: DataFrame, n: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sizes = tokenArrays(df, idCol, textCol)
+  def substringSpanStats(df: DataFrame, n: Int = 8): DataFrame = {
+    val sizes = tokenArrays(df)
       .select(col("id"), size(col("toks")).cast("long").as("n_tokens"))
-    duplicatedSpans(df, n, idCol, textCol)
+    duplicatedSpans(df, n)
       .groupBy("id")
       .agg(count(lit(1)).as("n_dup_spans"),
         sum(col("e") - col("s") + 1).as("n_dup_tokens"))
@@ -1025,11 +1021,10 @@ object Dedup {
     * an indexed array filter — no per-token shuffle. Whitespace is
     * normalized to single spaces (tokens rejoined); docs whose every
     * token is covered (verbatim full copies) are dropped entirely. */
-  def removeDuplicatedSpans(df: DataFrame, n: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val spans = duplicatedSpans(df, n, idCol, textCol)
+  def removeDuplicatedSpans(df: DataFrame, n: Int = 8): DataFrame = {
+    val spans = duplicatedSpans(df, n)
       .groupBy("id").agg(collect_list(struct(col("s"), col("e"))).as("spans"))
-    tokenArrays(df, idCol, textCol)
+    tokenArrays(df)
       .join(spans, Seq("id"), "left")
       .select(col("id").as("doc_id"),
         when(col("spans").isNull, concat_ws(" ", col("toks")))
@@ -1104,36 +1099,35 @@ object Dedup {
     * member, the emitted `is_dup` would flip and the DuckDB EXISTS
     * twin would hash-mismatch. */
   def bloomProbeDedup(corpus: DataFrame, batch: DataFrame,
-      expectedItems: Long = 1000000L, numBits: Long = 8388608L,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val bloom = bloomBytesFor(corpus, expectedItems, numBits, textCol)
-    val probed = batch.select(col(idCol), col(textCol),
+      expectedItems: Long = 1000000L, numBits: Long = 8388608L): DataFrame = {
+    val bloom = bloomBytesFor(corpus, expectedItems, numBits)
+    val probed = batch.select(col("doc_id"), col("text"),
       graft.functions.BloomSketch
-        .mightContain(bloom, xxhash64(col(textCol))).as("flagged"))
+        .mightContain(bloom, xxhash64(col("text"))).as("flagged"))
     val rejected = probed.filter(!col("flagged"))
-      .select(col(idCol), lit(false).as("is_dup"))
+      .select(col("doc_id"), lit(false).as("is_dup"))
     val corpusHashes = corpus
-      .select(md5(col(textCol)).as("corpus_h")).distinct()
+      .select(md5(col("text")).as("corpus_h")).distinct()
     val verified = probed.filter(col("flagged"))
-      .join(corpusHashes, md5(col(textCol)) === col("corpus_h"), "left")
-      .select(col(idCol), col("corpus_h").isNotNull.as("is_dup"))
+      .join(corpusHashes, md5(col("text")) === col("corpus_h"), "left")
+      .select(col("doc_id"), col("corpus_h").isNotNull.as("is_dup"))
     rejected.unionByName(verified)
   }
 
   /** The corpus's serialized content-membership sketch (collect is
     * one binary row — config-scale, like trained centroids). */
   def bloomBytesFor(corpus: DataFrame, expectedItems: Long,
-      numBits: Long, textCol: String = "text"): Array[Byte] =
+      numBits: Long): Array[Byte] =
     corpus.agg(graft.functions.BloomSketch.bloomAgg(
-        xxhash64(col(textCol)), expectedItems, numBits).as("bf"))
+        xxhash64(col("text")), expectedItems, numBits).as("bf"))
       .head().getAs[Array[Byte]]("bf")
 
   // ------------------------------- content-defined chunking dedup
 
   /** Content-defined chunking — the rsync/LBFS/FastCDC family reduced
-    * to its relational core: a k-gram position is a CUT iff its
-    * 60-bit [[md5Long]] hash ≡ 0 (mod 2^maskBits) (expected chunk
-    * length ≈ 2^maskBits chars), and chunks are the substrings between
+    * to its relational core: a k-gram position (k = 9) is a CUT iff
+    * its 60-bit [[md5Long]] hash ≡ 0 (mod 2^6) (expected chunk
+    * length ≈ 64 chars), and chunks are the substrings between
     * cuts. Cut decisions depend only on LOCAL content, so an edit
     * reshapes just the chunks it touches and chunking RE-SYNCS at the
     * next cut — the property fixed-width blocking lacks, and what
@@ -1146,9 +1140,9 @@ object Dedup {
     * scale, and the md5 family keeps the DuckDB twin bit-identical.
     * Docs shorter than k are one whole-doc chunk. Output: one row per
     * chunk — (id, chunk_id, chunk_start, n_chunk_chars, chunk_md5). */
-  def cdcChunks(df: DataFrame, k: Int = 9, maskBits: Int = 6,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val text = col(textCol)
+  def cdcChunks(df: DataFrame): DataFrame = {
+    val (k, maskBits) = (9, 6)
+    val text = col("text")
     // ONE native pass per document for the cut set (char offsets once,
     // k chars digested per window — O(len·k)). The transform+substring
     // DataFrame form this replaces was O(len²) interpreted, and the
@@ -1157,7 +1151,7 @@ object Dedup {
     // O(len³)/doc, a measured 35-CPU-minute straggler at sf0.1. With
     // the cut set native, that same inlining costs one extra linear
     // pass. See [[graft.functions.CdcCutPositions]].
-    val withCuts = df.select(col(idCol), text.as("__t"),
+    val withCuts = df.select(col("doc_id"), text.as("__t"),
       graft.functions.CdcCutPositions.cdcCutPositions(text, k, maskBits)
         .as("__cuts"))
     val spans = withCuts
@@ -1171,9 +1165,9 @@ object Dedup {
             (s0, e0) => struct(s0.as("s"), e0.as("e"))),
           p => p.getField("s") <= p.getField("e")))
     spans
-      .select(col(idCol), col("__t"),
+      .select(col("doc_id"), col("__t"),
         posexplode(col("__spans")).as(Seq("chunk_id", "sp")))
-      .select(col(idCol), col("chunk_id"),
+      .select(col("doc_id"), col("chunk_id"),
         col("sp.s").as("chunk_start"),
         (col("sp.e") - col("sp.s") + 1).as("n_chunk_chars"),
         md5(col("__t").substr(col("sp.s"),
@@ -1187,13 +1181,12 @@ object Dedup {
     * hashes are near-unique outside true duplication, so the key is
     * unskewed), one chunk-key equi-join back, one per-doc groupBy —
     * no all-pairs anywhere. */
-  def cdcDedupReport(df: DataFrame, k: Int = 9, maskBits: Int = 6,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val ch = cdcChunks(df, k, maskBits, idCol, textCol)
+  def cdcDedupReport(df: DataFrame): DataFrame = {
+    val ch = cdcChunks(df)
     val occ = ch.groupBy("chunk_md5")
-      .agg(countDistinct(col(idCol)).as("n_docs"))
+      .agg(countDistinct(col("doc_id")).as("n_docs"))
     ch.join(occ, "chunk_md5")
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(count(lit(1)).as("n_chunks"),
         sum(when(col("n_docs") > 1, 1L).otherwise(0L))
           .as("n_shared_chunks"),
@@ -1416,13 +1409,13 @@ object Dedup {
 
   /** LSH banding planner — the S-curve calculator behind the 4×4
     * choice hard-wired above (Leskovec/Rajaraman/Ullman MMDS §3.4.3):
-    * for a signature budget of `sigs` hashes, every (bands, rows)
+    * for a signature budget of 16 hashes, every (bands, rows)
     * factorization's collision threshold (1/b)^(1/r) — the similarity
     * where candidate probability crosses ½ — with its distance to the
-    * target, nearest first. Driver-side-sized frame (divisors of the
-    * budget); pow micro-rounded once (the only transcendental). */
-  def lshBandingPlan(s: SparkSession, sigs: Int = 16,
-      targetMicro: Long = 500000L): DataFrame = {
+    * 0.5 target, nearest first. Driver-side-sized frame (divisors of
+    * the budget); pow micro-rounded once (the only transcendental). */
+  def lshBandingPlan(s: SparkSession): DataFrame = {
+    val (sigs, targetMicro) = (16, 500000L)
     s.range(1, sigs + 1).toDF("b")
       .filter(lit(sigs) % col("b") === 0)
       .withColumn("r", (lit(sigs.toLong) / col("b")).cast("long"))

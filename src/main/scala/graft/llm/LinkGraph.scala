@@ -60,9 +60,8 @@ object LinkGraph {
     * the fixed-iteration call so the DuckDB recursive-CTE oracle
     * stays bit-identical. */
   def pageRankWithReport(edges: DataFrame, maxIters: Int = 10,
-      teleport: Option[DataFrame] = None,
       tolMicro: Long = 0L): (DataFrame, Seq[(Int, Long)]) =
-    prImpl(edges, maxIters, teleport, tolMicro, wantReport = true)
+    prImpl(edges, maxIters, None, tolMicro, wantReport = true)
 
   private def prImpl(edges: DataFrame, maxIters: Int,
       teleport: Option[DataFrame], tolMicro: Long,

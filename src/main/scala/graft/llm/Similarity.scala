@@ -43,14 +43,14 @@ object Similarity {
   private def cosineOver(a: Column, b: Column, na: Column, nb: Column): Column =
     dotN(a, b) / (na * nb)
 
-  /** `df`'s id and embedding as `id` and `emb`, its [[norm]] as
+  /** `df`'s `vec_id` and `embedding` as `id` and `emb`, its [[norm]] as
     * `<emb>_norm`, then `extra`: one side of a [[cosineOver]] join, the
     * norm taken once per ROW, not per pair (at |Q|·|C| pairs the hoist
     * removes two thirds of the kernel work). */
-  private def normed(df: DataFrame, idCol: String, embCol: String,
-      id: String, emb: String, extra: Column*): DataFrame =
-    df.select(Seq(col(idCol).as(id), col(embCol).as(emb),
-      norm(col(embCol)).as(s"${emb}_norm")) ++ extra: _*)
+  private def normed(df: DataFrame, id: String, emb: String,
+      extra: Column*): DataFrame =
+    df.select(Seq(col("vec_id").as(id), col("embedding").as(emb),
+      norm(col("embedding")).as(s"${emb}_norm")) ++ extra: _*)
 
   /** [[cosineOver]] of two [[normed]] sides' embeddings `a` and `b`. */
   private def normedCosine(a: String, b: String): Column =
@@ -64,10 +64,9 @@ object Similarity {
   /** Brute-force cosine top-k (float path): for each query vector, the
     * k nearest corpus vectors by cosine, ties broken by corpus id. Both
     * sides are [[normed]]; the per-pair cost is one codegen'd dot. */
-  def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val q = normed(queries, idCol, embCol, "query_id", "q_emb")
-    val c = normed(corpus, idCol, embCol, "neighbor_id", "c_emb")
+  def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val q = normed(queries, "query_id", "q_emb")
+    val c = normed(corpus, "neighbor_id", "c_emb")
     annRows(c.crossJoin(broadcast(q)), k)
   }
 
@@ -145,17 +144,17 @@ object Similarity {
     * within candidates. Recall < 1 by construction; raise `numPlanes`
     * groups or probe multiple buckets for more. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      numPlanes: Int = 8, idCol: String = "vec_id",
-      embCol: String = "embedding", dims: Int = 64): DataFrame = {
-    val bucket = hyperplaneBucket(col(embCol), numPlanes, dims).as("bucket")
-    val cb = normed(corpus, idCol, embCol, "neighbor_id", "c_emb", bucket)
-    val qb = normed(queries, idCol, embCol, "query_id", "q_emb", bucket)
+      numPlanes: Int = 8, dims: Int = 64): DataFrame = {
+    val bucket = hyperplaneBucket(col("embedding"), numPlanes, dims).as("bucket")
+    val cb = normed(corpus, "neighbor_id", "c_emb", bucket)
+    val qb = normed(queries, "query_id", "q_emb", bucket)
     annRows(cb.join(broadcast(qb), Seq("bucket")), k)
   }
 
-  /** Deterministic IVF centroid training: spark.ml KMeans with a fixed
-    * seed (k-means|| init and Lloyd iterations are pure functions of
-    * (data, partitioning, seed), so the same corpus trains the same
+  /** Deterministic IVF centroid training: spark.ml KMeans, 20 rounds at
+    * most, with the fixed seed 42 (k-means|| init and Lloyd iterations
+    * are pure functions of (data, partitioning, seed), so the same
+    * corpus trains the same
     * codebook on every run — the reproducibility contract the rest of
     * this library's content-addressed selection keeps). Returns a
     * (centroid_id, embedding) frame in exactly the shape [[ivfAssign]]
@@ -163,21 +162,19 @@ object Similarity {
     * Scale shape: training fits k · dims doubles on the driver (the
     * model) from one corpus aggregation per iteration — the standard
     * index-build step, run once per index, off the query path. */
-  def trainCentroids(corpus: DataFrame, k: Int, seed: Long = 42L,
-      maxIter: Int = 20, idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
+  def trainCentroids(corpus: DataFrame, k: Int): DataFrame = {
     val feats = corpus.select(
-      org.apache.spark.ml.functions.array_to_vector(col(embCol))
+      org.apache.spark.ml.functions.array_to_vector(col("embedding"))
         .as("features"))
     val model = new org.apache.spark.ml.clustering.KMeans()
-      .setK(k).setSeed(seed).setMaxIter(maxIter)
+      .setK(k).setSeed(42L).setMaxIter(20)
       .setFeaturesCol("features")
       .fit(feats)
     val spark = corpus.sparkSession
     import spark.implicits._
     model.clusterCenters.zipWithIndex.toSeq
       .map { case (c, i) => (i.toLong, c.toArray) }
-      .toDF(idCol, embCol)
+      .toDF("vec_id", "embedding")
   }
 
   /** IVF: every corpus row with the `centroid_id` of its nearest
@@ -186,15 +183,14 @@ object Similarity {
     * frame — at scale, a [[trainCentroids]] k-means output or a
     * deterministic sample. A corpus already [[normed]] in place (as in
     * [[semanticDedup]]) keeps its norm column, computed once per row. */
-  def ivfAssign(corpus: DataFrame, centroids: DataFrame,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val c = normed(centroids, idCol, embCol, "centroid_id", "cent_emb")
+  def ivfAssign(corpus: DataFrame, centroids: DataFrame): DataFrame = {
+    val c = normed(centroids, "centroid_id", "cent_emb")
     val rest = corpus.columns
-      .filterNot(Set(idCol, embCol, s"${embCol}_norm")).map(col)
-    val scored = normed(corpus, idCol, embCol, idCol, embCol, rest.toSeq: _*)
+      .filterNot(Set("vec_id", "embedding", "embedding_norm")).map(col)
+    val scored = normed(corpus, "vec_id", "embedding", rest.toSeq: _*)
       .crossJoin(broadcast(c))
-      .withColumn("sim", normedCosine(embCol, "cent_emb"))
-    topK(scored, Seq(idCol), 1, col("sim").desc, col("centroid_id"))
+      .withColumn("sim", normedCosine("embedding", "cent_emb"))
+    topK(scored, Seq("vec_id"), 1, col("sim").desc, col("centroid_id"))
       .select(corpus.columns.map(col).toSeq :+ col("centroid_id"): _*)
   }
 
@@ -233,8 +229,7 @@ object Similarity {
     *    jobs from multiple driver threads freely, so wall-clock is
     *    the slowest single fit, not the sum. */
   def trainPqCodebooks(corpus: DataFrame, m: Int = 4, k: Int = 8,
-      dims: Int = 64, seed: Long = 42L, idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
+      dims: Int = 64): DataFrame = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
@@ -253,17 +248,17 @@ object Similarity {
         // expected UPPER bound on sample size, not a target (fine for
         // k ≤ 16 codebook fits, which need hundreds of points).
         val denom = (n + cap - 1) / cap
-        corpus.filter(pmod(xxhash64(col(idCol)), lit(denom)) === 0)
+        corpus.filter(pmod(xxhash64(col("vec_id")), lit(denom)) === 0)
       }
     val cached = sample.persist()
     try {
       val fits = (0 until m).map { sIdx =>
         Future {
-          val sub = cached.select(col(idCol),
-            slice(col(embCol), sIdx * sd + 1, sd).as(embCol))
-          trainCentroids(sub, k, seed, idCol = idCol, embCol = embCol)
-            .select(lit(sIdx).as("sub"), col(idCol).as("code"),
-              col(embCol).as("cb_emb"))
+          val sub = cached.select(col("vec_id"),
+            slice(col("embedding"), sIdx * sd + 1, sd).as("embedding"))
+          trainCentroids(sub, k)
+            .select(lit(sIdx).as("sub"), col("vec_id").as("code"),
+              col("embedding").as("cb_emb"))
         }
       }
       // each Await returns a driver-side LocalRelation (clusterCenters
@@ -318,11 +313,10 @@ object Similarity {
 
   /** Trained-codebook PQ search end to end: train → encode → ADC. */
   def pqSearch(corpus: DataFrame, queries: DataFrame, k: Int, m: Int = 4,
-      kCodes: Int = 8, dims: Int = 64, seed: Long = 42L,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val cb = trainPqCodebooks(corpus, m, kCodes, dims, seed, idCol, embCol)
-    val sv = pqSubVectors(corpus, m, dims, idCol, embCol)
-    val qsv = pqSubVectors(queries, m, dims, idCol, embCol)
+      kCodes: Int = 8, dims: Int = 64): DataFrame = {
+    val cb = trainPqCodebooks(corpus, m, kCodes, dims)
+    val sv = pqSubVectors(corpus, m, dims)
+    val qsv = pqSubVectors(queries, m, dims)
       .withColumnRenamed("id", "query_id")
     pqTopK(pqEncode(sv, cb), cb, qsv, k)
   }
@@ -441,20 +435,18 @@ object Similarity {
     * DataFrame — the operator composes with itself). Returns every
     * corpus row as (id, centroid_id, kept). */
   def semanticDedup(corpus: DataFrame, centroids: DataFrame,
-      threshold: Double, idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    val assigned = ivfAssign(normed(corpus, idCol, embCol, idCol, embCol),
-      centroids, idCol, embCol)
+      threshold: Double): DataFrame = {
+    val assigned = ivfAssign(normed(corpus, "vec_id", "embedding"), centroids)
     def side(s: String) = assigned.select(col("centroid_id"),
-      col(idCol).as(s"id_$s"), col(embCol).as(s"emb_$s"),
-      col(s"${embCol}_norm").as(s"emb_${s}_norm"))
+      col("vec_id").as(s"id_$s"), col("embedding").as(s"emb_$s"),
+      col("embedding_norm").as(s"emb_${s}_norm"))
     val dups = side("a").join(side("b"), Seq("centroid_id"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("cosine", normedCosine("emb_a", "emb_b"))
       .filter(col("cosine") >= threshold)
-      .select(col("id_b").as(idCol)).distinct()
-    assigned.join(dups.withColumn("dup", lit(true)), Seq(idCol), "left")
-      .select(col(idCol), col("centroid_id"), col("dup").isNull.as("kept"))
+      .select(col("id_b").as("vec_id")).distinct()
+    assigned.join(dups.withColumn("dup", lit(true)), Seq("vec_id"), "left")
+      .select(col("vec_id"), col("centroid_id"), col("dup").isNull.as("kept"))
   }
 
   /** Recall@3 of the nprobe=2 IVF path vs exact brute force — composes

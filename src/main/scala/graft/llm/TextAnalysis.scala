@@ -192,26 +192,25 @@ object TextAnalysis {
         lit(0L),
         (h, c) => (h * 131L + c) % 1000000007L))
 
-  /** Char-k-gram MinHash fingerprint: the minimum md5 over all k-char
+  /** Char-9-gram MinHash fingerprint: the minimum md5 over all 9-char
     * shingles — one row-local expression (transform over a position
     * sequence), no explode. Short texts fall back to md5(text). */
-  def minShingleFingerprint(text: Column, k: Int = 9): Column =
-    minShingleWith(text, k, md5)
+  def minShingleFingerprint(text: Column): Column =
+    minShingleWith(text, md5)
 
-  /** The minimum of `hash` over every k-char shingle of `text`, or
-    * `hash(text)` for a text shorter than k: the body of both
+  /** The minimum of `hash` over every 9-char shingle of `text`, or
+    * `hash(text)` for a text shorter than 9: the body of both
     * min-shingle fingerprint families. */
-  private def minShingleWith(text: Column, k: Int,
-      hash: Column => Column): Column =
-    when(length(text) < k, hash(text)).otherwise(
+  private def minShingleWith(text: Column, hash: Column => Column): Column =
+    when(length(text) < 9, hash(text)).otherwise(
       array_min(transform(
-        sequence(lit(1), length(text) - (k - 1)),
-        i => hash(substring(text, i, lit(k))))))
+        sequence(lit(1), length(text) - 8),
+        i => hash(substring(text, i, lit(9))))))
 
   /** Winnowing fingerprints (Schleimer, Wilkerson & Aiken, "Winnowing:
     * Local Algorithms for Document Fingerprinting", SIGMOD 2003 — the
-    * MOSS family): the set of window-minimum k-gram hashes, one per
-    * sliding window of `w` consecutive k-gram positions. Guarantees
+    * MOSS family): the set of window-minimum k-gram hashes (k = 9), one
+    * per sliding window of w = 8 consecutive k-gram positions. Guarantees
     * every shared substring of length ≥ w+k−1 contributes at least one
     * COMMON fingerprint between two documents, at ~2/(w+1) the density
     * of full k-gram shingling — the sampling-with-recall-bound that
@@ -223,25 +222,23 @@ object TextAnalysis {
     * tie-break irrelevant (value-based winnowing). md5-derived 60-bit
     * hashes so the DuckDB twin is bit-identical; docs shorter than k
     * fingerprint as their whole-text hash. */
-  def winnowedFingerprints(df: DataFrame, k: Int = 9, w: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    winnowedWith(df, k, w, idCol, textCol, graft.llm.Dedup.md5Long)
+  def winnowedFingerprints(df: DataFrame): DataFrame =
+    winnowedWith(df, graft.llm.Dedup.md5Long)
 
-  /** Winnowing under the k-gram hash `hash`: the body of both
-    * fingerprint families. */
-  private def winnowedWith(df: DataFrame, k: Int, w: Int, idCol: String,
-      textCol: String, hash: Column => Column): DataFrame = {
-    val text = col(textCol)
+  /** Winnowing under the k-gram hash `hash` (k = 9, w = 8): the body
+    * of both fingerprint families. */
+  private def winnowedWith(df: DataFrame, hash: Column => Column): DataFrame = {
+    val (k, w) = (9, 8)
+    val text = col("text")
     val hashes = when(length(text) >= k,
         transform(sequence(lit(1), length(text) - (k - 1)),
           i => hash(substring(text, i, lit(k)))))
       .otherwise(array(hash(text)))
-    val hashed = df.select(col(idCol), hashes.as("hs"))
+    val hashed = df.select(col("doc_id"), hashes.as("hs"))
     val nWin = greatest(lit(1), size(col("hs")) - (w - 1))
     val mins = transform(sequence(lit(1), nWin),
       j => array_min(slice(col("hs"), j, lit(w))))
-    hashed.select(col(idCol),
-      explode(array_distinct(mins)).as("fp"))
+    hashed.select(col("doc_id"), explode(array_distinct(mins)).as("fp"))
   }
 
   /** Production twin of [[winnowedFingerprints]] on the xxhash64
@@ -250,9 +247,8 @@ object TextAnalysis {
     * window-min sampling, different fingerprint family, DuckDB can't
     * replicate it so the md5 form stays the gated twin. Measured
     * beside the md5 form in BenchExtra. */
-  def winnowedFingerprintsXx(df: DataFrame, k: Int = 9, w: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    winnowedWith(df, k, w, idCol, textCol, xxhash64(_))
+  def winnowedFingerprintsXx(df: DataFrame): DataFrame =
+    winnowedWith(df, xxhash64(_))
 
   /** Production twin of [[minShingleFingerprint]] on the xxhash64
     * family: one codegen'd 64-bit hash per shingle instead of an md5
@@ -260,8 +256,8 @@ object TextAnalysis {
     * function, same min-over-uniform-hash family), DuckDB can't
     * replicate it (no xxhash64), so the md5 form stays the
     * oracle-gated twin. Same row-local no-explode shape. */
-  def minShingleFingerprintXx(text: Column, k: Int = 9): Column =
-    minShingleWith(text, k, xxhash64(_))
+  def minShingleFingerprintXx(text: Column): Column =
+    minShingleWith(text, xxhash64(_))
 
   // --------------------------------------------------- fixture queries
 
@@ -344,11 +340,11 @@ object TextAnalysis {
     * Raw-text counts are the audit number a curation report wants —
     * "what did the corpus contain" — and stay order-independent;
     * the redacted string is the sanitized artifact. */
-  def redactPii(df: DataFrame, textCol: String = "text"): DataFrame = {
+  def redactPii(df: DataFrame): DataFrame = {
     val counted = PiiPatterns.foldLeft(df) { case (d, (name, pat, _)) =>
-      d.withColumn(s"n_$name", regexp_count(col(textCol), lit(pat)))
+      d.withColumn(s"n_$name", regexp_count(col("text"), lit(pat)))
     }
-    val redacted = PiiPatterns.foldLeft(col(textCol)) {
+    val redacted = PiiPatterns.foldLeft(col("text")) {
       case (c, (_, pat, repl)) => regexp_replace(c, pat, repl)
     }
     counted.withColumn("redacted", redacted)
@@ -376,10 +372,9 @@ object TextAnalysis {
     * twin re-derives Luhn arithmetically (doubled-digit sum mod 10)
     * inside the same lambda shape, so validity is engine-checked, not
     * engine-trusted. */
-  def redactCreditCards(df: DataFrame, textCol: String = "text")
-      : DataFrame = {
+  def redactCreditCards(df: DataFrame): DataFrame = {
     def digits(c: Column): Column = translate(c, " -", "")
-    val cands = regexp_extract_all(col(textCol), lit(CcCandidateRe), lit(0))
+    val cands = regexp_extract_all(col("text"), lit(CcCandidateRe), lit(0))
     val valid = filter(cands,
       c => call_function("luhn_check", digits(c)))
     df.withColumn("__cands", cands)
@@ -387,7 +382,7 @@ object TextAnalysis {
       .withColumn("n_cc_candidates", size(col("__cands")))
       .withColumn("n_cc_valid", size(col("__valid")))
       .withColumn("redacted",
-        aggregate(col("__valid"), col(textCol),
+        aggregate(col("__valid"), col("text"),
           (acc, c) => call_function("replace", acc, c, lit("<CC>"))))
       .drop("__cands", "__valid")
   }
@@ -430,10 +425,9 @@ object TextAnalysis {
     * shape: one (source, token) groupBy with map-side combine (the
     * Zipf key collapses per-partition), then a sources-sized
     * groupBy. */
-  def sourceEntropy(df: DataFrame, sourceCol: String = "source",
-      textCol: String = "text"): DataFrame = {
-    val counts = df.select(col(sourceCol).as("source"),
-        explode(tokensWs(lower(col(textCol)))).as("token"))
+  def sourceEntropy(df: DataFrame): DataFrame = {
+    val counts = df.select(col("source"),
+        explode(tokensWs(lower(col("text")))).as("token"))
       .groupBy("source", "token").agg(count(lit(1)).as("c"))
       .withColumn("lnc_micro", round(log(col("c")) * 1e6).cast("long"))
     counts.groupBy("source")
@@ -461,15 +455,14 @@ object TextAnalysis {
     * shuffle at any corpus scale). */
   val SentenceRe: String = "[^.!?]+[.!?]*"
 
-  def splitSentences(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    df.select(col(idCol),
+  def splitSentences(df: DataFrame): DataFrame =
+    df.select(col("doc_id"),
         posexplode(filter(
           transform(
-            regexp_extract_all(col(textCol), lit(SentenceRe), lit(0)),
+            regexp_extract_all(col("text"), lit(SentenceRe), lit(0)),
             s => trim(s)),
           s => length(s) > 0)).as(Seq("sent_id", "sentence")))
-      .select(col(idCol), col("sent_id"),
+      .select(col("doc_id"), col("sent_id"),
         length(col("sentence")).as("n_chars"), col("sentence"))
 
   /** Fixture with PLANTED terminators (the word-soup corpus has
@@ -496,15 +489,14 @@ object TextAnalysis {
     * back onto the occurrence stream so the skewed token key never
     * drives a shuffled join (the [[idfScore]] discipline); per-doc
     * groupBy on the unskewed id. */
-  def oovRate(df: DataFrame, topN: Int = 10, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val tok = df.select(col(idCol),
-      explode(tokensWs(lower(col(textCol)))).as("token"))
+  def oovRate(df: DataFrame, topN: Int = 10): DataFrame = {
+    val tok = df.select(col("doc_id"),
+      explode(tokensWs(lower(col("text")))).as("token"))
     val vocab = tok.groupBy("token").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token").asc).limit(topN)
       .select(col("token"), lit(1).as("in_vocab"))
     tok.join(broadcast(vocab), Seq("token"), "left")
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"),
         sum(when(col("in_vocab").isNull, 1L).otherwise(0L)).as("n_oov"))
       .withColumn("oov_rate",
@@ -522,8 +514,8 @@ object TextAnalysis {
     * discipline), moment sums exact BIGINT (safe to ~2×10⁸ vocab
     * rows), one final double division rounded to basis points.
     * Output: (n_vocab, slope_bp) — slope_bp ≈ −10000·α. */
-  def zipfSlope(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val vc = df.select(explode(tokensWs(lower(col(textCol)))).as("token"))
+  def zipfSlope(df: DataFrame): DataFrame = {
+    val vc = df.select(explode(tokensWs(lower(col("text")))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
     val ranked = graft.operators.Scale.rowNumberDistributed(
       vc, -col("n"), Seq(col("n").desc, col("token").asc), "r")
@@ -622,21 +614,20 @@ object TextAnalysis {
     * reference). C4's remaining rule — cross-page three-sentence
     * dedup — is paragraph-dedup/substring-span territory
     * ([[Curation.paragraphDedup]], [[Dedup.substringSpanStats]]). */
-  def c4LineFilter(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", minKeptLines: Int = 3): DataFrame = {
+  def c4LineFilter(df: DataFrame): DataFrame = {
     val mat = df
-      .withColumn("c4_lines", split(col(textCol), "\n"))
+      .withColumn("c4_lines", split(col("text"), "\n"))
       .withColumn("c4_kept", filter(col("c4_lines"), c4KeepLine _))
-    mat.select(col(idCol),
+    mat.select(col("doc_id"),
       size(col("c4_lines")).cast("long").as("n_lines"),
       size(col("c4_kept")).cast("long").as("n_kept"),
       (size(col("c4_kept")).cast("double") / size(col("c4_lines")))
         .as("kept_frac"),
-      lower(col(textCol)).contains("lorem ipsum").as("has_lorem"),
-      col(textCol).contains("{").as("has_brace"),
-      (size(col("c4_kept")) >= minKeptLines &&
-        !lower(col(textCol)).contains("lorem ipsum") &&
-        !col(textCol).contains("{")).as("pass_c4"),
+      lower(col("text")).contains("lorem ipsum").as("has_lorem"),
+      col("text").contains("{").as("has_brace"),
+      (size(col("c4_kept")) >= 3 &&
+        !lower(col("text")).contains("lorem ipsum") &&
+        !col("text").contains("{")).as("pass_c4"),
       array_join(col("c4_kept"), "\n").as("text_clean"))
   }
 
@@ -654,23 +645,21 @@ object TextAnalysis {
     * order, with its host. Map-only (regexp_extract_all + posexplode)
     * — no shuffle at any scale. The inventory feeds [[domainStats]]
     * (crawl-mix reporting) and [[domainFilter]] (blocklists). */
-  def urlExtract(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    df.select(col(idCol),
-        posexplode(regexp_extract_all(col(textCol), lit(UrlPattern), lit(0)))
+  def urlExtract(df: DataFrame): DataFrame =
+    df.select(col("doc_id"),
+        posexplode(regexp_extract_all(col("text"), lit(UrlPattern), lit(0)))
           .as(Seq("p", "url")))
-      .select(col(idCol), (col("p") + 1).as("url_pos"), col("url"),
+      .select(col("doc_id"), (col("p") + 1).as("url_pos"), col("url"),
         regexp_extract(col("url"), UrlHostPattern, 1).as("domain"))
 
   /** Per-domain corpus report: URL occurrences and distinct docs —
     * the crawl-provenance mix a curation data card wants. One
     * domain-key groupBy (domains are far fewer than docs). */
-  def domainStats(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    urlExtract(df, idCol, textCol)
+  def domainStats(df: DataFrame): DataFrame =
+    urlExtract(df)
       .groupBy("domain")
       .agg(count(lit(1)).as("n_urls"),
-        count_distinct(col(idCol)).as("n_docs"))
+        count_distinct(col("doc_id")).as("n_docs"))
 
   /** Domain-blocklist filter: drop every doc containing ANY URL whose
     * host is blocked (the C4/RefinedWeb bad-domain rule). The blocked
@@ -678,12 +667,11 @@ object TextAnalysis {
     * anti-joined back — for blocklists beyond literal-list size, swap
     * `isin` for a broadcast join against a blocklist frame; the
     * corpus side is never shuffled either way. */
-  def domainFilter(df: DataFrame, blocked: Seq[String],
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val bad = urlExtract(df, idCol, textCol)
+  def domainFilter(df: DataFrame, blocked: Seq[String]): DataFrame = {
+    val bad = urlExtract(df)
       .filter(col("domain").isin(blocked: _*))
-      .select(col(idCol)).distinct()
-    df.join(bad, Seq(idCol), "left_anti")
+      .select(col("doc_id")).distinct()
+    df.join(bad, Seq("doc_id"), "left_anti")
   }
 
   /** Corpus-statistics rarity scoring (TF-IDF family, the CCNet-style
@@ -698,12 +686,11 @@ object TextAnalysis {
     * division of identical ints on both engines; the mean goes through
     * [[graft.functions.Exact]] decimal sums so partitioning and engine
     * cannot reorder it. */
-  def idfScore(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val tok = df.select(col(idCol),
-      explode(tokensWs(lower(col(textCol)))).as("token"))
+  def idfScore(df: DataFrame): DataFrame = {
+    val tok = df.select(col("doc_id"),
+      explode(tokensWs(lower(col("text")))).as("token"))
     val dfFrame = tok.groupBy("token")
-      .agg(count_distinct(col(idCol)).as("df"))
+      .agg(count_distinct(col("doc_id")).as("df"))
     // The df frame is vocabulary-sized (sublinear in corpus size), but
     // the token key is Zipf-skewed — a shuffled join would concentrate
     // every "the" occurrence in one reducer at 100 TB. Broadcasting df
@@ -711,7 +698,7 @@ object TextAnalysis {
     // token-key df aggregation (map-side partial combine absorbs the
     // skew) and the final per-doc groupBy (doc_id is unskewed).
     tok.join(broadcast(dfFrame), "token")
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"),
         (graft.functions.Exact.dsum(lit(1.0) / col("df"))
           / count(lit(1))).as("mean_inv_df"),
@@ -735,25 +722,24 @@ object TextAnalysis {
     * melts on long documents). Docs with <2 words get 0.0 bigram
     * fractions. Every emitted fraction is one IEEE division of
     * identical integers on both engines. */
-  def repetitionMetrics(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val words = df.select(col(idCol), tokensWs(lower(col(textCol))).as("ws"))
+  def repetitionMetrics(df: DataFrame): DataFrame = {
+    val words = df.select(col("doc_id"), tokensWs(lower(col("text"))).as("ws"))
     val wordStats = words
-      .select(col(idCol), explode(col("ws")).as("w"))
-      .groupBy(idCol, "w").agg(count(lit(1)).as("c"))
-      .groupBy(idCol)
+      .select(col("doc_id"), explode(col("ws")).as("w"))
+      .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
+      .groupBy("doc_id")
       .agg(sum("c").as("n_words"),
         count(lit(1)).as("n_distinct_words"),
         max("c").as("top_word_n"))
     val bigramStats = words
-      .select(col(idCol), explode(bigramArrFromToks(col("ws"))).as("b"))
-      .groupBy(idCol, "b").agg(count(lit(1)).as("c"))
-      .groupBy(idCol)
+      .select(col("doc_id"), explode(bigramArrFromToks(col("ws"))).as("b"))
+      .groupBy("doc_id", "b").agg(count(lit(1)).as("c"))
+      .groupBy("doc_id")
       .agg(sum("c").as("n_bigrams"),
         count(lit(1)).as("n_distinct_bigrams"),
         max("c").as("top_bigram_n"))
-    wordStats.join(bigramStats, Seq(idCol), "left")
-      .select(col(idCol), col("n_words"),
+    wordStats.join(bigramStats, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_words"),
         ((col("n_words") - col("n_distinct_words")).cast("double")
           / col("n_words")).as("dup_word_frac"),
         (col("top_word_n").cast("double") / col("n_words"))
@@ -778,18 +764,17 @@ object TextAnalysis {
     * some chunk); documents with zero tokens produce no chunks.
     * `chunk_id` is the window ordinal, `token_start` its 0-based token
     * offset — enough to reassemble or de-overlap downstream. */
-  def chunkDocs(df: DataFrame, chunkTokens: Int, strideTokens: Int,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def chunkDocs(df: DataFrame, chunkTokens: Int, strideTokens: Int): DataFrame = {
     require(chunkTokens > 0 && strideTokens > 0,
       s"chunkDocs: sizes must be positive, got ($chunkTokens, $strideTokens)")
-    df.select(col(idCol), tokensWs(col(textCol)).as("toks"))
+    df.select(col("doc_id"), tokensWs(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
-      .select(col(idCol), col("toks"),
+      .select(col("doc_id"), col("toks"),
         posexplode(sequence(lit(0), size(col("toks")) - 1,
           lit(strideTokens))).as(Seq("chunk_id", "token_start")))
       .withColumn("chunk",
         slice(col("toks"), col("token_start") + 1, lit(chunkTokens)))
-      .select(col(idCol), col("chunk_id").cast("long").as("chunk_id"),
+      .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
         col("token_start").cast("long").as("token_start"),
         size(col("chunk")).cast("long").as("n_chunk_tokens"),
         concat_ws(" ", col("chunk")).as("chunk_text"))
@@ -818,9 +803,9 @@ object TextAnalysis {
     * count groupBy + a vocabulary-sized context aggregation — the
     * train-once half of the [[lmScore]] pipeline, run over a reference
     * corpus and reused across scoring runs (including streams). */
-  def trainBigramLm(df: DataFrame, textCol: String = "text"): DataFrame = {
+  def trainBigramLm(df: DataFrame): DataFrame = {
     val bgCounts = df
-      .select(tokensWs(lower(col(textCol))).as("toks"))
+      .select(tokensWs(lower(col("text"))).as("toks"))
       .select(explode(bigramArrFromToks(col("toks"))).as("b"))
       .groupBy("b").agg(count(lit(1)).as("c12"))
       .withColumn("w1", split(col("b"), " ").getItem(0))
@@ -835,17 +820,16 @@ object TextAnalysis {
     * document, so it runs unchanged inside a streaming foreachBatch
     * against a static broadcast LM — the ingest-time quality-filter
     * shape (StreamsSpec pins batch equivalence). */
-  def scoreBigrams(df: DataFrame, lm: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+  def scoreBigrams(df: DataFrame, lm: DataFrame): DataFrame = {
     val bg = df
-      .select(col(idCol), tokensWs(lower(col(textCol))).as("toks"))
-      .select(col(idCol), explode(bigramArrFromToks(col("toks"))).as("b"))
+      .select(col("doc_id"), tokensWs(lower(col("text"))).as("toks"))
+      .select(col("doc_id"), explode(bigramArrFromToks(col("toks"))).as("b"))
     val scored = bg.join(broadcast(lm), "b")
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         sum("p_micro").as("sum_p_micro"))
-    df.select(col(idCol)).join(scored, Seq(idCol), "left")
-      .select(col(idCol),
+    df.select(col("doc_id")).join(scored, Seq("doc_id"), "left")
+      .select(col("doc_id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         coalesce(col("sum_p_micro"), lit(0L)).as("sum_p_micro"),
         ((col("sum_p_micro").cast("double") / col("n_bigrams")) / 1e6)
@@ -868,9 +852,8 @@ object TextAnalysis {
     * BROADCAST back onto the occurrence stream, so — like [[idfScore]]
     * — the corpus side never shuffles on a Zipf-skewed key; the final
     * per-doc groupBy is on the unskewed doc id. */
-  def lmScore(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    scoreBigrams(df, trainBigramLm(df, textCol), idCol, textCol)
+  def lmScore(df: DataFrame): DataFrame =
+    scoreBigrams(df, trainBigramLm(df))
 
   private val textLmScore: Q = (s, dir) =>
     lmScore(docs(s, dir)).orderBy("doc_id")
@@ -895,8 +878,8 @@ object TextAnalysis {
 
   /** Char-symbolized word-frequency table of a corpus: one groupBy on
     * the (unskewed after map-side combine) word key. */
-  def bpeWordCounts(df: DataFrame, textCol: String = "text"): DataFrame =
-    df.select(explode(tokensWs(lower(col(textCol)))).as("w"))
+  def bpeWordCounts(df: DataFrame): DataFrame =
+    df.select(explode(tokensWs(lower(col("text")))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
       .select(split(col("w"), "").as("s"), col("c"))
 
@@ -924,18 +907,17 @@ object TextAnalysis {
     * driver-side reference encoder (no DuckDB twin: the merge list is
     * a trained artifact, not SQL-derivable; round-1 training is the
     * gated `text_bpe_top_pairs`). */
-  def bpeEncode(df: DataFrame, merges: Seq[(String, String)],
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val words = df.select(explode(tokensWs(lower(col(textCol)))).as("w"))
+  def bpeEncode(df: DataFrame, merges: Seq[(String, String)]): DataFrame = {
+    val words = df.select(explode(tokensWs(lower(col("text")))).as("w"))
       .distinct()
     val encoded = words
       .withColumn("s", merges.foldLeft(split(col("w"), ""): Column) {
         case (c, (a, b)) => applyBpeMerge(c, a, b)
       })
       .select(col("w"), size(col("s")).cast("long").as("n_sym"))
-    df.select(col(idCol), explode(tokensWs(lower(col(textCol)))).as("w"))
+    df.select(col("doc_id"), explode(tokensWs(lower(col("text")))).as("w"))
       .join(broadcast(encoded), "w")
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"), sum("n_sym").as("n_bpe_tokens"))
   }
 
@@ -949,9 +931,8 @@ object TextAnalysis {
     * application stay distributed over the vocabulary-sized frame,
     * localCheckpointed per round so lineage stays flat. Returns the
     * ordered merge table — the artifact a BPE tokenizer ships. */
-  def trainBpeMerges(df: DataFrame, nMerges: Int,
-      textCol: String = "text"): Seq[(String, String, Long)] = {
-    var wc = bpeWordCounts(df, textCol).localCheckpoint(true)
+  def trainBpeMerges(df: DataFrame, nMerges: Int): Seq[(String, String, Long)] = {
+    var wc = bpeWordCounts(df).localCheckpoint(true)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     var round = 0
     var exhausted = false
@@ -990,9 +971,8 @@ object TextAnalysis {
     * discipline). ln is micro-rounded once per surviving pair; the
     * inner c12·T product is a correctly-rounded double (deterministic
     * IEEE in both engines). */
-  def pmiBigrams(df: DataFrame, textCol: String = "text",
-      minCount: Long = 5L): DataFrame = {
-    val words = df.select(tokensWs(col(textCol)).as("ws"))
+  def pmiBigrams(df: DataFrame, minCount: Long = 5L): DataFrame = {
+    val words = df.select(tokensWs(col("text")).as("ws"))
     val bigr = words.select(explode(
         when(size(col("ws")) >= 2,
           transform(sequence(lit(1), size(col("ws")) - 1),
@@ -1041,12 +1021,11 @@ object TextAnalysis {
     * the corpus is paid once in the count groupBy). At extreme N the
     * c·N products would need DECIMAL(38,0) sums; BIGINT holds to
     * N ≈ 3·10⁹ tokens per source. */
-  def sourceDivergence(df: DataFrame, sourceCol: String = "source",
-      textCol: String = "text"): DataFrame = {
+  def sourceDivergence(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val c = df.select(col(sourceCol).as("source"),
-        explode(tokensWs(lower(col(textCol)))).as("token"))
+    val c = df.select(col("source"),
+        explode(tokensWs(lower(col("text")))).as("token"))
       .groupBy("source", "token").agg(count(lit(1)).as("c"))
     val n = c.groupBy("source").agg(sum("c").as("n"))
     // The source list is config-scale (dozens), so the pair seeding is
@@ -1054,9 +1033,10 @@ object TextAnalysis {
     // hyperplane/centroid tables, bounded metadata, not data. Seeding
     // guarantees a row for pairs with NO shared token (TV = 1), which
     // the inner join alone would drop. The bound keeps a per-document
-    // column passed as `sourceCol` from squaring on the driver.
+    // `source` column from squaring on the driver.
     val srcN = graft.Collect.collectBounded(n, MaxSources,
-        s"sourceDivergence: per-source totals of '$sourceCol' (pass a low-cardinality source column)")
+        "sourceDivergence: per-source totals of 'source' " +
+          "(source must be a low-cardinality column)")
       .map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
     val pairSeed = (for {
       (s1, n1) <- srcN; (s2, n2) <- srcN if s1 < s2
@@ -1091,13 +1071,13 @@ object TextAnalysis {
     * GK quantiles, CMS frequencies). The sketch is a mergeable
     * aggregate (map-side partials merge like any other buffer), so at
     * 100 TB this is one scan with no shuffle beyond the single merged
-    * buffer; the seed makes it deterministic. */
-  def countMinSketchOf(df: DataFrame, colName: String, eps: Double = 0.001,
-      confidence: Double = 0.99, seed: Int = 42)
+    * buffer. ε = 0.001, confidence 0.99, and the fixed seed 42 makes it
+    * deterministic. */
+  def countMinSketchOf(df: DataFrame, colName: String)
       : (org.apache.spark.util.sketch.CountMinSketch, Long) = {
     val row = df.agg(
-      expr(s"count_min_sketch($colName, cast($eps as double), " +
-        s"cast($confidence as double), $seed)").as("cms"),
+      expr(s"count_min_sketch($colName, cast(0.001 as double), " +
+        "cast(0.99 as double), 42)").as("cms"),
       count(lit(1)).as("total")).head()
     (org.apache.spark.util.sketch.CountMinSketch.readFrom(
       new java.io.ByteArrayInputStream(row.getAs[Array[Byte]](0))),

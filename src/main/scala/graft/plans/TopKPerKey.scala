@@ -105,38 +105,45 @@ object TopKPerKeyStrategy extends SparkStrategy {
 
 /** Production registration: `--conf spark.sql.extensions=
   * graft.plans.GraftExtensions` plants the WHOLE native tier in every
-  * session — the TopKPerKey planner strategy plus the four codegen
-  * expressions (parse_duration_native, rolling_hash_native, dot_native,
-  * sorted_intersect_size), so SQL users get them without any driver
-  * code. The per-session `register(spark)` helpers on each function
-  * object remain for notebook use. */
+  * session — the TopKPerKey planner strategy plus the five codegen
+  * expressions of [[GraftExtensions.functions]], so SQL users get them
+  * without any driver code. [[GraftExtensions.register]] adds the same
+  * functions to a session that is already running (notebooks, specs). */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-  import graft.functions.{DotProduct, NfcNormalize, ParseDuration,
-    RollingHash, SortedIntersectSize}
 
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
-    ext.injectFunction((FunctionIdentifier("parse_duration_native"),
-      new ExpressionInfo(classOf[ParseDuration].getName,
-        "parse_duration_native"),
-      exprs => ParseDuration(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("rolling_hash_native"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash_native"),
-      exprs => RollingHash(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("dot_native"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_native"),
-      exprs => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("sorted_intersect_size"),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName,
-        "sorted_intersect_size"),
-      exprs => SortedIntersectSize(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("nfc_normalize_native"),
-      new ExpressionInfo(classOf[NfcNormalize].getName,
-        "nfc_normalize_native"),
-      exprs => NfcNormalize(exprs.head)))
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
   }
+}
+
+object GraftExtensions {
+  import graft.functions.{DotProduct, NfcNormalize, ParseDuration,
+    RollingHash, SortedIntersectSize}
+
+  /** The native SQL functions as (name, expression class, builder):
+    * the one list both the session extension and [[register]] read. */
+  val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("parse_duration_native", classOf[ParseDuration],
+      e => ParseDuration(e.head)),
+    ("rolling_hash_native", classOf[RollingHash], e => RollingHash(e.head)),
+    ("dot_native", classOf[DotProduct], e => DotProduct(e(0), e(1))),
+    ("sorted_intersect_size", classOf[SortedIntersectSize],
+      e => SortedIntersectSize(e(0), e(1))),
+    ("nfc_normalize_native", classOf[NfcNormalize],
+      e => NfcNormalize(e.head)))
+
+  /** Register every native SQL function in a running session. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    functions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, build, "built-in")
+    }
 }
 
 object TopKPerKey {

@@ -78,7 +78,7 @@ object WorkloadRunner {
       planDir.foreach { dir =>
         Files.createDirectories(Paths.get(dir))
         // the "metrics"-stripped query-info analog: formatted + JSON plan
-        val doc = s"""{"query_id":"$queryId","plan":${
+        val doc = s"""{"query_id":${jsonQuote(queryId)},"plan":${
           jsonQuote(df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode))},"metrics":{}}"""
         Files.writeString(Paths.get(dir, s"$queryId.json"), doc)

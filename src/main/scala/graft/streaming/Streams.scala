@@ -32,28 +32,29 @@ object Streams {
     * by (band, bucket). Per-bucket state remembers the ids seen inside
     * the TTL horizon; each newcomer emits one candidate pair per stored
     * id. The buckets are those of the batch `Dedup.minHashLshPairs`
-    * and null texts are dropped as there ([[graft.llm.Dedup.lshDocs]]),
-    * so the candidate criterion (bucket equality in ≥1 band) is the
-    * batch one — exact-verify/act is the caller's next stage, as in
-    * batch. The bands are unrolled by a `stack` generator, as in
-    * [[graft.llm.Dedup.lshRows]]: an `explode` over the kernel output
-    * would re-run the kernel inside the optimizer's inferred
-    * `size(buckets) > 0` filter.
+    * under its default parameters (16 hashes in 4-row bands over
+    * 9-char shingles), and null texts are dropped as there
+    * ([[graft.llm.Dedup.lshDocs]]), so the candidate criterion (bucket
+    * equality in ≥1 band) is the batch one — exact-verify/act is the
+    * caller's next stage, as in batch. The bands are unrolled by a
+    * `stack` generator, as in [[graft.llm.Dedup.lshRows]]: an
+    * `explode` over the kernel output would re-run the kernel inside
+    * the optimizer's inferred `size(buckets) > 0` filter.
     *
-    * State is bounded two ways: per-bucket ids cap at
-    * `maxIdsPerBucket` (a hot boilerplate bucket degrades gracefully,
-    * pairing newcomers only against the first exemplars instead of
-    * growing O(stream) state), and event-time timeout evicts a bucket
-    * once the watermark passes last-seen + `stateTtlMs`. A doc
+    * State is bounded two ways: per-bucket ids cap at 32 (a hot
+    * boilerplate bucket degrades gracefully, pairing newcomers only
+    * against the first exemplars instead of growing O(stream) state),
+    * and event-time timeout evicts a bucket once the watermark passes
+    * last-seen + `stateTtlMs`. The watermark delay and the TTL are the
+    * stream's event-time horizon, set per deployment. A doc
     * colliding in several bands emits one candidate per band — dedupe
     * downstream with `dropDuplicatesWithinWatermark(id_a, id_b)` when
     * exactly-once pairs matter. */
   def nearDupCandidatesStream(docs: DataFrame,
-      watermark: String = "10 minutes", stateTtlMs: Long = 600000L,
-      numHashes: Int = 16, rowsPerBand: Int = 4, k: Int = 9,
-      maxIdsPerBucket: Int = 32)
+      watermark: String = "10 minutes", stateTtlMs: Long = 600000L)
       (implicit spark: SparkSession): Dataset[NearDupCandidate] = {
     import spark.implicits._
+    val (numHashes, rowsPerBand, k, maxIdsPerBucket) = (16, 4, 9, 32)
     val bands = (0 until numHashes / rowsPerBand).map(b => s"$b, buckets[$b]")
     val banded = docs.withWatermark("ts", watermark)
       .filter(col("text").isNotNull)

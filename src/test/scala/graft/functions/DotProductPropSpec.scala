@@ -57,7 +57,7 @@ class DotProductPropSpec extends SparkSpec {
   }
 
   test("SQL registration, double/int/bigint arrays, null elements") {
-    DotProduct.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     import spark.implicits._
     val r = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)))
       .toDF("a", "b").selectExpr("dot_native(a, b) AS d").head()

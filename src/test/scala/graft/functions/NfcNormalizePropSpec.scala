@@ -59,7 +59,7 @@ class NfcNormalizePropSpec extends SparkSpec {
   }
 
   test("SQL registration and idempotence") {
-    NfcNormalize.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val r = spark.sql("SELECT nfc_normalize_native('cafe\u0301') AS n")
       .head().getString(0)
     assert(r === Precomposed)

@@ -37,7 +37,7 @@ class SortedIntersectPropSpec extends SparkSpec {
   }
 
   test("SQL registration and codegen path") {
-    SortedIntersectSize.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT sorted_intersect_size(array(1L, 3L, 5L, 9L),
         |                             array(3L, 4L, 9L)) AS n""".stripMargin)
@@ -53,7 +53,7 @@ class SortedIntersectPropSpec extends SparkSpec {
   }
 
   test("checkOrder guard makes unsorted misuse fail loudly") {
-    SortedIntersectSize.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val prev = SortedIntersectSize.checkOrder
     SortedIntersectSize.checkOrder = true
     try {

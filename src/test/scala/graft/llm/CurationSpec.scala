@@ -295,9 +295,9 @@ class CurationSpec extends SparkSpec {
     val base = docs.select(col("doc_id"), col("text"))
     val small = base.filter(col("doc_id") % 41 === 0)
     val corpus = base.filter(col("doc_id") % 41 =!= 0)
-    val overBound = Curation.overlapCounts(corpus, small, "doc_id", "text",
+    val overBound = Curation.overlapCounts(corpus, small,
       Curation.EvalMaxDocs, maxShingles = 5)
-    val kernel = Curation.overlapCounts(corpus, small, "doc_id", "text",
+    val kernel = Curation.overlapCounts(corpus, small,
       Curation.EvalMaxDocs, Curation.EvalMaxShingles)
     assert(joinPlanned(overBound) && !joinPlanned(kernel))
     assert(overBound.exceptAll(kernel).isEmpty && kernel.exceptAll(overBound).isEmpty)

@@ -1033,6 +1033,28 @@ class LlmSpec extends SparkSpec {
         .toSeq
       assert(storedScans.nonEmpty && storedScans.forall(_.contains("Bucketed: true")),
         s"stored side must scan bucketed:\n$plan")
+      // the verify's norm aggregate reads the stored elements only
+      // through the semi-join to the candidates' ids, never the bare scan
+      import org.apache.spark.sql.catalyst.plans.LeftSemi
+      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+      def elemScans(p: LogicalPlan, semi: Boolean): Seq[Boolean] = p match {
+        case j: Join if j.joinType == LeftSemi =>
+          elemScans(j.left, true) ++ elemScans(j.right, semi)
+        case leaf if leaf.children.isEmpty =>
+          if (leaf.toString.contains("cos_idx_t_elems")) Seq(semi) else Nil
+        case other => other.children.flatMap(elemScans(_, semi))
+      }
+      val optimized = probe.queryExecution.optimizedPlan
+      val normAggs = optimized.collect {
+        case a: Aggregate if a.aggregateExpressions.exists(e =>
+          Set("norm2", "na", "nb")(e.name)) => a
+      }
+      assert(normAggs.nonEmpty, optimized)
+      normAggs.foreach { a =>
+        val scans = elemScans(a.child, semi = false)
+        assert(scans.nonEmpty && scans.forall(identity),
+          s"norm aggregate reads a bare cos_idx_t_elems scan:\n$optimized")
+      }
     } finally
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }

@@ -67,7 +67,7 @@ class TopKPerKeySpec extends SparkSpec {
       .getOrCreate()
     try {
       assert(ext ne spark, "must be a fresh session")
-      // all four codegen expressions resolve as SQL functions
+      // all five codegen expressions resolve as SQL functions
       assert(ext.sql("SELECT parse_duration_native('2m')").head.getDouble(0)
         === 120.0)
       // ((0*131+97)*131+98)*131+99 mod 1e9+7
@@ -79,6 +79,12 @@ class TopKPerKeySpec extends SparkSpec {
       assert(ext.sql(
         "SELECT sorted_intersect_size(array(1L, 3L, 5L), array(3L, 5L, 7L))")
         .head.getLong(0) === 2L)
+      // "e" + U+0301 (combining acute) composes to U+00E9
+      assert(ext.sql("SELECT nfc_normalize_native('e\u0301')").head.getString(0)
+        === "\u00e9")
+      assert(GraftExtensions.functions.map(_._1).toSet === Set(
+        "parse_duration_native", "rolling_hash_native", "dot_native",
+        "sorted_intersect_size", "nfc_normalize_native"))
       // the planner strategy rides in without any driver-side call
       assert(ext.sessionState.planner.strategies.contains(TopKPerKeyStrategy),
         "TopKPerKeyStrategy must be injected")

@@ -102,4 +102,16 @@ class WorkloadRunnerSpec extends SparkSpec {
       "\"a\\\"b\\\\c\\nd\\re\\tf\\u0001g\"")
     assert(WorkloadRunner.jsonQuote("") === "\"\"")
   }
+
+  test("a query id with a quote and a backslash round-trips through the plan doc") {
+    val dir = Files.createTempDirectory("graft_wl_id").toFile
+    val id = "q\"1\\x"
+    val r = WorkloadRunner.executeQuery(spark, id, "SELECT 1 AS one",
+      planDir = Some(dir.getAbsolutePath))
+    assert(r.runtimeS > 0)
+    val doc = Files.readString(new java.io.File(dir, s"$id.json").toPath)
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(doc)
+    assert(tree.get("query_id").asText() === id)
+    assert(tree.get("plan").asText().nonEmpty)
+  }
 }
